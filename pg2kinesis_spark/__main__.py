@@ -50,13 +50,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     # -- rebuild-specific wiring
     p.add_argument("--source", default="pgcdc", choices=["pgcdc", "replay"])
-    p.add_argument(
-        "--pg-mode",
-        default="poll",
-        choices=["poll", "push"],
-        help="pgcdc read mode: peek/advance polling or the "
-        "START_REPLICATION push loop (reference slot.py:122-129).",
-    )
     p.add_argument("--replay-path", help="Parquet wire corpus for --source replay.")
     p.add_argument("--pk-catalog", help="Parquet pk_catalog for --source replay.")
     p.add_argument(
@@ -90,14 +83,17 @@ def main(argv: list[str] | None = None) -> int:
     from pg2kinesis_spark.session import get_spark
     from pg2kinesis_spark.sinks.kinesis import InMemoryTransport, KinesisLikeWriter
     from pg2kinesis_spark.streaming.pipeline import (
-        build_test_decoding_stream,
-        build_wal2json_stream,
+        RefreshingWriter,
+        build_pgoutput_stream,
+        build_test_decoding_stream_refreshing,
+        build_wal2json_stream_refreshing,
         read_pgcdc_stream,
         run_to_sink,
         run_until,
     )
 
     spark = get_spark("pg2kinesis_spark")
+    plugin = args.pg_slot_output_plugin
 
     if args.source == "pgcdc":
         from pg2kinesis_spark.sources.pgcdc import PgSlotManager
@@ -106,83 +102,59 @@ def main(argv: list[str] | None = None) -> int:
             f"dbname={args.pg_dbname} host={args.pg_host} port={args.pg_port} "
             f"user={args.pg_user} sslmode={args.pg_sslmode}"
         )
-        mgr = PgSlotManager(dsn, args.pg_slot_name, args.pg_slot_output_plugin)
+        mgr = PgSlotManager(dsn, args.pg_slot_name, plugin)
         if args.recreate_slot:
             mgr.delete_slot()
             mgr.create_slot()
         elif args.create_slot:
             mgr.create_slot()
-        catalog_rows = mgr.fetch_pk_catalog()
-        catalog = spark.createDataFrame(
-            catalog_rows, "table_name string, col_name string, col_type string, col_ord_pos int"
-        )
+
+        def load_pk_map():
+            # live: a fresh information_schema snapshot per call
+            return primary_key_map(spark.createDataFrame(
+                mgr.fetch_pk_catalog(),
+                "table_name string, col_name string, col_type string, col_ord_pos int",
+            ))
+
         # Live source (S1): the raw stream DataFrame itself is the source
         # handle the builders consume (reference __main__.py:49-69 wiring).
-        corpus = read_pgcdc_stream(
-            spark, dsn, args.pg_slot_name, args.pg_slot_output_plugin,
-            args.rows_per_batch, mode=args.pg_mode,
-        )
+        corpus = read_pgcdc_stream(spark, dsn, args.pg_slot_name, plugin, args.rows_per_batch)
     else:
         assert args.replay_path, "--source replay needs --replay-path"
-        if args.pg_slot_output_plugin != "pgoutput":
+        if plugin != "pgoutput":
             assert args.pk_catalog, "--source replay needs --pk-catalog"
-            catalog = spark.read.parquet(args.pk_catalog)
+
+        def load_pk_map():
+            # replay: re-read the catalog parquet (the test twin of a
+            # live re-snapshot — update the file to simulate DDL)
+            return primary_key_map(spark.read.parquet(args.pk_catalog))
+
         corpus = args.replay_path
 
     fmt = "CSV" if args.message_formatter == "CSV" else "CSVPayload"
-
-    if args.pg_slot_output_plugin == "pgoutput":
+    common = dict(
+        formatter=fmt, operations=operations, table_pat=args.table_pat,
+        rows_per_batch=args.rows_per_batch, ack_log=args.ack_log,
+    )
+    parse_fn = None
+    if plugin == "pgoutput":
         # pgoutput carries its own keys (Relation replica identity) —
         # no pk catalog; the registry comes from the corpus itself for
         # replay, or a catalog snapshot for live slots.
         from pg2kinesis_spark.operators.pgoutput import relation_registry_from_replay
-        from pg2kinesis_spark.streaming.pipeline import build_pgoutput_stream
 
         assert args.source == "replay", (
             "live pgoutput needs the binary peek path — provide a replay "
             "corpus (base64 payloads) or use test_decoding/wal2json live"
         )
         registry = relation_registry_from_replay(spark, args.replay_path)
-        stream = build_pgoutput_stream(
-            spark, corpus, registry, formatter=fmt, operations=operations,
-            table_pat=args.table_pat, rows_per_batch=args.rows_per_batch,
-            ack_log=args.ack_log,
-        )
-    elif args.pg_slot_output_plugin == "test_decoding":
-        if args.pk_refresh_batches:
-            from pg2kinesis_spark.streaming.pipeline import (
-                build_test_decoding_stream_refreshing,
-            )
-
-            stream, parse_fn = build_test_decoding_stream_refreshing(
-                spark, corpus, formatter=fmt, operations=operations,
-                table_pat=args.table_pat, rows_per_batch=args.rows_per_batch,
-                ack_log=args.ack_log,
-            )
-        else:
-            pk_map = primary_key_map(catalog)
-            stream = build_test_decoding_stream(
-                spark, corpus, pk_map, formatter=fmt, operations=operations,
-                table_pat=args.table_pat, rows_per_batch=args.rows_per_batch, ack_log=args.ack_log,
-            )
+        stream = build_pgoutput_stream(spark, corpus, registry, **common)
+    elif plugin == "test_decoding":
+        stream, parse_fn = build_test_decoding_stream_refreshing(spark, corpus, **common)
     else:
-        if args.pk_refresh_batches:
-            from pg2kinesis_spark.streaming.pipeline import (
-                build_wal2json_stream_refreshing,
-            )
-
-            stream, parse_fn = build_wal2json_stream_refreshing(
-                spark, corpus, formatter=fmt, operations=operations,
-                table_pat=args.table_pat, full_change=args.full_change,
-                rows_per_batch=args.rows_per_batch, ack_log=args.ack_log,
-            )
-        else:
-            pk_map = primary_key_map(catalog)
-            stream = build_wal2json_stream(
-                spark, corpus, pk_map, formatter=fmt, operations=operations,
-                table_pat=args.table_pat, full_change=args.full_change,
-                rows_per_batch=args.rows_per_batch, ack_log=args.ack_log,
-            )
+        stream, parse_fn = build_wal2json_stream_refreshing(
+            spark, corpus, full_change=args.full_change, **common
+        )
 
     if args.transport == "kinesis":
         from pg2kinesis_spark.sinks.kinesis_boto import BotoKinesisTransport
@@ -192,28 +164,13 @@ def main(argv: list[str] | None = None) -> int:
         transport = InMemoryTransport()
     writer = KinesisLikeWriter(transport)
     writer.log = lambda line: print(line, file=sys.stderr)
-    if args.pk_refresh_batches and args.pg_slot_output_plugin in (
-        "test_decoding", "wal2json",
-    ):
-        from pg2kinesis_spark.streaming.pipeline import RefreshingWriter
-
-        if args.source == "pgcdc":
-            def load_pk_map():
-                # live: a fresh information_schema snapshot per refresh
-                return primary_key_map(spark.createDataFrame(
-                    mgr.fetch_pk_catalog(),
-                    "table_name string, col_name string, "
-                    "col_type string, col_ord_pos int",
-                ))
+    if parse_fn is not None:
+        if args.pk_refresh_batches:
+            writer = RefreshingWriter(
+                writer, parse_fn, load_pk_map, refresh_every=args.pk_refresh_batches
+            )
         else:
-            def load_pk_map():
-                # replay: re-read the catalog parquet (the test twin of
-                # a live re-snapshot — update the file to simulate DDL)
-                return primary_key_map(spark.read.parquet(args.pk_catalog))
-
-        writer = RefreshingWriter(
-            writer, parse_fn, load_pk_map, refresh_every=args.pk_refresh_batches
-        )
+            stream = parse_fn(stream, load_pk_map())
 
     if args.drain:
         # Drain = stop once the sink has gone quiet: no new put_message

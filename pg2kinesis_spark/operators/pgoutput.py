@@ -22,7 +22,8 @@ Truncate emits one change row per truncated rel (operation
 as a table-granularity tombstone — keys whose last change precedes the
 truncate are purged, post-truncate inserts survive, and the tombstone
 persists across micro-batches so at-least-once replay cannot
-resurrect pre-truncate keys.
+resurrect pre-truncate keys. The Kinesis stream puts one ``truncate``
+message per truncated rel (no pkey) and counts the wire message once.
 
 Scale design
 ------------
@@ -39,12 +40,16 @@ Scale design
 * xid attribution reuses the existing distributed prefix-scan
   (``stamp_xid_scalable``): Begin rows carry ``begin_xid``, row
   messages inherit it — identical W1 semantics to test_decoding.
+* One decode kernel (``decode_pgoutput``) serves both paths: the
+  streaming pipeline runs it over the replay corpus's base64 payloads
+  and feeds its ``begin_xid`` to the stateful stamp.
 """
 
 from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
+from itertools import repeat
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -289,32 +294,16 @@ def relation_registry(raw: DataFrame, payload_col: str = "payload") -> DataFrame
     )
 
 
-def parse_pgoutput(
-    raw: DataFrame,
-    registry: DataFrame | None = None,
-    payload_col: str = "payload",
-    xid_eager: bool = True,
+def decode_pgoutput(
+    raw: DataFrame, payload_col: str = "payload", data_size: bool = False
 ) -> DataFrame:
-    """Parse a (lsn, payload binary) pgoutput stream into change rows.
-
-    Returns (lsn, operation, xid, table, col_names, col_values,
-    old_values, key_cols): insert/update/delete rows joined to their
-    broadcast relation metadata, xid attributed via the distributed
-    BEGIN carry-forward. Begin/Commit/Relation messages drive the
-    attribution and registry but emit no change rows.
-
-    ``xid_eager=False`` selects the zero-driver-job carry (see
-    ``stamp_xid_scalable``); the pure-JVM begin twins below then feed
-    the LAZY bounds/summary branches, so a backfill build runs no
-    driver jobs at all and the twin scans schedule inside the consuming
-    action. Keep the default for long-lived streams.
-    """
+    """Arrow-batched decode of (lsn, payload binary) pgoutput messages
+    into ROWS_SCHEMA rows; ``data_size=True`` carries the input's
+    ``data_size`` column through, after ``lsn``. Begin rows set ``begin_xid``; Commit rows are frames;
+    Insert/Update/Delete give one row each and a Truncate one row per
+    truncated rel. Relation messages feed ``relation_registry``, not
+    rows. Shared by the batch parse and the streaming pipeline."""
     import pandas as pd
-
-    from .test_decoding import stamp_xid_scalable
-
-    if registry is None:
-        registry = relation_registry(raw, payload_col)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # specialized flat decoder: no per-message dict, column lists
@@ -322,8 +311,9 @@ def parse_pgoutput(
         # decode_message remains the single-message/test surface)
         unpack_from = struct.unpack_from
         for pdf in batches:
-            c_lsn, c_op, c_xid, c_rel, c_new, c_old = [], [], [], [], [], []
-            for lsn, buf in zip(pdf["lsn"], pdf[payload_col]):
+            c_lsn, c_size, c_op, c_xid, c_rel, c_new, c_old = [], [], [], [], [], [], []
+            sizes = pdf["data_size"] if data_size else repeat(None)
+            for lsn, size, buf in zip(pdf["lsn"], sizes, pdf[payload_col]):
                 buf = bytes(buf)
                 tag = buf[0]
                 if tag in (73, 85, 68):  # 'I' 'U' 'D'
@@ -345,6 +335,7 @@ def parse_pgoutput(
                         new, _ = _tuple_data(buf, pos + 1)
                         op = "insert" if tag == 73 else "update"
                     c_lsn.append(lsn)
+                    c_size.append(size)
                     c_op.append(op)
                     c_xid.append(None)
                     c_rel.append(rel_id)
@@ -352,6 +343,7 @@ def parse_pgoutput(
                     c_old.append(old)
                 elif tag == 66:  # 'B'
                     c_lsn.append(lsn)
+                    c_size.append(size)
                     c_op.append("begin")
                     c_xid.append(str(unpack_from(">I", buf, 17)[0]))
                     c_rel.append(None)
@@ -359,6 +351,7 @@ def parse_pgoutput(
                     c_old.append(None)
                 elif tag == 67:  # 'C'
                     c_lsn.append(lsn)
+                    c_size.append(size)
                     c_op.append("commit")
                     c_xid.append(None)
                     c_rel.append(None)
@@ -368,27 +361,63 @@ def parse_pgoutput(
                     (nrels,) = unpack_from(">I", buf, 1)
                     for rel_id in unpack_from(f">{nrels}I", buf, 6):
                         c_lsn.append(lsn)
+                        c_size.append(size)
                         c_op.append("truncate")
                         c_xid.append(None)
                         c_rel.append(rel_id)
                         c_new.append(None)
                         c_old.append(None)
-                # relation messages feed relation_registry, not rows
             # dtype=object on nullable columns: an all-None batch slice
             # must not be inferred float64 (Arrow can't cast that to
             # list<string>/string targets)
-            yield pd.DataFrame(
-                {
-                    "lsn": c_lsn,
-                    "operation": c_op,
-                    "begin_xid": pd.Series(c_xid, dtype=object),
-                    "rel_id": pd.Series(c_rel, dtype=object),
-                    "col_values": pd.Series(c_new, dtype=object),
-                    "old_values": pd.Series(c_old, dtype=object),
-                }
+            out = {"lsn": c_lsn, "data_size": c_size} if data_size else {"lsn": c_lsn}
+            out.update(
+                operation=c_op,
+                begin_xid=pd.Series(c_xid, dtype=object),
+                rel_id=pd.Series(c_rel, dtype=object),
+                col_values=pd.Series(c_new, dtype=object),
+                old_values=pd.Series(c_old, dtype=object),
             )
+            yield pd.DataFrame(out)
 
-    parsed = raw.select("lsn", payload_col).mapInPandas(kernel, ROWS_SCHEMA)
+    if not data_size:
+        return raw.select("lsn", payload_col).mapInPandas(kernel, ROWS_SCHEMA)
+    schema = T.StructType(
+        [
+            ROWS_SCHEMA["lsn"],
+            T.StructField("data_size", T.IntegerType()),
+            *ROWS_SCHEMA.fields[1:],
+        ]
+    )
+    return raw.select("lsn", "data_size", payload_col).mapInPandas(kernel, schema)
+
+
+def parse_pgoutput(
+    raw: DataFrame,
+    registry: DataFrame | None = None,
+    payload_col: str = "payload",
+    xid_eager: bool = True,
+) -> DataFrame:
+    """Parse a (lsn, payload binary) pgoutput stream into change rows.
+
+    Returns (lsn, operation, xid, table, col_names, col_values,
+    old_values, key_cols): insert/update/delete/truncate rows joined to
+    their broadcast relation metadata, xid attributed via the
+    distributed BEGIN carry-forward. Begin/Commit/Relation messages
+    drive the attribution and registry but emit no change rows.
+
+    ``xid_eager=False`` selects the zero-driver-job carry (see
+    ``stamp_xid_scalable``); the pure-JVM begin twins below then feed
+    the LAZY bounds/summary branches, so a backfill build runs no
+    driver jobs at all and the twin scans schedule inside the consuming
+    action. Keep the default for long-lived streams.
+    """
+    from .test_decoding import stamp_xid_scalable
+
+    if registry is None:
+        registry = relation_registry(raw, payload_col)
+
+    parsed = decode_pgoutput(raw, payload_col)
     # pure-JVM twin of (lsn, begin_xid) for the prefix-scan's two EAGER
     # phases: a Begin is tag 'B' with the uint32 xid at byte offset 17
     # (big-endian, same field the kernel unpacks) — hex+conv gives the

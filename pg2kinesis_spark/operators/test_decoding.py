@@ -35,8 +35,15 @@ the same window per slot.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+
+def begin_xid() -> Column:
+    """The xid of a ``BEGIN <xid>`` line, NULL on every other line — the
+    ``begin_xid`` input of both xid stamps (batch ``stamp_xid_scalable``
+    and the streaming ``stamp_xid_stateful``)."""
+    return F.when(F.col("payload").startswith("BEGIN "), F.get(F.split("payload", " ", 3), 1))
 
 
 def stamp_xid_scalable(
@@ -45,7 +52,6 @@ def stamp_xid_scalable(
     begin_col: str = "begin_xid",
     stats_df: DataFrame | None = None,
     begin_rows_df: DataFrame | None = None,
-    bounds: tuple[int, int] | None = None,
     eager: bool = True,
 ) -> DataFrame:
     """Distributed prefix-scan of the BEGIN-xid carry-forward (W1).
@@ -86,9 +92,6 @@ def stamp_xid_scalable(
     Eager-phase cost knobs (each phase is a driver-blocking job, so they
     bound the per-build latency a backfill pays):
 
-    * ``bounds=(lo, hi)`` skips the [min, max] span job entirely — a CDC
-      source KNOWS its offset range per batch (the replay source tracks
-      ack/high-water LSNs), so deployments should pass it.
     * ``begin_rows_df`` feeds the per-bucket summary with an ALREADY
       PRE-FILTERED (order_col, begin_col) frame (BEGIN rows only).
       ``filter(isNotNull(begin_col))`` on a derived ``when()`` column
@@ -113,10 +116,7 @@ def stamp_xid_scalable(
     if not eager:
         begin_rows = begin_rows_df if begin_rows_df is not None else stats
         return _stamp_xid_lazy(df, order_col, begin_col, stats, begin_rows, n_buckets)
-    if bounds is not None:
-        lo, hi = bounds
-    else:
-        lo, hi = stats.agg(F.min(order_col), F.max(order_col)).first()
+    lo, hi = stats.agg(F.min(order_col), F.max(order_col)).first()
     if lo is None:  # empty input
         return df.withColumn("xid", F.lit(""))
     span = float(max(1, hi - lo + 1))
@@ -288,9 +288,9 @@ def parse_test_decoding(
     (table_name, pk_col_name, pk_col_type, pk_pattern).
 
     ``xid_precomputed=True`` skips the W1 window — the streaming pipeline
-    stamps xid with applyInPandasWithState (cross-batch state) before
-    calling this, so batch and streaming share every operator downstream
-    of the stamp.
+    stamps xid with applyInPandasWithState (cross-batch state, fed by
+    ``begin_xid()``) before calling this, so batch and streaming share
+    every operator downstream of the stamp.
 
     ``keep_frames=True`` keeps BEGIN/COMMIT frame rows (is_frame=true,
     all Change fields null) and carries ``data_size`` through — the
@@ -316,19 +316,15 @@ def parse_test_decoding(
         # stamp runs BEFORE tokenization so the window shuffle carries
         # only the narrow (lsn, payload, begin_xid) rows, not four extra
         # token copies of every payload.
-        begin_xid = F.get(F.split("payload", " ", 3), 1)
         df = stamp_xid_scalable(
-            df.withColumn(
-                "begin_xid",
-                F.when(F.col("payload").startswith("BEGIN "), begin_xid),
-            ),
+            df.withColumn("begin_xid", begin_xid()),
             # summary-phase input pre-filtered on the RAW column: the
             # startswith predicate reaches the scan, so the eager
             # per-bucket job splits only the ~1-in-5 BEGIN rows instead
             # of tokenizing the whole corpus (measured 0.48s -> 0.3s on
             # the 450k-line bench corpus)
             begin_rows_df=df.filter(F.col("payload").startswith("BEGIN ")).select(
-                "lsn", begin_xid.alias("begin_xid")
+                "lsn", begin_xid().alias("begin_xid")
             ),
             eager=xid_eager,
         ).drop("begin_xid")

@@ -10,8 +10,14 @@ via psycopg2 — the rebuild of the reference's SlotReader
 - the PK catalog snapshot ships the same information_schema SQL the
   reference sends (reference slot.py:18-33) and feeds
   catalog.primary_key_map
-- ``commit(offset)`` sends ``send_feedback(flush_lsn=...)`` — the ack
-  that lets Postgres reclaim WAL (reference __main__.py:101-104, S8/X7)
+- one stream reader, ``PgCdcStreamReader``: each trigger peeks up to
+  rows_per_batch changes (pg_logical_slot_peek_changes) and
+  ``commit(offset)`` advances the slot (pg_replication_slot_advance) —
+  the ack that lets Postgres reclaim WAL, sent only after the sink's
+  batch succeeded (reference __main__.py:101-104, S8/X7). A Structured
+  Streaming source is pull-based, so the reference's START_REPLICATION
+  push loop (slot.py:122-129) has no counterpart here; un-acked WAL is
+  re-served by the slot itself after a crash (at-least-once).
 
 psycopg2 is not installed in this environment; everything here degrades
 to ImportError at construction, and the class is excluded from CI. The
@@ -19,8 +25,6 @@ replay source exercises the identical engine-facing contract.
 """
 
 from __future__ import annotations
-
-import json
 
 try:
     import psycopg2
@@ -141,66 +145,6 @@ class PgSlotManager:
             cur.execute(PK_SQL)
             return cur.fetchall()
 
-    def process_replication_stream(self, consume) -> None:
-        """START_REPLICATION push loop — exact parity with the
-        reference's SlotReader.process_replication_stream
-        (slot.py:122-129): wal2json slots get {'include-xids': 1},
-        then the blocking consume_stream drives ``consume`` once per
-        replication message. This is the reference's deployment surface;
-        the Spark stream reader below uses peek/advance polling instead
-        (same at-least-once contract) because a Structured Streaming
-        source is pull-based — push mode is bridged via QueueConsume.
-        """
-        options = {"include-xids": 1} if self.plugin == "wal2json" else None
-        with self._conn(replication=True) as conn:
-            cur = conn.cursor()
-            cur.start_replication(slot_name=self.slot_name, options=options)
-            cur.consume_stream(consume)
-
-
-class QueueConsume:
-    """Bridge from the push loop to a pull-based reader: buffers
-    (lsn, data_size, payload) rows and acks the flushed LSN back on the
-    message's own cursor — the reference's ack-after-put feedback
-    (__main__.py:101-104) split into its two halves so the sink can ack
-    only after Kinesis accepted the batch."""
-
-    def __init__(self, max_buffer: int = 100_000):
-        import threading
-
-        self.max_buffer = max_buffer
-        self.buffer: list[tuple[int, int, str]] = []
-        self._cursors: dict[int, object] = {}
-        # consume thread appends while the driver drains — without the
-        # lock an append racing the drain swap could land on the
-        # already-swapped-out list and silently vanish.
-        self._lock = threading.Lock()
-
-    def __call__(self, change) -> None:
-        with self._lock:
-            if len(self.buffer) >= self.max_buffer:
-                raise BufferError(
-                    f"CDC buffer exceeded {self.max_buffer} messages without an ack"
-                )
-            self.buffer.append((change.data_start, change.data_size, change.payload))
-            self._cursors[change.data_start] = change.cursor
-
-    def drain(self) -> list[tuple[int, int, str]]:
-        with self._lock:
-            out, self.buffer = self.buffer, []
-        return out
-
-    def ack(self, lsn: int) -> None:
-        """send_feedback(flush_lsn=...) on the cursor that delivered the
-        message at (or nearest below) this LSN; drops older cursor refs."""
-        eligible = [k for k in self._cursors if k <= lsn]
-        if not eligible:
-            return
-        top = max(eligible)
-        self._cursors[top].send_feedback(flush_lsn=lsn)
-        for k in eligible:
-            del self._cursors[k]
-
 
 class _PgBatch(InputPartition):
     def __init__(self, messages: list[tuple[int, int, str]]):
@@ -267,68 +211,8 @@ class PgCdcStreamReader(DataSourceStreamReader):  # pragma: no cover - needs PG
             )
 
 
-class PgCdcPushStreamReader(DataSourceStreamReader):
-    """START_REPLICATION push mode wired into the Spark source contract.
-
-    A daemon thread runs the blocking ``consume_stream`` loop
-    (reference slot.py:122-129) into a QueueConsume; ``latestOffset``
-    drains the buffer on each trigger, ``partitions`` embeds the drained
-    messages (executors cannot reach driver memory), and ``commit``
-    sends ``send_feedback(flush_lsn=...)`` on the delivering cursor —
-    ack-after-put, exactly the reference's two-phase-commit shape.
-    The poll reader (peek/advance) remains the default: re-reading
-    un-acked WAL after a crash needs no driver-side buffer there. Push
-    mode trades that re-read for the reference's lower-latency loop;
-    messages held in the buffer before commit are re-served by Postgres
-    on restart either way (at-least-once in both modes).
-    """
-
-    def __init__(self, options: dict, manager: PgSlotManager | None = None):
-        self.mgr = manager or PgSlotManager(
-            options["dsn"], options.get("slot", "pg2kinesis"), options.get("plugin", "test_decoding")
-        )
-        self.queue = QueueConsume(int(options.get("maxbuffer", 100_000)))
-        self._thread = None
-        self._pending: list[tuple[int, int, str]] = []
-        self._last = 0
-
-    def _ensure_started(self) -> None:
-        if self._thread is None:
-            import threading
-
-            self._thread = threading.Thread(
-                target=self.mgr.process_replication_stream, args=(self.queue,), daemon=True
-            )
-            self._thread.start()
-
-    def initialOffset(self) -> dict:
-        return {"lsn": 0}
-
-    def latestOffset(self) -> dict:
-        self._ensure_started()
-        drained = self.queue.drain()
-        if drained:
-            self._pending.extend(drained)
-            self._last = max(self._last, max(m[0] for m in drained))
-        return {"lsn": self._last}
-
-    def partitions(self, start: dict, end: dict):
-        msgs = [m for m in self._pending if start["lsn"] < m[0] <= end["lsn"]]
-        self._pending = [m for m in self._pending if m[0] > end["lsn"]]
-        return [_PgBatch(msgs)]
-
-    def read(self, partition: _PgBatch):
-        yield from partition.messages
-
-    def commit(self, end: dict) -> None:
-        self.queue.ack(end["lsn"])
-
-
 class PgCdcDataSource(DataSource):  # pragma: no cover - needs PG
-    """spark.readStream.format("pgcdc").option("dsn", ...).load()
-
-    option("mode", "poll"|"push") selects peek/advance polling (default)
-    or the START_REPLICATION push loop."""
+    """spark.readStream.format("pgcdc").option("dsn", ...).load()"""
 
     @classmethod
     def name(cls) -> str:
@@ -338,6 +222,4 @@ class PgCdcDataSource(DataSource):  # pragma: no cover - needs PG
         return "lsn bigint, data_size int, payload string"
 
     def streamReader(self, schema):
-        if self.options.get("mode", "poll") == "push":
-            return PgCdcPushStreamReader(self.options)
         return PgCdcStreamReader(self.options)

@@ -2,11 +2,17 @@
 
 Wires the batch operators (operators/*) into a streaming dataflow:
 
-    cdc_replay source (LSN offsets)                 S1/S2/S3/T5
-      → stateful xid stamp (applyInPandasWithState) W1 streaming form
-      → parse/enrich/format (shared with batch)     P1-P11, F5-F8, J3
-      → operation filter (null-out)                 P6/§8.6
-      → foreachBatch KinesisLikeWriter              S5-S8/T2-T4
+    cdc_replay corpus or live pgcdc slot (LSN offsets)  S1/S2/S3/T5
+      → plugin decode supplies begin_xid                 P1 / pgoutput kernel
+      → stateful xid stamp (applyInPandasWithState)      W1 streaming form
+      → parse/enrich/format (shared with batch)          P1-P11, F5-F8, J3
+      → operation filter (null-out)                      P6/§8.6
+      → foreachBatch KinesisLikeWriter                   S5-S8/T2-T4
+
+There is one stamp (``stamp_xid_stateful``): it forward-fills the
+``begin_xid`` column each plugin supplies — ``begin_xid()`` for
+test_decoding lines, the shared ``decode_pgoutput`` kernel for pgoutput.
+wal2json needs none: each message carries its xid.
 
 Scale shape: the xid stamp is keyed by source partition (a replication
 slot is one ordered log — the reference's single connection, slot.py:129),
@@ -20,130 +26,51 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pg2kinesis_spark.operators.formatters import filter_operations, format_csv, format_csvpayload
-from pg2kinesis_spark.operators.test_decoding import parse_test_decoding
+from pg2kinesis_spark.operators.test_decoding import begin_xid, parse_test_decoding
 from pg2kinesis_spark.operators.wal2json import parse_wal2json
 from pg2kinesis_spark.sources.replay import register as register_replay
-
-STAMPED_SCHEMA = "lsn long, data_size int, payload string, xid string"
-
-
-def _stamp_chunks(chunks: list[pd.DataFrame], cur: str) -> tuple[pd.DataFrame | None, str]:
-    """Stamping core shared by both stateful APIs: concatenate ALL Arrow
-    chunks and sort ONCE by lsn (chunks carry no cross-chunk ordering
-    guarantee once a batch exceeds arrow.maxRecordsPerBatch — a per-chunk
-    sort would misattribute xids when a BEGIN lands in a later chunk than
-    its DML rows), then carry cur_xact through the payloads."""
-    if not chunks:
-        return None, cur
-    pdf = pd.concat(chunks, ignore_index=True).sort_values("lsn")
-    xids = []
-    for payload in pdf["payload"]:
-        if isinstance(payload, str) and payload.startswith("BEGIN "):
-            cur = payload.split(" ", 2)[1]
-        xids.append(cur)
-    out = pdf[["lsn", "data_size", "payload"]].copy()
-    out["xid"] = xids
-    return out, cur
 
 
 def _stamp_fn(key, pdf_iter, state: GroupState):
     """Carry cur_xact across micro-batches (reference formatter.py:37,59-60).
 
+    Concatenates ALL Arrow chunks and sorts ONCE by lsn (chunks carry no
+    cross-chunk ordering guarantee once a batch exceeds
+    arrow.maxRecordsPerBatch — a per-chunk sort would misattribute xids
+    when a BEGIN lands in a later chunk than its DML rows), then
+    forward-fills ``begin_xid`` into ``xid``.
     State: ('<current xid>',) per slot key. Memory is bounded by the
     source's rows_per_batch backpressure knob, never the stream."""
     cur = state.get[0] if state.exists else ""
-    out, cur = _stamp_chunks(list(pdf_iter), cur)
-    if out is not None:
-        yield out
+    chunks = [c for c in pdf_iter if len(c)]
+    if chunks:
+        pdf = pd.concat(chunks, ignore_index=True).sort_values("lsn", kind="stable")
+        xid = pdf["begin_xid"].ffill().fillna(cur)
+        cur = xid.iat[-1]
+        yield pdf.drop(columns=["slot", "begin_xid"]).assign(xid=xid)
     state.update((cur,))
 
 
-def stamp_xid_stateful(raw: DataFrame) -> DataFrame:
-    """Stateful W1: one state tuple per slot (here: one slot → lit(0))."""
+def stamp_xid_stateful(df: DataFrame) -> DataFrame:
+    """Stateful W1: replaces ``begin_xid`` (the xid on BEGIN rows, NULL
+    elsewhere) with ``xid``, the last BEGIN's xid at or before each row
+    ('' before any BEGIN). One state tuple per slot (here: one slot →
+    lit(0))."""
+    fields = [f for f in df.schema.fields if f.name != "begin_xid"]
     return (
-        raw.withColumn("slot", F.lit(0))
+        df.withColumn("slot", F.lit(0))
         .groupBy("slot")
         .applyInPandasWithState(
             _stamp_fn,
-            outputStructType=STAMPED_SCHEMA,
+            outputStructType=T.StructType(fields + [T.StructField("xid", T.StringType())]),
             stateStructType="cur_xact string",
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-try:  # Spark 4.0+ stateful-processor API
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-except ImportError:  # pragma: no cover - older Spark
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-
-
-class XidStampTws(StatefulProcessor):
-    """transformWithState form of W1 — Spark 4's stateful-processor API.
-
-    Same semantics and shared stamping core as ``_stamp_fn``; state is a
-    named ValueState("cur_xact") in the per-key state store (RocksDB
-    provider required — the test sets it). This is the forward-looking
-    surface: named state variables, TTL, and timers compose here where
-    applyInPandasWithState offers one opaque tuple.
-    """
-
-    def init(self, handle) -> None:
-        self._cur = handle.getValueState("cur_xact", "cur_xact string")
-
-    def handleInputRows(self, key, rows, timer_values):
-        got = self._cur.get()
-        cur = got[0] if got is not None else ""
-        out, cur = _stamp_chunks(list(rows), cur)
-        if out is not None:
-            yield out
-        self._cur.update((cur,))
-
-    def close(self) -> None:
-        pass
-
-
-def stamp_xid_tws(raw: DataFrame) -> DataFrame:
-    """W1 via transformWithStateInPandas — identical output to
-    ``stamp_xid_stateful``; parity pinned by tests/test_streaming.py.
-
-    Runtime requirements beyond the applyInPandasWithState path: the
-    RocksDB state-store provider and the `protobuf` package (Spark's TWS
-    Python state server speaks protobuf). The e2e parity test skips
-    where protobuf is absent; the processor logic itself is pinned with
-    a fake handle either way.
-    """
-    return (
-        raw.withColumn("slot", F.lit(0))
-        .groupBy("slot")
-        .transformWithStateInPandas(
-            statefulProcessor=XidStampTws(),
-            outputStructType=STAMPED_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
-def dedupe_replayed(raw: DataFrame, within: str = "10 minutes") -> DataFrame:
-    """Optional consumer-side dedup for at-least-once delivery.
-
-    A crash between put and ack re-serves the un-acked LSN range on
-    restart (reference README.rst:14-18 documents the duplicates;
-    SURVEY §2.9 T1). Downstream consumers that want effective
-    exactly-once can drop LSN repeats here: state is bounded to the
-    ``within`` watermark window — the realistic re-serve horizon —
-    never the whole stream (a plain dropDuplicates would grow state
-    forever on an infinite CDC stream)."""
-    return (
-        raw.withColumn("ingest_ts", F.current_timestamp())
-        .withWatermark("ingest_ts", within)
-        .dropDuplicatesWithinWatermark(["lsn"])
-        .drop("ingest_ts")
     )
 
 
@@ -165,13 +92,10 @@ def read_pgcdc_stream(
     slot: str = "pg2kinesis",
     plugin: str = "test_decoding",
     rows_per_batch: int = 1000,
-    mode: str = "poll",
 ) -> DataFrame:
     """Live source (S1): registers the pgcdc Python DataSource and builds
     the stream DataFrame. Schema resolution needs no Postgres connection —
-    psycopg2 is only required once the query starts consuming the slot.
-    ``mode='push'`` selects the START_REPLICATION consume loop
-    (reference slot.py:122-129 parity); 'poll' (default) peeks/advances."""
+    psycopg2 is only required once the query starts consuming the slot."""
     from pg2kinesis_spark.sources.pgcdc import PgCdcDataSource
 
     spark.dataSource.register(PgCdcDataSource)
@@ -181,7 +105,6 @@ def read_pgcdc_stream(
         .option("slot", slot)
         .option("plugin", plugin)
         .option("rowsperbatch", str(rows_per_batch))
-        .option("mode", mode)
         .load()
     )
 
@@ -200,6 +123,15 @@ def _raw_stream(spark, source, rows_per_batch, ack_log) -> DataFrame:
     return read_replay_stream(spark, source, rows_per_batch, ack_log)
 
 
+def _wire_size(msgs: DataFrame) -> DataFrame:
+    """Sink metadata (reference telemetry parity, __main__.py:86-91):
+    ``wire_size`` rides every row of a wire message — frames included —
+    and the sink counts the first row per lsn once by its data_size;
+    is_frame rows never drive put_message (the reference's formatter
+    returns [] for them)."""
+    return msgs.withColumn("wire_size", F.coalesce(F.col("data_size"), F.lit(0)).cast("long"))
+
+
 def build_test_decoding_stream(
     spark: SparkSession,
     source,
@@ -210,22 +142,13 @@ def build_test_decoding_stream(
     rows_per_batch: int = 1000,
     ack_log: str | None = None,
 ) -> DataFrame:
-    """``source``: replay corpus path (str) or a pre-built raw streaming
-    DataFrame (read_pgcdc_stream). The ``error`` column rides to the sink,
-    where KinesisLikeWriter fail-stops on the earliest error LSN —
-    the reference's _log_and_raise (formatter.py:134-137, §8.5)."""
-    raw = _raw_stream(spark, source, rows_per_batch, ack_log)
-    stamped = stamp_xid_stateful(raw)
-    parsed = parse_test_decoding(
-        stamped, pk_map, table_pat, xid_precomputed=True, keep_frames=True
+    """Snapshot-once pipeline: the parse of
+    ``build_test_decoding_stream_refreshing`` applied to the whole stream
+    with one ``pk_map``."""
+    stamped, parse_fn = build_test_decoding_stream_refreshing(
+        spark, source, formatter, operations, table_pat, rows_per_batch, ack_log
     )
-    msgs = format_csv(parsed) if formatter == "CSV" else format_csvpayload(parsed)
-    msgs = filter_operations(msgs, operations)
-    # Sink metadata (reference telemetry parity, __main__.py:86-91):
-    # every test_decoding wire line — frames included — counts once by
-    # its wire data_size; is_frame rows never drive put_message (the
-    # reference's formatter returns [] for them).
-    return msgs.withColumn("wire_size", F.coalesce(F.col("data_size"), F.lit(0)).cast("long"))
+    return parse_fn(stamped, pk_map)
 
 
 def build_wal2json_stream(
@@ -239,29 +162,11 @@ def build_wal2json_stream(
     rows_per_batch: int = 1000,
     ack_log: str | None = None,
 ) -> DataFrame:
-    # wal2json needs no cross-batch state: each message carries its xid
-    # (reference formatter.py:110).
-    raw = _raw_stream(spark, source, rows_per_batch, ack_log)
-    parsed = parse_wal2json(raw, pk_map, table_pat, full_change=full_change, keep_empty=True)
-    if full_change:
-        # FullChange messages are operation-filtered too — on the RAW
-        # kind (FullChange.operation, reference formatter.py:14;
-        # filter at __main__.py:97-99). Full-change skips validation
-        # (P10) so there is no error column to carry.
-        msgs = format_csvpayload(parsed, full_change=True)
-    else:
-        msgs = format_csv(parsed) if formatter == "CSV" else format_csvpayload(parsed)
-    msgs = filter_operations(msgs, operations)
-    # Sink metadata (reference telemetry parity, __main__.py:86-91): a
-    # wire message is counted ONCE by data_size. wire_size rides EVERY
-    # row of a message and the sink dedups by lsn (first row per lsn
-    # counts), so a --table-pat that filters out change 0 — or every
-    # change, in which case parse_wal2json keeps a skeleton row — can
-    # never drop a message from the counters: exact pre-filter counting
-    # under any pattern, matching the reference's consume loop.
-    return msgs.withColumn("is_frame", F.col("change_idx").isNull()).withColumn(
-        "wire_size", F.coalesce(F.col("data_size"), F.lit(0)).cast("long")
+    """Snapshot-once twin of ``build_test_decoding_stream`` for wal2json."""
+    raw, parse_fn = build_wal2json_stream_refreshing(
+        spark, source, formatter, operations, table_pat, full_change, rows_per_batch, ack_log
     )
+    return parse_fn(raw, pk_map)
 
 
 class RefreshingWriter:
@@ -317,22 +222,25 @@ def build_test_decoding_stream_refreshing(
     rows_per_batch: int = 1000,
     ack_log: str | None = None,
 ) -> tuple[DataFrame, "callable"]:
-    """(stamped_stream, parse_fn) for the PK-refresh mode: the
-    cross-batch xid stamp stays in the streaming plan (it is operator
-    state), while parse/format/filter move into foreachBatch via
-    RefreshingWriter so the pk_map can be swapped between batches."""
-    raw = _raw_stream(spark, source, rows_per_batch, ack_log)
-    stamped = stamp_xid_stateful(raw)
+    """(stamped_stream, parse_fn). ``source``: replay corpus path (str)
+    or a pre-built raw streaming DataFrame (read_pgcdc_stream).
 
-    def parse_fn(batch_df: DataFrame, pk_map: DataFrame) -> DataFrame:
+    The cross-batch xid stamp stays in the streaming plan (it is operator
+    state); ``parse_fn(df, pk_map)`` is the parse/format/filter tail.
+    ``build_test_decoding_stream`` applies it once to the whole stream,
+    RefreshingWriter once per batch so the pk_map can be swapped between
+    batches. The ``error`` column rides to the sink, where
+    KinesisLikeWriter fail-stops on the earliest error LSN — the
+    reference's _log_and_raise (formatter.py:134-137, §8.5)."""
+    raw = _raw_stream(spark, source, rows_per_batch, ack_log)
+    stamped = stamp_xid_stateful(raw.withColumn("begin_xid", begin_xid()))
+
+    def parse_fn(df: DataFrame, pk_map: DataFrame) -> DataFrame:
         parsed = parse_test_decoding(
-            batch_df, pk_map, table_pat, xid_precomputed=True, keep_frames=True
+            df, pk_map, table_pat, xid_precomputed=True, keep_frames=True
         )
         msgs = format_csv(parsed) if formatter == "CSV" else format_csvpayload(parsed)
-        msgs = filter_operations(msgs, operations)
-        return msgs.withColumn(
-            "wire_size", F.coalesce(F.col("data_size"), F.lit(0)).cast("long")
-        )
+        return _wire_size(filter_operations(msgs, operations))
 
     return stamped, parse_fn
 
@@ -347,93 +255,30 @@ def build_wal2json_stream_refreshing(
     rows_per_batch: int = 1000,
     ack_log: str | None = None,
 ) -> tuple[DataFrame, "callable"]:
-    """wal2json twin of build_test_decoding_stream_refreshing (no
-    cross-batch state at all — each message carries its xid)."""
+    """wal2json twin of build_test_decoding_stream_refreshing: (raw_stream,
+    parse_fn). No cross-batch state at all — each message carries its
+    xid (reference formatter.py:110)."""
     raw = _raw_stream(spark, source, rows_per_batch, ack_log)
 
-    def parse_fn(batch_df: DataFrame, pk_map: DataFrame) -> DataFrame:
-        parsed = parse_wal2json(
-            batch_df, pk_map, table_pat, full_change=full_change, keep_empty=True
-        )
+    def parse_fn(df: DataFrame, pk_map: DataFrame | None) -> DataFrame:
+        parsed = parse_wal2json(df, pk_map, table_pat, full_change=full_change, keep_empty=True)
         if full_change:
+            # FullChange messages are operation-filtered too — on the RAW
+            # kind (FullChange.operation, reference formatter.py:14;
+            # filter at __main__.py:97-99). Full-change skips validation
+            # (P10) so there is no error column to carry.
             msgs = format_csvpayload(parsed, full_change=True)
         else:
             msgs = format_csv(parsed) if formatter == "CSV" else format_csvpayload(parsed)
         msgs = filter_operations(msgs, operations)
-        return msgs.withColumn(
-            "is_frame", F.col("change_idx").isNull()
-        ).withColumn("wire_size", F.coalesce(F.col("data_size"), F.lit(0)).cast("long"))
+        # The sink dedups wire_size by lsn, so a --table-pat that filters
+        # out change 0 — or every change, in which case parse_wal2json
+        # keeps a skeleton row — can never drop a message from the
+        # counters: exact pre-filter counting under any pattern, matching
+        # the reference's consume loop.
+        return _wire_size(msgs.withColumn("is_frame", F.col("change_idx").isNull()))
 
     return raw, parse_fn
-
-
-PGOUT_PARSED_SCHEMA = (
-    "lsn long, data_size int, operation string, begin_xid string, "
-    "rel_id long, col_values array<string>, old_values array<string>"
-)
-PGOUT_STAMPED_SCHEMA = PGOUT_PARSED_SCHEMA + ", xid string"
-
-
-def _parse_pgoutput_batches(raw: DataFrame) -> DataFrame:
-    """Stateless mapInPandas parse of base64 pgoutput payloads.
-
-    The replay/live source schema carries ``payload string``; binary
-    plugins ship their messages base64-encoded in it (the documented
-    corpus convention). Relation messages emit no rows here — streaming
-    name resolution happens against a static registry (below)."""
-    import base64
-
-    from pg2kinesis_spark.operators.pgoutput import decode_message
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for lsn, size, payload in zip(pdf["lsn"], pdf["data_size"], pdf["payload"]):
-                d = decode_message(base64.b64decode(payload))
-                op = d["op"]
-                if op == "begin":
-                    rows.append((lsn, size, "begin", str(d["xid"]), None, None, None))
-                elif op == "commit":
-                    rows.append((lsn, size, "commit", None, None, None, None))
-                elif op in ("insert", "update", "delete"):
-                    rows.append(
-                        (lsn, size, op, None, d["rel_id"], d["new"], d["old"])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "lsn", "data_size", "operation", "begin_xid",
-                    "rel_id", "col_values", "old_values",
-                ],
-            )
-
-    return raw.select("lsn", "data_size", "payload").mapInPandas(
-        kernel, PGOUT_PARSED_SCHEMA
-    )
-
-
-def _stamp_fn_pgout(key, pdf_iter, state: GroupState):
-    """Carry cur_xact across micro-batches for PARSED pgoutput rows —
-    the begin_xid column plays BEGIN's role (same chunk-concat + single
-    lsn sort discipline as _stamp_chunks)."""
-    cur = state.get[0] if state.exists else ""
-    chunks = list(pdf_iter)
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("lsn")
-        xids = []
-        for bx in pdf["begin_xid"]:
-            if isinstance(bx, str) and bx:
-                cur = bx
-            xids.append(cur)
-        out = pdf[
-            [
-                "lsn", "data_size", "operation", "begin_xid",
-                "rel_id", "col_values", "old_values",
-            ]
-        ].copy()
-        out["xid"] = xids
-        yield out
-    state.update((cur,))
 
 
 def build_pgoutput_stream(
@@ -446,28 +291,25 @@ def build_pgoutput_stream(
     rows_per_batch: int = 1000,
     ack_log: str | None = None,
 ) -> DataFrame:
-    """Streaming pgoutput: parse (stateless kernel) -> stateful xid
-    carry-forward -> broadcast registry join -> format -> op filter.
+    """Streaming pgoutput: the batch decode kernel (``decode_pgoutput``)
+    over the unbase64'd payloads -> stateful xid stamp -> broadcast
+    registry join -> format -> op filter.
 
     ``registry`` is the STATIC relation catalog (rel_id, namespace,
     relname, col_names, key_cols) — from ``relation_registry`` over a
     replay corpus, or a catalog snapshot for live slots. Mid-stream
     schema changes need the batch path; a rel_id absent from the
     registry surfaces the fail-stop ``error`` channel like an unknown
-    table (§8.5)."""
+    table (§8.5). A Truncate puts one message per truncated relation
+    (operation ``truncate``, no pkey) and counts once as a wire message;
+    Relation messages emit no row."""
+    from pg2kinesis_spark.operators.pgoutput import decode_pgoutput
+
     raw = _raw_stream(spark, source, rows_per_batch, ack_log)
-    parsed = _parse_pgoutput_batches(raw)
-    stamped = (
-        parsed.withColumn("slot", F.lit(0))
-        .groupBy("slot")
-        .applyInPandasWithState(
-            _stamp_fn_pgout,
-            outputStructType=PGOUT_STAMPED_SCHEMA,
-            stateStructType="cur_xact string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    decoded = decode_pgoutput(
+        raw.withColumn("payload", F.unbase64("payload")), data_size=True
     )
+    stamped = stamp_xid_stateful(decoded)
     reg = F.broadcast(
         registry.select(
             "rel_id",
@@ -477,7 +319,8 @@ def build_pgoutput_stream(
             "key_cols",
         )
     )
-    is_change = F.col("operation").isin("insert", "update", "delete")
+    has_tuple = F.col("operation").isin("insert", "update", "delete")
+    is_change = has_tuple | (F.col("operation") == "truncate")
     df = stamped.join(reg, "rel_id", "left")
     if table_pat is not None:
         # P5 parity: unanchored search on the UNqualified table name;
@@ -497,7 +340,7 @@ def build_pgoutput_stream(
         "operation",
         "xid",
         "table",
-        F.when(is_change & (pos > 0), pkey).alias("pkey"),
+        F.when(has_tuple & (pos > 0), pkey).alias("pkey"),
         F.when(
             is_change & F.col("table").isNull(),
             F.format_string("no Relation for rel_id %s", F.col("rel_id")),
@@ -508,10 +351,7 @@ def build_pgoutput_stream(
     msgs = fmt(df).withColumn(
         "fmt_msg", F.when(~F.col("is_frame"), F.col("fmt_msg"))
     )
-    msgs = filter_operations(msgs, operations)
-    return msgs.withColumn(
-        "wire_size", F.coalesce(F.col("data_size"), F.lit(0)).cast("long")
-    )
+    return _wire_size(filter_operations(msgs, operations))
 
 
 def run_to_sink(stream_df: DataFrame, writer, checkpoint: str, available_now: bool = True):

@@ -8,13 +8,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pg2kinesis_spark.session import get_spark
-from pg2kinesis_spark.vendor import install_protobuf_shim
-
-# Before any SparkSession (= JVM = worker env) exists: if the real
-# protobuf runtime is missing, activate the vendored shim so the
-# transformWithState state-server path (pyspark's generated
-# StateMessage_pb2) imports in driver AND Python workers.
-install_protobuf_shim()
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"

@@ -14,6 +14,7 @@ from pg2kinesis_spark.streaming.pipeline import (
     RefreshingWriter,
     build_test_decoding_stream,
     build_test_decoding_stream_refreshing,
+    build_wal2json_stream_refreshing,
     run_until,
 )
 
@@ -61,6 +62,39 @@ def corpus(spark, tmp_path_factory):
     return path
 
 
+@pytest.fixture(scope="module")
+def w2j_corpus(spark, tmp_path_factory):
+    """wal2json twin of ``corpus``: one message per transaction, so
+    rows_per_batch=2 puts the two table_a messages in batch 1 and the
+    table_b message in batch 2."""
+    import json
+
+    def msg(xid, table, n):
+        return {"xid": xid, "change": [
+            {
+                "kind": "update",
+                "schema": "public",
+                "table": table,
+                "columnnames": ["uuid"],
+                "columntypes": ["uuid"],
+                "columnvalues": [f"{UUID[:-1]}{i}"],
+            }
+            for i in range(n)
+        ]}
+
+    payloads = [
+        (10, json.dumps(msg(7, "table_a", 3))),
+        (20, json.dumps(msg(8, "table_a", 3))),
+        (30, json.dumps(msg(9, "table_b", 2))),
+    ]
+    path = str(tmp_path_factory.mktemp("refresh_w2j") / "corpus.parquet")
+    spark.createDataFrame(
+        [(l, len(p.encode()), p) for l, p in payloads],
+        "lsn long, data_size int, payload string",
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+    return path
+
+
 def test_default_pipeline_fail_stops_on_midstream_table(
     spark, corpus, tmp_path_factory, few_shuffles
 ):
@@ -84,53 +118,59 @@ def test_default_pipeline_fail_stops_on_midstream_table(
 
 
 def test_refresh_picks_up_midstream_table(
-    spark, corpus, tmp_path_factory, few_shuffles
+    spark, corpus, w2j_corpus, tmp_path_factory, few_shuffles
 ):
     """Opt-in mode: the catalog re-snapshot between batches returns the
     grown table set, so batch 2's table_b rows parse and flow to the
-    sink instead of fail-stopping."""
-    calls = {"n": 0}
-
-    def load_pk_map():
-        # first snapshot: pre-DDL catalog; later snapshots see table_b —
-        # the information_schema state after the mid-stream CREATE TABLE
-        calls["n"] += 1
-        tables = ["public.table_a"] if calls["n"] == 1 else [
-            "public.table_a", "public.table_b",
-        ]
-        return primary_key_map(_catalog(spark, tables))
-
-    # operations must name UPPERCASE ops explicitly: 'all' expands to
-    # the lowercase set which never matches test_decoding's UPDATE
-    # (§8.4 reference quirk, pinned in test_streaming.py)
-    stamped, parse_fn = build_test_decoding_stream_refreshing(
-        spark, corpus, rows_per_batch=10, operations=("UPDATE",)
-    )
-    transport = InMemoryTransport()
-    writer = RefreshingWriter(
-        KinesisLikeWriter(transport), parse_fn, load_pk_map, refresh_every=1
-    )
-    ck = str(tmp_path_factory.mktemp("ck_refresh"))
-    run_until(
-        stream_df=stamped,
-        writer=writer,
-        checkpoint=ck,
-        done=lambda: writer.put_message_calls >= 8,  # 6 table_a + 2 table_b
-        timeout=90,
-    )
-    writer.flush_tail()  # delegation check doubles as the KPL drain
+    sink instead of fail-stopping. Both text plugins: test_decoding
+    (the stamped stream) and wal2json (the raw stream)."""
     from pg2kinesis_spark.sinks.kpl import deaggregate_kpl
 
-    msgs = [
-        m.decode()
-        for _, data in transport.records
-        for _, m in deaggregate_kpl(data)
-    ]
-    assert sum("public.table_a" in m for m in msgs) == 6
-    assert sum("public.table_b" in m for m in msgs) == 2
-    assert calls["n"] >= 2  # the catalog really was re-snapshot
-    # telemetry delegation: counters ride through the wrapper
-    assert writer.put_message_calls == 8
+    # test_decoding's operations must name UPPERCASE ops explicitly:
+    # 'all' expands to the lowercase set which never matches its UPDATE
+    # (§8.4 reference quirk, pinned in test_streaming.py); wal2json
+    # kinds are lowercase
+    for build, path, rows_per_batch, ops in (
+        (build_test_decoding_stream_refreshing, corpus, 10, ("UPDATE",)),
+        (build_wal2json_stream_refreshing, w2j_corpus, 2, ("all",)),
+    ):
+        calls = {"n": 0}
+
+        def load_pk_map():
+            # first snapshot: pre-DDL catalog; later snapshots see table_b —
+            # the information_schema state after the mid-stream CREATE TABLE
+            calls["n"] += 1
+            tables = ["public.table_a"] if calls["n"] == 1 else [
+                "public.table_a", "public.table_b",
+            ]
+            return primary_key_map(_catalog(spark, tables))
+
+        stream, parse_fn = build(
+            spark, path, rows_per_batch=rows_per_batch, operations=ops
+        )
+        transport = InMemoryTransport()
+        writer = RefreshingWriter(
+            KinesisLikeWriter(transport), parse_fn, load_pk_map, refresh_every=1
+        )
+        ck = str(tmp_path_factory.mktemp("ck_refresh"))
+        run_until(
+            stream_df=stream,
+            writer=writer,
+            checkpoint=ck,
+            done=lambda: writer.put_message_calls >= 8,  # 6 table_a + 2 table_b
+            timeout=90,
+        )
+        writer.flush_tail()  # delegation check doubles as the KPL drain
+        msgs = [
+            m.decode()
+            for _, data in transport.records
+            for _, m in deaggregate_kpl(data)
+        ]
+        assert sum("public.table_a" in m for m in msgs) == 6, build.__name__
+        assert sum("public.table_b" in m for m in msgs) == 2, build.__name__
+        assert calls["n"] >= 2  # the catalog really was re-snapshot
+        # telemetry delegation: counters ride through the wrapper
+        assert writer.put_message_calls == 8
 
 
 def test_refresh_every_n_batches_and_validation(spark):

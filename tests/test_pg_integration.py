@@ -107,31 +107,6 @@ def test_peek_reader_round_trip_and_advance_live(manager, table, slot_name):
     assert not any(f"id[integer]:0" in t and "INSERT" in t for t in texts)
 
 
-def test_push_reader_consume_loop_live(manager, table, slot_name):
-    """START_REPLICATION push loop (reference slot.py:122-129) through
-    QueueConsume: messages arrive on the daemon thread and ack sends
-    send_feedback on the delivering cursor."""
-    import time
-
-    from pg2kinesis_spark.sources.pgcdc import PgCdcPushStreamReader
-
-    manager.create_slot()
-    reader = PgCdcPushStreamReader({"dsn": DSN, "slot": slot_name}, manager=manager)
-    reader.latestOffset()  # starts the consume thread
-    with psycopg2.connect(DSN) as conn, conn.cursor() as cur:
-        cur.execute(f"INSERT INTO {table} VALUES (7, 'push')")
-    deadline = time.time() + 15
-    got = []
-    while time.time() < deadline:
-        end = reader.latestOffset()
-        got += [m for p in reader.partitions({"lsn": 0}, end) for m in reader.read(p)]
-        if any("push" in m[2] for m in got):
-            break
-        time.sleep(0.5)
-    assert any("push" in m[2] for m in got)
-    reader.commit(end)
-
-
 def test_pgoutput_binary_peek_parses_live(manager, table, slot_name):
     """Real pgoutput bytes: create a publication + pgoutput slot, insert,
     peek the BINARY change stream, and run the repo's decoder over it —

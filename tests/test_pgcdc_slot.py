@@ -132,142 +132,3 @@ def test_recreate_cycle_is_idempotent_end_to_end():
     mgr.create_slot()
     assert cur.drop_calls and cur.create_calls
 
-
-# ---------- START_REPLICATION push-loop parity (reference slot.py:122-129) ----------
-
-class FakeReplMessage:
-    def __init__(self, lsn, payload, cursor):
-        self.data_start = lsn
-        self.data_size = len(payload.encode())
-        self.payload = payload
-        self.cursor = cursor
-
-
-class FakeReplCursor:
-    """Replication cursor double: start_replication records its args;
-    consume_stream pushes a scripted message sequence through the
-    callback (the psycopg2 C loop's shape)."""
-
-    def __init__(self, payloads):
-        self.payloads = payloads
-        self.start_calls = []
-        self.feedback = []
-
-    def start_replication(self, slot_name, options=None):
-        self.start_calls.append((slot_name, options))
-
-    def consume_stream(self, consume):
-        for lsn, p in self.payloads:
-            consume(FakeReplMessage(lsn, p, self))
-
-    def send_feedback(self, flush_lsn):
-        self.feedback.append(flush_lsn)
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        return False
-
-
-class FakeReplConn:
-    def __init__(self, cursor):
-        self._cursor = cursor
-
-    def cursor(self):
-        return self._cursor
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        return False
-
-
-def _repl_mgr(payloads, plugin):
-    cur = FakeReplCursor(payloads)
-    mgr = PgSlotManager(
-        "dbname=x", "slot1", plugin, connection_factory=lambda repl: FakeReplConn(cur)
-    )
-    return mgr, cur
-
-
-def test_start_replication_wal2json_gets_include_xids():
-    mgr, cur = _repl_mgr([], "wal2json")
-    mgr.process_replication_stream(lambda c: None)
-    # reference slot.py:124-127: wal2json → {'include-xids': 1}
-    assert cur.start_calls == [("slot1", {"include-xids": 1})]
-
-
-def test_start_replication_test_decoding_has_no_options():
-    mgr, cur = _repl_mgr([], "test_decoding")
-    mgr.process_replication_stream(lambda c: None)
-    assert cur.start_calls == [("slot1", None)]
-
-
-def test_queue_consume_buffers_and_acks_on_delivering_cursor():
-    from pg2kinesis_spark.sources.pgcdc import QueueConsume
-
-    payloads = [(10, "BEGIN 7"), (12, "table public.t: UPDATE: id[integer]:1"), (14, "COMMIT")]
-    mgr, cur = _repl_mgr(payloads, "test_decoding")
-    q = QueueConsume()
-    mgr.process_replication_stream(q)
-    assert q.drain() == [
-        (10, len("BEGIN 7"), "BEGIN 7"),
-        (12, len(payloads[1][1]), payloads[1][1]),
-        (14, 6, "COMMIT"),
-    ]
-    assert q.drain() == []        # drained
-    assert cur.feedback == []     # nothing acked until the sink says so
-    q.ack(12)                     # ack after put (S8): feedback w/ flush_lsn
-    assert cur.feedback == [12]
-    q.ack(14)
-    assert cur.feedback == [12, 14]
-    q.ack(14)                     # idempotent — cursor ref already dropped
-    assert cur.feedback == [12, 14]
-
-
-def test_queue_consume_backpressure_bounds_buffer():
-    from pg2kinesis_spark.sources.pgcdc import QueueConsume
-
-    q = QueueConsume(max_buffer=2)
-    mgr, cur = _repl_mgr([(1, "a"), (2, "b"), (3, "c")], "test_decoding")
-    with pytest.raises(BufferError):
-        mgr.process_replication_stream(q)
-
-
-def test_push_stream_reader_serves_once_in_order_and_acks():
-    """Push-mode reader drives the full DataSourceStreamReader contract
-    off the START_REPLICATION thread: messages surface exactly once in
-    LSN order across triggers, and commit() sends send_feedback with the
-    acked flush_lsn — ack only after the sink's batch succeeded."""
-    import time
-
-    from pg2kinesis_spark.sources.pgcdc import PgCdcPushStreamReader
-
-    payloads = [(10, "BEGIN 7"), (12, "table public.t: UPDATE: id[integer]:1"),
-                (14, "COMMIT"), (16, "BEGIN 8"), (18, "COMMIT")]
-    mgr, cur = _repl_mgr(payloads, "test_decoding")
-    r = PgCdcPushStreamReader({"dsn": "dbname=x"}, manager=mgr)
-
-    assert r.initialOffset() == {"lsn": 0}
-    served = []
-    start = r.initialOffset()
-    deadline = time.time() + 5
-    while len(served) < len(payloads) and time.time() < deadline:
-        end = r.latestOffset()
-        if end["lsn"] == start["lsn"]:
-            time.sleep(0.01)
-            continue
-        for part in r.partitions(start, end):
-            served.extend(r.read(part))
-        r.commit(end)
-        start = end
-
-    assert [m[0] for m in served] == [10, 12, 14, 16, 18]  # once, in order
-    assert served[1][2] == payloads[1][1]
-    assert cur.feedback and cur.feedback[-1] == 18          # acked to the tip
-    assert cur.feedback == sorted(cur.feedback)             # monotone acks
-    # re-trigger with no new data: empty batch, offset stable
-    end2 = r.latestOffset()
-    assert end2 == start and r.partitions(start, end2)[0].messages == []

@@ -104,3 +104,70 @@ def test_pgoutput_stream_table_pat_and_ops(spark, corpus, tmp_path):
     )
     writer.flush_tail()
     assert _msgs(transport) == want
+
+
+def test_pgoutput_stream_truncate_puts_per_relation_and_counts_once(spark, tmp_path):
+    """TRUNCATE in the stream, decided: the shared decode kernel emits
+    one row per truncated relation (as ``parse_pgoutput`` does), so a
+    Truncate of two tables puts two ``truncate`` messages (no pkey,
+    the Truncate's xid) and counts ONCE as a wire message by its
+    data_size. Relation messages put nothing and are not counted."""
+    from pyspark.sql import functions as F
+
+    from pg2kinesis_spark.operators.pgoutput import (
+        encode_begin,
+        encode_commit,
+        encode_insert,
+        encode_relation,
+        encode_truncate,
+        parse_pgoutput,
+    )
+
+    msgs = [
+        encode_relation(101, "public", "users", ["id", "name"], key_cols=("id",)),
+        encode_relation(102, "public", "orders", ["order_id", "total"], key_cols=("order_id",)),
+        encode_begin(0, 500), encode_insert(101, ["1", "a"]), encode_commit(0, 0),
+        encode_begin(0, 501), encode_truncate([101, 102]), encode_commit(0, 0),
+        encode_begin(0, 502), encode_insert(102, ["7", "x"]), encode_commit(0, 0),
+    ]
+    rows = [
+        (10 * (i + 1), len(m), base64.b64encode(m).decode()) for i, m in enumerate(msgs)
+    ]
+    path = str(tmp_path / "trunc.parquet")
+    spark.createDataFrame(rows, "lsn long, data_size int, payload string").coalesce(
+        1
+    ).write.parquet(path)
+    want = [
+        "0,CDC,500,public.users,insert,1",
+        "0,CDC,501,public.users,truncate",
+        "0,CDC,501,public.orders,truncate",
+        "0,CDC,502,public.orders,insert,7",
+    ]
+
+    transport = InMemoryTransport()
+    writer = KinesisLikeWriter(transport)
+    stream = build_pgoutput_stream(
+        spark, path, relation_registry_from_replay(spark, path),
+        formatter="CSV", rows_per_batch=4,  # batch boundaries inside txns
+    )
+    run_until(
+        stream,
+        writer,
+        str(tmp_path / "ckpt"),
+        done=lambda: writer.cum_msg_count >= len(msgs) - 2
+        and writer._agg.num_bytes == 0,
+    )
+    writer.flush_tail()
+    assert _msgs(transport) == want
+    assert writer.put_message_calls == len(want)
+    counted = [size for _, size, _ in rows[2:]]  # every non-Relation message
+    assert writer.cum_msg_count == len(counted) == 9
+    assert writer.cum_msg_size == sum(counted)
+
+    # the batch parse makes the same decision: one row per relation
+    raw = spark.read.parquet(path).select("lsn", F.unbase64("payload").alias("payload"))
+    trunc = parse_pgoutput(raw).filter("operation = 'truncate'").orderBy("table")
+    assert [(r.lsn, r.xid, r.table) for r in trunc.collect()] == [
+        (70, "501", "public.orders"),
+        (70, "501", "public.users"),
+    ]

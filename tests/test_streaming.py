@@ -7,7 +7,6 @@ ordered packing sink, retry/backoff, restart at-least-once.
 from __future__ import annotations
 
 import json
-import time
 import os
 
 import pytest
@@ -401,171 +400,116 @@ def test_fresh_checkpoint_recovers_cursor_from_ack_log(spark, corpus, pk_map, tm
     ) == tail
 
 
+def _drain_to_list(stream, ckpt, n_puts):
+    transport = InMemoryTransport()
+    writer = KinesisLikeWriter(transport)
+    run_until(stream, writer, ckpt, done=lambda: writer.put_message_calls >= n_puts)
+    writer.flush_tail()
+    return _msgs(transport)
+
+
 def test_xid_stamp_across_many_arrow_chunks(spark, corpus, pk_map, tmp_path, few_shuffles):
-    """_stamp_fn receives a micro-batch as MULTIPLE Arrow chunks once the
-    batch exceeds arrow.maxRecordsPerBatch; the stamp must concatenate
-    and sort them ONCE by lsn before attributing xids (a per-chunk sort
-    would misattribute rows when a BEGIN lands in a later chunk than its
-    DML rows). Forcing 4-row chunks over a whole-corpus batch pins this."""
+    """The stamp receives a micro-batch as MULTIPLE Arrow chunks once the
+    batch exceeds arrow.maxRecordsPerBatch; it must concatenate and sort
+    them ONCE by lsn before attributing xids (a per-chunk sort would
+    misattribute rows when a BEGIN lands in a later chunk than its DML
+    rows). Forcing 4-row chunks over a whole-corpus batch pins this for
+    both plugins that feed the one stamp: test_decoding lines and
+    decoded pgoutput messages, each compared with its batch parse."""
+    import base64
+
+    from pg2kinesis_spark.fixtures import gen_pgoutput
+    from pg2kinesis_spark.operators.pgoutput import (
+        pgoutput_cdc_changes,
+        relation_registry_from_replay,
+    )
+    from pg2kinesis_spark.streaming.pipeline import build_pgoutput_stream
+
+    rows = gen_pgoutput(n_txns=12, seed=44)
+    pgout = str(tmp_path / "pgout.parquet")
+    spark.createDataFrame(rows, "lsn long, data_size int, payload string").coalesce(
+        1
+    ).write.parquet(pgout)
+    n_changes = sum(
+        base64.b64decode(p)[:1] in (b"I", b"U", b"D") for _, _, p in rows
+    )
+
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
     try:
-        transport = InMemoryTransport()
-        writer = KinesisLikeWriter(transport)
-        stream = build_test_decoding_stream(
-            spark, corpus, pk_map, formatter="CSV", operations=("UPDATE",),
-            rows_per_batch=1000,  # whole corpus in ONE batch → many chunks
+        # rows_per_batch=1000: the whole corpus in ONE batch → many chunks
+        td = _drain_to_list(
+            build_test_decoding_stream(
+                spark, corpus, pk_map, formatter="CSV", operations=("UPDATE",),
+                rows_per_batch=1000,
+            ),
+            str(tmp_path / "ckpt"),
+            N_TXNS * MSGS_PER_TXN,
         )
-        run_until(
-            stream, writer, str(tmp_path / "ckpt"),
-            done=lambda: writer.put_message_calls >= N_TXNS * MSGS_PER_TXN,
+        po = _drain_to_list(
+            build_pgoutput_stream(
+                spark, pgout, relation_registry_from_replay(spark, pgout),
+                formatter="CSV", rows_per_batch=1000,
+            ),
+            str(tmp_path / "ckpt_pgout"),
+            n_changes,
         )
-        writer.flush_tail()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
     batch = format_csv(parse_test_decoding(spark.read.parquet(corpus), pk_map)).orderBy("lsn").collect()
-    assert _msgs(transport) == [r.fmt_msg for r in batch]  # same xids, same order
+    assert td == [r.fmt_msg for r in batch]  # same xids, same order
+    raw = spark.read.parquet(pgout).select("lsn", F.unbase64("payload").alias("payload"))
+    batch = format_csv(pgoutput_cdc_changes(raw)).orderBy("lsn").collect()
+    assert len(po) == n_changes
+    assert po == [r.fmt_msg for r in batch]
 
 
-def test_dedupe_replayed_drops_lsn_repeats_with_bounded_state(spark, pk_map, tmp_path, few_shuffles):
-    """At-least-once delivery re-serves un-acked LSNs; dedupe_replayed
-    gives consumers effective exactly-once with state bounded to the
-    watermark window (not the whole stream)."""
-    from pg2kinesis_spark.streaming.pipeline import dedupe_replayed, read_replay_stream
-
-    lines = [
-        (10, "BEGIN 7"),
-        (12, f"table public.test_table: UPDATE: uuid[uuid]:'{UUID}'"),
-        (12, f"table public.test_table: UPDATE: uuid[uuid]:'{UUID}'"),  # replay dup
-        (14, "COMMIT"),
-        (14, "COMMIT"),                                                 # replay dup
-        (16, "BEGIN 8"),
-    ]
-    corpus = str(tmp_path / "dup_corpus.parquet")
-    spark.createDataFrame(
-        [(l, len(p.encode()), p) for l, p in lines], "lsn long, data_size int, payload string"
-    ).coalesce(1).write.mode("overwrite").parquet(corpus)
-
-    raw = dedupe_replayed(read_replay_stream(spark, corpus, rows_per_batch=100))
-    got = []
-
-    def collect_batch(df, _bid):
-        got.extend((r.lsn, r.payload) for r in df.collect())
-
-    q = (
-        raw.writeStream.foreachBatch(collect_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(90)
-
-    assert sorted(got) == [
-        (10, "BEGIN 7"),
-        (12, lines[1][1]),
-        (14, "COMMIT"),
-        (16, "BEGIN 8"),
-    ]  # one row per LSN — repeats dropped
-    # dedup state is watermark-bounded, not a forever-growing key set
-    prog = q.lastProgress
-    assert prog is not None and any(
-        op.get("operatorName") == "dedupeWithinWatermark"
-        for op in prog.get("stateOperators", [])
-    )
-
-
-def test_tws_processor_logic_with_fake_handle(spark):
-    """XidStampTws wiring without the streaming engine: Spark's TWS
-    driver worker needs the `protobuf` package (absent here), so the
-    state handle is faked and the processor's chunk handling + state
-    round-trip are pinned directly."""
+def test_stamp_fn_logic_with_fake_state():
+    """The one stamp without the streaming engine: chunks arrive
+    unordered (the BEGIN for lsn 4/6 sits in the LATER chunk), begin_xid
+    is forward-filled into xid in lsn order, the slot key and begin_xid
+    columns are dropped, and the last xid round-trips through the group state into
+    the next micro-batch. An empty-string xid is a real value, as in the
+    batch carry (``last(..., ignorenulls=True)``)."""
     import pandas as pd
 
-    from pg2kinesis_spark.streaming.pipeline import XidStampTws
+    from pg2kinesis_spark.streaming.pipeline import _stamp_fn
 
-    class FakeValueState:
+    class FakeState:
         def __init__(self):
             self.v = None
 
+        @property
+        def exists(self):
+            return self.v is not None
+
+        @property
         def get(self):
             return self.v
 
         def update(self, v):
             self.v = v
 
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
+    state = FakeState()
 
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            assert name == "cur_xact"
-            return self.state
+    def run(*chunks):
+        out = list(_stamp_fn((0,), iter(chunks), state))
+        return [(r.lsn, r.payload, r.xid) for r in out[0].itertuples()] if out else []
 
-    proc = XidStampTws()
-    handle = FakeHandle()
-    proc.init(handle)
-    # chunks arrive unordered; BEGIN for lsn 2/4 rows sits in the LATER chunk
-    c1 = pd.DataFrame({"lsn": [4, 6], "data_size": [1, 1], "payload": ["table t: UPDATE: x", "COMMIT"]})
-    c2 = pd.DataFrame({"lsn": [2], "data_size": [1], "payload": ["BEGIN 99"]})
-    out = list(proc.handleInputRows((0,), iter([c1, c2]), None))
-    got = dict(zip(out[0]["lsn"], out[0]["xid"]))
-    assert got == {2: "99", 4: "99", 6: "99"}
-    assert handle.state.get() == ("99",)
+    c1 = pd.DataFrame({"slot": [0, 0], "lsn": [4, 6], "data_size": [1, 1],
+                       "payload": ["table t: UPDATE: x", "COMMIT"], "begin_xid": [None, None]})
+    c2 = pd.DataFrame({"slot": [0], "lsn": [2], "data_size": [1],
+                       "payload": ["BEGIN 99"], "begin_xid": ["99"]})
+    assert run(c1, c2) == [(2, "BEGIN 99", "99"), (4, "table t: UPDATE: x", "99"), (6, "COMMIT", "99")]
+    assert state.get == ("99",)
     # next micro-batch inherits cur_xact from state
-    c3 = pd.DataFrame({"lsn": [8], "data_size": [1], "payload": ["table t: UPDATE: y"]})
-    out2 = list(proc.handleInputRows((0,), iter([c3]), None))
-    assert list(out2[0]["xid"]) == ["99"]
-    proc.close()
-
-
-def test_tws_stamp_matches_stateful_stamp(spark, corpus, tmp_path, few_shuffles):
-    """transformWithStateInPandas W1 (stamp_xid_tws) must produce the
-    same per-lsn xid attribution as the applyInPandasWithState path,
-    including cur_xact carried ACROSS micro-batch boundaries
-    (rows_per_batch=7 splits transactions across batches)."""
-    # Spark's TWS runtime speaks protobuf to the Python state server
-    # (pyspark.sql.streaming.proto generated stubs). Environments
-    # without the protobuf package run on the vendored mini-runtime
-    # (pg2kinesis_spark/vendor/protoshim — descriptor parsing + real
-    # wire format), activated by conftest BEFORE the JVM starts so the
-    # Python workers inherit it via PYTHONPATH. With the real protobuf
-    # installed, that one is used instead; either way this e2e runs.
-    pytest.importorskip("google.protobuf")
-    from pg2kinesis_spark.streaming.pipeline import read_replay_stream, stamp_xid_tws
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    default = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    old = spark.conf.get(key, default)
-    spark.conf.set(
-        key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    rows = []
-    try:
-        stamped = stamp_xid_tws(read_replay_stream(spark, corpus, rows_per_batch=7))
-        # the replay source is a custom Python micro-batch source with no
-        # Trigger.AvailableNow support (Spark falls back to ONE batch) —
-        # drive it like run_until does: ASAP trigger + done predicate
-        q = (
-            stamped.writeStream.foreachBatch(lambda df, bid: rows.extend(df.collect()))
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        deadline = time.time() + 120
-        while len(rows) < TOTAL_LINES and time.time() < deadline:
-            time.sleep(0.3)
-        q.stop()
-        q.awaitTermination(30)
-    finally:
-        spark.conf.set(key, old)
-
-    got = {r.lsn: r.xid for r in sorted(rows, key=lambda r: r.lsn)}
-    # independent oracle: replay the corpus serially, python-side
-    cur, want = "", {}
-    for r in sorted(spark.read.parquet(corpus).collect(), key=lambda r: r.lsn):
-        if r.payload.startswith("BEGIN "):
-            cur = r.payload.split(" ", 2)[1]
-        want[r.lsn] = cur
-    assert got == want
-    assert len(rows) == TOTAL_LINES
+    c3 = pd.DataFrame({"slot": [0], "lsn": [8], "data_size": [1],
+                       "payload": ["table t: UPDATE: y"], "begin_xid": [None]})
+    assert run(c3) == [(8, "table t: UPDATE: y", "99")]
+    # an empty batch emits nothing and keeps the state
+    assert run() == [] and state.get == ("99",)
+    c4 = pd.DataFrame({"slot": [0, 0], "lsn": [10, 12], "data_size": [1, 1],
+                       "payload": ["BEGIN ", "table t: UPDATE: z"], "begin_xid": ["", None]})
+    assert run(c4) == [(10, "BEGIN ", ""), (12, "table t: UPDATE: z", "")]
+    assert state.get == ("",)
