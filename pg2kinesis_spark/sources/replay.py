@@ -17,6 +17,16 @@ single partition (a replication slot IS one ordered partition — same
 shape as the reference's single connection). ``commit(offset)`` appends
 the acked LSN to ``ack_log`` — the analogue of WAL-truncation feedback,
 and the thing tests assert at-least-once semantics against.
+
+Read path: ``read`` serves exactly the batch's range (start, end] and does
+work in proportion to it, not to the corpus. The parquet read is filtered
+on ``lsn``, so row-group statistics skip every row group outside the
+range (a corpus written sorted in 64k-row groups costs one or two groups
+per batch). The rows are then sorted in Arrow on (lsn, data_size,
+payload): a corpus written by Spark is a directory of part files in no
+LSN order, so the sort has to stay. The result is cast to the declared
+schema and yielded as Arrow record batches, which PySpark hands to the
+JVM without a per-row conversion.
 """
 
 from __future__ import annotations
@@ -106,19 +116,22 @@ class CdcReplayStreamReader(DataSourceStreamReader):
         return [_Batch(self.path, start["lsn"], end["lsn"])]
 
     def read(self, partition: _Batch):
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        t = pq.read_table(partition.path, columns=["lsn", "data_size", "payload"])
-        rows = sorted(
-            zip(
-                t.column("lsn").to_pylist(),
-                t.column("data_size").to_pylist(),
-                t.column("payload").to_pylist(),
-            )
+        t = pq.read_table(
+            partition.path,
+            columns=["lsn", "data_size", "payload"],
+            filters=[("lsn", ">", partition.start_lsn), ("lsn", "<=", partition.end_lsn)],
         )
-        for lsn, size, payload in rows:
-            if partition.start_lsn < lsn <= partition.end_lsn:
-                yield (lsn, size, payload)
+        # All three columns in the key: rows sharing an LSN come out in one
+        # fixed order whatever the part-file layout.
+        t = t.sort_by([("lsn", "ascending"), ("data_size", "ascending"), ("payload", "ascending")])
+        # Arrow batches pass straight through to the JVM, so they must carry
+        # the declared schema exactly: a corpus written from Python ints
+        # without a schema stores data_size as int64.
+        schema = pa.schema([("lsn", pa.int64()), ("data_size", pa.int32()), ("payload", pa.string())])
+        yield from t.cast(schema).to_batches()
 
     def commit(self, end: dict) -> None:
         # The ack point (S8): progress is durable from the source's point

@@ -48,10 +48,8 @@ def pk_map(spark):
     return primary_key_map(catalog)
 
 
-@pytest.fixture(scope="module")
-def corpus(spark, tmp_path_factory):
-    """rows_per_batch=7 with 5-line transactions puts batch boundaries
-    INSIDE transactions — pins cross-batch xid state."""
+def _corpus_rows() -> list[tuple[int, int, str]]:
+    """(lsn, data_size, payload) wire lines of N_TXNS framed transactions."""
     lines = []
     lsn = 10
     for xid in range(7, 7 + N_TXNS):
@@ -59,11 +57,39 @@ def corpus(spark, tmp_path_factory):
         for i in range(MSGS_PER_TXN):
             lines.append((lsn, f"table public.test_table: UPDATE: uuid[uuid]:'{UUID[:-1]}{i}'")); lsn += 2
         lines.append((lsn, "COMMIT")); lsn += 2
+    return [(l, len(p.encode()), p) for l, p in lines]
+
+
+@pytest.fixture(scope="module")
+def corpus(spark, tmp_path_factory):
+    """rows_per_batch=7 with 5-line transactions puts batch boundaries
+    INSIDE transactions — pins cross-batch xid state."""
     path = str(tmp_path_factory.mktemp("corpus") / "corpus.parquet")
     spark.createDataFrame(
-        [(l, len(p.encode()), p) for l, p in lines], "lsn long, data_size int, payload string"
+        _corpus_rows(), "lsn long, data_size int, payload string"
     ).coalesce(1).write.mode("overwrite").parquet(path)
     return path
+
+
+@pytest.fixture(scope="module")
+def shuffled_corpora(spark, tmp_path_factory):
+    """The ``corpus`` rows shuffled and written by Spark as three part
+    files in no LSN order: once with ``data_size int`` and once with the
+    ``bigint`` that createDataFrame infers from Python ints when no schema
+    is given."""
+    import random
+
+    rows = _corpus_rows()
+    random.Random(5).shuffle(rows)
+    base = tmp_path_factory.mktemp("shuffled")
+    paths = {}
+    for name, schema in (
+        ("int", "lsn long, data_size int, payload string"),
+        ("bigint", ["lsn", "data_size", "payload"]),
+    ):
+        paths[name] = str(base / name)
+        spark.createDataFrame(rows, schema).repartition(3).write.parquet(paths[name])
+    return paths
 
 
 def _msgs(transport):
@@ -513,3 +539,70 @@ def test_stamp_fn_logic_with_fake_state():
                        "payload": ["BEGIN ", "table t: UPDATE: z"], "begin_xid": ["", None]})
     assert run(c4) == [(10, "BEGIN ", ""), (12, "table t: UPDATE: z", "")]
     assert state.get == ("",)
+
+
+@pytest.mark.parametrize("data_size_type", ["int", "bigint"])
+def test_replay_read_serves_exactly_its_range_as_arrow(shuffled_corpora, data_size_type):
+    """The read contract: ``read`` yields Arrow record batches of exactly
+    the declared schema, holding the corpus rows in (start, end] in
+    (lsn, data_size, payload) order — whatever the part-file layout and
+    whatever integer width the corpus stores data_size in."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pg2kinesis_spark.sources.replay import CdcReplayStreamReader, _Batch
+
+    path = shuffled_corpora[data_size_type]
+    files = [pq.read_table(f) for f in sorted(glob.glob(os.path.join(path, "part-*.parquet")))]
+    assert len(files) >= 3
+    on_disk = [lsn for t in files for lsn in t.column("lsn").to_pylist()]
+    assert on_disk != sorted(on_disk)
+    assert files[0].schema.field("data_size").type == {"int": pa.int32(), "bigint": pa.int64()}[data_size_type]
+    corpus = sorted(
+        row
+        for t in files
+        for row in zip(*(t.column(c).to_pylist() for c in ("lsn", "data_size", "payload")))
+    )
+    lsns = [r[0] for r in corpus]
+    spanned = {i for i, t in enumerate(files) for lsn in t.column("lsn").to_pylist() if lsns[2] < lsn <= lsns[14]}
+    assert len(spanned) >= 2
+    schema = pa.schema([("lsn", pa.int64()), ("data_size", pa.int32()), ("payload", pa.string())])
+    reader = CdcReplayStreamReader({"path": path})
+    for start, end in [
+        (lsns[5], lsns[5]),      # empty
+        (lsns[4], lsns[5]),      # a single row
+        (lsns[2], lsns[14]),     # spans part files
+        (lsns[0] - 1, lsns[-1]), # the whole corpus
+    ]:
+        batches = list(reader.read(_Batch(path, start, end)))
+        assert all(isinstance(b, pa.RecordBatch) and b.schema == schema for b in batches)
+        served = [
+            row
+            for b in batches
+            for row in zip(*(b.column(c).to_pylist() for c in ("lsn", "data_size", "payload")))
+        ]
+        assert served == [r for r in corpus if start < r[0] <= end], (start, end)
+
+
+def test_bigint_data_size_corpus_drains_like_int(spark, corpus, shuffled_corpora, pk_map, tmp_path, few_shuffles):
+    """A corpus whose data_size is bigint (the CLI's --replay-path takes
+    any such parquet) streams to the same puts as the int corpus, and both
+    match the batch parse of the same wire lines."""
+    streamed = {}
+    for name, path in shuffled_corpora.items():
+        transport = InMemoryTransport()
+        writer = KinesisLikeWriter(transport)
+        stream = build_test_decoding_stream(
+            spark, path, pk_map, formatter="CSV", operations=("UPDATE",), rows_per_batch=7,
+        )
+        run_until(
+            stream, writer, str(tmp_path / name),
+            done=lambda: writer.put_message_calls >= N_TXNS * MSGS_PER_TXN,
+        )
+        writer.flush_tail()
+        streamed[name] = (writer.put_message_calls, _msgs(transport))
+    batch = format_csv(parse_test_decoding(spark.read.parquet(corpus), pk_map)).orderBy("lsn").collect()
+    assert streamed["int"] == (N_TXNS * MSGS_PER_TXN, [r.fmt_msg for r in batch])
+    assert streamed["bigint"] == streamed["int"]
