@@ -62,7 +62,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--transport", default="kinesis", choices=["kinesis", "memory"])
     p.add_argument("--checkpoint", default="/tmp/pg2kinesis_spark_ckpt")
     p.add_argument("--ack-log", default=None)
-    p.add_argument("--rows-per-batch", type=int, default=1000)
+    p.add_argument("--rows-per-batch", type=int, default=1000, help="Soft limit, rounded up to whole transactions.")
     p.add_argument("--drain", action="store_true", help="Stop once the replay corpus is consumed.")
     return p
 

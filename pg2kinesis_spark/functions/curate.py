@@ -16,7 +16,8 @@ the next):
      and the trained model filter (``classifier_model=`` — broadcast
      coefficients, map-only scoring).
   3. exact dedup — groupBy on a 16-byte md5 content hash, survivor =
-     min(doc_id); the shuffle carries hashes, never documents.
+     min(doc_id); the shuffle carries hashes, never documents. Every
+     NULL-text row survives (absent content duplicates nothing).
   4. near-dup removal — MinHash+LSH candidate pairs (banded; the only
      join whose cost tracks collision rate, not corpus²); every doc that
      is the LARGER id of a pair at/above the threshold is dropped —
@@ -245,6 +246,8 @@ def curate_corpus(
     # far longer (guide §2.3/§3.1/§8 decide with small rows). Keep-set
     # identical: doc_id is unique per row, so "not the min of a
     # duplicated hash group" is exactly the old complement.
+    # NULL text is absent, not equal, content: the join on md5 = NULL
+    # matches nothing, so every NULL-text row survives.
     keys = ann.select("doc_id", F.md5("text").alias("_h"))
     dup_winners = (
         keys.groupBy("_h")

@@ -42,7 +42,7 @@ Scale design
   messages inherit it — identical W1 semantics to test_decoding.
 * One decode kernel (``decode_pgoutput``) serves both paths: the
   streaming pipeline runs it over the replay corpus's base64 payloads
-  and feeds its ``begin_xid`` to the stateful stamp.
+  and feeds its ``begin_xid`` to the in-batch stamp (``stamp_xid``).
 """
 
 from __future__ import annotations

@@ -42,7 +42,8 @@ from pyspark.sql import functions as F
 def begin_xid() -> Column:
     """The xid of a ``BEGIN <xid>`` line, NULL on every other line — the
     ``begin_xid`` input of both xid stamps (batch ``stamp_xid_scalable``
-    and the streaming ``stamp_xid_stateful``)."""
+    and the streaming ``stamp_xid``); its prefix also marks the replay
+    source's transaction starts."""
     return F.when(F.col("payload").startswith("BEGIN "), F.get(F.split("payload", " ", 3), 1))
 
 
@@ -288,9 +289,9 @@ def parse_test_decoding(
     (table_name, pk_col_name, pk_col_type, pk_pattern).
 
     ``xid_precomputed=True`` skips the W1 window — the streaming pipeline
-    stamps xid with applyInPandasWithState (cross-batch state, fed by
-    ``begin_xid()``) before calling this, so batch and streaming share
-    every operator downstream of the stamp.
+    stamps xid within each whole-transaction micro-batch (``stamp_xid``,
+    fed by ``begin_xid()``) before calling this, so batch and streaming
+    share every operator downstream of the stamp.
 
     ``keep_frames=True`` keeps BEGIN/COMMIT frame rows (is_frame=true,
     all Change fields null) and carries ``data_size`` through — the

@@ -154,11 +154,13 @@ class _PgBatch(InputPartition):
 class PgCdcStreamReader(DataSourceStreamReader):  # pragma: no cover - needs PG
     """Polls the slot with peek semantics; commit() advances the slot.
 
-    Offsets are LSNs; each trigger drains up to rows_per_batch messages
-    via pg_logical_slot_peek_changes (non-destructive read), and
-    commit() calls pg_replication_slot_advance — so un-acked WAL is
-    re-served after a crash: the same at-least-once contract as the
-    reference's ack-after-put feedback loop.
+    Offsets are LSNs; each trigger drains about rows_per_batch messages
+    via pg_logical_slot_peek_changes (non-destructive read; it returns
+    whole transactions, which the stateless in-batch xid stamp relies
+    on), and commit() calls pg_replication_slot_advance — so un-acked WAL
+    is re-served after a crash: the same at-least-once contract as the
+    reference's ack-after-put feedback loop. An empty peek keeps the last
+    end offset.
     """
 
     def __init__(self, options: dict):
@@ -168,6 +170,7 @@ class PgCdcStreamReader(DataSourceStreamReader):  # pragma: no cover - needs PG
         )
         self.rows_per_batch = int(options.get("rowsperbatch", 1000))
         self._pending: list[tuple[int, int, str]] = []
+        self._end = 0
 
     def _peek(self) -> list[tuple[int, int, str]]:
         opts = "('include-xids', '1')" if self.mgr.plugin == "wal2json" else ""
@@ -193,9 +196,12 @@ class PgCdcStreamReader(DataSourceStreamReader):  # pragma: no cover - needs PG
 
     def latestOffset(self) -> dict:
         self._pending = self._peek()
-        return {"lsn": self._pending[-1][0]} if self._pending else {"lsn": 0}
+        if self._pending:
+            self._end = max(self._end, self._pending[-1][0])
+        return {"lsn": self._end}
 
     def partitions(self, start: dict, end: dict):
+        self._end = max(self._end, end["lsn"])
         msgs = [m for m in self._pending if start["lsn"] < m[0] <= end["lsn"]]
         return [_PgBatch(msgs)]
 

@@ -7,16 +7,19 @@ LSN** and whose **commit() is the ack** (the reference's
 
 In production the read path would speak the Postgres replication
 protocol (see sources/pgcdc.py); here it replays a parquet-backed wire
-corpus so the full pipeline — source offsets, micro-batches, stateful
-parse, ordered sink, commit log — runs end to end in tests exactly as it
-would against a live slot.
+corpus so the full pipeline — source offsets, micro-batches, xid stamp,
+parse, ordered sink, commit log — runs end to end in tests exactly as
+it would against a live slot.
 
-Offset model: ``{"lsn": <last-served-lsn>}``; each micro-batch serves at
-most ``rows_per_batch`` messages in strictly increasing LSN order from a
-single partition (a replication slot IS one ordered partition — same
-shape as the reference's single connection). ``commit(offset)`` appends
-the acked LSN to ``ack_log`` — the analogue of WAL-truncation feedback,
-and the thing tests assert at-least-once semantics against.
+Offset model: ``{"lsn": <last-served-lsn>}``; each micro-batch serves
+whole transactions in strictly increasing LSN order from a single
+partition (a replication slot IS one ordered partition — same shape as
+the reference's single connection). ``rows_per_batch`` is a soft limit
+rounded up to the row before the next transaction start (a ``BEGIN ``
+line, or a base64 pgoutput Begin), as Postgres's peek rounds
+``upto_nchanges``; a corpus without starts (wal2json) keeps exact batches.
+``commit(offset)`` appends the acked LSN — always a transaction end — to
+``ack_log``, the analogue of WAL-truncation feedback.
 
 Read path: ``read`` serves exactly the batch's range (start, end] and does
 work in proportion to it, not to the corpus. The parquet read is filtered
@@ -31,6 +34,7 @@ JVM without a per-row conversion.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 
@@ -50,14 +54,21 @@ class CdcReplayStreamReader(DataSourceStreamReader):
         self.rows_per_batch = int(options.get("rowsperbatch", 1000))
         self.ack_log = options.get("acklog")
         self._lsns: list[int] | None = None
+        self._starts: list[int] | None = None
         self._cursor: int | None = None
 
     def _all_lsns(self) -> list[int]:
         if self._lsns is None:
+            import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
             t = pq.read_table(self.path, columns=["lsn"])
             self._lsns = sorted(t.column("lsn").to_pylist())
+            # transaction starts, matched inside the scan (no payload is
+            # kept): a BEGIN line, or a base64 pgoutput Begin (0x42 -> Q[g-v])
+            begins = pc.match_substring_regex(pc.field("payload"), pattern="^(BEGIN |Q[g-v])")
+            t = pq.read_table(self.path, columns=["lsn"], filters=begins)
+            self._starts = sorted(t.column("lsn").to_pylist())
         return self._lsns
 
     def initialOffset(self) -> dict:
@@ -90,13 +101,11 @@ class CdcReplayStreamReader(DataSourceStreamReader):
         return last
 
     def latestOffset(self) -> dict:
-        # Advance by at most rows_per_batch messages per trigger — the
+        # Advance by about rows_per_batch messages per trigger — the
         # backpressure knob (maxOffsetsPerTrigger analogue, T4). The
         # cursor lives on the driver for the lifetime of the query; after
         # a restart it is recovered from the ack log (commit watermark),
         # and partitions() re-syncs it from the checkpointed start.
-        import bisect
-
         lsns = self._all_lsns()
         if not lsns:
             return {"lsn": 0}
@@ -105,6 +114,11 @@ class CdcReplayStreamReader(DataSourceStreamReader):
         cur = self._cursor if self._cursor is not None else lsns[0] - 1
         i = bisect.bisect_right(lsns, cur)
         j = min(i + self.rows_per_batch, len(lsns))
+        starts = self._starts
+        if i < j < len(lsns) and starts:
+            # end before the first transaction start past the soft limit
+            k = bisect.bisect_right(starts, lsns[j - 1])
+            j = bisect.bisect_left(lsns, starts[k]) if k < len(starts) else len(lsns)
         new = lsns[j - 1] if j > i else cur
         self._cursor = new
         return {"lsn": new}

@@ -4,30 +4,28 @@ Wires the batch operators (operators/*) into a streaming dataflow:
 
     cdc_replay corpus or live pgcdc slot (LSN offsets)  S1/S2/S3/T5
       → plugin decode supplies begin_xid                 P1 / pgoutput kernel
-      → stateful xid stamp (applyInPandasWithState)      W1 streaming form
+      → in-batch xid stamp (coalesce(1) + mapInArrow)    W1 streaming form
       → parse/enrich/format (shared with batch)          P1-P11, F5-F8, J3
       → operation filter (null-out)                      P6/§8.6
       → foreachBatch KinesisLikeWriter                   S5-S8/T2-T4
 
-There is one stamp (``stamp_xid_stateful``): it forward-fills the
-``begin_xid`` column each plugin supplies — ``begin_xid()`` for
-test_decoding lines, the shared ``decode_pgoutput`` kernel for pgoutput.
-wal2json needs none: each message carries its xid.
+There is one stamp (``stamp_xid``): it forward-fills the ``begin_xid``
+column each plugin supplies — ``begin_xid()`` for test_decoding lines,
+the shared ``decode_pgoutput`` kernel for pgoutput. wal2json needs none:
+each message carries its xid.
 
-Scale shape: the xid stamp is keyed by source partition (a replication
-slot is one ordered log — the reference's single connection, slot.py:129),
-so its state is one tiny tuple per slot, not a global bottleneck; parse
-and format fan back out to full width immediately after; the sink is the
-single ordered writer the Kinesis 1-shard contract requires (T2).
+Scale shape: every micro-batch is whole transactions, so the stamp runs
+inside the source's one ordered partition (a replication slot is one
+ordered log — the reference's single connection, slot.py:129) with no
+shuffle and no state store; the sink is the single ordered writer the
+Kinesis 1-shard contract requires (T2).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pg2kinesis_spark.operators.formatters import filter_operations, format_csv, format_csvpayload
 from pg2kinesis_spark.operators.test_decoding import begin_xid, parse_test_decoding
@@ -35,42 +33,32 @@ from pg2kinesis_spark.operators.wal2json import parse_wal2json
 from pg2kinesis_spark.sources.replay import register as register_replay
 
 
-def _stamp_fn(key, pdf_iter, state: GroupState):
-    """Carry cur_xact across micro-batches (reference formatter.py:37,59-60).
+def _stamp_batches(batches):
+    """``stamp_xid``'s body. Arrow chunks carry no cross-chunk order, so
+    they are concatenated and stably sorted ONCE by lsn before the
+    forward fill ('' before the first BEGIN; an empty-string BEGIN xid is
+    a real value, as in the batch carry ``last(..., ignorenulls=True)``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    Concatenates ALL Arrow chunks and sorts ONCE by lsn (chunks carry no
-    cross-chunk ordering guarantee once a batch exceeds
-    arrow.maxRecordsPerBatch — a per-chunk sort would misattribute xids
-    when a BEGIN lands in a later chunk than its DML rows), then
-    forward-fills ``begin_xid`` into ``xid``.
-    State: ('<current xid>',) per slot key. Memory is bounded by the
-    source's rows_per_batch backpressure knob, never the stream."""
-    cur = state.get[0] if state.exists else ""
-    chunks = [c for c in pdf_iter if len(c)]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("lsn", kind="stable")
-        xid = pdf["begin_xid"].ffill().fillna(cur)
-        cur = xid.iat[-1]
-        yield pdf.drop(columns=["slot", "begin_xid"]).assign(xid=xid)
-    state.update((cur,))
+    chunks = [b for b in batches if b.num_rows]
+    if not chunks:
+        return
+    t = pa.Table.from_batches(chunks)
+    t = t.take(pc.sort_indices(t, sort_keys=[("lsn", "ascending")]))
+    xid = pc.fill_null(pc.fill_null_forward(t.column("begin_xid")), "")
+    yield from t.drop_columns(["begin_xid"]).append_column("xid", xid).combine_chunks().to_batches()
 
 
-def stamp_xid_stateful(df: DataFrame) -> DataFrame:
-    """Stateful W1: replaces ``begin_xid`` (the xid on BEGIN rows, NULL
-    elsewhere) with ``xid``, the last BEGIN's xid at or before each row
-    ('' before any BEGIN). One state tuple per slot (here: one slot →
-    lit(0))."""
+def stamp_xid(df: DataFrame) -> DataFrame:
+    """W1 in streaming form: replaces ``begin_xid`` (the xid on BEGIN
+    rows, NULL elsewhere) with ``xid``, the last BEGIN's xid at or before
+    each row of the micro-batch. Stateless, because every batch is whole
+    transactions (the replay source rounds up to one, Postgres's peek
+    returns them)."""
     fields = [f for f in df.schema.fields if f.name != "begin_xid"]
-    return (
-        df.withColumn("slot", F.lit(0))
-        .groupBy("slot")
-        .applyInPandasWithState(
-            _stamp_fn,
-            outputStructType=T.StructType(fields + [T.StructField("xid", T.StringType())]),
-            stateStructType="cur_xact string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return df.coalesce(1).mapInArrow(
+        _stamp_batches, T.StructType(fields + [T.StructField("xid", T.StringType())])
     )
 
 
@@ -225,15 +213,15 @@ def build_test_decoding_stream_refreshing(
     """(stamped_stream, parse_fn). ``source``: replay corpus path (str)
     or a pre-built raw streaming DataFrame (read_pgcdc_stream).
 
-    The cross-batch xid stamp stays in the streaming plan (it is operator
-    state); ``parse_fn(df, pk_map)`` is the parse/format/filter tail.
+    The xid stamp stays in the streaming plan; ``parse_fn(df, pk_map)``
+    is the parse/format/filter tail.
     ``build_test_decoding_stream`` applies it once to the whole stream,
     RefreshingWriter once per batch so the pk_map can be swapped between
     batches. The ``error`` column rides to the sink, where
     KinesisLikeWriter fail-stops on the earliest error LSN — the
     reference's _log_and_raise (formatter.py:134-137, §8.5)."""
     raw = _raw_stream(spark, source, rows_per_batch, ack_log)
-    stamped = stamp_xid_stateful(raw.withColumn("begin_xid", begin_xid()))
+    stamped = stamp_xid(raw.withColumn("begin_xid", begin_xid()))
 
     def parse_fn(df: DataFrame, pk_map: DataFrame) -> DataFrame:
         parsed = parse_test_decoding(
@@ -256,7 +244,7 @@ def build_wal2json_stream_refreshing(
     ack_log: str | None = None,
 ) -> tuple[DataFrame, "callable"]:
     """wal2json twin of build_test_decoding_stream_refreshing: (raw_stream,
-    parse_fn). No cross-batch state at all — each message carries its
+    parse_fn). No xid stamp at all — each message carries its
     xid (reference formatter.py:110)."""
     raw = _raw_stream(spark, source, rows_per_batch, ack_log)
 
@@ -292,7 +280,7 @@ def build_pgoutput_stream(
     ack_log: str | None = None,
 ) -> DataFrame:
     """Streaming pgoutput: the batch decode kernel (``decode_pgoutput``)
-    over the unbase64'd payloads -> stateful xid stamp -> broadcast
+    over the unbase64'd payloads -> in-batch xid stamp -> broadcast
     registry join -> format -> op filter.
 
     ``registry`` is the STATIC relation catalog (rel_id, namespace,
@@ -309,7 +297,7 @@ def build_pgoutput_stream(
     decoded = decode_pgoutput(
         raw.withColumn("payload", F.unbase64("payload")), data_size=True
     )
-    stamped = stamp_xid_stateful(decoded)
+    stamped = stamp_xid(decoded)
     reg = F.broadcast(
         registry.select(
             "rel_id",
@@ -381,7 +369,7 @@ def run_until(
     then stop.
 
     This exercises REAL multi-batch progression (rate-limited offsets,
-    cross-batch state, per-batch commit) — unlike availableNow, which
+    per-batch commit) — unlike availableNow, which
     snapshots one offset range. Note the source commit (ack) for the
     final batch intentionally lags one trigger — the same ack-lag the
     reference exhibits (SURVEY §3.2 step 5): at-least-once, never

@@ -45,6 +45,19 @@ def test_curate_drops_exact_and_near_dups(spark, corpus):
     assert 3 in ids and 4 in ids  # unrelated docs survive
 
 
+def test_exact_dedup_keeps_every_null_text_row(spark):
+    """NULL text is absent content, not equal content: exact dedup keeps
+    every NULL-text row (SQL NULL != NULL; the hash join on md5(NULL)
+    matches nothing), while empty strings are content and collapse to
+    the smallest doc_id like any other duplicate text."""
+    docs = spark.createDataFrame(
+        [(1, "same words here"), (2, "same words here"), (3, None), (4, None), (5, ""), (6, "")],
+        "doc_id long, text string",
+    )
+    out = curate.curate_corpus(docs, near_dup_jaccard=None)
+    assert sorted(r.doc_id for r in out.select("doc_id").collect()) == [1, 3, 4, 5]
+
+
 def test_curate_lang_and_quality_filters(spark, corpus):
     out = curate.curate_corpus(corpus, langs=("en",), near_dup_jaccard=None)
     langs = {r.pred_lang for r in out.collect()}

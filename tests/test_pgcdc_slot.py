@@ -132,3 +132,21 @@ def test_recreate_cycle_is_idempotent_end_to_end():
     mgr.create_slot()
     assert cur.drop_calls and cur.create_calls
 
+
+
+def test_live_reader_empty_peek_keeps_last_end(monkeypatch):
+    """An empty peek (nothing new in the slot) must not move the offset
+    back to 0: Spark would see the end behind the last one, and the next
+    commit could ask pg_replication_slot_advance for 0/0. The reader keeps
+    the last end it served."""
+    from pg2kinesis_spark.sources import pgcdc
+
+    monkeypatch.setattr(pgcdc, "HAVE_PSYCOPG2", True)
+    reader = pgcdc.PgCdcStreamReader({"dsn": "unused", "rowsperbatch": "2"})
+    peeks = iter([[(10, 7, "BEGIN 5"), (12, 20, "table t: INSERT: id[integer]:1"), (14, 6, "COMMIT")], []])
+    reader._peek = lambda: next(peeks)
+    assert reader.initialOffset() == {"lsn": 0}
+    assert reader.latestOffset() == {"lsn": 14}
+    assert [len(p.messages) for p in reader.partitions({"lsn": 0}, {"lsn": 14})] == [3]
+    assert reader.latestOffset() == {"lsn": 14}
+    assert reader.partitions({"lsn": 14}, {"lsn": 14})[0].messages == []

@@ -1,6 +1,7 @@
-"""Streaming pgoutput: base64 replay corpus -> parse kernel -> stateful
-xid carry-forward -> registry join -> format -> in-memory Kinesis sink,
-with batch boundaries INSIDE transactions."""
+"""Streaming pgoutput: base64 replay corpus -> parse kernel -> in-batch
+xid stamp -> registry join -> format -> in-memory Kinesis sink, with
+``rows_per_batch`` smaller than a transaction: the source rounds every
+batch up to a transaction end."""
 
 from __future__ import annotations
 
@@ -78,6 +79,31 @@ def test_pgoutput_stream_end_to_end(spark, corpus, tmp_path):
     assert got == want
 
 
+@pytest.mark.parametrize("rows_per_batch", [2, 7])
+def test_pgoutput_replay_batches_end_on_commits(corpus, rows_per_batch):
+    """The replay source recognises a base64 Begin (first byte ``B``) as a
+    transaction start: every end offset is a Commit's LSN, the corpus end
+    or the last of the Relation messages that precede the first Begin,
+    and transactions longer than ``rows_per_batch`` are served whole."""
+    from pg2kinesis_spark.sources.replay import CdcReplayStreamReader
+
+    path, rows = corpus
+    reader = CdcReplayStreamReader({"path": path, "rowsperbatch": str(rows_per_batch)})
+    start, ends = reader.initialOffset()["lsn"], []
+    while (end := reader.latestOffset()["lsn"]) != start:
+        reader.partitions({"lsn": start}, {"lsn": end})
+        ends.append(end)
+        start = end
+    ops = [(lsn, base64.b64decode(p)[:1]) for lsn, _, p in sorted(rows)]
+    commits = {lsn for lsn, op in ops if op == b"C"}
+    preamble = ops[[op for _, op in ops].index(b"B") - 1][0]
+    lsns = [lsn for lsn, _ in ops]
+    assert ends[-1] == lsns[-1] and ends == sorted(ends)
+    assert set(ends) <= commits | {preamble, lsns[-1]}
+    sizes = [sum(a < l <= b for l in lsns) for a, b in zip([lsns[0] - 1] + ends, ends)]
+    assert all(n >= rows_per_batch for n in sizes[:-1]), sizes
+
+
 def test_pgoutput_stream_table_pat_and_ops(spark, corpus, tmp_path):
     path, rows = corpus
     registry = relation_registry_from_replay(spark, path)
@@ -148,7 +174,7 @@ def test_pgoutput_stream_truncate_puts_per_relation_and_counts_once(spark, tmp_p
     writer = KinesisLikeWriter(transport)
     stream = build_pgoutput_stream(
         spark, path, relation_registry_from_replay(spark, path),
-        formatter="CSV", rows_per_batch=4,  # batch boundaries inside txns
+        formatter="CSV", rows_per_batch=4,  # a soft limit: rounds up to whole txns
     )
     run_until(
         stream,

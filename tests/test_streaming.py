@@ -1,5 +1,6 @@
-"""Streaming pipeline tests: replay source offsets/acks, stateful xid,
-ordered packing sink, retry/backoff, restart at-least-once.
+"""Streaming pipeline tests: replay source offsets/acks, whole-transaction
+batches, in-batch xid stamp, ordered packing sink, retry/backoff, restart
+at-least-once.
 
 (SURVEY §5 rebuild test plan item 3.)
 """
@@ -31,7 +32,8 @@ TOTAL_LINES = N_TXNS * (MSGS_PER_TXN + 2)
 
 @pytest.fixture(scope="module")
 def few_shuffles(spark):
-    """Micro-batch stateful stages pay per-partition task overhead; 4 is
+    """Shuffle stages inside a micro-batch (the sink's ordering, the
+    batch-parse comparisons) pay per-partition task overhead; 4 is
     plenty for a 20-row corpus and keeps each trigger fast."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -62,8 +64,9 @@ def _corpus_rows() -> list[tuple[int, int, str]]:
 
 @pytest.fixture(scope="module")
 def corpus(spark, tmp_path_factory):
-    """rows_per_batch=7 with 5-line transactions puts batch boundaries
-    INSIDE transactions — pins cross-batch xid state."""
+    """5-line transactions: rows_per_batch=7 is a soft limit the source
+    rounds up to a transaction end, so the 20 lines come in two batches of
+    10 and every batch starts at a BEGIN."""
     path = str(tmp_path_factory.mktemp("corpus") / "corpus.parquet")
     spark.createDataFrame(
         _corpus_rows(), "lsn long, data_size int, payload string"
@@ -491,54 +494,137 @@ def test_xid_stamp_across_many_arrow_chunks(spark, corpus, pk_map, tmp_path, few
     assert po == [r.fmt_msg for r in batch]
 
 
-def test_stamp_fn_logic_with_fake_state():
-    """The one stamp without the streaming engine: chunks arrive
-    unordered (the BEGIN for lsn 4/6 sits in the LATER chunk), begin_xid
-    is forward-filled into xid in lsn order, the slot key and begin_xid
-    columns are dropped, and the last xid round-trips through the group state into
-    the next micro-batch. An empty-string xid is a real value, as in the
-    batch carry (``last(..., ignorenulls=True)``)."""
-    import pandas as pd
+def test_stamp_batches_forward_fills_in_lsn_order():
+    """The one stamp's Arrow body without the streaming engine: chunks
+    arrive unordered (the BEGIN for lsn 4/6 sits in the LATER chunk),
+    begin_xid is forward-filled into xid in lsn order, rows before the
+    first BEGIN get '', an empty-string BEGIN xid is a real value (as in
+    the batch carry ``last(..., ignorenulls=True)``), begin_xid is
+    dropped, and empty input yields nothing."""
+    import pyarrow as pa
 
-    from pg2kinesis_spark.streaming.pipeline import _stamp_fn
+    from pg2kinesis_spark.streaming.pipeline import _stamp_batches
 
-    class FakeState:
-        def __init__(self):
-            self.v = None
+    schema = pa.schema([("lsn", pa.int64()), ("payload", pa.string()), ("begin_xid", pa.string())])
 
-        @property
-        def exists(self):
-            return self.v is not None
-
-        @property
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    state = FakeState()
+    def chunk(*rows):
+        return pa.RecordBatch.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema
+        )
 
     def run(*chunks):
-        out = list(_stamp_fn((0,), iter(chunks), state))
-        return [(r.lsn, r.payload, r.xid) for r in out[0].itertuples()] if out else []
+        out = list(_stamp_batches(iter(chunks)))
+        assert all(b.schema.names == ["lsn", "payload", "xid"] for b in out)
+        return [tuple(r.values()) for b in out for r in b.to_pylist()]
 
-    c1 = pd.DataFrame({"slot": [0, 0], "lsn": [4, 6], "data_size": [1, 1],
-                       "payload": ["table t: UPDATE: x", "COMMIT"], "begin_xid": [None, None]})
-    c2 = pd.DataFrame({"slot": [0], "lsn": [2], "data_size": [1],
-                       "payload": ["BEGIN 99"], "begin_xid": ["99"]})
+    c1 = chunk((4, "table t: UPDATE: x", None), (6, "COMMIT", None))
+    c2 = chunk((2, "BEGIN 99", "99"))
     assert run(c1, c2) == [(2, "BEGIN 99", "99"), (4, "table t: UPDATE: x", "99"), (6, "COMMIT", "99")]
-    assert state.get == ("99",)
-    # next micro-batch inherits cur_xact from state
-    c3 = pd.DataFrame({"slot": [0], "lsn": [8], "data_size": [1],
-                       "payload": ["table t: UPDATE: y"], "begin_xid": [None]})
-    assert run(c3) == [(8, "table t: UPDATE: y", "99")]
-    # an empty batch emits nothing and keeps the state
-    assert run() == [] and state.get == ("99",)
-    c4 = pd.DataFrame({"slot": [0, 0], "lsn": [10, 12], "data_size": [1, 1],
-                       "payload": ["BEGIN ", "table t: UPDATE: z"], "begin_xid": ["", None]})
-    assert run(c4) == [(10, "BEGIN ", ""), (12, "table t: UPDATE: z", "")]
-    assert state.get == ("",)
+    # rows before the first BEGIN: ''; then an empty-string xid is kept
+    c3 = chunk((8, "table t: UPDATE: y", None), (10, "BEGIN ", ""))
+    c4 = chunk((12, "table t: UPDATE: z", None), (14, "BEGIN 5", "5"), (16, "COMMIT", None))
+    assert run(c4, c3) == [
+        (8, "table t: UPDATE: y", ""), (10, "BEGIN ", ""), (12, "table t: UPDATE: z", ""),
+        (14, "BEGIN 5", "5"), (16, "COMMIT", "5"),
+    ]
+    assert run() == []
+    assert run(chunk()) == []
+
+
+def _latest_ends(path, rows_per_batch):
+    """The end offsets ``latestOffset`` serves one after another until
+    the corpus is drained."""
+    from pg2kinesis_spark.sources.replay import CdcReplayStreamReader
+
+    reader = CdcReplayStreamReader({"path": path, "rowsperbatch": str(rows_per_batch)})
+    start, ends = reader.initialOffset()["lsn"], []
+    while True:
+        end = reader.latestOffset()["lsn"]
+        if end == start:
+            return ends
+        reader.partitions({"lsn": start}, {"lsn": end})
+        ends.append(end)
+        start = end
+
+
+@pytest.mark.parametrize("rows_per_batch", [2, 7])
+def test_replay_batches_end_on_transaction_ends(spark, tmp_path, rows_per_batch):
+    """``rows_per_batch`` is a soft limit rounded up to a transaction end:
+    every end offset is a COMMIT's LSN (or the corpus end), and a
+    transaction longer than ``rows_per_batch`` is served whole, not
+    stalled on."""
+    import random
+
+    rows = _corpus_rows()
+    # a corpus that does not start on a BEGIN still drains
+    rows = [(1, 6, "COMMIT")] + rows
+    shuffled = rows[:]
+    random.Random(3).shuffle(shuffled)
+    path = str(tmp_path / "corpus")
+    spark.createDataFrame(shuffled, "lsn long, data_size int, payload string").repartition(2).write.parquet(path)
+
+    ends = _latest_ends(path, rows_per_batch)
+    commits = {lsn for lsn, _, p in rows if p == "COMMIT"}
+    assert set(ends) <= commits | {rows[-1][0]}
+    assert ends[-1] == rows[-1][0] and ends == sorted(ends)
+    # each batch is whole transactions holding at least rows_per_batch rows
+    # (the last one may be short): the soft limit rounds up, never down
+    lsns = [lsn for lsn, _, _ in rows]
+    sizes = [sum(a < l <= b for l in lsns) for a, b in zip([0] + ends, ends)]
+    assert all(n >= rows_per_batch for n in sizes[:-1]), sizes
+    assert sum(sizes) == len(rows)
+
+
+def test_replay_batches_stay_exact_without_transaction_starts(spark, tmp_path):
+    """wal2json messages are whole transactions each: with no BEGIN in the
+    corpus every row is a boundary, so batches hold exactly
+    ``rows_per_batch`` rows."""
+    rows = [(10 + 2 * i, 20, json.dumps({"xid": 100 + i, "change": []})) for i in range(11)]
+    path = str(tmp_path / "w2j.parquet")
+    spark.createDataFrame(rows, "lsn long, data_size int, payload string").coalesce(1).write.parquet(path)
+    lsns = [r[0] for r in rows]
+    assert _latest_ends(path, 3) == [lsns[2], lsns[5], lsns[8], lsns[10]]
+
+
+def test_resume_from_ack_log_keeps_xids(spark, corpus, pk_map, tmp_path, few_shuffles):
+    """A fresh checkpoint resuming from an ack log starts after the last
+    ack. Acks are transaction ends, so the resumed batch starts at a BEGIN
+    and every message after the ack carries its own transaction's xid,
+    as in the batch parse (with acks mid-transaction and nothing carried
+    over, the continuation rows would be put with xid '')."""
+    ack_log = str(tmp_path / "acks.jsonl")
+
+    def acks():
+        return [l for l in open(ack_log) if l.strip()] if os.path.exists(ack_log) else []
+
+    stream = build_test_decoding_stream(
+        spark, corpus, pk_map, formatter="CSV", operations=("UPDATE",),
+        rows_per_batch=7, ack_log=ack_log,
+    )
+    run_until(stream, KinesisLikeWriter(InMemoryTransport()), str(tmp_path / "ckpt1"), done=acks)
+    # stop as if the process died right after the first ack
+    first = acks()[0]
+    with open(ack_log, "w") as f:
+        f.write(first)
+    acked = json.loads(first)["acked_lsn"]
+
+    batch = format_csv(parse_test_decoding(spark.read.parquet(corpus), pk_map)).collect()
+    want = sorted((r for r in batch if r.lsn > acked), key=lambda r: r.lsn)
+    assert want, "the first ack must leave messages to resume"
+    t2 = InMemoryTransport()
+    w2 = KinesisLikeWriter(t2)
+    stream2 = build_test_decoding_stream(
+        spark, corpus, pk_map, formatter="CSV", operations=("UPDATE",),
+        rows_per_batch=7, ack_log=ack_log,
+    )
+    run_until(
+        stream2, w2, str(tmp_path / "ckpt2"),
+        done=lambda: w2.put_message_calls >= len(want) and w2._agg.num_bytes == 0,
+    )
+    w2.flush_tail()
+    puts = _msgs(t2)
+    assert [m.split(",")[2] for m in puts] == [r.xid for r in want]
+    assert puts == [r.fmt_msg for r in want]
 
 
 @pytest.mark.parametrize("data_size_type", ["int", "bigint"])
