@@ -44,6 +44,9 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
 
     Shuffles 16-byte keys, never the documents; partial aggregation
     halves the shuffle again. Output: one row per distinct content.
+    NULL texts form ONE group (content_hash NULL, keep_id the smallest
+    NULL-text doc_id): GROUP BY semantics, which oracle n5_dedup_exact
+    checks. ``curate.curate_corpus`` instead keeps every NULL-text row.
     """
     return (
         docs.groupBy(F.md5("text").alias("content_hash"))

@@ -55,6 +55,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pg2kinesis_spark.session import forget_zip_importers
+
 # ---------------------------------------------------------------- decode
 
 
@@ -257,6 +259,7 @@ def relation_registry(raw: DataFrame, payload_col: str = "payload") -> DataFrame
     rel_only = raw.filter(F.expr(f"substring({payload_col}, 1, 1) = x'52'"))  # 'R'
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in batches:
             rows = []
             for lsn, buf in zip(pdf["lsn"], pdf[payload_col]):
@@ -309,6 +312,7 @@ def decode_pgoutput(
         # specialized flat decoder: no per-message dict, column lists
         # built directly (measured ~2x the generic decode_message walk;
         # decode_message remains the single-message/test surface)
+        forget_zip_importers()
         unpack_from = struct.unpack_from
         for pdf in batches:
             c_lsn, c_size, c_op, c_xid, c_rel, c_new, c_old = [], [], [], [], [], [], []

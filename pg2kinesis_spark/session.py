@@ -3,11 +3,16 @@
 Local mode is a stand-in for a real cluster: keep shuffle partitioning,
 AQE, and Arrow settings the way a 1000-executor deployment would want
 them, sized down to the local core count.
+
+``forget_zip_importers`` is the worker-side counterpart: it removes a
+per-task import cost from the functions Spark runs in Python workers.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -65,3 +70,22 @@ def get_spark(app_name: str = "pg2kinesis_spark", shuffle_partitions: int | None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def forget_zip_importers() -> None:
+    """Drop the cached zip-archive finders from ``sys.path_importer_cache``.
+
+    Every Python worker task starts with ``importlib.invalidate_caches()``
+    (``pyspark.worker_util.setup_spark_files``). On CPython 3.11 that makes
+    each cached ``zipimporter`` re-read its whole archive directory in pure
+    Python: pyspark.zip, the py4j zip and Spark's jars sit on the worker's
+    ``sys.path``, so a reused worker spends ~0.15-0.2 s of every task there.
+    Dropping an entry only drops the cache: the next import that needs the
+    archive rebuilds it from zipimport's own directory cache without
+    reading the file, and the next task's invalidation has nothing to
+    re-read. Called at the top of each function that runs once per task in
+    a Python worker on the CDC path.
+    """
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            sys.path_importer_cache.pop(path, None)

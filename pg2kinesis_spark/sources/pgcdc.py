@@ -37,6 +37,8 @@ except ImportError:
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
+from pg2kinesis_spark.session import forget_zip_importers
+
 # SQLSTATE codes (public PostgreSQL standard; the values behind
 # psycopg2.errorcodes.DUPLICATE_OBJECT / UNDEFINED_OBJECT that the
 # reference's tolerance branches compare against, slot.py:102-118).
@@ -206,6 +208,7 @@ class PgCdcStreamReader(DataSourceStreamReader):  # pragma: no cover - needs PG
         return [_PgBatch(msgs)]
 
     def read(self, partition: _PgBatch):
+        forget_zip_importers()
         yield from partition.messages
 
     def commit(self, end: dict) -> None:

@@ -58,6 +58,20 @@ def test_exact_dedup_keeps_every_null_text_row(spark):
     assert sorted(r.doc_id for r in out.select("doc_id").collect()) == [1, 3, 4, 5]
 
 
+def test_null_text_curate_keeps_every_row_exact_dedup_groups_them(spark):
+    """The two NULL-text rules side by side: ``curate_corpus`` keeps every
+    NULL-text row, while ``exact_duplicates`` is a GROUP BY and puts all
+    NULL texts in one group (the semantics oracle n5_dedup_exact checks)."""
+    from pg2kinesis_spark.functions.dedup import exact_duplicates
+
+    docs = spark.createDataFrame([(1, "a b c"), (2, None), (3, None)], "doc_id long, text string")
+    out = curate.curate_corpus(docs, near_dup_jaccard=None)
+    assert sorted(r.doc_id for r in out.select("doc_id").collect()) == [1, 2, 3]
+    groups = {r.content_hash: (r.keep_id, r.n_copies) for r in exact_duplicates(docs).collect()}
+    assert groups[None] == (2, 2)
+    assert sorted(groups.values()) == [(1, 1), (2, 2)]
+
+
 def test_curate_lang_and_quality_filters(spark, corpus):
     out = curate.curate_corpus(corpus, langs=("en",), near_dup_jaccard=None)
     langs = {r.pred_lang for r in out.collect()}
@@ -75,8 +89,9 @@ def test_curate_token_budget_respected(spark, corpus):
 
 
 def test_curate_full_table_is_consistent(spark, sf_small):
-    """On real documents: curated set is a subset of the exact-dedup
-    survivors and survives a repeated run identically (determinism)."""
+    """On real documents: the curated docs with non-NULL text are a
+    subset of the exact-dedup survivors, every NULL-text doc is curated,
+    and a repeated run is identical (determinism)."""
     docs = load_table(spark, sf_small, "documents")
     a = sorted(r.doc_id for r in curate.curate_corpus(docs).select("doc_id").collect())
     b = sorted(r.doc_id for r in curate.curate_corpus(docs).select("doc_id").collect())
@@ -85,7 +100,10 @@ def test_curate_full_table_is_consistent(spark, sf_small):
     from pg2kinesis_spark.functions.dedup import exact_duplicates
 
     keep = {r.keep_id for r in exact_duplicates(docs).collect()}
-    assert set(a) <= keep
+    null_ids = {r.doc_id for r in docs.filter(F.col("text").isNull()).select("doc_id").collect()}
+    assert set(a) - null_ids <= keep
+    # every NULL-text doc is curated (exact dedup groups them; curate does not)
+    assert null_ids <= set(a)
 
 
 def test_curate_with_gopher_pii_decontam_stages(spark, sf_small):
