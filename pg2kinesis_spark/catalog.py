@@ -4,7 +4,7 @@ Rebuilds the reference's catalog pipeline (reference slot.py:18-33 PK_SQL,
 slot.py:88-94 map build) as DataFrame operators:
 
 - ``build_pk_catalog``     — the information_schema query (J1 left join +
-                             J2 inner joins + P11 concat + O1 order by).
+                             J2 inner joins + P11 concat), unordered.
 - ``primary_key_map``      — the last-wins dict collapse (A4): for
                              composite keys, the column with the highest
                              ordinal position wins (reference slot.py:92,
@@ -37,8 +37,11 @@ def build_pk_catalog(
 
     Mirrors PK_SQL (reference slot.py:18-33): every BASE TABLE appears;
     tables without a PRIMARY KEY constraint get NULL pk columns (LEFT
-    JOIN); output is globally ordered by ordinal_position, which feeds the
-    last-wins collapse.
+    JOIN). PK_SQL's ``ORDER BY ordinal_position`` is left out: the
+    reference needs it for its dict build, but ``primary_key_map`` picks
+    the highest ordinal with ``max_by`` whatever the row order, and a
+    global sort would add a range-partition sampling job to every
+    catalog snapshot.
     """
     pk_cols = (
         table_constraints.filter(F.col("constraint_type") == "PRIMARY KEY")
@@ -73,7 +76,6 @@ def build_pk_catalog(
             F.col("ordinal_position").alias("col_ord_pos"),
         )
         .withColumnRenamed("table_name_q", "table_name")
-        .orderBy("col_ord_pos")
     )
 
 
@@ -83,9 +85,9 @@ def primary_key_map(pk_catalog: DataFrame) -> DataFrame:
     Reference builds ``{rec.table_name: rec for rec in rows}`` over rows
     ordered by ordinal_position (slot.py:91-93), so for composite keys the
     highest-ordinal column silently wins. ``max_by`` reproduces exactly
-    that. Tables with no PK keep a row with NULL col_name/col_type — their
-    compiled pattern can never match, which surfaces downstream as the
-    MISSING_PK failure (SURVEY §8.1).
+    that over rows in any order. Tables with no PK keep a row with NULL
+    col_name/col_type — their compiled pattern can never match, which
+    surfaces downstream as the MISSING_PK failure (SURVEY §8.1).
     """
     collapsed = pk_catalog.groupBy("table_name").agg(
         F.expr("max_by(struct(col_name, col_type), col_ord_pos)").alias("pk")

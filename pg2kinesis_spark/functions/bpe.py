@@ -6,7 +6,7 @@ real LLM token budgets (one id per word regardless of length; one id per
 *character* for OOV). This module learns a BPE merge table (Sennrich et
 al. 2016, "Neural Machine Translation of Rare Words with Subword Units")
 and produces budget-true subword token counts for
-``token_budget_select`` / ``pack_sequences`` / ``materialize_corpus``.
+``token_budget_select`` / ``pack_sequences``.
 
 Scale design
 ------------

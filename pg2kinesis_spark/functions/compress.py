@@ -202,10 +202,6 @@ _LZ4_LEGACY_MAGIC = b"\x02\x21\x4c\x18"
 _LZ4_BLOCK_MAX = {4: 1 << 16, 5: 1 << 18, 6: 1 << 20, 7: 1 << 22}
 
 
-def is_lz4(data: bytes) -> bool:
-    return bytes(data[:4]) == LZ4_FRAME_MAGIC
-
-
 def lz4_decompress(data: bytes, cap: int) -> bytes:
     """LZ4 frame(s) → content bytes; concatenated frames and skippable
     frames handled; every checksum the frame carries is VERIFIED (a

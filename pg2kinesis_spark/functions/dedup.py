@@ -130,73 +130,6 @@ def _minhash_cols(k: int, seed: int) -> list[Column]:
     ]
 
 
-def lsh_detection_prob(jaccard: float, k: int, bands: int) -> float:
-    """P(candidate | true jaccard j) under (k, bands) banding — the
-    classic S-curve 1 - (1 - j^r)^b with r = k/bands rows per band
-    (Leskovec/Rajaraman/Ullman, Mining of Massive Datasets §3.4)."""
-    if k % bands:
-        raise ValueError(f"bands={bands} must divide k={k}")
-    r = k // bands
-    return 1.0 - (1.0 - jaccard**r) ** bands
-
-
-def lsh_tune(
-    target_jaccard: float,
-    max_k: int = 256,
-    fn_weight: float = 1.0,
-    fp_weight: float = 1.0,
-    grid: int = 200,
-) -> dict:
-    """Pick (k, bands) for MinHash-LSH banding given the dedup
-    threshold the caller actually cares about.
-
-    Minimizes ``fn_weight·E[miss above threshold] + fp_weight·E[hit
-    below threshold]`` where the expectations integrate the S-curve
-    over j uniform on [t, 1] and [0, t] — the standard symmetric-risk
-    tuning; weight fn_weight up when missing a duplicate is worse than
-    paying an extra candidate-pair verification (it usually is: false
-    positives cost one est_jaccard check, false negatives ship a
-    duplicate to training).
-
-    Driver-side closed-form math over a small grid — k up to ``max_k``
-    signature columns, every bands dividing k. Returns
-    ``{"k", "bands", "rows_per_band", "threshold", "cost", "p_at_t"}``
-    where ``threshold`` is the curve's steepest point (1/b)^(1/r).
-    Bigger k buys a sharper curve at linearly more signature width —
-    at 100 TB the signature table is k·8 bytes/doc, so the caller
-    caps ``max_k`` by storage, not math.
-    """
-    if not 0.0 < target_jaccard < 1.0:
-        raise ValueError(f"target_jaccard must be in (0, 1), got {target_jaccard}")
-    t = target_jaccard
-    best = None
-    for k in range(2, max_k + 1):
-        for bands in range(1, k + 1):
-            if k % bands:
-                continue
-            r = k // bands
-            # E[miss | j >= t] + E[false hit | j < t] via midpoint rule
-            fn = sum(
-                1.0 - lsh_detection_prob(t + (1 - t) * (i + 0.5) / grid, k, bands)
-                for i in range(grid)
-            ) * (1 - t) / grid
-            fp = sum(
-                lsh_detection_prob(t * (i + 0.5) / grid, k, bands)
-                for i in range(grid)
-            ) * t / grid
-            cost = fn_weight * fn + fp_weight * fp
-            if best is None or cost < best["cost"]:
-                best = {
-                    "k": k,
-                    "bands": bands,
-                    "rows_per_band": r,
-                    "threshold": (1.0 / bands) ** (1.0 / r),
-                    "cost": cost,
-                    "p_at_t": lsh_detection_prob(t, k, bands),
-                }
-    return best
-
-
 def minhash_signatures(docs: DataFrame, n: int = 3, k: int = 16, seed: int = 7) -> DataFrame:
     """K-permutation MinHash signature per document (columns mh0..mh{k-1}).
 

@@ -71,14 +71,6 @@ def html_to_text_col(col) -> Column:
     return F.regexp_replace(c, r"^\s+|\s+$", "")
 
 
-def html_to_text(
-    docs: DataFrame, html_col: str = "html", text_col: str = "text"
-) -> DataFrame:
-    """Add ``text_col`` extracted from ``html_col``. One projection,
-    whole-stage codegen, composes directly with annotate/c4/gopher."""
-    return docs.withColumn(text_col, html_to_text_col(html_col))
-
-
 def extract_title(docs: DataFrame, html_col: str = "html") -> DataFrame:
     """Add a ``title`` column (first <title> payload, entity-decoded,
     whitespace-collapsed; empty string when absent)."""

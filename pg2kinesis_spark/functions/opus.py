@@ -850,19 +850,6 @@ def opus_energy_envelope(data: bytes) -> np.ndarray:
     )
 
 
-def _vorbis_vendor(vc: bytes) -> str | None:
-    """The vendor string of a VorbisComment payload (None if short)."""
-    if len(vc) < 4:
-        return None
-    n = struct.unpack_from("<I", vc, 0)[0]
-    if 4 + n > len(vc):
-        return None
-    try:
-        return vc[4 : 4 + n].decode("utf-8")
-    except UnicodeDecodeError:
-        return None
-
-
 def opus_packets_energy(packets) -> np.ndarray:
     """The per-packet energy walk shared by the Ogg and WebM fronts:
     each packet contributes its SILK subframe gains (real RFC tables,

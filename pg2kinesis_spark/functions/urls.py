@@ -46,9 +46,10 @@ from pg2kinesis_spark.functions.dedup import HASH60
 # major ccTLDs, and the most common private-section hosting suffixes —
 # the entries that actually change registered-domain grouping for a
 # web corpus. For exact parity with the full ~9k-rule list, pass the
-# real public_suffix_list.dat through ``load_psl`` — the SAME compiler
-# turns either rule set into one pure longest-match column expression
-# (isin over literal sets -> Catalyst InSet; map-only, no UDF, no join).
+# lines of the real public_suffix_list.dat to ``compile_psl`` — the SAME
+# compiler turns either rule set into one pure longest-match column
+# expression (IN over literal sets -> Catalyst InSet; map-only, no UDF,
+# no join).
 # --------------------------------------------------------------------------
 
 _PSL_BUILTIN = (
@@ -192,15 +193,6 @@ def compile_psl(rules: tuple[str, ...] | list[str]) -> dict:
 _PSL_COMPILED = compile_psl(_PSL_BUILTIN)
 
 
-def load_psl(path: str) -> dict:
-    """Read a real ``public_suffix_list.dat`` (or any PSL-syntax file)
-    and compile it for ``registered_domain(..., psl=...)``. Comments
-    and section markers are ignored; both ICANN and PRIVATE sections
-    are kept (the standard library behavior)."""
-    with open(path, encoding="utf-8") as f:
-        return compile_psl([line for line in f])
-
-
 _TRACKING_PARAMS = ("utm_", "gclid", "fbclid", "ref", "igshid", "mc_cid", "mc_eid")
 
 
@@ -224,14 +216,19 @@ def _sql_str(s: str) -> str:
 
 
 def _rd_case_sql(host_sql: str, psl: dict | None = None) -> str:
-    """SQL-text twin of ``registered_domain`` — the same CASE tree
-    (same element_at/concat_ws/IN structure, clause for clause), but
-    rendered as ONE string and parsed JVM-side in a single call.
+    """eTLD+1 of ``host_sql`` under the PUBLIC SUFFIX LIST longest-match
+    algorithm (publicsuffix.org) as one SQL CASE: exceptions beat
+    wildcards, longer rules beat shorter, the implicit ``*`` default
+    makes every bare TLD a suffix, and a NULL host gives a NULL domain.
+    ``psl`` is a ``compile_psl`` structure (default: the vendored
+    built-in subset).
 
-    ``registered_domain`` builds ~550 literal Column objects through
-    py4j (one round-trip each, ~0.5 s per construction — measured, r12
-    opt round); this path is one round-trip total. Equivalence is
-    pinned by ``test_urls.py::test_registered_domain_sql_twin``.
+    Rendered as ONE string and parsed JVM-side in a single call: a
+    Column-API builder of the same tree made ~550 literal Column objects
+    through py4j (one round-trip each, ~0.5 s per construction —
+    measured, r12 opt round). ``_py_registered`` is the pure-Python
+    mirror; ``test_urls.py::test_registered_domain_sql_twin`` pins the
+    two against each other.
     """
     p = psl or _PSL_COMPILED
     parts = f"split({host_sql}, '\\\\.')"
@@ -261,10 +258,8 @@ def _rd_case_sql(host_sql: str, psl: dict | None = None) -> str:
         if not conds:
             continue
         hit = " OR ".join(conds)
-        # the Column builder emits two WHENs here ((n > s) -> last(s+1),
-        # (n = s) -> host); nothing can interleave between them, so the
-        # fused form below is clause-for-clause equivalent while keeping
-        # the big IN set in the tree ONCE instead of twice
+        # one WHEN for both (n > s) -> last(s+1) and (n = s) -> host:
+        # the big IN set appears in the tree ONCE instead of twice
         clauses.append(
             f"WHEN ({n} >= {s_len}) AND ({hit})"
             f" THEN IF({n} > {s_len}, {last(s_len + 1)}, {host_sql})"
@@ -273,51 +268,9 @@ def _rd_case_sql(host_sql: str, psl: dict | None = None) -> str:
 
 
 def _registered_domain_expr(host_sql: str, psl: dict | None = None) -> Column:
-    """``registered_domain`` over a SQL-text host expression — one py4j
-    round-trip instead of ~550 (internal fast path; same results)."""
+    """Registered domain (eTLD+1) of a SQL-text host expression
+    (``_rd_case_sql``) as a Column."""
     return F.expr(_rd_case_sql(host_sql, psl))
-
-
-def registered_domain(host: Column, psl: dict | None = None) -> Column:
-    """eTLD+1 under the PUBLIC SUFFIX LIST longest-match algorithm
-    (publicsuffix.org): exceptions beat wildcards, longer rules beat
-    shorter, the implicit ``*`` default makes every bare TLD a suffix.
-    ``psl`` is a ``compile_psl``/``load_psl`` structure (default: the
-    vendored built-in subset).
-
-    Pure array expression over the split host — no UDF, no join; the
-    rule sets become Catalyst InSet literals.
-    """
-    p = psl or _PSL_COMPILED
-    parts = F.split(host, r"\.")
-    n = F.size(parts)
-
-    def last(ln: int) -> Column:
-        return F.concat_ws(".", *[F.element_at(parts, -i) for i in range(ln, 0, -1)])
-
-    # NULL host -> NULL domain (concat_ws would silently yield "" and
-    # collapse every unparseable URL into one cap group)
-    out = F.when(host.isNull(), F.lit(None).cast("string")).when(n <= 1, host)
-    # exceptions first (an exception IS the registered domain), longest first
-    for ln in sorted(p["exc"], reverse=True):
-        out = out.when((n >= ln) & last(ln).isin(*p["exc"][ln]), last(ln))
-    # suffix matches, longest suffix length S first
-    for s_len in range(p["max_s"], 1, -1):
-        conds = []
-        if s_len in p["exact"]:
-            conds.append(last(s_len).isin(*p["exact"][s_len]))
-        if s_len - 1 in p["wild"]:
-            conds.append(last(s_len - 1).isin(*p["wild"][s_len - 1]))
-        if not conds:
-            continue
-        hit = conds[0]
-        for c in conds[1:]:
-            hit = hit | c
-        # host deeper than the suffix -> suffix + 1 label; host IS the
-        # suffix -> no registrable part, return the host (degenerate)
-        out = out.when((n > s_len) & hit, last(s_len + 1)).when((n == s_len) & hit, host)
-    # implicit '*' default rule: the TLD is the suffix
-    return out.otherwise(last(2))
 
 
 def normalize_url(url: str | Column = "url") -> Column:
@@ -462,7 +415,7 @@ def _py_is_public_suffix(b: str, psl: dict | None = None) -> bool:
 
 
 def _py_registered(b: str, psl: dict | None = None) -> str:
-    """Pure-Python mirror of ``registered_domain`` — used to split
+    """Pure-Python mirror of ``_rd_case_sql`` — used to split
     blocklists at compile time and as the cross-checked test oracle."""
     p = psl or _PSL_COMPILED
     parts = b.split(".")

@@ -17,7 +17,7 @@ a WARC directory into a document DataFrame, dependency-free:
                           replacement — charset sniffing beyond the
                           header is out of scope and pinned so).
 - ``warc_to_corpus``    — the composed front door: records → docs →
-                          html.html_to_text → (doc_id, url, text),
+                          html.html_to_text_col → (doc_id, url, text),
                           ready for ``curate_corpus``.
 - ``encode_warc``       — record writer (doubles as the test-fixture
                           generator, the pgoutput-encoder convention).

@@ -6,21 +6,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # prefetch_checkpoint opt-out (plan-capture tooling, debugging): any
 # non-empty value disables the background materialization threads.
 _NO_PREFETCH_ENV = "SPARK_GRAFT_NO_PREFETCH"
@@ -93,77 +78,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql use)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def write_sharded(
-    df: DataFrame,
-    path: str,
-    target_mb: float = 256,
-    size_cols: tuple[str, ...] = ("text",),
-) -> int:
-    """Write parquet with shard files sized for a 100 TB-friendly layout.
-
-    Output file sizing is a first-order concern at scale: thousands of
-    tiny files kill the namenode/lister and per-task overhead; single
-    huge files kill parallelism. This computes the dataset's payload mass
-    (sum of the given columns' lengths — a cheap partial-aggregated agg),
-    derives the shard count for ``target_mb`` (assuming ~2.5x parquet
-    compression on text), and round-robin repartitions to exactly that
-    many equal shards. Returns the shard count.
-
-    Round-robin (not range/hash) because shard assignment has no
-    semantic meaning — equal fill is the only goal.
-    """
-    from pyspark.sql import functions as F
-
-    mass = df.agg(
-        sum(F.sum(F.length(c)) for c in size_cols).alias("m")
-    ).collect()[0]["m"] or 0
-    est_bytes = mass / 2.5
-    shard_bytes = max(1024, int(target_mb * 1024 * 1024))
-    n = max(1, int(est_bytes // shard_bytes) + 1)
-    df.repartition(n).write.mode("overwrite").parquet(path)
-    return n
-
-
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    by: str | tuple[str, ...],
-    n_files: int | None = None,
-) -> None:
-    """Layout optimization: range-partition + sort-within-partitions on
-    ``by`` before writing, so parquet row-group (and file) min/max
-    statistics on those columns become NARROW and DISJOINT instead of
-    every row group spanning the whole domain.
-
-    Why it matters at 100 TB: the parquet reader skips a row group when
-    a pushed-down predicate falls outside its min/max — but a
-    round-robin layout gives every row group the full value range, so
-    nothing ever skips and a selective point/range query scans the
-    whole dataset. Sorted-on-write, the same pushed filter touches only
-    the row groups whose range overlaps — the poor man's clustering
-    index, paid once at write time (one range-exchange + local sort,
-    both scalable shapes; the range partitioner samples keys, which is
-    fine HERE because layout — unlike pack_sequences' deterministic
-    cumsum — has no bit-reproducibility contract). The footer-stats
-    test pins disjointness with pyarrow.
-    """
-    cols = [by] if isinstance(by, str) else list(by)
-    if n_files is not None and n_files < 1:
-        # a falsy 0 must not silently fall back to the default shuffle
-        # partition count (hundreds of tiny files — the exact hygiene
-        # problem write_sharded exists to prevent)
-        raise ValueError(f"n_files must be >= 1, got {n_files}")
-    out = df.repartitionByRange(*([n_files] if n_files is not None else []), *cols)
-    out.sortWithinPartitions(*cols).write.mode("overwrite").parquet(path)

@@ -5,4 +5,3 @@ from pg2kinesis_spark.operators.formatters import (  # noqa: F401
     format_csvpayload,
     filter_operations,
 )
-from pg2kinesis_spark.operators.errors import raise_first_error  # noqa: F401

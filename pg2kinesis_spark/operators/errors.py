@@ -3,39 +3,13 @@
 The reference's ``_log_and_raise`` (reference formatter.py:134-137) logs
 and raises a plain Exception, killing the stream — no skip, no DLQ. In
 the DataFrame rebuild, parse operators emit an ``error`` column instead
-of raising mid-plan; ``raise_first_error`` reproduces the fail-stop at
-action time, raising for the first error in LSN order.
+of raising mid-plan; the sink (``KinesisLikeWriter.process_batch``)
+reproduces the fail-stop, raising for the first error in LSN order.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 class CdcParseError(Exception):
     """Raised for the first parse/enrich error, message-compatible with
     the reference's _log_and_raise."""
-
-
-def split_errors(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """DLQ routing alternative to fail-stop: (good rows without the error
-    column, error rows). The reference has no DLQ — this is the rebuild's
-    opt-in divergence for pipelines that prefer quarantine over crash."""
-    return (
-        df.filter(F.col("error").isNull()).drop("error"),
-        df.filter(F.col("error").isNotNull()),
-    )
-
-
-def raise_first_error(df: DataFrame, order_col: str = "lsn") -> DataFrame:
-    """If any row has a non-null ``error``, raise for the earliest one.
-
-    Cheap at scale: the error scan is a filter + limit(1) — no shuffle of
-    the good rows; the returned DataFrame is the input minus the error
-    column and is only materialized by the caller's own action.
-    """
-    first = df.filter(F.col("error").isNotNull()).orderBy(order_col).select("error").limit(1).collect()
-    if first:
-        raise CdcParseError(first[0][0])
-    return df.drop("error")

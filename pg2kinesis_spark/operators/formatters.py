@@ -90,16 +90,6 @@ def format_csvpayload(changes: DataFrame, full_change: bool = False) -> DataFram
     )
 
 
-def get_formatter(name: str):
-    """F14 — the reference's reflection dispatch (formatter.py:166-168)
-    as an explicit factory: name → format function. Unknown names raise,
-    mirroring getattr's AttributeError."""
-    try:
-        return {"CSV": format_csv, "CSVPayload": format_csvpayload}[name]
-    except KeyError as e:
-        raise AttributeError(f"no formatter named {name!r}Formatter") from e
-
-
 def expand_operations(operations: tuple[str, ...] | list[str]) -> tuple[str, ...]:
     """'all' expands to the full lowercase set (reference __main__.py:42-43)."""
     ops: list[str] = []

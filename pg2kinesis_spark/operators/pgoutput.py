@@ -18,12 +18,12 @@ docs (protocol.html, "Logical Replication Message Formats"):
     TupleData ncols(2) [kind(1: 'n'|'u'|'t') [len(4) bytes]]...
 
 Truncate emits one change row per truncated rel (operation
-``truncate``, NULL pkey/row); the snapshot/materializer paths treat it
-as a table-granularity tombstone — keys whose last change precedes the
-truncate are purged, post-truncate inserts survive, and the tombstone
-persists across micro-batches so at-least-once replay cannot
-resurrect pre-truncate keys. The Kinesis stream puts one ``truncate``
+``truncate``, NULL pkey/row). The Kinesis stream puts one ``truncate``
 message per truncated rel (no pkey) and counts the wire message once.
+A row naming a rel_id no Relation message registered carries
+``UNKNOWN_RELATION_ERROR`` in its ``error`` column, from
+``pgoutput_cdc_changes`` and from the stream alike; the sink fail-stops
+on it.
 
 Scale design
 ------------
@@ -56,6 +56,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg2kinesis_spark.session import forget_zip_importers
+
+# format_string pattern of the fail-stop error for a change row whose
+# rel_id has no Relation message (the one text both parse paths write)
+UNKNOWN_RELATION_ERROR = "no Relation message for rel_id %s"
 
 # ---------------------------------------------------------------- decode
 
@@ -414,7 +418,10 @@ def parse_pgoutput(
     ``stamp_xid_scalable``); the pure-JVM begin twins below then feed
     the LAZY bounds/summary branches, so a backfill build runs no
     driver jobs at all and the twin scans schedule inside the consuming
-    action. Keep the default for long-lived streams.
+    action. The eager default pays two driver jobs at build and is
+    cheaper only when one built plan is executed many times (bench.py's
+    steady-pgoutput entry). The streaming query does not call this: it
+    stamps in-batch with ``streaming/pipeline.py::stamp_xid``.
     """
     from .test_decoding import stamp_xid_scalable
 
@@ -481,10 +488,8 @@ def pgoutput_cdc_changes(
     registry: DataFrame | None = None,
     xid_eager: bool = True,
 ) -> DataFrame:
-    """Adapt a pgoutput stream to apply_cdc's change contract:
-    (lsn, change_idx, table, operation, pkey, row map<string,string>,
-    error) — so ``_last_wins`` / ``snapshot_changes`` semantics and
-    ``CdcTableMaterializer`` run unchanged on the binary protocol.
+    """A pgoutput stream as change rows: (lsn, change_idx, xid, table,
+    operation, pkey, row map<string,string>, error).
 
     pgoutput carries one change per message (change_idx = 0); the pkey
     is the first replica-identity column (both 'K' and 'O' old tuples
@@ -517,19 +522,9 @@ def pgoutput_cdc_changes(
         f"CASE WHEN NOT (operation = 'truncate')"
         f" THEN map_from_arrays(col_names, {eff}) END AS `row`",
         "CASE WHEN `table` IS NULL THEN"
-        " format_string('no Relation message for rel_id %s', rel_id)"
+        f" format_string('{UNKNOWN_RELATION_ERROR}', rel_id)"
         " END AS error",
     )
-
-
-def pgoutput_snapshot(raw: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """One-shot materialization from pgoutput: current row per
-    (table, pkey), deletes gone, truncated tables emptied up to the
-    truncate LSN — the binary-protocol twin of
-    apply_cdc.snapshot_changes."""
-    from .apply_cdc import snapshot_last_wins
-
-    return snapshot_last_wins(pgoutput_cdc_changes(raw, payload_col))
 
 
 def relation_registry_from_replay(spark, corpus_path: str) -> DataFrame:

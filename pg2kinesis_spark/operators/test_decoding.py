@@ -15,7 +15,7 @@ pk value regex extract            P4  regexp_extract (column  :19,73
                                       pattern from the join)
 operation projection (strip :)    P3  substring               :75
 unknown line / missing table /    §8.5 error column, raised   :69,76,79
-missing pk → fail-stop                 by raise_first_error
+missing pk → fail-stop                 by the sink
 
 Input : (lsn long, payload string [, data_size int])
 Output: (lsn, xid string, table string, operation string, pkey string,
@@ -25,12 +25,14 @@ Output: (lsn, xid string, table string, operation string, pkey string,
 Scale notes (100 TB): the only non-embarrassingly-parallel step is the
 xid carry-forward, which is inherently a prefix scan over the
 commit-ordered log. Everything else (tokenize, filters, regex, the
-catalog join — broadcast, no shuffle) is per-row. The carry-forward here
-uses a global-order window; a real CDC log is consumed per-slot (one
-ordered partition per slot, like the reference's single connection), so
-the window's sort is within an already-sorted source partition and AQE
-keeps it one stage. For multi-slot fan-in, partition by slot id and run
-the same window per slot.
+catalog join — broadcast, no shuffle) is per-row. The batch
+carry-forward (``stamp_xid_scalable``) is a two-phase bucket scan, not a
+global window: each row gets a deterministic coarse bucket over the LSN
+span, one summary row per bucket carries its last BEGIN xid to the
+buckets after it, and a window within each bucket finishes the fill.
+The streaming query stamps inside each whole-transaction micro-batch
+instead (``streaming/pipeline.py::stamp_xid``). For multi-slot fan-in,
+run the scan per slot.
 """
 
 from __future__ import annotations
@@ -107,9 +109,12 @@ def stamp_xid_scalable(
       the consuming action. This is the BACKFILL shape: a plan built
       once and executed once pays zero driver round trips (measured
       1.5 s -> 0.5 s build+count on the 450k-line bench corpus). The
-      eager literal-map default remains right for the long-lived
-      micro-batch stream, where one build serves many executions and a
-      lazy carry would re-run the summary scan on every one.
+      eager literal-map default pays its two jobs once at build and is
+      cheaper only when one built plan is executed many times, as
+      bench.py's ``e2e_sink`` and steady-pgoutput entries do; the lazy
+      carry re-runs its summary scan on every execution. The streaming
+      query does not call this: it stamps in-batch with
+      ``streaming/pipeline.py::stamp_xid``.
     """
     spark = df.sparkSession
     stats = stats_df if stats_df is not None else df
@@ -302,8 +307,9 @@ def parse_test_decoding(
     ``xid_eager=False`` selects the zero-driver-job carry for the xid
     prefix scan (``stamp_xid_scalable(eager=False)``) — the right shape
     for a BACKFILL/replay job that builds the plan once and runs it
-    once. Keep the default for long-lived micro-batch streams, where
-    one eager build amortizes over many executions.
+    once. The eager default pays off only when one built plan is
+    executed many times (bench.py's ``e2e_sink``); the streaming query
+    stamps in-batch and passes ``xid_precomputed=True``.
     """
     table_pat = table_pat if table_pat is not None else DEFAULT_TABLE_PAT
     # Java regex needs (?U) for Python-re \w unicode parity.

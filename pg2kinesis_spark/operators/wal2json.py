@@ -31,7 +31,7 @@ Fidelity notes:
   in any reference fixture.
 - pk column name absent from columnnames raises ValueError in the
   reference (unhandled crash); here it is an error row with the same
-  "'<col>' is not in list" message, raised by raise_first_error.
+  "'<col>' is not in list" message, raised by the sink's fail-stop.
 
 Scale: per-message parse is embarrassingly parallel (no window — each
 wal2json message carries its own xid, reference :110). The catalog join

@@ -48,11 +48,6 @@ class ProvisionedThroughputExceeded(Exception):
     """Transport signals backpressure — triggers the backoff loop."""
 
 
-def _varint_size(n: int) -> int:
-    # ceil(bit_length / 7), with 0 encoding in one byte
-    return 1 if n < 0x80 else -(-n.bit_length() // 7)
-
-
 # Fixed serialized overhead of an aggregate: 4-byte magic + 16-byte MD5.
 _KPL_FIXED_OVERHEAD = 20
 

@@ -298,7 +298,10 @@ def build_pgoutput_stream(
     table (§8.5). A Truncate puts one message per truncated relation
     (operation ``truncate``, no pkey) and counts once as a wire message;
     Relation messages emit no row."""
-    from pg2kinesis_spark.operators.pgoutput import decode_pgoutput
+    from pg2kinesis_spark.operators.pgoutput import (
+        UNKNOWN_RELATION_ERROR,
+        decode_pgoutput,
+    )
 
     raw = _raw_stream(spark, source, rows_per_batch, ack_log)
     decoded = decode_pgoutput(
@@ -338,7 +341,7 @@ def build_pgoutput_stream(
         F.when(has_tuple & (pos > 0), pkey).alias("pkey"),
         F.when(
             is_change & F.col("table").isNull(),
-            F.format_string("no Relation for rel_id %s", F.col("rel_id")),
+            F.format_string(UNKNOWN_RELATION_ERROR, F.col("rel_id")),
         ).alias("error"),
         (~is_change).alias("is_frame"),
     )

@@ -69,56 +69,3 @@ def test_bucket_pruned_point_lookup(spark, bucketed_tables):
         assert "SelectedBucketsCount: 1 out of 8" in plan, plan
     finally:
         spark.conf.set(key, old)
-
-
-def test_write_sorted_yields_disjoint_rowgroup_stats(spark, tmp_path):
-    """Sorted-on-write layout: parquet row-group min/max on the sort
-    column must be (near-)disjoint across row groups and files, where a
-    round-robin write spans the whole domain in every file — the
-    statistic the reader's predicate skip lives on."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    from pg2kinesis_spark.io import write_sorted
-
-    df = spark.range(100_000).selectExpr(
-        "cast(pmod(id * 2654435761, 100000) as long) AS k", "id AS v"
-    )
-    sorted_path = str(tmp_path / "sorted")
-    rr_path = str(tmp_path / "roundrobin")
-    write_sorted(df, sorted_path, by="k", n_files=8)
-    df.repartition(8).write.mode("overwrite").parquet(rr_path)
-
-    def ranges(path):
-        out = []
-        for f in sorted(_glob.glob(path + "/*.parquet")):
-            pf = pq.ParquetFile(f)
-            for g in range(pf.metadata.num_row_groups):
-                col = pf.metadata.row_group(g).column(0)  # k
-                st = col.statistics
-                out.append((st.min, st.max))
-        return out
-
-    srt = sorted(ranges(sorted_path))
-    rr = ranges(rr_path)
-    assert len(srt) >= 8
-    # sorted: consecutive row-group ranges never overlap (strictly
-    # increasing mins, max < next min allowing the boundary value)
-    for (lo1, hi1), (lo2, _hi2) in zip(srt, srt[1:]):
-        assert hi1 <= lo2
-    # round-robin: every row group spans (almost) the whole domain
-    assert all(hi - lo > 90_000 for lo, hi in rr)
-    # content identical either way
-    a = spark.read.parquet(sorted_path).orderBy("k", "v").collect()
-    b = spark.read.parquet(rr_path).orderBy("k", "v").collect()
-    assert a == b
-
-
-def test_write_sorted_rejects_zero_files(spark, tmp_path):
-    import pytest as _pt
-
-    from pg2kinesis_spark.io import write_sorted
-
-    with _pt.raises(ValueError, match="n_files"):
-        write_sorted(spark.range(10), str(tmp_path / "x"), by="id", n_files=0)

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pg2kinesis_spark.catalog import primary_key_map
-from pg2kinesis_spark.operators.errors import CdcParseError, raise_first_error
+from pg2kinesis_spark.operators.errors import CdcParseError
 from pg2kinesis_spark.operators.formatters import (
     csv_column,
     csvpayload_column,
@@ -24,6 +24,7 @@ from pg2kinesis_spark.operators.formatters import (
 )
 from pg2kinesis_spark.operators.test_decoding import parse_test_decoding
 from pg2kinesis_spark.operators.wal2json import parse_wal2json
+from pg2kinesis_spark.sinks.kinesis import InMemoryTransport, KinesisLikeWriter
 
 UUID = "00079f3e-0479-4475-acff-4f225cc5188a"
 
@@ -45,6 +46,12 @@ def _raw(spark, payloads):
     return spark.createDataFrame(
         [(i, p) for i, p in enumerate(payloads)], "lsn long, payload string"
     )
+
+
+def _drain(changes):
+    """Put parsed changes through the sink, which fail-stops on the
+    first error row in LSN order, as the stream does."""
+    KinesisLikeWriter(InMemoryTransport()).process_batch(format_csv(changes), 0)
 
 
 # ---------- test_decoding ----------
@@ -99,7 +106,7 @@ def test_xid_initial_empty_string(spark, pk_map):
 def test_unknown_change_raises(spark, pk_map):
     df = parse_test_decoding(_raw(spark, ["UNKNOWN BLING"]), pk_map)
     with pytest.raises(CdcParseError, match='Unknown change: "UNKNOWN BLING"'):
-        raise_first_error(df)
+        _drain(df)
 
 
 def test_unknown_table_raises_with_colon(spark, pk_map):
@@ -108,7 +115,7 @@ def test_unknown_table_raises_with_colon(spark, pk_map):
         _raw(spark, [f"table not_a_table: UPDATE: uuid[uuid]:'{UUID}'"]), pk_map
     )
     with pytest.raises(CdcParseError, match='Unable to locate table: "not_a_table:"'):
-        raise_first_error(df)
+        _drain(df)
 
 
 def test_missing_pk_raises(spark, pk_map):
@@ -118,7 +125,7 @@ def test_missing_pk_raises(spark, pk_map):
     with pytest.raises(
         CdcParseError, match='Unable to locate primary key for table "public.test_table"'
     ):
-        raise_first_error(df)
+        _drain(df)
 
 
 def test_table_pat_skips_unknown_tables(spark, pk_map):
@@ -345,7 +352,7 @@ def test_wal2json_multi_change_explodes(spark, pk_map):
 def test_wal2json_unknown_table_raises(spark, pk_map):
     df = parse_wal2json(_raw(spark, [_w2j(100, _chg(table="not_a_table"))]), pk_map)
     with pytest.raises(CdcParseError, match='Unable to locate table: "public.not_a_table"'):
-        raise_first_error(df)
+        _drain(df)
 
 
 def test_wal2json_full_change_skips_validation(spark, pk_map):
@@ -395,13 +402,12 @@ def test_csvpayload_formatter_golden(spark):
 
 def test_end_to_end_test_decoding_csv(spark, pk_map):
     rows = format_csv(
-        raise_first_error(
-            parse_test_decoding(
-                _raw(spark, ["BEGIN 1337", f"table public.test_table: UPDATE: uuid[uuid]:'{UUID}'"]),
-                pk_map,
-            )
+        parse_test_decoding(
+            _raw(spark, ["BEGIN 1337", f"table public.test_table: UPDATE: uuid[uuid]:'{UUID}'"]),
+            pk_map,
         )
     ).collect()
+    assert rows[0].error is None
     assert rows[0].fmt_msg == f"0,CDC,1337,public.test_table,UPDATE,{UUID}"
 
 

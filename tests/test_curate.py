@@ -212,61 +212,6 @@ def test_media_dedup(spark):
     assert not any(4 in p for p in pairs)
 
 
-def test_materialize_corpus(spark, sf_small, tmp_path):
-    import json
-    import os
-
-    from pg2kinesis_spark.functions.materialize import materialize_corpus
-
-    docs = load_table(spark, sf_small, "documents").limit(150).select("doc_id", "text")
-    out = str(tmp_path / "corpus")
-    m = materialize_corpus(docs, out, seq_len=256, target_shard_mb=64, min_quality=0.2)
-    # manifest written and self-consistent
-    with open(os.path.join(out, "manifest.json")) as f:
-        disk = json.load(f)
-    assert disk["n_shards"] == m["n_shards"] == 1
-    accepted = spark.read.parquet(m["docs_path"])
-    layout = spark.read.parquet(m["layout_path"])
-    assert accepted.count() == m["profile"]["n_docs"] == m["packing"]["n_docs"]
-    assert layout.count() == accepted.count()
-    assert m["packing"]["n_tokens"] == m["profile"]["n_tokens"]
-    # every accepted doc has a layout slot and vice versa
-    a = {r["doc_id"] for r in accepted.select("doc_id").collect()}
-    b = {r["doc_id"] for r in layout.select("doc_id").collect()}
-    assert a == b and len(a) > 0
-
-
-def test_materialize_corpus_with_bpe_counter(spark, sf_small, tmp_path):
-    """bpe_model switches layout/manifest to budget-true subword counts."""
-    import json
-    import os
-
-    from pg2kinesis_spark.functions.bpe import bpe_token_counts, learn_bpe
-    from pg2kinesis_spark.functions.materialize import materialize_corpus
-
-    docs = load_table(spark, sf_small, "documents").limit(80).select("doc_id", "text")
-    model = learn_bpe(docs, num_merges=60)
-    out = str(tmp_path / "corpus_bpe")
-    m = materialize_corpus(
-        docs, out, seq_len=256, target_shard_mb=64, bpe_model=model, min_quality=0.0
-    )
-    with open(os.path.join(out, "manifest.json")) as f:
-        disk = json.load(f)
-    assert disk["token_counter"] == "bpe"
-    accepted = spark.read.parquet(m["docs_path"])
-    layout = spark.read.parquet(m["layout_path"])
-    # layout token counts are the BPE counts of the accepted docs
-    want = {
-        r["doc_id"]: r["n_bpe_tokens"]
-        for r in bpe_token_counts(accepted, model).collect()
-        if r["n_bpe_tokens"] > 0
-    }
-    got = {r["doc_id"]: r["n_tokens"] for r in layout.collect()}
-    assert got == want
-    # BPE counts exceed whitespace counts (subwords split words up)
-    assert m["packing"]["n_tokens"] > m["profile"]["n_tokens"]
-
-
 def test_corpus_report_cli(sf_small):
     """The report CLI end-to-end: subprocess, JSON contract."""
     import json
@@ -361,38 +306,6 @@ def test_curate_dsir_selection_stage(spark, corpus):
     lr = fit_dsir_logratios(target, surv)
     want = {r.doc_id for r in dsir_select(surv, lr, n=2).collect()}
     assert {r.doc_id for r in out.collect()} == want
-
-
-def test_materialize_corpus_writes_sequences(spark, sf_small, tmp_path):
-    """write_sequences=True materializes trainer-ready batches whose
-    real-token total equals the layout's token total and whose
-    input_ids are exactly seq_len wide."""
-    import os
-
-    from pg2kinesis_spark.functions.bpe import learn_bpe
-    from pg2kinesis_spark.functions.materialize import materialize_corpus
-
-    docs = load_table(spark, sf_small, "documents").limit(60).select("doc_id", "text")
-    model = learn_bpe(docs, num_merges=60)
-    out = str(tmp_path / "corpus_seq")
-    m = materialize_corpus(
-        docs, out, seq_len=128, target_shard_mb=64,
-        bpe_model=model, write_sequences=True, min_quality=0.0,
-    )
-    seqs = spark.read.parquet(m["sequences_path"])
-    rows = seqs.collect()
-    assert all(len(r.input_ids) == 128 and len(r.segment_ids) == 128 for r in rows)
-    assert sum(r.n_real for r in rows) == m["packing"]["n_tokens"]
-    assert m["packing"]["n_sequences"] == len(rows)
-    # without the flag, no sequences dir and a None path in the manifest
-    out2 = str(tmp_path / "corpus_noseq")
-    m2 = materialize_corpus(docs, out2, seq_len=128, target_shard_mb=64, min_quality=0.0)
-    assert m2["sequences_path"] is None
-    assert not os.path.exists(os.path.join(out2, "sequences"))
-    import pytest
-
-    with pytest.raises(ValueError, match="bpe_model"):
-        materialize_corpus(docs, str(tmp_path / "x"), write_sequences=True)
 
 
 def test_url_tier_tolerates_user_metadata_columns(spark):

@@ -160,22 +160,3 @@ def test_refine_pairs_levenshtein(spark):
     # the threshold form must short-circuit (-1) rather than compute full
     # distance: no pair with a big true distance survives
     assert (1, 4) not in got and (2, 4) not in got
-
-
-def test_write_sharded(spark, tmp_path):
-    import glob
-
-    from pg2kinesis_spark.io import write_sharded
-
-    df = spark.createDataFrame(
-        [(i, "x" * 1000) for i in range(2000)], ["doc_id", "text"]
-    )
-    # 2 MB of text / 2.5 -> ~0.8 MB est; 1 MB target -> 1 shard
-    n = write_sharded(df, str(tmp_path / "a"), target_mb=1)
-    files = glob.glob(str(tmp_path / "a" / "part-*"))
-    assert n == len(files) == 1
-    # tiny target -> multiple equal shards
-    n2 = write_sharded(df, str(tmp_path / "b"), target_mb=0.2)
-    files2 = glob.glob(str(tmp_path / "b" / "part-*"))
-    assert n2 == len(files2) > 1
-    assert spark.read.parquet(str(tmp_path / "b")).count() == 2000

@@ -13,7 +13,7 @@ from pg2kinesis_spark.functions.html import (
     _DROP_BLOCKS,
     _ENTITIES,
     extract_title,
-    html_to_text,
+    html_to_text_col,
 )
 
 
@@ -58,7 +58,7 @@ GOLDENS = [
 @pytest.mark.parametrize("html,want", GOLDENS)
 def test_goldens(spark, html, want):
     df = spark.createDataFrame([(1, html)], ["doc_id", "html"])
-    got = html_to_text(df).collect()[0]["text"]
+    got = df.select(html_to_text_col("html").alias("text")).collect()[0]["text"]
     assert got == want
     assert _py_extract(html) == want  # the twin agrees with the goldens
 
@@ -79,7 +79,10 @@ def test_matches_python_twin_on_generated_docs(spark):
         (i, " ".join(rng.choices(frags, k=rng.randint(3, 25)))) for i in range(60)
     ]
     df = spark.createDataFrame(rows, ["doc_id", "html"])
-    got = {r["doc_id"]: r["text"] for r in html_to_text(df).collect()}
+    got = {
+        r["doc_id"]: r["text"]
+        for r in df.select("doc_id", html_to_text_col("html").alias("text")).collect()
+    }
     for i, html in rows:
         assert got[i] == _py_extract(html), html
 
@@ -97,7 +100,7 @@ def test_extract_title(spark):
 
 
 def test_composes_with_curation_and_plan_is_map_only(spark):
-    """html_to_text feeds annotate directly; the combined plan stays a
+    """html_to_text_col feeds annotate directly; the combined plan stays a
     single Python-free projection chain with no exchange."""
     from pg2kinesis_spark.functions.curate import annotate
 
@@ -105,7 +108,7 @@ def test_composes_with_curation_and_plan_is_map_only(spark):
         [(1, "<p>the quick brown fox jumps over the lazy dog</p>")],
         ["doc_id", "html"],
     )
-    ann = annotate(html_to_text(df).select("doc_id", "text"))
+    ann = annotate(df.select("doc_id", html_to_text_col("html").alias("text")))
     row = ann.collect()[0]
     assert row["n_tokens"] == 9
     plan = ann._jdf.queryExecution().executedPlan().toString()

@@ -162,18 +162,6 @@ def test_srp_neardup_is_subset_of_bruteforce(spark, sf_small):
         assert len(approx) > 0  # and it finds some of them at 4 bits
 
 
-def test_split_errors_routes_dlq(spark):
-    from pg2kinesis_spark.operators.errors import split_errors
-
-    df = spark.createDataFrame(
-        [(1, None), (2, "boom"), (3, None)], "lsn long, error string"
-    )
-    good, bad = split_errors(df)
-    assert [r.lsn for r in good.orderBy("lsn").collect()] == [1, 3]
-    assert "error" not in good.columns
-    assert [r.lsn for r in bad.collect()] == [2]
-
-
 def test_hash_sample_deterministic_and_disjoint(spark, sf_small):
     from pg2kinesis_spark.functions import sampling
 

@@ -126,35 +126,6 @@ def test_parse_handles_unicode_and_plan_shape(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_pgoutput_snapshot_materializes_current_state(spark):
-    """insert -> update -> delete stream materializes like wal2json's
-    snapshot_changes: updates win, deleted keys vanish."""
-    from pg2kinesis_spark.operators.pgoutput import (
-        pgoutput_cdc_changes,
-        pgoutput_snapshot,
-    )
-
-    msgs = [
-        (10, encode_relation(55, "public", "users", ["id", "name"], key_cols=("id",))),
-        (20, encode_begin(95, 900)),
-        (30, encode_insert(55, ["1", "alice"])),
-        (40, encode_insert(55, ["2", "bob"])),
-        (50, encode_update(55, ["1", "alice2"], old=["1", "alice"], old_kind="O")),
-        (60, encode_delete(55, ["2", None])),
-        (70, encode_commit(95, 96)),
-    ]
-    raw = spark.createDataFrame(
-        [(lsn, bytearray(m)) for lsn, m in msgs], "lsn long, payload binary"
-    )
-    ch = pgoutput_cdc_changes(raw).collect()
-    assert all(r["error"] is None for r in ch)
-    by_key = {(r["table"], r["pkey"], r["lsn"]): r for r in ch}
-    assert by_key[("public.users", "2", 60)]["operation"] == "delete"
-
-    snap = {r["pkey"]: r["row"] for r in pgoutput_snapshot(raw).collect()}
-    assert snap == {"1": {"id": "1", "name": "alice2"}}
-
-
 def test_pgoutput_unknown_rel_surfaces_error(spark):
     from pg2kinesis_spark.operators.pgoutput import pgoutput_cdc_changes
 
@@ -253,14 +224,12 @@ def test_truncate_decode_encode_roundtrip():
     assert decode_message(encode_truncate([9]))["rel_ids"] == [9]
 
 
-def test_parse_pgoutput_truncate_rows_and_snapshot(spark):
+def test_parse_pgoutput_truncate_rows(spark):
     """Truncate emits one change row per rel (xid-attributed, NULL
-    pkey/row), and pgoutput_snapshot empties the table up to the
-    truncate LSN while keeping post-truncate inserts."""
+    pkey/row)."""
     from pg2kinesis_spark.operators.pgoutput import (
         encode_truncate,
         pgoutput_cdc_changes,
-        pgoutput_snapshot,
     )
 
     msgs = [
@@ -284,8 +253,6 @@ def test_parse_pgoutput_truncate_rows_and_snapshot(spark):
     assert len(tr) == 1
     assert tr[0].table == "public.users" and tr[0].xid == "901"
     assert tr[0].pkey is None and tr[0].row is None and tr[0].error is None
-    snap = {(r.table, r.pkey) for r in pgoutput_snapshot(raw).collect()}
-    assert snap == {("public.users", "3"), ("public.other", "7")}
 
 
 def test_pgoutput_lazy_xid_matches_eager(spark):

@@ -197,3 +197,36 @@ def test_pgoutput_stream_truncate_puts_per_relation_and_counts_once(spark, tmp_p
         (70, "501", "public.orders"),
         (70, "501", "public.users"),
     ]
+
+
+def test_pgoutput_stream_unknown_relation_fail_stops(spark, tmp_path):
+    """An Insert naming a rel_id that no Relation message registered
+    fail-stops the query with ``CdcParseError``, carrying the same text
+    the batch parse writes to its ``error`` column."""
+    from pg2kinesis_spark.operators.pgoutput import (
+        encode_begin,
+        encode_commit,
+        encode_insert,
+        encode_relation,
+    )
+
+    msgs = [
+        encode_relation(101, "public", "users", ["id", "name"], key_cols=("id",)),
+        encode_begin(0, 500), encode_insert(101, ["1", "a"]), encode_commit(0, 0),
+        encode_begin(0, 501), encode_insert(999, ["2", "ghost"]), encode_commit(0, 0),
+    ]
+    rows = [
+        (10 * (i + 1), len(m), base64.b64encode(m).decode()) for i, m in enumerate(msgs)
+    ]
+    path = str(tmp_path / "ghost.parquet")
+    spark.createDataFrame(rows, "lsn long, data_size int, payload string").coalesce(
+        1
+    ).write.parquet(path)
+    stream = build_pgoutput_stream(
+        spark, path, relation_registry_from_replay(spark, path), formatter="CSV"
+    )
+    writer = KinesisLikeWriter(InMemoryTransport())
+    with pytest.raises(Exception, match="CdcParseError") as info:
+        run_until(stream, writer, str(tmp_path / "ckpt"), done=lambda: False, timeout=60)
+    # the text test_pgoutput.py pins for pgoutput_cdc_changes
+    assert "no Relation message for rel_id 999" in str(info.value)

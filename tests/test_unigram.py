@@ -137,31 +137,3 @@ def test_corpus_plan_is_jvm_side(spark, docs, model):
     assert "BroadcastHashJoin" in plan
     for marker in ("BatchEvalPython", "MapInPandas", "CartesianProduct"):
         assert marker not in plan
-
-
-def test_materialize_with_unigram_counter(spark, docs, model, tmp_path):
-    """materialize_corpus(unigram_model=...) uses budget-true unigram
-    counts for the layout and manifest, mirroring the bpe wiring."""
-    from pg2kinesis_spark.functions.materialize import materialize_corpus
-
-    sample = docs.filter(F.col("doc_id") < 50)
-    man = materialize_corpus(
-        sample, str(tmp_path / "corpus"), seq_len=512,
-        unigram_model=model, near_dup_jaccard=None,
-    )
-    assert man["token_counter"] == "unigram"
-    total = man["packing"]["n_tokens"]
-    rows = {r.doc_id: r.text for r in sample.collect()}
-    want = sum(
-        len(model.viterbi_word(w))
-        for text in rows.values()
-        for w in text.split(" ")
-        if w != ""
-    )
-    assert total == want
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        materialize_corpus(
-            sample, str(tmp_path / "c2"), unigram_model=model, bpe_model=object()
-        )

@@ -7,7 +7,6 @@ from __future__ import annotations
 from urllib.parse import urlsplit
 
 import pytest
-from pyspark.sql import functions as F
 
 from pg2kinesis_spark.functions import urls as U
 
@@ -257,7 +256,7 @@ def test_psl_registered_domain_cases(spark):
     df = spark.createDataFrame([(h,) for h in cases], "host string")
     got = {
         r.host: r.dom
-        for r in df.select("host", U.registered_domain(F.col("host")).alias("dom")).collect()
+        for r in df.select("host", U._registered_domain_expr("`host`").alias("dom")).collect()
     }
     for h, want in cases.items():
         assert got[h] == want, h
@@ -302,7 +301,7 @@ def test_load_psl_file_roundtrip(spark, tmp_path):
         "au\n"
         "// ===END ICANN DOMAINS===\n"
     )
-    psl = U.load_psl(str(psl_file))
+    psl = U.compile_psl(psl_file.read_text(encoding="utf-8").splitlines())
     assert psl["max_s"] == 3
     cases = {
         "www.school.act.edu.au": "school.act.edu.au",  # 3-label beats 2-label
@@ -316,7 +315,7 @@ def test_load_psl_file_roundtrip(spark, tmp_path):
     got = {
         r.host: r.dom
         for r in df.select(
-            "host", U.registered_domain(F.col("host"), psl=psl).alias("dom")
+            "host", U._registered_domain_expr("`host`", psl=psl).alias("dom")
         ).collect()
     }
     for h, want in cases.items():
@@ -368,10 +367,10 @@ def test_parse_urls_custom_column_names(spark):
 
 
 def test_registered_domain_sql_twin(spark):
-    # The single-parse SQL fast path (_registered_domain_expr) must be
-    # row-for-row identical to the Column-API builder it mirrors,
-    # including NULL, single-label, bare-TLD (n == s), wildcard,
-    # exception, and deep-subdomain hosts.
+    # The SQL CASE (_registered_domain_expr) must agree row for row with
+    # its pure-Python mirror (_py_registered), including NULL,
+    # single-label, bare-TLD (n == s), wildcard, exception, and
+    # deep-subdomain hosts.
     hosts = [
         None, "com", "ck", "example.com", "www.example.com",
         "a.b.c.example.co.uk", "co.uk", "thing.co.uk", "anything.weird.ck",
@@ -380,9 +379,7 @@ def test_registered_domain_sql_twin(spark):
         "x.y.z.unknowntld",
     ]
     df = spark.createDataFrame([(h,) for h in hosts], "host string")
-    out = df.select(
-        U.registered_domain(F.col("host")).alias("col_api"),
-        U._registered_domain_expr("`host`").alias("sql_api"),
-    ).collect()
+    out = df.select(U._registered_domain_expr("`host`").alias("sql_api")).collect()
     for h, r in zip(hosts, out):
-        assert r.col_api == r.sql_api, (h, r.col_api, r.sql_api)
+        want = None if h is None else U._py_registered(h)
+        assert r.sql_api == want, (h, r.sql_api, want)
