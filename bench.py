@@ -93,14 +93,17 @@ def bench_cdc_replay(spark, sf_dir, xid_eager=False):
     cat = spark.createDataFrame(
         fx.pk_catalog_rows(), "table_name string, col_name string, col_type string, col_ord_pos int"
     )
-    # xid_eager=False: a replay backfill builds the plan once and runs
-    # it once, so the xid carry's two driver-blocking jobs are pure
-    # latency — the lazy carry schedules them inside the measured job
-    # graph instead (eager-vs-lazy equality is pytest-pinned and the
-    # lazy path is hash-checked by driver row c2). This is where the
-    # r2-r4 vs r5-r7 throughput gap lived: the build-inclusive timer
-    # pays plan construction + eager jobs, not parse cost (SCALING.md
-    # "cdc_replay: reconciling").
+    # xid_eager=False: the lazy carry builds with no driver-blocking job
+    # (eager-vs-lazy equality is pytest-pinned and the lazy path is
+    # hash-checked by driver row c2). The timed action is count(), which
+    # prunes xid: Catalyst drops the carry's Window (the prefix scan) in
+    # both modes, so this entry times parse + format with no prefix scan
+    # (the lazy plan keeps one Cross and one LeftOuter join of the
+    # carry), and the eager mode would only add its two build jobs. This
+    # is where the r2-r4 vs r5-r7 throughput gap lived: the
+    # build-inclusive timer paid plan construction + eager jobs, not
+    # parse cost (SCALING.md "cdc_replay: reconciling"). Only e2e_sink,
+    # whose sink reads xid, runs the prefix scan.
     return format_csv(
         parse_test_decoding(raw, primary_key_map(cat), xid_eager=xid_eager)
     ).select("lsn", "xid", "fmt_msg")
@@ -111,16 +114,19 @@ _PGOUT_REG_CACHE: dict = {}
 
 def bench_pgoutput_replay(spark, sf_dir, xid_eager=False):
     """pgoutput binary-protocol parse throughput: ~190k framed messages
-    through decode kernel + distributed xid prefix-scan + broadcast
-    registry join + CSV format — the binary twin of cdc_replay_450k.
+    through decode kernel + broadcast registry join + CSV format — the
+    binary twin of cdc_replay_450k. The frame carries the distributed
+    xid prefix-scan, but the timed count() prunes xid and with it the
+    scan's Window, as in cdc_replay_450k.
 
     The relation registry is built ONCE per corpus and passed in
     materialized: that is the deployment shape (Relation messages
     establish the registry once per slot connection; every subsequent
     batch reuses it), so timing a per-batch registry rebuild would
     measure a job no deployment runs. The xid prefix-scan's eager
-    phases run on the pure-JVM begin-stats twin (parse_pgoutput), so
-    the timed build no longer re-executes the Python decode 3x."""
+    phases (xid_eager=True) run on the pure-JVM begin-stats twin
+    (parse_pgoutput), so an eager build does not re-execute the Python
+    decode 3x."""
     import tempfile
 
     from pg2kinesis_spark import fixtures as fx
@@ -148,9 +154,8 @@ def bench_pgoutput_replay(spark, sf_dir, xid_eager=False):
         _PGOUT_REG_CACHE[corpus] = (reg_df.collect(), reg_df.schema)
     rows, schema = _PGOUT_REG_CACHE[corpus]
     registry = spark.createDataFrame(rows, schema)
-    # xid_eager=False: same backfill argument as cdc_replay — the JVM
-    # begin twins feed the LAZY bounds/summary branches, so the build
-    # runs zero driver jobs (SCALING.md "cdc_replay: reconciling")
+    # xid_eager=False: the build runs zero driver jobs, and the timed
+    # count() prunes the carry's Window (see bench_cdc_replay)
     return format_csv(
         pgoutput_cdc_changes(raw, registry=registry, xid_eager=xid_eager)
     ).select("lsn", "xid", "fmt_msg")
@@ -783,9 +788,9 @@ def run_inline(only_set: set[str] | None, sf_dir: str) -> tuple[dict, dict]:
             # streaming query never runs this plan: it decodes each
             # micro-batch with decode_pgoutput and stamps xids in-batch
             # (streaming/pipeline.py::stamp_xid).
-            # the steady plan builds EAGER (xid literal-map carry): its
-            # two driver jobs are paid once at build, and each timed
-            # re-execution skips the lazy carry's summary branch
+            # the steady plan builds EAGER so its two driver jobs are
+            # paid once, untimed; each timed count() prunes xid, so the
+            # re-executions run no prefix scan
             built = bench_pgoutput_replay(spark, sf_dir, xid_eager=True)
             built.count()  # untimed: materialize the eager carry build
             ss = [_timed_count(built) for _ in range(3)]

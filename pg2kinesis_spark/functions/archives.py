@@ -291,30 +291,6 @@ def archive_members(
     return archives.select("path", "content").mapInPandas(kernel, MEMBER_SCHEMA)
 
 
-def members_as_media(members: DataFrame) -> DataFrame:
-    """Adapt ``archive_members`` output to the media table shape
-    (multimodal.MEDIA_SCHEMA): media_id = xxhash64(path:member)
-    (deterministic across runs), content = payload, mime sniffed from
-    magic bytes JVM-side. Composes a zip-of-PDFs (or images/audio)
-    straight into extract_pdf_text / the decode kernels — quarantined
-    archives' error rows are excluded (they have no payload)."""
-    from pg2kinesis_spark.functions.multimodal import sniff_mime
-
-    ok = members.filter(F.col("decode_error").isNull())
-    # multi-column xxhash64 (each field length-prefixed in the hash
-    # chain): no concat-ambiguity collisions, and the ordinal keeps
-    # legally-duplicated member names distinct
-    return ok.select(
-        F.xxhash64("path", "ordinal", "member").alias("media_id"),
-        F.col("payload").alias("content"),
-        F.struct(
-            sniff_mime(F.col("payload")).alias("mime"),
-            F.col("size").alias("bytes_hint"),
-            F.concat_ws(":", "path", "member").alias("source_uri"),
-        ).alias("meta"),
-    )
-
-
 def archive_to_corpus(
     archives: DataFrame,
     suffixes: tuple[str, ...] = _TEXT_SUFFIXES,
@@ -347,99 +323,3 @@ def archive_to_corpus(
             F.expr("make_valid_utf8(cast(payload as string))").alias("text"),
         )
     )
-
-
-def epub_to_corpus(
-    archives: DataFrame,
-    per: str = "chapter",
-    errors: str = "quarantine",
-    **caps,
-) -> DataFrame:
-    """EPUB front door: an EPUB is a zip of XHTML chapters, so this is
-    the archive walk COMPOSED with the HTML stripper — no new decode
-    kernel. Chapter members (.xhtml/.html/.htm) strip through
-    ``html_to_text_col`` (pure codegen, zero shuffle per row);
-    manifest/NCX/CSS members are skipped; corrupt EPUBs quarantine
-    archive-atomically in ``archive_members``.
-
-    ``per="chapter"`` (default): one row per chapter,
-    (doc_id, path, member, text) with the front door's md5-60 doc ids.
-    ``per="book"``: one row per file, chapters joined in ARCHIVE order
-    (EPUB packaging convention puts the spine in zip order; the OPF
-    spine itself is packaging metadata this tier deliberately does not
-    model — a mis-ordered zip concatenates honestly in file order).
-    The book grouping is a (path)-keyed exchange carrying stripped
-    TEXT, not raw archives.
-    """
-    from pg2kinesis_spark.functions.html import html_to_text_col
-    from pg2kinesis_spark.functions.sampling import HASH60
-
-    if per not in ("chapter", "book"):
-        raise ValueError(f"per must be 'chapter' or 'book', got {per!r}")
-    members = archive_members(archives, errors=errors, **caps)
-    cond = F.lit(False)
-    for s in (".xhtml", ".html", ".htm"):
-        cond = cond | F.lower("member").endswith(s)
-    text = html_to_text_col(F.expr("make_valid_utf8(cast(payload as string))"))
-    key = "concat(path, ':', cast(ordinal as string), ':', member)"
-    chapters = members.filter(F.col("decode_error").isNull() & cond).select(
-        F.expr(HASH60.format(x=key)).alias("doc_id"),
-        "path",
-        "member",
-        "ordinal",
-        text.alias("text"),
-    )
-    if per == "chapter":
-        return chapters.drop("ordinal")
-    return chapters.groupBy("path").agg(
-        F.expr(HASH60.format(x="first(path)")).alias("doc_id"),
-        F.expr(
-            "array_join(transform(array_sort(collect_list(struct(ordinal, text))),"
-            " x -> x.text), '\\n\\n')"
-        ).alias("text"),
-        F.count("*").cast("int").alias("n_chapters"),
-    ).select("doc_id", "path", "text", "n_chapters")
-
-
-def archive_jsonl_to_corpus(
-    archives: DataFrame,
-    text_field: str = "text",
-    errors: str = "quarantine",
-    **caps,
-) -> DataFrame:
-    """The Pile-style drop layout: archives of .jsonl where each LINE
-    is a document ({"text": ...} records). ``archive_to_corpus`` would
-    make each member ONE doc; this front door explodes members per
-    line and extracts ``text_field`` — entirely JVM-side
-    (split/posexplode/get_json_object are codegen), so a 100 TB drop
-    pays one scan and zero Python. Lines that aren't valid JSON or
-    lack the field drop silently (the jq convention); doc ids are the
-    md5-60 of path:ordinal:line_no, reproducible across engines."""
-    from pg2kinesis_spark.functions.sampling import HASH60
-
-    members = archive_members(archives, errors=errors, **caps)
-    cond = F.lower("member").endswith(".jsonl") | F.lower("member").endswith(
-        ".json"
-    )
-    lines = (
-        members.filter(F.col("decode_error").isNull() & cond)
-        .select(
-            "path",
-            "member",
-            "ordinal",
-            F.posexplode(
-                F.split(
-                    F.expr("make_valid_utf8(cast(payload as string))"), "\n"
-                )
-            ).alias("line_no", "line"),
-        )
-        .filter(F.length(F.trim("line")) > 0)
-    )
-    key = "concat(path, ':', cast(ordinal as string), ':', cast(line_no as string))"
-    return lines.select(
-        F.expr(HASH60.format(x=key)).alias("doc_id"),
-        "path",
-        "member",
-        "line_no",
-        F.get_json_object("line", f"$.{text_field}").alias("text"),
-    ).filter(F.col("text").isNotNull())

@@ -22,14 +22,13 @@ merge decision. So the distributed part is exactly one shuffle:
   law), i.e. megabytes — collecting it is the correct plan, not a
   driver-side anti-pattern.
 
-* ``bpe_encode`` / ``bpe_token_counts``: the merge loop is inherently
-  iterative-per-word, so Python is unavoidable — but it only ever runs
-  over the DISTINCT word types (an Arrow-batched pandas_udf on the
-  deduplicated word table), never the corpus. The corpus-side plan is
-  pure JVM: posexplode -> broadcast join against the (word -> ids) table
-  -> positional reassemble, identical discipline to ``vocab.encode``.
-  Encoding work is O(|word types|), corpus work is O(|tokens|) in
-  whole-stage codegen.
+* ``bpe_token_counts``: the merge loop is inherently iterative-per-word,
+  so Python is unavoidable — but it only ever runs over the DISTINCT
+  word types (an Arrow-batched pandas_udf on the deduplicated word
+  table), never the corpus. The corpus-side plan is pure JVM: explode
+  -> broadcast join against the (word -> ids) table -> per-doc partial
+  aggregate. Encoding work is O(|word types|), corpus work is
+  O(|tokens|) in whole-stage codegen.
 
 * Determinism: merge ties break on the lexicographically smallest
   (left, right) pair; the word-type cap ties break on the word string —
@@ -253,42 +252,6 @@ def _word_ids_table(docs: DataFrame, model: BpeModel, text_col: str) -> DataFram
     return wt.withColumn("ids", _enc("w"))
 
 
-def bpe_encode(
-    docs: DataFrame,
-    model: BpeModel,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(key_col, token_ids array<int>): full subword encoding.
-
-    Corpus-side plan is JVM-only — posexplode, broadcast join against
-    the word->ids table, positional reassemble. Empty docs yield [].
-    """
-    words = docs.select(
-        key_col, F.posexplode(F.split(text_col, " ")).alias("pos", "w")
-    ).filter(F.col("w") != "")
-    mapped = words.join(F.broadcast(_word_ids_table(docs, model, text_col)), "w")
-    seqs = (
-        mapped.select(key_col, "pos", "ids")
-        .groupBy(key_col)
-        .agg(
-            F.flatten(
-                F.expr("transform(array_sort(collect_list(struct(pos, ids))), s -> s.ids)")
-            ).alias("token_ids")
-        )
-    )
-    return (
-        docs.select(key_col)
-        .join(seqs, key_col, "left")
-        .select(
-            key_col,
-            F.coalesce("token_ids", F.expr("cast(array() as array<int>)")).alias(
-                "token_ids"
-            ),
-        )
-    )
-
-
 def bpe_token_counts(
     docs: DataFrame,
     model: BpeModel,
@@ -316,99 +279,5 @@ def bpe_token_counts(
         .select(
             key_col,
             F.coalesce("n_bpe_tokens", F.lit(0)).cast("long").alias("n_bpe_tokens"),
-        )
-    )
-
-
-def save_model(model: BpeModel, path: str) -> None:
-    """Persist the learned model as JSON (merges in rank order + ids).
-    The model is driver-side metadata — kilobytes to a few megabytes —
-    so a plain file is the right container, like MLlib coefficients."""
-    import json
-    import os
-
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(
-            {"merges": [list(p) for p in model.merges], "token_ids": model.token_ids},
-            f,
-        )
-
-
-def load_model(path: str) -> BpeModel:
-    import json
-
-    with open(path) as f:
-        d = json.load(f)
-    return BpeModel(
-        merges=tuple(tuple(p) for p in d["merges"]), token_ids=dict(d["token_ids"])
-    )
-
-
-def bpe_decode(
-    encoded: DataFrame,
-    model: BpeModel,
-    key_col: str = "doc_id",
-    ids_col: str = "token_ids",
-) -> DataFrame:
-    """(key_col, text): invert ``bpe_encode`` — ids map back to symbols
-    via a broadcast (id, token) join, sequences reassemble positionally,
-    EOW markers become word boundaries. Round-trips exactly for any text
-    whose characters were all in the learn-time alphabet (UNK is lossy
-    by nature). All JVM-side; the id table is vocabulary-bounded."""
-    spark = encoded.sparkSession
-    id_rows = [(i, t) for t, i in model.token_ids.items()]
-    id_df = spark.createDataFrame(id_rows, ["tid", "tok"])
-    toks = encoded.select(
-        key_col, F.posexplode(ids_col).alias("pos", "tid")
-    ).join(F.broadcast(id_df), "tid", "left")
-    seqs = (
-        toks.select(key_col, "pos", F.coalesce("tok", F.lit("�")).alias("tok"))
-        .groupBy(key_col)
-        .agg(
-            F.expr(
-                "concat_ws('', transform(array_sort(collect_list(struct(pos, tok))), s -> s.tok))"
-            ).alias("_joined")
-        )
-        .select(
-            key_col,
-            F.trim(F.replace(F.col("_joined"), F.lit(EOW), F.lit(" "))).alias("text"),
-        )
-    )
-    return (
-        encoded.select(key_col)
-        .join(seqs, key_col, "left")
-        .select(key_col, F.coalesce("text", F.lit("")).alias("text"))
-    )
-
-
-def bpe_fertility(
-    docs: DataFrame,
-    model: BpeModel,
-    text_col: str = "text",
-) -> DataFrame:
-    """One row: (n_words, n_bpe_tokens, fertility, chars_per_token) —
-    the standard tokenizer-quality metrics (fertility = subword tokens
-    per word; lower is better for a fixed vocabulary). Same bounded
-    word-type Python stage as the counters; the corpus side is one
-    broadcast join + global agg."""
-    word_n = _word_ids_table(docs, model, text_col).select(
-        "w", F.size("ids").alias("n")
-    )
-    words = docs.select(F.explode(F.split(text_col, " ")).alias("w")).filter(
-        F.col("w") != ""
-    )
-    return (
-        words.join(F.broadcast(word_n), "w")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("n").alias("n_bpe_tokens"),
-            F.sum(F.length("w")).alias("_chars"),
-        )
-        .select(
-            "n_words",
-            "n_bpe_tokens",
-            (F.col("n_bpe_tokens") / F.col("n_words")).alias("fertility"),
-            (F.col("_chars") / F.col("n_bpe_tokens")).alias("chars_per_token"),
         )
     )

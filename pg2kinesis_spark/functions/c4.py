@@ -157,55 +157,3 @@ def c4_clean(
     """The full C4 pipeline: line filter → page filter → span dedup."""
     out = c4_page_filter(c4_line_filter(docs, min_words), min_sentences, blocklist)
     return dedup_spans(out) if span_dedup else out
-
-
-def drop_boilerplate_lines(docs: DataFrame, min_df: int = 10) -> DataFrame:
-    """CCNet-style paragraph/line dedup: a line whose exact text occurs
-    in >= ``min_df`` DISTINCT documents is boilerplate (navigation,
-    cookie banners, footers) and is removed from EVERY document.
-
-    Shuffle shape mirrors dedup_spans: lines cross the wire as
-    (xxhash64, doc_id, line_idx) — never text; the hot-line set comes
-    from one hash-keyed distinct-doc count (partial-aggregated); only
-    documents that actually contain a boilerplate line are rebuilt
-    (row-local filter on the cut-index array), everything else passes
-    through byte-identical.
-
-    Empty/whitespace-only lines are EXCLUDED from the candidate set:
-    '' trivially reaches min_df distinct docs in any real corpus, and
-    cutting it would strip every paragraph-separating blank line from
-    every document. Blank lines are structure, not boilerplate.
-    """
-    from pyspark.sql import functions as F
-
-    ln = (
-        docs.select(
-            "doc_id",
-            F.posexplode(F.split("text", "\n")).alias("li", "l"),
-        )
-        .filter(F.trim("l") != "")
-        .select("doc_id", "li", F.xxhash64("l").alias("lh"))
-    )
-    hot = (
-        ln.groupBy("lh")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") >= min_df)
-        .select("lh")
-    )
-    cut = (
-        ln.join(hot, "lh", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_set("li").alias("_cut"))
-    )
-    rebuilt = F.expr(
-        "array_join(filter(transform(split(text, '\\n'),"
-        " (l, i) -> if(array_contains(_cut, i), null, l)),"
-        " l -> l is not null), '\\n')"
-    )
-    return (
-        docs.join(cut, "doc_id", "left")
-        .withColumn(
-            "text", F.when(F.col("_cut").isNull(), F.col("text")).otherwise(rebuilt)
-        )
-        .drop("_cut")
-    )

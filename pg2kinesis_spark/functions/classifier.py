@@ -65,25 +65,6 @@ def train_doc_classifier(
     ).fit(docs)
 
 
-def score_docs(model: PipelineModel, docs: DataFrame) -> DataFrame:
-    """(doc_id, score, predicted_label): P(class 0 in alphabetic label
-    order) + argmax label. Map-only at scale (broadcast coefficients)."""
-    labels = None
-    for st in model.stages:
-        if hasattr(st, "labelsArray"):
-            labels = list(st.labelsArray[0])
-    from pyspark.ml.functions import vector_to_array
-
-    out = model.transform(docs)
-    first = F.element_at(vector_to_array("probability"), 1)
-    pred_label = F.element_at(
-        F.array(*[F.lit(l) for l in labels]), F.col("prediction").cast("int") + 1
-    )
-    return out.select(
-        "doc_id", first.alias("score"), pred_label.alias("predicted_label")
-    )
-
-
 def classifier_filter(
     model: PipelineModel,
     docs: DataFrame,

@@ -3263,7 +3263,7 @@ def _id3_text(body: bytes) -> str:
 
 def _id3v2_frames(data: bytes):
     """Iterate (major, frame_id, frame_body) over a leading ID3v2 tag
-    — the shared walk under id3v2_tags and id3v2_cover: header/extended
+    — the walk under id3v2_tags: header/extended
     -header handling, whole-tag (v2.2/2.3) and per-frame (v2.4)
     unsynchronisation, syncsafe v2.4 sizes, padding stop, frame-count
     bound. Yields nothing when no tag leads the data; raises
@@ -3431,157 +3431,6 @@ def encode_id3v1(tags: dict[str, str]) -> bytes:
         blk += fx("comment", 30)
     return blk + bytes([genre])
 
-
-_COVER_MAX_BYTES = 16 << 20  # hostile bound on embedded pictures
-
-
-def id3v2_cover(data: bytes) -> tuple[bytes, str] | None:
-    """The attached picture (APIC v2.3/2.4 / PIC v2.2) from a leading
-    ID3v2 tag as (image bytes, mime), preferring picture type 3
-    (front cover); None when untagged or pictureless."""
-    best = None
-    for major, fid, fbody in _id3v2_frames(data):
-        if fid not in (b"APIC", b"PIC") or len(fbody) < 4:
-            continue
-        enc = fbody[0]
-        if fid == b"PIC":  # v2.2 stores a 3-char image format, not a mime
-            fmt = fbody[1:4].decode("latin-1").strip().lower()
-            mime = {"png": "image/png", "jpg": "image/jpeg"}.get(
-                fmt, "application/octet-stream"
-            )
-            rest = fbody[4:]
-        else:
-            z = fbody.find(b"\x00", 1)
-            if z < 0:
-                continue
-            mime = fbody[1:z].decode("latin-1").lower()
-            rest = fbody[z + 1 :]
-        if not rest:
-            continue
-        ptype = rest[0]
-        rest = rest[1:]
-        # skip the description (code-unit aligned for utf-16 encodings)
-        sep = b"\x00\x00" if enc in (1, 2) else b"\x00"
-        cut = 0
-        while True:
-            cut = rest.find(sep, cut)
-            if cut < 0 or len(sep) == 1 or cut % 2 == 0:
-                break
-            cut += 1
-        if cut < 0:
-            continue
-        img = rest[cut + len(sep) :]
-        if len(img) > _COVER_MAX_BYTES:
-            raise ValueError("ID3v2 picture exceeds the cover bound")
-        if not img:
-            continue
-        if ptype == 3:
-            return img, mime
-        if best is None:
-            best = (img, mime)
-    return best
-
-
-def flac_cover(data: bytes) -> tuple[bytes, str] | None:
-    """The PICTURE metadata block (type 6, RFC 9639 §8.8) as
-    (image bytes, mime), preferring picture type 3 (front cover)."""
-    data = bytes(data)
-    flac_info(data)  # structure gate
-    best = None
-    pos = 4
-    for _ in range(_TAG_MAX_FRAMES):
-        if pos + 4 > len(data):
-            raise ValueError("truncated FLAC: metadata blocks never end")
-        last, btype = data[pos] & 0x80, data[pos] & 0x7F
-        blen = int.from_bytes(data[pos + 1 : pos + 4], "big")
-        body = data[pos + 4 : pos + 4 + blen]
-        if btype == 6 and len(body) >= 32:
-            (ptype, mlen) = struct.unpack(">II", body[0:8])
-            mime = body[8 : 8 + mlen].decode("latin-1").lower()
-            p = 8 + mlen
-            (dlen,) = struct.unpack(">I", body[p : p + 4])
-            p += 4 + dlen + 16  # desc + width/height/depth/colors
-            (ilen,) = struct.unpack(">I", body[p : p + 4])
-            if ilen > _COVER_MAX_BYTES:
-                raise ValueError("FLAC picture exceeds the cover bound")
-            img = body[p + 4 : p + 4 + ilen]
-            if len(img) < ilen:
-                raise ValueError("FLAC PICTURE block overruns (stomped size)")
-            if img:
-                if ptype == 3:
-                    return img, mime
-                if best is None:
-                    best = (img, mime)
-        pos += 4 + blen
-        if last:
-            return best
-    raise ValueError("FLAC metadata walk exceeds the block bound")
-
-
-def mp4_cover(data: bytes) -> tuple[bytes, str] | None:
-    """The iTunes `covr` ilst item as (image bytes, mime): well-known
-    types 13 (JPEG) / 14 (PNG), type 0 sniffed by magic."""
-    data = bytes(data)
-    if not is_mp4(data):
-        raise ValueError("not an MP4: no ftyp box")
-    budget = [_MP4_MAX_BOXES]
-    for fourcc, body, bend in _mp4_walk(data, 0, len(data), 0, budget):
-        if fourcc != b"udta":
-            continue
-        for f2, b2, e2 in _mp4_walk(data, body, bend, 1, budget):
-            if f2 != b"meta":
-                continue
-            for f3, b3, e3 in _mp4_walk(data, b2 + 4, e2, 2, budget):
-                if f3 != b"ilst":
-                    continue
-                for f4, b4, e4 in _mp4_walk(data, b3, e3, 3, budget):
-                    if f4 != b"covr":
-                        continue
-                    for f5, b5, e5 in _mp4_walk(data, b4, e4, 4, budget):
-                        if f5 != b"data" or e5 - b5 < 8:
-                            continue
-                        dtype = int.from_bytes(data[b5 : b5 + 4], "big") & 0xFFFFFF
-                        img = data[b5 + 8 : e5]
-                        if len(img) > _COVER_MAX_BYTES:
-                            raise ValueError(
-                                "MP4 covr exceeds the cover bound"
-                            )
-                        if not img:
-                            continue
-                        if dtype == 13:
-                            return img, "image/jpeg"
-                        if dtype == 14:
-                            return img, "image/png"
-                        if is_png(img):
-                            return img, "image/png"
-                        if is_jpeg(img):
-                            return img, "image/jpeg"
-    return None
-
-
-def audio_cover(data: bytes) -> tuple[bytes, str] | None:
-    """Dispatching embedded-cover extraction: ID3v2 APIC, FLAC PICTURE,
-    MP4 covr. None for untagged/pictureless files; ValueError for
-    unrecognized containers — the extracted bytes feed the IMAGE tier
-    (decode_image / media_dhash), so the same artwork embedded in
-    different containers pairs up."""
-    data = bytes(data)
-    if data[:3] == b"ID3" or is_mp3(data):
-        return id3v2_cover(data)
-    if is_flac(data):
-        return flac_cover(data)
-    if is_mp4(data):
-        return mp4_cover(data)
-    if is_wav(data) or is_aiff(data):
-        # the embedded `id3 ` chunk convention carries APIC too
-        walk = _aiff_chunks(data) if is_aiff(data) else _wav_chunks(data)
-        for cid, body in walk:
-            if bytes(cid).lower() == b"id3 " and bytes(body[:3]) == b"ID3":
-                return id3v2_cover(bytes(body))
-        return None
-    raise ValueError(
-        "no recognized cover container (ID3v2/FLAC/MP4/WAV/AIFF)"
-    )
 
 
 def vorbis_comments(payload: bytes) -> dict[str, str]:
@@ -4465,7 +4314,7 @@ def encode_webm_skeleton(
 # markers. Arithmetic coding raises NotImplementedError.
 # The encoder (standard Annex-K tables, IJG quality scaling, optional 4:2:0
 # and restart intervals) exists so tests can round-trip the decoder against
-# known pixels and so resize_media can re-emit JPEG; both directions are
+# known pixels; both directions are
 # independent enough that a bug in one fails the round-trip tolerance.
 
 JPEG_SIG = b"\xff\xd8"

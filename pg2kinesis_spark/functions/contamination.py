@@ -64,17 +64,3 @@ def decontaminate(docs: DataFrame, eval_df: DataFrame, n: int = 13) -> DataFrame
     """
     flagged = contaminated_ids(docs, eval_df, n)
     return docs.join(flagged, "doc_id", "left_anti")
-
-
-def contamination_report(
-    docs: DataFrame, eval_df: DataFrame, n: int = 13
-) -> DataFrame:
-    """(eval_id, n_contaminated_docs, example_doc_id) per affected eval
-    item — the audit artifact reviewers ask for alongside the drop list."""
-    evals = _gram_hashes(eval_df, n, "eval_id", "gram_h").distinct()
-    grams = _gram_hashes(docs, n, "doc_id", "gram_h")
-    hits = grams.join(F.broadcast(evals), "gram_h").select("eval_id", "doc_id").distinct()
-    return hits.groupBy("eval_id").agg(
-        F.count("*").alias("n_contaminated_docs"),
-        F.min("doc_id").alias("example_doc_id"),
-    )

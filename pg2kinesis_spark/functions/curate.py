@@ -33,11 +33,10 @@ the next):
      sum over (quality desc, doc_id), no single-partition window.
 
 At cluster scale, materialize between stages: write the filtered
-survivors once, write MinHash signatures once
-(``dedup.write_minhash_signatures``), and band the signature table —
-every stage then starts from a column-pruned parquet scan instead of a
-recompute. The composition here keeps the whole plan lazy, which is the
-right shape for the sub-TB case and for tests.
+survivors once, write ``dedup.minhash_signatures`` once, and band the
+signature table — every stage then starts from a column-pruned parquet
+scan instead of a recompute. The composition here keeps the whole plan
+lazy, which is the right shape for the sub-TB case and for tests.
 
 The reference system has no corpus operators; this module is north-star
 surface (BASELINE.json extensions), built only on primitives that carry

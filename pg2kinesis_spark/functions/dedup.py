@@ -228,12 +228,9 @@ def minhash_lsh_pairs(
     aggregate run ONCE instead of three times (r12 opt round: measured
     1.9 s → 1.1 s on the sf0.1 curate chain, interleaved reps; the r8
     note that caching cost more predates the lazy-checkpoint form).
-    The checkpointed rows are k·8 bytes/doc — the SAME table
-    write_minhash_signatures persists, just held in executor storage
-    for the plan's lifetime. At the 100 TB tier prefer the written
-    index (minhash_lsh_pairs_from_signatures — column-pruned parquet
-    scans, nothing pinned in memory) or pass ``materialize_sig=False``
-    to keep the plan fully lazy.
+    The checkpointed rows are k·8 bytes/doc, held in executor storage
+    for the plan's lifetime; pass ``materialize_sig=False`` to keep the
+    plan fully lazy.
     """
     assert k % bands == 0
     sig = minhash_signatures(docs, n, k, seed)
@@ -245,25 +242,6 @@ def minhash_lsh_pairs(
         # io.prefetch_checkpoint — same rows, overlapped schedule)
         sig = prefetch_checkpoint(sig.localCheckpoint(eager=False))
     return _lsh_pairs_from_sig(sig, k, bands)
-
-
-def write_minhash_signatures(
-    docs: DataFrame, path: str, n: int = 3, k: int = 16, seed: int = 7
-) -> None:
-    """The 100 TB shape: materialize signatures ONCE (K·8 bytes per doc,
-    regardless of document size), then band/join the table as many times
-    as needed — the shingle explode never runs twice over the corpus."""
-    minhash_signatures(docs, n, k, seed).write.mode("overwrite").parquet(path)
-
-
-def minhash_lsh_pairs_from_signatures(
-    spark, path: str, k: int = 16, bands: int = 4
-) -> DataFrame:
-    """LSH candidate pairs over a materialized signature table — same
-    result as minhash_lsh_pairs on the source docs, but every signature
-    consumer is a column-pruned parquet scan instead of a recompute."""
-    assert k % bands == 0
-    return _lsh_pairs_from_sig(spark.read.parquet(path), k, bands)
 
 
 def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
@@ -415,7 +393,7 @@ def lsh_pairs_incremental(
     new_sig_df: DataFrame | None = None,
 ) -> DataFrame:
     """Daily-ingest dedup: candidate pairs TOUCHING a new batch, against
-    a materialized signature index (write_minhash_signatures) — the new
+    a written ``minhash_signatures`` index at ``sig_path`` — the new
     batch is signed and banded once; the corpus contributes a
     column-pruned parquet scan of (doc_id, mh*) only. Emits new-vs-index
     plus new-vs-new pairs, ids canonicalized id1 < id2, so
@@ -423,9 +401,9 @@ def lsh_pairs_incremental(
         pairs(index docs) ∪ incremental(new batch) == pairs(all docs)
 
     (the invariant the tests pin). Caller contract: new doc_ids are not
-    already in the index. Append the batch with
-    ``append_minhash_signatures`` AFTER collecting these pairs — the
-    index scan here is lazy and must not see the batch's own rows.
+    already in the index. Append the batch's signatures AFTER
+    collecting these pairs — the index scan here is lazy and must not
+    see the batch's own rows.
 
     ``band_bloom_bits`` (a bloom over the INDEX's (band_idx, band_key)
     rows — see ``functions.bloom``) prefilters the new batch's band
@@ -481,39 +459,3 @@ def lsh_pairs_incremental(
     )
     cand = cross.union(within).distinct()
     return _est_jaccard(cand, old_sig.unionByName(new_sig), k)
-
-
-def append_minhash_signatures(
-    docs: DataFrame, path: str, n: int = 3, k: int = 16, seed: int = 7
-) -> None:
-    """Add a new batch to a materialized signature index."""
-    minhash_signatures(docs, n, k, seed).write.mode("append").parquet(path)
-
-
-def refine_pairs_levenshtein(
-    pairs: DataFrame,
-    docs: DataFrame,
-    max_dist: int,
-    text_col: str = "text",
-) -> DataFrame:
-    """Verify candidate pairs with a true edit-distance check — the
-    exact-verification step after LSH/SimHash candidate generation
-    (sketches can collide on genuinely different documents).
-
-    Adds ``edit_dist`` and keeps pairs with distance <= max_dist. The
-    threshold-bounded ``levenshtein(a, b, threshold)`` short-circuits at
-    max_dist+1, so cost is O(max_dist * min_len) per pair, not
-    O(len_a * len_b) — the difference between verifying near-dups and
-    diffing arbitrary documents. Texts are joined only for candidate
-    pairs (two doc_id-keyed joins), never carried through the sketch
-    machinery.
-    """
-    t1 = docs.select(F.col("doc_id").alias("id1"), F.col(text_col).alias("_t1"))
-    t2 = docs.select(F.col("doc_id").alias("id2"), F.col(text_col).alias("_t2"))
-    return (
-        pairs.join(t1, "id1")
-        .join(t2, "id2")
-        .withColumn("edit_dist", F.expr(f"levenshtein(_t1, _t2, {max_dist})"))
-        .filter((F.col("edit_dist") >= 0) & (F.col("edit_dist") <= max_dist))
-        .drop("_t1", "_t2")
-    )

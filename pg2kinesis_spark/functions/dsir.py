@@ -16,8 +16,7 @@ target corpus, using importance weights over hashed n-gram features:
    ``G = −ln(−ln(u))`` and ``u`` is a deterministic hash-uniform of the
    doc key. Gumbel top-k over log-weights IS sampling without
    replacement ∝ softmax(logw) (the paper resamples ∝ exp(logw)), and
-   stays in log domain so tiny weights never underflow — the same
-   motivation as ``weighted_sample_n``'s −ln(u)/w form.
+   stays in log domain so tiny weights never underflow.
 
 Scale shape: fitting is two partial-aggregated groupBy passes whose
 result is at most ``n_buckets`` rows (10k by default — broadcastable by
@@ -176,32 +175,10 @@ def dsir_scores(
 def gumbel_key(logw: Column, key_col: str) -> Column:
     """logw + Gumbel(0,1) noise derived deterministically from the key
     hash: u = (h+1)/2^60 ∈ (0, 1], G = −ln(−ln(u)). Cross-engine
-    reproducible (same md5 recipe as weighted_sample_n's uniform)."""
+    reproducible (the ``HASH60`` md5 recipe)."""
     h = F.expr(HASH60.format(x=f"cast({key_col} as string)"))
     u = (h + F.lit(1.0)) / F.lit(float(1 << 60))
     return logw - F.log(-F.log(u))
-
-
-def dsir_threshold_for_rate(
-    scores: DataFrame, rate: float, logw_col: str = "logw"
-) -> float:
-    """The ``min_dsir_logw`` that keeps approximately the top ``rate``
-    fraction of documents by log importance weight — calibrates the
-    streaming DSIR gate (CorpusIngest) from a reference batch.
-
-    Importance weights have no meaningful absolute zero (with a small
-    target, ~every logw is negative); acceptance is a RANK decision, so
-    the operational threshold is a quantile. One approx_percentile
-    aggregate (t-digest, single pass, driver gets one double).
-    """
-    if not 0.0 < rate <= 1.0:
-        raise ValueError(f"rate must be in (0, 1], got {rate}")
-    q = scores.agg(
-        F.expr(f"approx_percentile({logw_col}, {1.0 - rate}, 10000)")
-    ).first()[0]
-    if q is None:
-        raise ValueError("cannot calibrate a threshold from an empty score set")
-    return float(q)
 
 
 def dsir_select(
@@ -218,9 +195,9 @@ def dsir_select(
 
     Returns (id_col, logw, gk) for the selected ``min(n, rows)`` docs —
     a without-replacement draw ∝ softmax(logw). Ranking runs as the
-    salted two-phase top-n (same shape as weighted_sample_n: no global
-    single-reducer sort; (gk desc, id) is a total order so the result
-    is identical to the single-phase ranking).
+    salted two-phase top-n (no global single-reducer sort; (gk desc,
+    id) is a total order so the result is identical to the single-phase
+    ranking).
     """
     scored = dsir_scores(docs, logratios, text_col, id_col, n_buckets, grams=grams).withColumn(
         "gk", gumbel_key(F.col("logw"), id_col)

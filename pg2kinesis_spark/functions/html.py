@@ -7,8 +7,7 @@ shuffle, no Python — with pinned, honest semantics:
 
 * ``<head>``/``<script>``/``<style>``/``<noscript>``/``<template>``
   blocks and HTML comments are removed WITH their content
-  (case-insensitive, non-greedy, dotall); use ``extract_title`` for the
-  head's one useful payload.
+  (case-insensitive, non-greedy, dotall).
 * Block-level tags (p, div, br, li, tr, headings, blockquote, section,
   article, table rows...) become newlines so paragraph structure
   survives for the line-level gates (C4, boilerplate removal); all
@@ -29,7 +28,7 @@ pure-Python twin in tests.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # content-bearing containers whose entire payload is noise (head first:
@@ -69,13 +68,3 @@ def html_to_text_col(col) -> Column:
     c = F.regexp_replace(c, r"\n{3,}", "\n\n")
     # Spark's trim() strips spaces only — full whitespace trim by regex
     return F.regexp_replace(c, r"^\s+|\s+$", "")
-
-
-def extract_title(docs: DataFrame, html_col: str = "html") -> DataFrame:
-    """Add a ``title`` column (first <title> payload, entity-decoded,
-    whitespace-collapsed; empty string when absent)."""
-    t = F.regexp_extract(F.col(html_col), r"(?is)<title\b[^>]*>(.*?)</title\s*>", 1)
-    for ent, rep in _ENTITIES:
-        t = F.regexp_replace(t, ent, rep)
-    t = F.trim(F.regexp_replace(t, r"\s+", " "))
-    return docs.withColumn("title", t)

@@ -57,10 +57,6 @@ class NgramLm:
     l0: float = 0.01
 
 
-def _words(text_col: str):
-    return F.expr(f"filter(split({text_col}, ' '), w -> w != '')")
-
-
 def _bigram_pairs(text_col: str):
     """(prev, w) struct pairs with a BOS prefix, built in-row. The token
     array is let-bound once (transform(array(x), ws -> ...)[0] — the
@@ -197,29 +193,3 @@ def perplexity_filter(
         F.col("perplexity") <= max_perplexity
     )
     return docs.join(keep.select(key_col), key_col, "left_semi")
-
-
-def perplexity_buckets(
-    docs: DataFrame,
-    lm: NgramLm,
-    cuts: tuple = (1.0 / 3.0, 2.0 / 3.0),
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(key_col, perplexity, ppl_bucket): CCNet's head/middle/tail
-    split — rank documents by perplexity and label the corpus quantile
-    slices (head = lowest-perplexity, most in-domain). Thresholds come
-    from one approxQuantile pass (driver-side scalars); the labeling is
-    then a row-local CASE. Empty docs (NULL perplexity) label NULL.
-    """
-    scored = score_perplexity(docs, lm, key_col, text_col)
-    lo, hi = scored.approxQuantile("perplexity", list(cuts), 0.001)
-    return scored.select(
-        key_col,
-        "perplexity",
-        F.when(F.col("perplexity").isNull(), F.lit(None).cast("string"))
-        .when(F.col("perplexity") <= lo, F.lit("head"))
-        .when(F.col("perplexity") <= hi, F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("ppl_bucket"),
-    )

@@ -12,15 +12,12 @@ Codec support is tiered, honestly:
   scanned-document format: LZW/deflate/PackBits, predictor 2,
   bilevel/8/16-bit, both byte orders), and PCM WAV decode/encode are
   REAL — dependency-free kernels in :mod:`codecs` (stdlib zlib/struct
-  + numpy). ``extract_features`` / ``resize_media`` with ``fake=False``
-  run true pixel decodes;
-  ``extract_image_features`` / ``extract_audio_features`` /
+  + numpy). ``extract_features`` with ``fake=False`` runs true pixel
+  decodes; ``extract_image_features`` / ``extract_audio_features`` /
   ``media_dhash`` add codec-true columns (channels, luma, sample
-  rate, RMS, perceptual hash). ``media_from_files`` turns a directory
-  into the media table with JVM-side magic-byte mime sniffing.
-* Video is REAL for MJPEG AVI (``video_frames``: container walk +
-  per-frame JPEG decode, frames re-emitted as PNG media rows so the
-  image operators compose per frame).
+  rate, RMS, perceptual hash).
+* Video is REAL for MJPEG AVI (``extract_video_features``,
+  ``video_scene_cuts``: container walk + per-frame JPEG decode).
 * MP3 METADATA is real (``extract_audio_metadata``: ISO 11172-3
   frame-header walk — duration/bitrate/channels/VBR, ID3v2 skip,
   Xing exclusion — the profiling tier for audio corpora), and MPEG-1
@@ -43,7 +40,7 @@ Codec support is tiered, honestly:
   spec-true front-of-stream global_gain through real syntax and real
   sample tables), with remux IDENTITIES pinned: ADTS≡M4A and
   Ogg≡WebM fingerprint at hamming 0. PDFs surface their embedded
-  images (``extract_pdf_images`` → ``pdf_images_as_media``). The
+  images (``extract_pdf_images``). The
   Layer III proxy covers MPEG-1 AND LSF MPEG-2/2.5 side info
   (round 10 lifts the CELT gate: mono AND stereo CELT decode through
   the transcribed e_prob_model); LSF
@@ -53,7 +50,7 @@ Codec support is tiered, honestly:
   (``fake=True``) remains for plumbing tests. Compressed video (H.264/VP9/AV1 in MP4/WebM,
   non-MJPEG AVI) has an optional PyAV seam
   (``codecs.fast_video_decoder``, mirroring ``fast_image_decoder``'s
-  refusal-can-become-a-decode contract) feeding ``video_frames``; the
+  refusal-can-become-a-decode contract) feeding the frame decode; the
   pure path keeps the honest refusal. The Spark-side contract —
   schemas, batch iteration,
   partitioning — is identical either way.
@@ -62,8 +59,8 @@ Round 9 widens every modality: images gain 12-bit JPEG, BMP/ICO, PNM
 (P1-P6), TGA, and EXIF-orientation-normalized dHash; WebP ships
 container TRUTH with an honest pixel refusal (PIL seam upgrades);
 video gains Y4M (uncompressed BT.601 planar) and APNG (fcTL/fdAT
-composition through the PNG kernel), both riding the frame/dhash/
-near-dup tiers; audio gains true CONTENT analysis over the lossless
+composition through the PNG kernel), both riding the video-features
+and scene-cut tiers; audio gains true CONTENT analysis over the lossless
 front door (``extract_audio_analysis``: BS.1770-4 gated loudness,
 silence ratio, spectral features) and the time-shift-robust landmark
 matcher (``audio_landmark_match``: constellation hashes + offset
@@ -77,8 +74,7 @@ kernel therefore takes ``errors=`` — ``"quarantine"`` (default) wraps
 the per-row decode in a guard that emits NULL features plus a
 ``decode_error`` string column, ``"raise"`` keeps the fail-stop
 behavior for trusted inputs (parity with operators/errors.py
-semantics on the CDC path). ``media_quarantine`` splits a guarded
-result into (clean, quarantined) DataFrames.
+semantics on the CDC path).
 """
 
 from __future__ import annotations
@@ -91,10 +87,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _ERROR_FIELD = T.StructField("decode_error", T.StringType())
-
-
-def _with_error(schema: T.StructType) -> T.StructType:
-    return T.StructType(list(schema.fields) + [_ERROR_FIELD])
 
 
 def _check_errors(errors: str) -> None:
@@ -127,15 +119,6 @@ def _guard(errors: str, fn, *args):
     except Exception as e:  # noqa: BLE001 — untrusted bytes: route, don't die
         return None, f"{type(e).__name__}: {e}"[:512]
 
-
-def media_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split a guarded kernel output on ``decode_error``: (clean rows
-    with the error column dropped, quarantined rows with it kept).
-    Both are filters over the same plan — one scan when both sides are
-    written, no shuffle."""
-    clean = df.filter(F.col("decode_error").isNull()).drop("decode_error")
-    bad = df.filter(F.col("decode_error").isNotNull())
-    return clean, bad
 
 MEDIA_META = T.StructType(
     [
@@ -241,84 +224,6 @@ def extract_features(
             )
 
     return media.mapInPandas(kernel, FEATURES_SCHEMA)
-
-
-def resize_media(
-    media: DataFrame,
-    width: int = 64,
-    height: int = 64,
-    fake: bool = True,
-    errors: str = "quarantine",
-) -> DataFrame:
-    """mapInPandas resize: size-bound every media item to width×height.
-
-    Real deployments put PIL's ``Image.resize`` in the kernel body; the
-    deterministic fake stride-samples (or wrap-pads) the byte stream to
-    exactly ``width*height`` bytes, so downstream stages see the real
-    contract — bounded content, same (media_id, content, meta) columns,
-    ``bytes_hint`` updated so partition sizing stays honest — with
-    exact, testable bytes. Output adds only the nullable
-    ``decode_error`` column (NULL content + error string for rows the
-    codec rejects under ``errors="quarantine"``); drop it or route it
-    with ``media_quarantine`` and the result composes with
-    extract_features / frame_sample unchanged.
-    """
-    import pandas as pd
-
-    from . import codecs
-
-    _check_errors(errors)
-    target = width * height
-
-    def resize_one(c: bytes) -> bytes:
-        b = bytes(c)
-        if not fake:
-            # true pixel resize: decode -> nearest-neighbor -> re-encode
-            # in the source format (PNG stays PNG, JPEG stays JPEG)
-            if codecs.is_png(b):
-                return codecs.encode_png(
-                    codecs.resize_nearest(codecs.decode_png(b), width, height)
-                )
-            if codecs.is_jpeg(b):
-                img = codecs.resize_nearest(codecs.decode_jpeg(b), width, height)
-                return codecs.encode_jpeg(img[:, :, 0] if img.shape[2] == 1 else img)
-            if codecs.is_gif(b):
-                # nearest-neighbor only samples existing pixels, so the
-                # palette stays <= 256 and the GIF re-encode is exact
-                return codecs.encode_gif(
-                    codecs.resize_nearest(codecs.decode_gif(b), width, height)
-                )
-            raise NotImplementedError(
-                "real resize supports PNG, baseline JPEG, and GIF in this environment"
-            )
-        if len(b) >= target:
-            step = len(b) / target
-            return bytes(b[int(i * step)] for i in range(target))
-        if b:
-            return (b * (target // len(b) + 1))[:target]
-        return bytes(target)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            guarded = [_guard(errors, resize_one, c) for c in pdf["content"]]
-            meta = [
-                {
-                    "mime": m["mime"],
-                    "bytes_hint": (len(r) if not fake else target) if r is not None else 0,
-                    "source_uri": m["source_uri"],
-                }
-                for m, (r, _) in zip(pdf["meta"], guarded)
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": [r for r, _ in guarded],
-                    "meta": meta,
-                    "decode_error": [e for _, e in guarded],
-                }
-            )
-
-    return media.mapInPandas(kernel, _with_error(MEDIA_SCHEMA))
 
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
@@ -818,22 +723,10 @@ def media_near_dup_pairs(
     )
 
 
-VIDEO_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("meta", MEDIA_META),
-        _ERROR_FIELD,
-    ]
-)
-
-
-def _decode_video_frames(b: bytes, sampled, compressed_decoder=None):
-    """One dispatch for every video-frame consumer (video_frames,
-    video_frame_dhash, video_scene_cuts): GIF / APNG / Y4M / MJPEG AVI
-    decode purely; compressed bitstreams go through the optional PyAV
-    seam or refuse honestly."""
+def _decode_video_frames(b: bytes, sampled):
+    """Frame dispatch for the video-frame consumers (video_scene_cuts):
+    GIF / APNG / WebP / Y4M / MJPEG AVI decode purely; compressed
+    bitstreams go through the optional PyAV seam or refuse honestly."""
     from . import codecs
 
     if codecs.is_gif(b):  # animated GIFs are videos too
@@ -849,7 +742,7 @@ def _decode_video_frames(b: bytes, sampled, compressed_decoder=None):
             return codecs.decode_avi_mjpeg(b, frame_indices=sampled)
         except NotImplementedError:
             # non-MJPEG codec inside AVI: only the seam can decode
-            fast = compressed_decoder or codecs.fast_video_decoder()
+            fast = codecs.fast_video_decoder()
             if fast is None:
                 raise
             return fast(b, sampled)
@@ -857,7 +750,7 @@ def _decode_video_frames(b: bytes, sampled, compressed_decoder=None):
         # compressed bitstreams (H.264/VP9/AV1): the optional PyAV
         # seam when importable, the honest refusal otherwise —
         # mirroring decode_image's fast_image_decoder contract
-        fast = compressed_decoder or codecs.fast_video_decoder()
+        fast = codecs.fast_video_decoder()
         if fast is not None:
             return fast(b, sampled)
         raise NotImplementedError(
@@ -866,254 +759,6 @@ def _decode_video_frames(b: bytes, sampled, compressed_decoder=None):
             " — not available in this environment"
         )
     return codecs.decode_avi_mjpeg(b, frame_indices=sampled)
-
-
-def video_frames(
-    media: DataFrame,
-    stride: int = 1,
-    max_frames: int = 8,
-    errors: str = "quarantine",
-    compressed_decoder=None,
-) -> DataFrame:
-    """REAL video frame extraction for MJPEG AVI and animated GIF
-    content.
-
-    Decodes the container (AVI per-frame JPEGs, or GIF canvas
-    composition with disposal/transparency), keeps every ``stride``-th
-    frame up to ``max_frames``, and re-emits each frame as a PNG media
-    row —
-    (media_id, frame_idx, content, meta) — so the entire image operator
-    surface (extract_image_features, media_dhash, resize_media)
-    composes per frame unchanged. Decode work is bounded by the
-    SAMPLED frame count: the container decoders stop after the last
-    frame that survives ``[::stride][:max_frames]``, so a 2-hour clip
-    sampled at 8 frames never decodes the tail. This is the codec-true
-    successor of ``frame_sample``'s byte-stride stand-in; the
-    mapInPandas contract (Arrow batches, constant memory,
-    executor-local decode) is the same. An undecodable clip emits ONE
-    row with NULL frame_idx/content + ``decode_error`` (default) or
-    fails the task (``errors="raise"``).
-
-    Compressed bitstreams (H.264/VP9/AV1 in MP4/WebM, non-MJPEG AVI)
-    decode through ``codecs.fast_video_decoder()`` (the optional PyAV
-    seam) when importable ON THE EXECUTORS, else refuse honestly.
-    ``compressed_decoder`` overrides the seam with an explicit
-    ``(bytes, frame_indices) -> list[ndarray]`` callable — it is
-    serialized into the kernel closure, which is also how the plumbing
-    tests prove the wiring without ffmpeg.
-    """
-    import pandas as pd
-
-    from . import codecs
-
-    _check_errors(errors)
-    _check_sampling(stride, max_frames)
-    # decode ONLY the sampled ordinals: MJPEG skips unwanted frames at
-    # container-walk cost; GIF still composes every prior frame but
-    # copies the canvas only for sampled ones and stops after the last
-    sampled = {i * stride for i in range(max_frames)}
-
-    def decode_clip(b: bytes) -> list[np.ndarray]:
-        return _decode_video_frames(b, sampled, compressed_decoder)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, c, m in zip(pdf["media_id"], pdf["content"], pdf["meta"]):
-                frames, err = _guard(errors, decode_clip, bytes(c))
-                if frames is None:
-                    rows.append((mid, None, None, dict(m), err))
-                    continue
-                for i, f in enumerate(frames):
-                    png = codecs.encode_png(f)
-                    rows.append(
-                        (
-                            mid,
-                            i,
-                            png,
-                            {
-                                "mime": "image/png",
-                                "bytes_hint": len(png),
-                                "source_uri": f"{m['source_uri']}#frame{i * stride}",
-                            },
-                            None,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "content", "meta", "decode_error"],
-            )
-
-    return media.mapInPandas(kernel, VIDEO_FRAMES_SCHEMA)
-
-
-FRAME_DHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("dhash", T.LongType()),
-        _ERROR_FIELD,
-    ]
-)
-
-
-def video_frame_dhash(
-    media: DataFrame, stride: int = 1, max_frames: int = 8, errors: str = "quarantine"
-) -> DataFrame:
-    """Per-frame dHash for MJPEG AVI / animated GIF clips in ONE kernel:
-    container decode -> sampled frames -> dHash on the decoded pixels —
-    no intermediate PNG re-encode/re-decode (the video_frames ->
-    media_dhash composition pays that round-trip; this is the fused
-    form the near-dup search uses). Decode work is capped by the
-    sampled frame count. Returns (media_id, frame_idx, dhash,
-    decode_error) — one NULL-frame error row per undecodable clip under
-    the default ``errors="quarantine"``."""
-    import pandas as pd
-
-    from . import codecs
-
-    _check_errors(errors)
-    _check_sampling(stride, max_frames)
-    # sampled-ordinals decode (see video_frames)
-    sampled = {i * stride for i in range(max_frames)}
-
-    def clip_hashes(b: bytes) -> list[int]:
-        frames = _decode_video_frames(b, sampled)
-        return [_dhash_image(f, codecs.resize_nearest) for f in frames]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                hashes, err = _guard(errors, clip_hashes, bytes(c))
-                if hashes is None:
-                    rows.append((mid, None, None, err))
-                    continue
-                for i, h in enumerate(hashes):
-                    rows.append((mid, i, h, None))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "dhash", "decode_error"]
-            )
-
-    return media.mapInPandas(kernel, FRAME_DHASH_SCHEMA)
-
-
-def video_near_dup_pairs(
-    media: DataFrame,
-    max_hamming: int = 6,
-    stride: int = 1,
-    max_frames: int = 8,
-    min_matching_frames: int = 2,
-    errors: str = "quarantine",
-) -> DataFrame:
-    """Clip-level near-duplicate detection for MJPEG AVI / animated GIF
-    content.
-
-    Composition of verified pieces: fused per-frame dHash
-    (``video_frame_dhash``) -> the multi-index SimHash pair search,
-    BLOCKED on the frame index -> clip-pair aggregation. Two clips
-    match when >= min_matching_frames TEMPORALLY ALIGNED frames (same
-    sampled index) land within max_hamming dHash bits — re-encoded or
-    brightness-shifted copies match; unrelated clips share no aligned
-    near-identical frames. Frame alignment rides the pair search's
-    join key (``simhash_pairs(block=...)``), so clip ids are carried
-    VERBATIM — the full signed-64 media_id range (xxhash64 ids from
-    media_from_files included) is safe, with no arithmetic packing to
-    overflow or round. Scale shape is inherited: segment-equi-join +
-    popcount (never all-pairs), and the aggregation shuffles only
-    (clip1, clip2) longs. Returns (media_id1, media_id2, n_frames,
-    min_hamming).
-    """
-    from .dedup import simhash_pairs
-
-    sigs = (
-        video_frame_dhash(media, stride=stride, max_frames=max_frames, errors=errors)
-        .filter(F.col("dhash").isNotNull())
-        .select(
-            F.col("media_id").alias("doc_id"),
-            F.col("frame_idx").alias("blk"),
-            F.col("dhash").alias("simhash"),
-        )
-    )
-    aligned = simhash_pairs(sigs, max_hamming=max_hamming, block="blk")
-    return (
-        aligned.groupBy(
-            F.least("id1", "id2").alias("media_id1"),
-            F.greatest("id1", "id2").alias("media_id2"),
-        )
-        .agg(F.count("*").alias("n_frames"), F.min("hamming").alias("min_hamming"))
-        .filter(F.col("n_frames") >= min_matching_frames)
-    )
-
-
-def sniff_mime(content: "F.Column") -> "F.Column":
-    """Magic-byte mime sniffing as pure column expressions (no Python):
-    the formats the codec layer understands, else 'application/
-    octet-stream'. Works on any binary column. MP3 matches an ID3v2
-    tag or a bare MPEG frame sync (0xFFEx/0xFFFx first two bytes)."""
-    sig8 = F.substring(content, 1, 8)
-    sig4 = F.substring(content, 1, 4)
-    sub = lambda pos, n: F.substring(content, pos, n)
-    # MPEG frame sync: 0xFF then a second byte with sync bits 111,
-    # version != reserved(01), layer != reserved(00) — enumerated as a
-    # hex-literal InSet so the check stays pure codegen on ANY column
-    valid_b1 = [
-        b for b in range(0xE0, 0x100) if (b & 0x18) != 0x08 and (b & 0x06) != 0
-    ]
-    mp3_sync = F.hex(sub(1, 2)).isin(*[f"FF{b:02X}" for b in valid_b1])
-    # ADTS AAC sync: 0xFFF with layer bits 00 (reserved in MPEG audio,
-    # so the MP3 InSet above can never match these and vice versa)
-    adts_sync = F.hex(sub(1, 2)).isin(
-        *[f"FF{b:02X}" for b in range(0xE0, 0x100) if (b & 0xF6) == 0xF0]
-    )
-    return (
-        F.when(sig8 == F.lit(bytes.fromhex("89504E470D0A1A0A")), "image/png")
-        .when(sub(1, 2) == F.lit(b"\xff\xd8"), "image/jpeg")
-        .when(sub(1, 3) == F.lit(b"GIF"), "image/gif")
-        .when(
-            (sig4 == F.lit(b"II*\x00")) | (sig4 == F.lit(b"MM\x00*")),
-            "image/tiff",
-        )
-        .when(sub(1, 2) == F.lit(b"BM"), "image/bmp")
-        .when(sig4 == F.lit(b"\x00\x00\x01\x00"), "image/x-icon")
-        # the CUR magic doubles as a plain truecolor TGA's first four
-        # bytes — require a plausible ICONDIR count (1..64, high byte 0)
-        .when(
-            (sig4 == F.lit(b"\x00\x00\x02\x00"))
-            & (sub(6, 1) == F.lit(b"\x00"))
-            & (sub(5, 1) != F.lit(b"\x00")),
-            "image/x-cursor",
-        )
-        .when(
-            (sub(1, 1) == F.lit(b"P"))
-            & F.substring(content, 2, 1).isin([bytes([c]) for c in b"123456"])
-            & F.substring(content, 3, 1).isin(
-                [b"\n", b"\r", b"\t", b" ", b"#"]
-            ),
-            "image/x-portable-anymap",
-        )
-        .when(sig4 == F.lit(b"fLaC"), "audio/flac")
-        .when(sig4 == F.lit(b"OggS"), "audio/ogg")
-        .when((sig4 == F.lit(b"RIFF")) & (sub(9, 4) == F.lit(b"WAVE")), "audio/wav")
-        .when((sig4 == F.lit(b"RIFF")) & (sub(9, 4) == F.lit(b"AVI ")), "video/x-msvideo")
-        .when((sig4 == F.lit(b"RIFF")) & (sub(9, 4) == F.lit(b"WEBP")), "image/webp")
-        .when(F.substring(content, 1, 9) == F.lit(b"YUV4MPEG2"), "video/x-yuv4mpegpipe")
-        .when((sig4 == F.lit(b"FORM")) & (sub(9, 3) == F.lit(b"AIF")), "audio/aiff")
-        .when(sub(1, 3) == F.lit(b"ID3"), "audio/mpeg")
-        .when(adts_sync, "audio/aac")
-        .when(mp3_sync, "audio/mpeg")
-        # ISO BMFF: any box layout starts size(4) + 'ftyp'; audio-only
-        # brands (M4A) label as audio, everything else as video
-        .when(
-            (sub(5, 4) == F.lit(b"ftyp")) & (sub(9, 3) == F.lit(b"M4A")),
-            "audio/mp4",
-        )
-        .when(sub(5, 4) == F.lit(b"ftyp"), "video/mp4")
-        # EBML magic: Matroska/WebM family
-        .when(sig4 == F.lit(b"\x1a\x45\xdf\xa3"), "video/webm")
-        .when(F.substring(content, 1, 5) == F.lit(b"%PDF-"), "application/pdf")
-        .otherwise("application/octet-stream")
-    )
 
 
 AUDIO_META_SCHEMA = T.StructType(
@@ -1488,64 +1133,6 @@ def extract_audio_tags(media: DataFrame, errors: str = "quarantine") -> DataFram
     return media.mapInPandas(kernel, AUDIO_TAGS_SCHEMA)
 
 
-COVER_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("cover", T.BinaryType()),
-        T.StructField("cover_mime", T.StringType()),
-        _ERROR_FIELD,
-    ]
-)
-
-
-def extract_cover_art(media: DataFrame, errors: str = "quarantine") -> DataFrame:
-    """Embedded cover art (``codecs.audio_cover``: ID3v2 APIC, FLAC
-    PICTURE, MP4 covr) as (media_id, cover, cover_mime). Pictureless
-    files yield NULL cover with no error; unrecognized containers take
-    the quarantine channel. The output composes with the IMAGE tier:
-    ``covers_as_media(extract_cover_art(audio))`` feeds ``media_dhash``
-    / ``media_near_dup_pairs``, so the same artwork embedded in
-    different containers (or different encodes of one album) pairs up
-    without ever decoding the audio."""
-    import pandas as pd
-
-    from . import codecs
-
-    _check_errors(errors)
-
-    def one(c: bytes):
-        got = codecs.audio_cover(c)
-        return (None, None) if got is None else got
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                r, err = _guard(errors, one, bytes(c))
-                img, mime = r if r else (None, None)
-                rows.append((mid, img, mime, err))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "cover", "cover_mime", "decode_error"]
-            )
-
-    return media.mapInPandas(kernel, COVER_SCHEMA)
-
-
-def covers_as_media(covers: DataFrame) -> DataFrame:
-    """extract_cover_art output → MEDIA_SCHEMA rows (cover bytes as
-    content, audio row's media_id carried through), ready for the
-    image operators."""
-    return covers.filter(F.col("cover").isNotNull()).select(
-        F.col("media_id"),
-        F.col("cover").alias("content"),
-        F.struct(
-            F.col("cover_mime").alias("mime"),
-            F.length("cover").cast("long").alias("bytes_hint"),
-            F.concat(F.lit("cover://"), F.col("media_id")).alias("source_uri"),
-        ).alias("meta"),
-    )
-
-
 PDF_IMAGES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -1568,9 +1155,7 @@ def extract_pdf_images(
     row per image, per-image quarantine (JPX, JBIG2
     halftone/refinement/Huffman tiers, exotic
     colorspaces). A PDF that fails to parse at all yields one
-    row with NULL img_idx + the error. Compose with
-    ``pdf_images_as_media`` to feed the image tier — embedded figures
-    and scanned plates then dedup/near-dup exactly like cover art."""
+    row with NULL img_idx + the error."""
     import pandas as pd
 
     from . import pdf as pdfmod
@@ -1594,77 +1179,6 @@ def extract_pdf_images(
             )
 
     return media.mapInPandas(kernel, PDF_IMAGES_SCHEMA)
-
-
-def pdf_images_as_media(images: DataFrame) -> DataFrame:
-    """extract_pdf_images output → MEDIA_SCHEMA rows for the image
-    operators (the covers_as_media precedent). media_id must stay
-    unique per IMAGE for the pair search, so it becomes
-    ``xxhash64(pdf_media_id, img_idx)`` — deterministic and
-    collision-resistant for arbitrary (including 64-bit-hash) source
-    ids, unlike a multiply-add that wraps. The source document and
-    index stay recoverable from the meta.source_uri
-    (``pdfimg://<doc>#<idx>``)."""
-    return images.filter(F.col("content").isNotNull()).select(
-        F.xxhash64(F.col("media_id"), F.col("img_idx")).alias("media_id"),
-        F.col("content"),
-        F.struct(
-            F.col("mime"),
-            F.length("content").cast("long").alias("bytes_hint"),
-            F.concat(
-                F.lit("pdfimg://"), F.col("media_id"), F.lit("#"), F.col("img_idx")
-            ).alias("source_uri"),
-        ).alias("meta"),
-    )
-
-
-def media_from_files(spark, path: str, glob: str | None = None) -> DataFrame:
-    """Directory-of-files front door: Spark's binaryFile source mapped
-    into MEDIA_SCHEMA. media_id is the xxhash64 of the file path
-    (deterministic across runs and executors), mime is sniffed from the
-    magic bytes JVM-side, bytes_hint is the true length. Parallelism
-    and partition sizing come from the binaryFile source's standard
-    file-splitting (one file per row; maxPartitionBytes groups small
-    files) — the same front-door shape as WARC ingest, minus the
-    record splitting.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    files = reader.load(path)
-    return files.select(
-        F.xxhash64("path").alias("media_id"),
-        "content",
-        F.struct(
-            sniff_mime(F.col("content")).alias("mime"),
-            F.col("length").alias("bytes_hint"),
-            F.col("path").alias("source_uri"),
-        ).alias("meta"),
-    )
-
-
-def media_profile(media: DataFrame) -> DataFrame:
-    """One-scan corpus profile of a media table: per-mime row counts,
-    byte totals, size quantiles, and distinct-content counts. Pure
-    column aggregates over (mime, length) — the binary payloads feed
-    only a map-side md5; no collect, no Python, one keyed shuffle
-    (the profile.py discipline applied to media)."""
-    return (
-        media.select(
-            F.col("meta.mime").alias("mime"),
-            F.length("content").cast("long").alias("n_bytes"),
-            F.md5("content").alias("h"),
-        )
-        .groupBy("mime")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.sum("n_bytes").alias("total_bytes"),
-            F.expr("percentile_approx(n_bytes, 0.5)").alias("p50_bytes"),
-            F.max("n_bytes").alias("max_bytes"),
-            F.countDistinct("h").alias("n_distinct"),
-        )
-        .orderBy("mime")
-    )
 
 
 VIDEO_FEATURES_SCHEMA = T.StructType(
@@ -1854,9 +1368,8 @@ def curate_media(
 
     Scale note: drop/keep sets cross the wire as bare media_id longs;
     the binary column moves only in the final survivor semi-join —
-    at deployment scale bucket the media table by media_id
-    (``bucketing.write_bucketed``) so that join is exchange-free,
-    the same pay-shuffle-at-write contract as the text corpus.
+    at deployment scale bucket the media table by media_id so that
+    join is exchange-free.
     """
     keep_ids, rejected_parts, gate_sigs = _media_gate_ids(
         media, kind, min_pixels, min_duration_ms, max_silence_ratio, min_lufs
@@ -2057,8 +1570,9 @@ def video_scene_cuts(
     the ordinal (in sampled units x stride) where the NEW scene
     starts — so the caller can threshold differently, pick one frame
     per scene for training data, or histogram cut rates across a
-    corpus. Same bounded per-clip kernel contract as video_frames;
-    an undecodable clip emits one NULL row + decode_error."""
+    corpus. Frames decode per clip inside the task (bounded by
+    ``max_frames``); an undecodable clip emits one NULL row +
+    decode_error."""
     import pandas as pd
 
     from . import codecs

@@ -87,89 +87,3 @@ def pack_sequences(
         )
         .select(key_col, "n_tokens", "start_offset", "seq_id", "seq_pos", "spans_boundary")
     )
-
-
-def packing_stats(packed: DataFrame, seq_len: int) -> DataFrame:
-    """One row: total sequences, docs, tokens, boundary-spanning docs —
-    the sanity numbers a layout job logs. (tail padding = last partial
-    sequence; concat-and-chunk has no other waste by construction)."""
-    return packed.agg(
-        (F.ceil(F.max(F.col("start_offset") + F.col("n_tokens")) / seq_len)).alias(
-            "n_sequences"
-        ),
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum(F.col("spans_boundary").cast("long")).alias("n_spanning"),
-    )
-
-
-def materialize_sequences(
-    encoded: DataFrame,
-    seq_len: int,
-    key_col: str = "doc_id",
-    ids_col: str = "token_ids",
-    pad_id: int = 0,
-) -> DataFrame:
-    """Materialize the ACTUAL training sequences the layout describes:
-    (seq_id, input_ids array<int> of exactly ``seq_len``, segment_ids
-    array<int>, n_real int, n_docs int).
-
-    ``encoded`` is (key_col, token_ids array<int>) — e.g. the output of
-    ``bpe.bpe_encode``. Documents concatenate in ``pack_sequences``'s
-    deterministic (md5-hash, key) order and chunk every ``seq_len``
-    tokens; the tail sequence pads with ``pad_id``. ``segment_ids``
-    implements packed-attention document masking: position p belongs to
-    segment #(document boundaries at positions <= p within this
-    sequence) — a fragment carried in from the previous sequence is
-    segment 0, each new document start bumps the id, padding positions
-    get -1. Training frameworks turn this directly into the block-
-    diagonal attention mask (each segment attends only within itself).
-
-    Scale shape: ``pack_sequences`` contributes its two-phase scan;
-    materialization itself is posexplode -> ONE exchange keyed by
-    seq_id carrying (int, int, int, bool) token rows -> per-sequence
-    assembly. Group size is EXACTLY ``seq_len`` tokens by construction,
-    so there is no skew and no reducer funnel regardless of document
-    length distribution; the token-row shuffle is the job's inherent
-    output volume, written once.
-    """
-    layout = pack_sequences(encoded, F.size(ids_col), seq_len, key_col=key_col)
-    toks = (
-        encoded.join(layout.select(key_col, "start_offset"), key_col)
-        .select(
-            F.col("start_offset"),
-            F.posexplode(ids_col).alias("p", "tok"),
-        )
-        .select(
-            F.expr(f"(start_offset + p) DIV {seq_len}").alias("seq_id"),
-            F.expr(f"(start_offset + p) % {seq_len}").alias("within"),
-            F.col("tok"),
-            # a segment boundary is a DOCUMENT start at a non-zero
-            # position; a doc starting at position 0 just begins seg 0
-            ((F.col("p") == 0) & (F.expr(f"(start_offset + p) % {seq_len}") > 0)).alias(
-                "is_begin"
-            ),
-        )
-    )
-    agg = toks.groupBy("seq_id").agg(
-        F.expr("transform(array_sort(collect_list(struct(within, tok))), s -> s.tok)").alias(
-            "toks"
-        ),
-        # collect_list drops NULLs: only boundary positions survive
-        F.expr("array_sort(collect_list(CASE WHEN is_begin THEN within END))").alias(
-            "begins"
-        ),
-        F.count("*").alias("n_real"),
-    )
-    return agg.select(
-        "seq_id",
-        F.expr(
-            f"concat(toks, array_repeat({pad_id}, {seq_len} - cast(n_real as int)))"
-        ).alias("input_ids"),
-        F.expr(
-            f"transform(sequence(0, {seq_len - 1}), "
-            "p -> IF(p < n_real, size(filter(begins, b -> b <= p)), -1))"
-        ).alias("segment_ids"),
-        F.col("n_real").cast("int").alias("n_real"),
-        (F.size("begins") + 1).alias("n_docs"),
-    )

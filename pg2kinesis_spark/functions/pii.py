@@ -96,35 +96,6 @@ def _redact_cards(t: Column) -> Column:
     )
 
 
-def _rule_counts(text_col: str) -> list[Column]:
-    """Per-rule match-count columns, measured on the progressively-
-    redacted text exactly as ``redact_pii`` consumes it — a card number
-    counts once as `card`, never again as `phone`. Row-local. The card
-    rule counts only Luhn-valid matches (a random 16-digit string is
-    not PII; an invalid candidate stays in the text for later rules to
-    judge as e.g. a phone number)."""
-    t: Column = F.col(text_col)
-    counts = []
-    for name, pat, repl in PII_RULES:
-        if name == "card":
-            counts.append(F.size(_card_candidates(t)).alias(f"n_{name}"))
-            t = _redact_cards(t)
-        else:
-            counts.append(F.regexp_count(t, F.lit(pat)).alias(f"n_{name}"))
-            t = F.regexp_replace(t, pat, repl)
-    return counts
-
-
-def pii_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document match counts per rule + total (detection / audit pass)."""
-    counts = _rule_counts(text_col)
-    names = [f"n_{name}" for name, _, _ in PII_RULES]
-    total = sum((F.col(n) for n in names), F.lit(0))
-    return docs.select("doc_id", *counts).select(
-        "doc_id", *names, total.alias("n_pii")
-    )
-
-
 def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Replace every PII match with its typed placeholder, in rule order.
 

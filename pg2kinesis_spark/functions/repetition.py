@@ -42,10 +42,10 @@ surface (BASELINE.json extensions) like text.py / dedup.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import STOPWORDS, _words
+from .text import STOPWORDS
 
 # Gopher A1.1 default thresholds (public values from the paper).
 GOPHER_DEFAULTS = {
@@ -66,8 +66,6 @@ GOPHER_DEFAULTS = {
     "max_dup_ngram_char_frac": {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10},
 }
 
-WS = _words  # re-export for callers composing with text.py
-
 
 def _bind(val: str, var: str, body: str) -> str:
     """SQL let-binding: evaluate ``val`` once, reference it as ``var``.
@@ -78,18 +76,9 @@ def _bind(val: str, var: str, body: str) -> str:
     return f"element_at(transform(array({val}), {var} -> {body}), 1)"
 
 
-def _occurrences(col: Column, needle: str) -> Column:
-    """Count non-overlapping occurrences of a literal substring, JVM-side."""
-    return (F.length(col) - F.length(F.replace(col, F.lit(needle), F.lit("")))) / len(needle)
-
-
 def _sfrac(num: str, den: str) -> str:
     """SQL num/den with 0-denominator (empty doc) yielding 0.0, never NULL."""
     return f"coalesce(({num}) / nullif(cast(({den}) as double), 0.0D), 0.0D)"
-
-
-def _safe_frac(num: Column, den: Column) -> Column:
-    return F.coalesce(num / F.nullif(den.cast("double"), F.lit(0.0)), F.lit(0.0))
 
 
 def _grams_expr(n: int, ws: str = "ws") -> str:
@@ -176,132 +165,6 @@ def _dup_cov_chars_expr(n: int, ws: str) -> str:
 _DOC_CHARS = "length(regexp_replace(text, '\\\\s+', ''))"
 _WS_SQL = "split(text, ' ')"
 _LINES_SQL = "split(text, '\\n')"
-
-
-def doc_shape_stats(docs: DataFrame) -> DataFrame:
-    """Per-row Gopher shape signals — zero-shuffle column expressions.
-
-    Fractions are NULL-safe: empty documents yield 0.0 rather than NULL
-    so downstream threshold predicates never silently drop rows.
-    """
-    df = docs.select(
-        "doc_id",
-        F.col("text"),
-        _words().alias("ws"),
-        F.split(F.col("text"), "\n").alias("lines"),
-    )
-    n_words = F.size("ws")
-    n_lines = F.size("lines")
-    # translate-based "contains a letter" — no regex engine per word
-    alpha_words = F.expr("size(filter(ws, w -> translate(w, 'abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ', '') != w))")
-    stop_lit = ", ".join(f"'{w}'" for w in STOPWORDS)
-    stop_hits = F.expr(f"size(filter(ws, w -> w IN ({stop_lit})))")
-    bullet_lines = F.expr(
-        "size(filter(lines, l -> substring(ltrim(l), 1, 1) IN ('-', '*', '\u2022', '\u2023', '\u25e6')))"
-    )
-    ellipsis_lines = F.expr(
-        "size(filter(lines, l -> endswith(rtrim(l), '...') or endswith(rtrim(l), '\u2026')))"
-    )
-    avg_word_len = _safe_frac(F.expr("aggregate(ws, 0L, (a, w) -> a + length(w))"), n_words)
-    symbols = _occurrences(F.col("text"), "#") + _occurrences(F.col("text"), "...")
-    return df.select(
-        "doc_id",
-        n_words.alias("n_words"),
-        avg_word_len.alias("avg_word_len"),
-        _safe_frac(alpha_words, n_words).alias("alpha_word_frac"),
-        stop_hits.alias("stop_hits"),
-        _safe_frac(symbols, n_words).alias("symbol_word_ratio"),
-        _safe_frac(bullet_lines, n_lines).alias("bullet_line_frac"),
-        _safe_frac(ellipsis_lines, n_lines).alias("ellipsis_line_frac"),
-    )
-
-
-def dup_line_stats(docs: DataFrame) -> DataFrame:
-    """Duplicate-line fractions per document (occurrence + char-weighted).
-
-    A line is *duplicated* when its exact text occurs >= 2 times within
-    the document. Pure per-row sorted-runs aggregate — no shuffle.
-    """
-    expr = _bind(
-        _LINES_SQL,
-        "ln2",
-        _bind(
-            _dup_runs_expr("ln2"),
-            "dd",
-            f"""named_struct(
-              'dup_line_frac', {_sfrac('dd.dup', 'size(ln2)')},
-              'dup_line_char_frac',
-              {_sfrac('dd.dupch', 'aggregate(ln2, 0L, (a, l) -> a + length(l))')})""",
-        ),
-    )
-    return docs.select("doc_id", F.expr(expr).alias("_r")).select(
-        "doc_id", "_r.dup_line_frac", "_r.dup_line_char_frac"
-    )
-
-
-def top_ngram_char_frac(docs: DataFrame, ns: tuple[int, ...] = (2, 3, 4)) -> DataFrame:
-    """Fraction of characters in the most frequent word n-gram, per n.
-
-    Per-row: sort the gram array, take the best run × gram chars,
-    divide by the document's non-space char mass. Gram-less (short /
-    empty) docs emit 0.0 rows rather than vanishing.
-    """
-    fields = ", ".join(
-        f"'top{n}_gram_char_frac',"
-        f" {_sfrac(_top_run_chars_expr(_grams_expr(n, 'ws2')), _DOC_CHARS)}"
-        for n in ns
-    )
-    expr = _bind(_WS_SQL, "ws2", f"named_struct({fields})")
-    return docs.select("doc_id", F.expr(expr).alias("_r")).select(
-        "doc_id", *[f"_r.top{n}_gram_char_frac" for n in ns]
-    )
-
-
-def dup_ngram_char_frac(docs: DataFrame, ns: tuple[int, ...] = (5, 10)) -> DataFrame:
-    """EXACT character coverage of duplicated word n-grams, per n."""
-    fields = ", ".join(
-        f"'dup{n}_gram_char_frac', {_sfrac(_dup_cov_chars_expr(n, 'ws2'), _DOC_CHARS)}"
-        for n in ns
-    )
-    expr = _bind(_WS_SQL, "ws2", f"named_struct({fields})")
-    return docs.select("doc_id", F.expr(expr).alias("_r")).select(
-        "doc_id", *[f"_r.dup{n}_gram_char_frac" for n in ns]
-    )
-
-
-def repetition_stats(
-    docs: DataFrame,
-    top_ns: tuple[int, ...] = (2, 3, 4),
-    dup_ns: tuple[int, ...] = (5, 10),
-) -> DataFrame:
-    """All repetition signals, one row per document — a single zero-
-    shuffle projection (every signal is document-local)."""
-    line_fields = _bind(
-        _dup_runs_expr("ln2"),
-        "dd",
-        f"""named_struct(
-          'dup_line_frac', {_sfrac('dd.dup', 'size(ln2)')},
-          'dup_line_char_frac',
-          {_sfrac('dd.dupch', 'aggregate(ln2, 0L, (a, l) -> a + length(l))')})""",
-    )
-    gram_fields = ", ".join(
-        f"'top{n}_gram_char_frac',"
-        f" {_sfrac(_top_run_chars_expr(_grams_expr(n, 'ws2')), _DOC_CHARS)}"
-        for n in top_ns
-    )
-    dup_fields = ", ".join(
-        f"'dup{n}_gram_char_frac', {_sfrac(_dup_cov_chars_expr(n, 'ws2'), _DOC_CHARS)}"
-        for n in dup_ns
-    )
-    grams = f"named_struct({gram_fields}, {dup_fields})" if top_ns or dup_ns else "null"
-    expr = (
-        f"named_struct('ln', {_bind(_LINES_SQL, 'ln2', line_fields)},"
-        f" 'g', {_bind(_WS_SQL, 'ws2', grams)})"
-    )
-    out_cols = ["_r.ln.dup_line_frac", "_r.ln.dup_line_char_frac"]
-    out_cols += [f"_r.g.top{n}_gram_char_frac" for n in top_ns]
-    out_cols += [f"_r.g.dup{n}_gram_char_frac" for n in dup_ns]
-    return docs.select("doc_id", F.expr(expr).alias("_r")).select("doc_id", *out_cols)
 
 
 def gopher_filter(

@@ -103,190 +103,3 @@ def token_budget_select(
         .filter(F.col("cum_tokens") <= budget)
         .drop("_bkt", "_off")
     )
-
-
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict | float,
-    key_col: str,
-    buckets: int = 10_000,
-) -> DataFrame:
-    """Deterministic per-stratum hash sampling — zero shuffle.
-
-    ``fractions`` is either one float for every stratum or a dict
-    {stratum_value: fraction}; strata absent from the dict are dropped
-    (fraction 0). The hash is the cross-engine md5 bucket, so the
-    sample is reproducible across engines/reruns/partitionings, and the
-    whole operator is a single pushdown-friendly filter.
-    """
-    if isinstance(fractions, dict):
-        thresh = F.lit(0)
-        for val, frac in fractions.items():
-            thresh = F.when(F.col(strata_col) == val, F.lit(int(frac * buckets))).otherwise(
-                thresh
-            )
-    else:
-        thresh = F.lit(int(fractions * buckets))
-    return df.filter(hash_bucket(key_col, buckets) < thresh)
-
-
-def stratified_fixed_n(
-    df: DataFrame,
-    strata_col: str,
-    n: int,
-    key_col: str,
-    n_salt: int = 32,
-) -> DataFrame:
-    """EXACTLY min(n, |stratum|) rows per stratum, chosen by key hash —
-    a deterministic uniform draw with an exact count guarantee.
-
-    A plain row_number() partitioned by stratum funnels every row of a
-    stratum into one reducer — a whole-stratum-sized partition when
-    strata are few and huge (the common case: language, source). Same
-    fix as similarity._topk_per_query: phase 1 takes a local top-n per
-    (stratum, salt); phase 2 refines over <= n_salt * n rows per
-    stratum. (hash asc, key asc) is a total order, so the result is
-    identical to the single-phase ranking.
-    """
-    h = F.expr(HASH60.format(x=key_col))
-    order = (h.asc(), F.col(key_col).asc())
-    salted = df.withColumn("_salt", F.pmod(h, F.lit(n_salt)))
-    w_local = W.partitionBy(strata_col, "_salt").orderBy(*order)
-    pre = salted.withColumn("_lrnk", F.row_number().over(w_local)).filter(
-        F.col("_lrnk") <= n
-    )
-    w = W.partitionBy(strata_col).orderBy(*order)
-    return (
-        pre.withColumn("_rnk", F.row_number().over(w))
-        .filter(F.col("_rnk") <= n)
-        .drop("_salt", "_lrnk", "_rnk")
-    )
-
-
-def rebalance_to_target(
-    df: DataFrame,
-    strata_col: str,
-    targets: dict,
-    key_col: str,
-    weight_col: str | None = None,
-    buckets: int = 10_000,
-) -> DataFrame:
-    """Down-sample strata so the kept mixture matches ``targets`` — the
-    domain-weighting step of corpus assembly (Pile/Dolma-style mixes).
-
-    ``targets`` maps stratum value -> desired share of the OUTPUT
-    (shares are normalized; strata absent from the dict are dropped).
-    Only down-sampling is applied: the binding stratum (the one whose
-    available mass most undershoots its target) is kept whole and every
-    other stratum is thinned to match, which yields the largest corpus
-    achieving the target mixture. Mass is row count, or the sum of
-    ``weight_col`` (e.g. token counts) when given.
-
-    Two passes: one tiny per-stratum aggregate (collected — O(strata)),
-    then one deterministic hash filter (zero shuffle, reproducible).
-    """
-    tot = sum(targets.values())
-    shares = {k: v / tot for k, v in targets.items()}
-    w = F.col(weight_col) if weight_col else F.lit(1)
-    avail = {
-        r["s"]: r["m"]
-        for r in df.groupBy(F.col(strata_col).alias("s"))
-        .agg(F.sum(w).alias("m"))
-        .collect()
-        if r["s"] in shares
-    }
-    if not avail:
-        return df.filter(F.lit(False))
-    # total output mass is limited by the stratum with the least
-    # available mass relative to its share
-    out_total = min(avail[s] / shares[s] for s in avail)
-    fractions = {s: min(1.0, (shares[s] * out_total) / avail[s]) for s in avail}
-    return stratified_sample(df, strata_col, fractions, key_col, buckets)
-
-
-def weighted_sample_n(
-    df: DataFrame,
-    weight_col: str,
-    n: int,
-    key_col: str,
-    n_salt: int = 32,
-) -> DataFrame:
-    """Weighted sampling WITHOUT replacement: exactly min(n, rows) rows,
-    inclusion probability proportional to ``weight_col`` — deterministic
-    and engine-reproducible.
-
-    Efraimidis–Spirakis A-ES: draw u ~ U(0,1] per row, rank by u^(1/w)
-    descending, take the top n. The uniform draw is derived from the md5
-    key hash (u = (h+1)/2^60], so reruns and engines agree; ranking by
-    the equivalent -ln(u)/w ASCENDING avoids u^(1/w) underflow for tiny
-    weights. Rows with weight <= 0 or NULL are excluded (standard A-ES
-    domain). Top-n runs as the salted two-phase ranking — no global
-    single-reducer sort.
-    """
-    h = F.expr(HASH60.format(x=f"cast({key_col} as string)"))
-    u = (h + F.lit(1.0)) / F.lit(float(1 << 60))
-    key = -F.log(u) / F.col(weight_col)
-    base = df.filter(F.col(weight_col) > 0).withColumn("_es_key", key)
-    order = (F.col("_es_key").asc(), F.col(key_col).asc())
-    salted = base.withColumn("_salt", F.pmod(h, F.lit(n_salt)))
-    w_local = W.partitionBy("_salt").orderBy(*order)
-    pre = salted.withColumn("_lrnk", F.row_number().over(w_local)).filter(
-        F.col("_lrnk") <= n
-    )
-    w_all = W.partitionBy().orderBy(*order)
-    return (
-        pre.withColumn("_rnk", F.row_number().over(w_all))
-        .filter(F.col("_rnk") <= n)
-        .drop("_es_key", "_salt", "_lrnk", "_rnk")
-    )
-
-
-def mix_corpora(
-    sources: dict,
-    weights: dict,
-    key_col: str = "doc_id",
-    buckets: int = 10_000,
-) -> DataFrame:
-    """Deterministic weighted mixture of multiple corpora (the Pile /
-    Dolma assembly step): union the sources with a `source` tag, keeping
-    each source's deterministic hash-fraction so the OUTPUT mixture
-    follows ``weights``.
-
-    Weights are interpreted like ``rebalance_to_target``: shares of the
-    output, normalized; the binding source (least mass relative to its
-    share) is kept whole, others down-sample — the largest corpus with
-    the requested mixture. Zero shuffle: tag + filter + union.
-    """
-    from functools import reduce
-
-    import pyspark.sql.functions as F
-
-    tot = sum(weights[s] for s in sources)
-    shares = {s: weights[s] / tot for s in sources}
-    masses = {s: df.count() for s, df in sources.items()}
-    out_total = min(masses[s] / shares[s] for s in sources)
-    parts = []
-    for s, df in sources.items():
-        frac = min(1.0, (shares[s] * out_total) / masses[s]) if masses[s] else 0.0
-        kept = df.filter(hash_bucket(key_col, buckets) < int(frac * buckets))
-        parts.append(kept.withColumn("source", F.lit(s)))
-    return reduce(lambda a, b: a.unionByName(b), parts)
-
-
-def temperature_weights(
-    df: DataFrame, strata_col: str, alpha: float = 0.7, weight_col: str | None = None
-) -> dict:
-    """Temperature-scaled mixture targets: share_i proportional to
-    size_i ** alpha — the standard multilingual/domain re-weighting
-    (alpha=1 keeps natural proportions, alpha=0 is uniform, 0.3-0.7
-    up-weights small domains). One O(strata) aggregate; the returned
-    dict feeds ``rebalance_to_target`` directly."""
-    agg = F.count("*") if weight_col is None else F.sum(weight_col)
-    sizes = {
-        r[strata_col]: float(r["_n"])
-        for r in df.groupBy(strata_col).agg(agg.alias("_n")).collect()
-    }
-    powered = {k: v**alpha for k, v in sizes.items() if v > 0}
-    total = sum(powered.values())
-    return {k: v / total for k, v in powered.items()}

@@ -18,10 +18,6 @@ Scale design
   map-side hash probe against the term-partitioned postings; the only
   shuffles are the per-(query, doc) score sum and the salted two-phase
   top-k borrowed from similarity.py (no per-query reducer funnel).
-* At 100 TB the postings are written once (partitioned by a term hash)
-  and every query batch reuses them; ``write_postings`` /
-  ``bm25_topk_from_postings`` are that path. df/N/avgdl are corpus
-  constants — computed once with the index, broadcast ever after.
 
 BM25 uses the Robertson/Sparck-Jones idf with the standard +0.5
 smoothing, floored at 0 (Lucene-style) so ultra-common terms cannot
@@ -70,20 +66,6 @@ def build_postings(docs: DataFrame, term_filter: DataFrame | None = None) -> Dat
         .agg(F.count("*").alias("tf"))
         .select("term", "doc_id", "tf", "dl")
     )
-
-
-def corpus_stats(postings: DataFrame) -> DataFrame:
-    """(term, df, n_docs, avgdl): document frequency + corpus constants.
-
-    df is term-keyed (partial agg); N and avgdl are a single global agg
-    over the per-doc lengths, cross-joined back as a 1-row broadcast.
-    """
-    df = postings.groupBy("term").agg(F.count("*").alias("df"))
-    per_doc = postings.select("doc_id", "dl").distinct()
-    consts = per_doc.agg(
-        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    return df.crossJoin(F.broadcast(consts))
 
 
 def _query_terms(spark: SparkSession, queries: dict[str, str] | DataFrame) -> DataFrame:
@@ -226,10 +208,8 @@ def bm25_topk(
             # still derives from the integer df inside the SAME JVM
             # expression (bm25_score_expr), so scores are
             # bit-identical (r12 opt round).
-            # dl > 0 keeps the exact semantics of corpus_stats (which
-            # derives the constants from postings, where token-less
-            # docs never appear) — the persisted-index path stays
-            # result-identical.
+            # dl > 0: token-less docs never enter n_docs/avgdl (they
+            # have no postings rows either).
             onerow = pruned.filter(F.col("dl") > 0).agg(
                 F.count("*").alias("n_docs"),
                 F.avg("dl").alias("avgdl"),
@@ -310,52 +290,3 @@ def _bm25_rank(postings, stats, qterms, k, k1, b):
     return ranked.withColumnRenamed("cos", "score").select(
         "query_id", "doc_id", "score", "rnk"
     )
-
-
-def write_postings(docs: DataFrame, path: str, buckets: int = 64) -> None:
-    """Materialize the inverted index once — the 100 TB amortization path.
-
-    ``{path}/postings`` is partitioned by a term-hash bucket so a query
-    batch prunes to the buckets its terms hash into instead of scanning
-    the full index; ``{path}/stats`` holds (term, df, n_docs, avgdl),
-    bucketed the same way, computed ONCE here so query batches never
-    re-aggregate the corpus.
-    """
-    postings = build_postings(docs).withColumn(
-        "term_bucket", F.pmod(F.hash("term"), F.lit(buckets))
-    )
-    postings.write.mode("overwrite").partitionBy("term_bucket").parquet(
-        f"{path}/postings"
-    )
-    corpus_stats(postings.drop("term_bucket")).withColumn(
-        "term_bucket", F.pmod(F.hash("term"), F.lit(buckets))
-    ).write.mode("overwrite").partitionBy("term_bucket").parquet(f"{path}/stats")
-
-
-def bm25_topk_from_postings(
-    spark: SparkSession,
-    path: str,
-    queries: dict[str, str] | DataFrame,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    buckets: int = 64,
-) -> DataFrame:
-    """BM25 over a pre-built index: both the postings scan and the stats
-    scan prune to the query terms' hash buckets (partition pruning on
-    term_bucket), so cost scales with the matched postings, not the
-    corpus."""
-    qterms = _query_terms(spark, queries)
-    q_buckets = [
-        r["b"]
-        for r in qterms.select(
-            F.pmod(F.hash("term"), F.lit(buckets)).alias("b")
-        ).distinct().collect()
-    ]
-    pruned = spark.read.parquet(f"{path}/postings").filter(
-        F.col("term_bucket").isin(q_buckets)
-    )
-    stats = spark.read.parquet(f"{path}/stats").filter(
-        F.col("term_bucket").isin(q_buckets)
-    )
-    return _bm25_rank(pruned, stats, qterms, k, k1, b)

@@ -4,11 +4,14 @@
                         Dot products are JVM-side zip_with/aggregate
                         lambdas in double precision (oracle-parity with
                         DuckDB's list_cosine_similarity on DOUBLE[]).
-- ``srp_buckets`` /
-  ``srp_ann_topk``    — the scale path: sign-random-projection LSH.
-                        Vectors hash to a B-bit bucket; only same-bucket
-                        (plus optional 1-bit-probe) pairs are scored, so
-                        the pair count drops from N² to Σ bucket².
+- ``srp_int_ann_topk`` /
+  ``srp_tables_neardup_pairs``
+                      — the scale path: integer-quantized multi-table
+                        sign-random-projection LSH. Vectors hash to a
+                        B-bit bucket per table; only same-bucket pairs
+                        are scored, so the pair count drops from N² to
+                        Σ bucket².
+- ``ivf_int_ann_topk`` — IVF over deterministic integer k-means cells.
 
 At 100 TB the brute-force join is a broadcast of the query side against
 a partitioned corpus (queries ≪ corpus); srp buckets turn that into a
@@ -173,45 +176,6 @@ def cosine_topk_blas(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFram
     )
 
 
-def srp_planes(dim: int, n_bits: int = 8, seed: int = 11) -> list[list[float]]:
-    """Deterministic random hyperplanes for sign-random-projection."""
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)]
-
-
-def srp_buckets(emb: DataFrame, dim: int, n_bits: int = 8, seed: int = 11) -> DataFrame:
-    """Assign each vector a B-bit LSH bucket (JVM-side expressions only)."""
-    planes = srp_planes(dim, n_bits, seed)
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        arr = "array(" + ", ".join(f"cast({x!r} as double)" for x in plane) + ")"
-        dot = F.expr(
-            f"aggregate(zip_with(embedding, {arr}, (x, y) -> cast(x as double) * y),"
-            " cast(0.0 as double), (acc, v) -> acc + v)"
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(1 << i)).otherwise(0)
-    return emb.withColumn("bucket", bucket)
-
-
-def srp_neardup_pairs(emb: DataFrame, dim: int, min_cos: float, n_bits: int = 6, seed: int = 11) -> DataFrame:
-    """Scale path for embedding near-dup: candidate pairs only within an
-    SRP bucket, then exact cosine filter. Recall trades against n_bits
-    (each bit halves bucket size; a true near-dup pair lands in the same
-    bucket with prob (1 - θ/π)^bits for angle θ). The bucket equi-join
-    replaces the N² cross join of cosine_pairs."""
-    b = srp_buckets(emb, dim, n_bits, seed)
-    a = b.alias("a")
-    c = b.alias("b")
-    joined = a.join(
-        c, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.vec_id") < F.col("b.vec_id"))
-    )
-    return (
-        with_cosine(joined)
-        .filter(F.col("cos") >= min_cos)
-        .select(F.col("a.vec_id").alias("id1"), F.col("b.vec_id").alias("id2"), "cos")
-    )
-
-
 def srp_int_planes(dim: int, n_planes: int, seed: int = 11) -> list[list[float]]:
     """Deterministic ±1 hyperplanes for integer-quantized SRP."""
     rng = random.Random(seed)
@@ -224,7 +188,7 @@ def _int_bucket(planes: list[list[float]], scale: int) -> Column:
     Each float is quantized to floor(x·scale) (an integer-valued double,
     exact in IEEE754 up to 2⁵³), and the hyperplane entries are ±1 — so
     the dot product is exact integer arithmetic and the sign, hence the
-    bucket, is bit-identical across engines. Float-sign SRP (srp_buckets)
+    bucket, is bit-identical across engines. Float-sign SRP
     cannot be oracle-checked because a last-ulp summation difference can
     flip a bucket; this variant can.
     """
@@ -345,162 +309,6 @@ def srp_int_ann_topk(
     )
 
 
-def write_srp_buckets(
-    emb: DataFrame,
-    path: str,
-    dim: int,
-    n_tables: int = 4,
-    n_bits: int = 4,
-    seed: int = 11,
-    scale: int = 10000,
-) -> None:
-    """The 100 TB shape for the SRP family: compute the integer-quantized
-    multi-table buckets ONCE and write the melted
-    (vec_id, embedding, tidx, bucket) corpus partitioned by (tidx,
-    bucket) — candidate generation then partition-prunes straight to the
-    colliding buckets, and the projection math never runs twice."""
-    planes = srp_int_planes(dim, n_tables * n_bits, seed)
-    b = emb.select("vec_id", "embedding")
-    for t in range(n_tables):
-        b = b.withColumn(f"bk{t}", _int_bucket(planes[t * n_bits : (t + 1) * n_bits], scale))
-    melted = b.select(
-        "vec_id",
-        "embedding",
-        F.posexplode(F.array(*[F.col(f"bk{t}") for t in range(n_tables)])).alias("tidx", "bucket"),
-    )
-    melted.write.mode("overwrite").partitionBy("tidx", "bucket").parquet(path)
-
-
-def srp_neardup_pairs_from_buckets(spark, path: str, min_cos: float) -> DataFrame:
-    """Near-dup pairs over a materialized bucketed corpus — same result
-    as srp_tables_neardup_pairs on the source embeddings, but the
-    self-join reads the pre-bucketed table (bucket-partition-local at
-    scale) instead of recomputing the projections."""
-    melted = spark.read.parquet(path)
-    a = melted.alias("a")
-    c = melted.alias("b")
-    joined = a.join(
-        c,
-        (F.col("a.tidx") == F.col("b.tidx"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    )
-    scored = with_cosine(joined).select(
-        F.col("a.vec_id").alias("id1"), F.col("b.vec_id").alias("id2"), "cos"
-    )
-    return (
-        scored.groupBy("id1", "id2")
-        .agg(F.first("cos").alias("cos"))
-        .filter(F.col("cos") >= min_cos)
-    )
-
-
-def ivf_centroids(emb: DataFrame, n_centroids: int = 16, seed: int = 13, max_iter: int = 10) -> DataFrame:
-    """IVF coarse quantizer: k-means centroids over the corpus
-    (Spark ML KMeans — one pass of distributed Lloyd's per iter).
-    Returns (cid, centroid array<double>)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    feats = emb.select(
-        "vec_id", array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(feats)
-    spark = emb.sparkSession
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    return spark.createDataFrame(rows, "cid int, centroid array<double>")
-
-
-def _sqdist(a: str, b: str) -> Column:
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (cast(x as double) - cast(y as double)) *"
-        f" (cast(x as double) - cast(y as double))), cast(0.0 as double), (acc, v) -> acc + v)"
-    )
-
-
-def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Assign each vector to its nearest centroid. The centroid table is
-    tiny and broadcast; the 'cross join then min_by' is the standard IVF
-    assignment — corpus×K rows exist only inside one map-side stage."""
-    joined = emb.crossJoin(F.broadcast(centroids))
-    d = _sqdist("embedding", "centroid")
-    return joined.groupBy("vec_id").agg(
-        F.min_by("cid", d).alias("cid"),
-        F.first("embedding").alias("embedding"),
-    )
-
-
-def ivf_ann_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    seed: int = 13,
-) -> DataFrame:
-    """IVF ANN: score only vectors whose cell is among the query's
-    ``nprobe`` nearest centroids. At scale the corpus is written
-    partitioned by cid once; each query batch touches nprobe/K of it."""
-    cents = centroids = ivf_centroids(emb, n_centroids, seed)
-    corpus = ivf_assign(emb, centroids).alias("c")
-    qj = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb")).crossJoin(
-        F.broadcast(cents)
-    )
-    d = _sqdist("qemb", "centroid")
-    w_probe = W.partitionBy("query_id").orderBy(d, "cid")
-    probes = (
-        qj.withColumn("prnk", F.row_number().over(w_probe))
-        .filter(F.col("prnk") <= nprobe)
-        .select("query_id", "qemb", "cid")
-        .alias("q")
-    )
-    scored = corpus.join(
-        F.broadcast(probes),
-        (F.col("c.cid") == F.col("q.cid")) & (F.col("c.vec_id") != F.col("query_id")),
-    ).withColumn("cos", _dot("qemb", "c.embedding") / (_norm("qemb") * _norm("c.embedding")))
-    return _topk_per_query(scored, k).select(
-        "query_id", F.col("c.vec_id").alias("neighbor_id"), "cos", "rnk"
-    )
-
-
-def write_ivf_index(
-    emb: DataFrame, path: str, n_centroids: int = 16, seed: int = 13
-) -> None:
-    """The 100 TB shape for IVF: train the coarse quantizer and write the
-    assigned corpus ONCE, partitioned by cell id — each query batch then
-    partition-prunes to its nprobe cells instead of re-clustering and
-    re-scanning the corpus. Centroids ride along as a tiny side table."""
-    centroids = ivf_centroids(emb, n_centroids, seed)
-    ivf_assign(emb, centroids).write.mode("overwrite").partitionBy("cid").parquet(f"{path}/corpus")
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_ann_topk_from_index(
-    spark, path: str, queries: DataFrame, k: int = 5, nprobe: int = 4
-) -> DataFrame:
-    """IVF ANN over a materialized index — same scoring/ranking as
-    ivf_ann_topk, but the corpus read partition-prunes to the probed
-    cells (cid is a partition column) and k-means never reruns."""
-    corpus = spark.read.parquet(f"{path}/corpus").alias("c")
-    cents = F.broadcast(spark.read.parquet(f"{path}/centroids"))
-    qj = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb")).crossJoin(cents)
-    d = _sqdist("qemb", "centroid")
-    w_probe = W.partitionBy("query_id").orderBy(d, "cid")
-    probes = (
-        qj.withColumn("prnk", F.row_number().over(w_probe))
-        .filter(F.col("prnk") <= nprobe)
-        .select("query_id", "qemb", "cid")
-        .alias("q")
-    )
-    scored = corpus.join(
-        F.broadcast(probes),
-        (F.col("c.cid") == F.col("q.cid")) & (F.col("c.vec_id") != F.col("query_id")),
-    ).withColumn("cos", _dot("qemb", "c.embedding") / (_norm("qemb") * _norm("c.embedding")))
-    return _topk_per_query(scored, k).select(
-        "query_id", F.col("c.vec_id").alias("neighbor_id"), "cos", "rnk"
-    )
-
-
 IVF_INT_SCALE = 10000
 
 
@@ -538,8 +346,7 @@ def ivf_int_centroids(
     """Deterministic integer k-means: hash-seeded init + a FIXED number
     of Lloyd steps, all arithmetic exact integers — so ANY engine
     computes bit-identical centroids (the n10/n16 quantization recipe
-    applied to n15's seeded-KMeans problem; MLlib ``ivf_centroids``
-    stays the scale API for real recall-tuned indexes).
+    applied to n15's seeded-KMeans problem).
 
     * init: the ``n_centroids`` vectors with the smallest
       (md5-hash(vec_id), vec_id) — a cross-engine total order.
@@ -612,8 +419,8 @@ def ivf_int_ann_topk(
     ``ivf_int_centroids`` quantizer, exact-integer cell assignment and
     probe selection, exact double cosine over the ORIGINAL embeddings
     for ranking (the same _dot/_norm chain the hash-green n9 baseline
-    uses). Same plan shape as ``ivf_ann_topk``: broadcast centroids,
-    map-side assignment, candidate set = nprobe cells per query."""
+    uses). Broadcast centroids, map-side assignment, candidate set =
+    nprobe cells per query."""
     spark = emb.sparkSession
     cents = ivf_int_centroids(emb, dim, n_centroids, n_iter, scale)
     cdf = F.broadcast(
@@ -653,31 +460,6 @@ def ivf_int_ann_topk(
         F.broadcast(probes),
         (F.col("c.cid") == F.col("q.cid")) & (F.col("c.vec_id") != F.col("query_id")),
     ).withColumn("cos", _dot("qemb", "c.embedding") / (_norm("qemb") * _norm("c.embedding")))
-    return _topk_per_query(scored, k).select(
-        "query_id", F.col("c.vec_id").alias("neighbor_id"), "cos", "rnk"
-    )
-
-
-def srp_ann_topk(
-    emb: DataFrame, queries: DataFrame, dim: int, k: int = 5, n_bits: int = 8, seed: int = 11
-) -> DataFrame:
-    """Approximate top-k: score only same-bucket candidates.
-
-    Recall is tunable via n_bits (fewer bits → bigger buckets → higher
-    recall, more compute). The candidate join is a bucket equi-join —
-    at scale, the corpus is hash-partitioned by bucket once and reused
-    across query batches.
-    """
-    c = srp_buckets(emb, dim, n_bits, seed).alias("c")
-    q = F.broadcast(
-        srp_buckets(queries, dim, n_bits, seed).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb"), F.col("bucket").alias("qbucket")
-        )
-    ).alias("q")
-    scored = (
-        c.join(q, (F.col("c.bucket") == F.col("qbucket")) & (F.col("c.vec_id") != F.col("query_id")))
-        .withColumn("cos", _dot("qemb", "c.embedding") / (_norm("qemb") * _norm("c.embedding")))
-    )
     return _topk_per_query(scored, k).select(
         "query_id", F.col("c.vec_id").alias("neighbor_id"), "cos", "rnk"
     )

@@ -134,65 +134,3 @@ def fingerprint(docs: DataFrame) -> DataFrame:
     h = F.expr(WORD_HASH60.format(w="w"))
     contrib = (F.col("pos") + 1) * (h % 1000003)
     return df.groupBy("doc_id").agg(F.sum(contrib).alias("fp"))
-
-
-def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Standard pre-tokenization normalization, all codegen: strip
-    control characters (keep \\n and \\t), collapse runs of spaces/tabs,
-    normalize \\r\\n|\\r to \\n, trim line edges. Deliberately does NOT
-    lowercase or touch unicode letters — case and diacritics carry
-    signal for LID/quality; callers lowercase at tokenization time."""
-    c = F.col(text_col)
-    c = F.regexp_replace(c, "\\r\\n|\\r", "\n")
-    c = F.regexp_replace(c, "[\\x00-\\x08\\x0b-\\x1f\\x7f]", "")
-    c = F.regexp_replace(c, "[ \\t]+", " ")
-    c = F.regexp_replace(c, " ?\\n ?", "\n")
-    return docs.withColumn(text_col, F.trim(c))
-
-
-def chunk_documents(
-    docs: DataFrame,
-    max_tokens: int = 128,
-    overlap: int = 16,
-    text_col: str = "text",
-) -> DataFrame:
-    """Split documents into overlapping token-bounded chunks — the
-    retrieval/embedding unit for RAG-style indexing over a corpus.
-
-    Output: (doc_id, chunk_id, chunk_pos, n_chunk_tokens, chunk). Chunks
-    start every ``max_tokens - overlap`` tokens (stride), each carrying
-    up to ``max_tokens`` tokens; the last chunk is the remainder (no
-    padding). chunk_id is deterministic: doc-local ordinal. Row-local
-    explode — the only cost is the output's own size; no shuffle, no
-    Python.
-    """
-    if overlap >= max_tokens:
-        raise ValueError("overlap must be < max_tokens")
-    stride = max_tokens - overlap
-    # split('', ' ') yields [''] — filter empty tokens so an
-    # empty/whitespace-only doc produces ZERO chunks (not one spurious
-    # empty chunk claiming n_chunk_tokens=1), and count tokens from the
-    # slice length, not by re-splitting the joined chunk string.
-    chunks = F.expr(
-        f"""transform(
-              sequence(1, greatest(size(ws) - {overlap}, 1), {stride}),
-              i -> named_struct(
-                'chunk_pos', i,
-                'n_chunk_tokens', least({max_tokens}, size(ws) - i + 1),
-                'chunk', concat_ws(' ', slice(ws, i, {max_tokens}))))"""
-    )
-    return (
-        docs.select(
-            "doc_id",
-            F.expr(f"filter(split({text_col}, ' '), w -> w != '')").alias("ws"),
-        )
-        .filter(F.size("ws") > 0)
-        .select("doc_id", F.posexplode(chunks).alias("chunk_id", "c"))
-        .select(
-            "doc_id",
-            "chunk_id",
-            F.col("c.chunk_pos").alias("chunk_pos"),
-            F.col("c.n_chunk_tokens").alias("n_chunk_tokens"),
-            F.col("c.chunk").alias("chunk"),
-        )
-    )

@@ -12,11 +12,11 @@ word-count shuffle; E-steps run forward-backward per word TYPE
 standard shrink schedule (drop the lowest-expected-count multi-char
 pieces by a fixed factor per round until the target size).
 
-Encoding mirrors ``bpe_encode`` exactly: Viterbi is inherently
+Counting mirrors ``bpe_token_counts`` exactly: Viterbi is inherently
 per-word-iterative, so Python runs ONLY over distinct word types (one
 Arrow pandas_udf bounded by |vocabulary of the corpus|); the corpus
-side is pure JVM — posexplode → broadcast (word → ids) join →
-positional reassemble.
+side is pure JVM — explode → broadcast (word → ids) join → per-doc
+partial aggregate.
 
 Determinism: EM is order-free arithmetic over sorted pieces; pruning
 ties break on the piece string; Viterbi ties prefer the LONGER piece at
@@ -263,46 +263,3 @@ def unigram_token_counts(
             F.coalesce("n_unigram_tokens", F.lit(0)).cast("long").alias("n_unigram_tokens"),
         )
     )
-
-
-def unigram_encode(
-    docs: DataFrame,
-    model: UnigramModel,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(key_col, token_ids): full corpus encoding — JVM-side except the
-    word-type Viterbi table (the ``bpe_encode`` plan)."""
-    words = docs.select(
-        key_col, F.posexplode(F.split(text_col, " ")).alias("pos", "w")
-    ).filter(F.col("w") != "")
-    mapped = words.join(F.broadcast(_word_ids_table(docs, model, text_col)), "w")
-    seqs = (
-        mapped.select(key_col, "pos", "ids")
-        .groupBy(key_col)
-        .agg(
-            F.flatten(
-                F.expr("transform(array_sort(collect_list(struct(pos, ids))), s -> s.ids)")
-            ).alias("token_ids")
-        )
-    )
-    return (
-        docs.select(key_col)
-        .join(seqs, key_col, "left")
-        .select(
-            key_col,
-            F.coalesce("token_ids", F.expr("cast(array() as array<int>)")).alias(
-                "token_ids"
-            ),
-        )
-    )
-
-
-def corpus_log_likelihood(word_freqs: list, model: UnigramModel) -> float:
-    """Σ freq · log P(word) under the model's marginalized segmentation
-    distribution — the EM objective, exposed for the monotonicity test."""
-    total = 0.0
-    for w, f in word_freqs:
-        counts: dict = {}
-        total += _forward_backward(w, f, model.logprobs, model.max_piece_len, counts)
-    return total

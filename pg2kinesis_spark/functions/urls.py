@@ -45,9 +45,8 @@ from pg2kinesis_spark.functions.dedup import HASH60
 # every wildcard TLD, the second-level registration suffixes of the
 # major ccTLDs, and the most common private-section hosting suffixes —
 # the entries that actually change registered-domain grouping for a
-# web corpus. For exact parity with the full ~9k-rule list, pass the
-# lines of the real public_suffix_list.dat to ``compile_psl`` — the SAME
-# compiler turns either rule set into one pure longest-match column
+# web corpus. ``compile_psl`` turns the rules into the lookup structure
+# that ``_rd_case_sql`` renders as one pure longest-match column
 # expression (IN over literal sets -> Catalyst InSet; map-only, no UDF,
 # no join).
 # --------------------------------------------------------------------------
@@ -215,13 +214,12 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _rd_case_sql(host_sql: str, psl: dict | None = None) -> str:
+def _rd_case_sql(host_sql: str) -> str:
     """eTLD+1 of ``host_sql`` under the PUBLIC SUFFIX LIST longest-match
     algorithm (publicsuffix.org) as one SQL CASE: exceptions beat
     wildcards, longer rules beat shorter, the implicit ``*`` default
     makes every bare TLD a suffix, and a NULL host gives a NULL domain.
-    ``psl`` is a ``compile_psl`` structure (default: the vendored
-    built-in subset).
+    The rules are the vendored built-in subset (``_PSL_COMPILED``).
 
     Rendered as ONE string and parsed JVM-side in a single call: a
     Column-API builder of the same tree made ~550 literal Column objects
@@ -230,7 +228,7 @@ def _rd_case_sql(host_sql: str, psl: dict | None = None) -> str:
     mirror; ``test_urls.py::test_registered_domain_sql_twin`` pins the
     two against each other.
     """
-    p = psl or _PSL_COMPILED
+    p = _PSL_COMPILED
     parts = f"split({host_sql}, '\\\\.')"
     n = f"size({parts})"
 
@@ -267,10 +265,10 @@ def _rd_case_sql(host_sql: str, psl: dict | None = None) -> str:
     return "CASE " + " ".join(clauses) + f" ELSE {last(2)} END"
 
 
-def _registered_domain_expr(host_sql: str, psl: dict | None = None) -> Column:
+def _registered_domain_expr(host_sql: str) -> Column:
     """Registered domain (eTLD+1) of a SQL-text host expression
     (``_rd_case_sql``) as a Column."""
-    return F.expr(_rd_case_sql(host_sql, psl))
+    return F.expr(_rd_case_sql(host_sql))
 
 
 def normalize_url(url: str | Column = "url") -> Column:
@@ -394,14 +392,14 @@ def url_dedup(
     return df.join(losers, id_col, "left_anti")
 
 
-def _py_is_public_suffix(b: str, psl: dict | None = None) -> bool:
+def _py_is_public_suffix(b: str) -> bool:
     """True when ``b`` itself is a public suffix under the compiled PSL
     (exact rule, wildcard-covered label, exception rules excluded, and
     the implicit ``*`` rule for bare TLDs). A blocklist entry that is a
     suffix — ``blogspot.com``-style private hosting suffixes above all —
     must match by HOST suffix, not registered-domain equality: its
     subdomains each have their OWN registered domain."""
-    p = psl or _PSL_COMPILED
+    p = _PSL_COMPILED
     parts = b.split(".")
     n = len(parts)
     for ln in p["exc"]:
@@ -414,10 +412,10 @@ def _py_is_public_suffix(b: str, psl: dict | None = None) -> bool:
     return n == 1  # implicit '*': every bare TLD is a suffix
 
 
-def _py_registered(b: str, psl: dict | None = None) -> str:
+def _py_registered(b: str) -> str:
     """Pure-Python mirror of ``_rd_case_sql`` — used to split
     blocklists at compile time and as the cross-checked test oracle."""
-    p = psl or _PSL_COMPILED
+    p = _PSL_COMPILED
     parts = b.split(".")
     n = len(parts)
     if n <= 1:

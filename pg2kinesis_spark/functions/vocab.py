@@ -2,25 +2,18 @@
 
 Token counting against a REAL (learned, bounded) vocabulary is how a
 training pipeline budgets data; the heuristic whitespace/BPE-regex
-counters in text.py approximate it. This module learns a word-level
-vocabulary from the corpus (top-N by frequency — the WordPiece/unigram
-initialization step) with single-character fallback units, and encodes
-documents to id sequences entirely with DataFrame operators.
+counters in text.py approximate it. This module encodes documents
+against a word-level vocabulary ``(token, token_id)`` with
+single-character fallback units, entirely with DataFrame operators.
 
 Scale design
 ------------
-* ``build_vocab``: one explode + (word)-keyed partial-agg count, then a
-  global top-N via ``orderBy(...).limit(N)`` — Spark executes that as
-  TakeOrderedAndProject (per-partition heaps + driver merge of N·P
-  rows), NOT a global sort.
 * ``encode``: the OBVIOUS implementation (a Python trie/dict UDF) is
   the slow path; instead words are posexploded, id-mapped via a
   BROADCAST join against the vocab, OOV words decompose to their
   characters (fallback ids) in-row, and sequences reassemble with one
   doc_id-keyed sort-within-group collect. Everything stays in the JVM;
   the vocab rides once per executor.
-* Determinism: ties in vocab selection break on the token string, so
-  the same corpus always yields the same vocab and the same encoding.
 """
 
 from __future__ import annotations
@@ -31,28 +24,6 @@ from pyspark.sql import functions as F
 # id layout: [0, 256) reserved for single-character fallback units
 # (codepoint pmod 256 — the fake "byte" tier); learned words start at 256.
 CHAR_BASE = 256
-UNK_ID = 0
-
-
-def build_vocab(docs: DataFrame, size: int = 8192) -> DataFrame:
-    """(token, token_id, freq): top-``size`` words by corpus frequency,
-    ids assigned in (freq desc, token asc) order starting at CHAR_BASE."""
-    counts = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
-        .filter(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count("*").alias("freq"))
-        .orderBy(F.col("freq").desc(), F.col("token"))
-        .limit(size)
-    )
-    from pyspark.sql import Window as W
-
-    # the limit(size) output is <= size rows: a single-partition id
-    # stamp over it is bounded by the vocab, not the corpus
-    w = W.orderBy(F.col("freq").desc(), F.col("token"))
-    return counts.withColumn(
-        "token_id", F.row_number().over(w) + F.lit(CHAR_BASE - 1)
-    )
 
 
 def encode(docs: DataFrame, vocab: DataFrame) -> DataFrame:
@@ -90,10 +61,3 @@ def encode(docs: DataFrame, vocab: DataFrame) -> DataFrame:
             ),
         )
     )
-
-
-def vocab_token_counts(docs: DataFrame, vocab: DataFrame) -> DataFrame:
-    """(doc_id, n_vocab_tokens): sequence length under the fixed vocab —
-    the budget-true token count (OOV words cost one id per character)."""
-    enc = encode(docs, vocab)
-    return enc.select("doc_id", F.size("token_ids").alias("n_vocab_tokens"))

@@ -21,9 +21,9 @@ Truncate emits one change row per truncated rel (operation
 ``truncate``, NULL pkey/row). The Kinesis stream puts one ``truncate``
 message per truncated rel (no pkey) and counts the wire message once.
 A row naming a rel_id no Relation message registered carries
-``UNKNOWN_RELATION_ERROR`` in its ``error`` column, from
-``pgoutput_cdc_changes`` and from the stream alike; the sink fail-stops
-on it.
+``UNKNOWN_RELATION_ERROR`` in its ``error`` column; the sink fail-stops
+on it. ``PKEY_SQL`` and ``ERROR_SQL`` state the pkey and error rules
+once, for ``pgoutput_cdc_changes`` and the stream alike.
 
 Scale design
 ------------
@@ -58,8 +58,26 @@ from pyspark.sql import types as T
 from pg2kinesis_spark.session import forget_zip_importers
 
 # format_string pattern of the fail-stop error for a change row whose
-# rel_id has no Relation message (the one text both parse paths write)
+# rel_id has no Relation message
 UNKNOWN_RELATION_ERROR = "no Relation message for rel_id %s"
+
+# The change-row rules as SQL text over decoded rows joined to the
+# registry (operation, old_values, col_values, col_names, key_cols,
+# `table`, rel_id). The pkey is the first replica-identity column of the
+# effective tuple (old for a delete: 'K' and 'O' old tuples both use the
+# full column layout, so one position lookup covers every op), 'None'
+# when that value is NULL; a truncate carries no tuple and no pkey. Frame
+# rows (begin/commit) get neither a pkey nor an error.
+_TUPLE = "IF(operation = 'delete', old_values, col_values)"
+_KEY_POS = "array_position(col_names, element_at(key_cols, 1))"
+PKEY_SQL = (
+    f"CASE WHEN operation IN ('insert', 'update', 'delete') AND {_KEY_POS} > 0"
+    f" THEN coalesce(element_at({_TUPLE}, CAST({_KEY_POS} AS INT)), 'None') END"
+)
+ERROR_SQL = (
+    "CASE WHEN operation IN ('insert', 'update', 'delete', 'truncate')"
+    f" AND `table` IS NULL THEN format_string('{UNKNOWN_RELATION_ERROR}', rel_id) END"
+)
 
 # ---------------------------------------------------------------- decode
 
@@ -491,39 +509,26 @@ def pgoutput_cdc_changes(
     """A pgoutput stream as change rows: (lsn, change_idx, xid, table,
     operation, pkey, row map<string,string>, error).
 
-    pgoutput carries one change per message (change_idx = 0); the pkey
-    is the first replica-identity column (both 'K' and 'O' old tuples
-    use the full column layout, so one position lookup covers every
-    op); rows referencing a rel_id with no Relation message surface an
-    ``error`` instead of being dropped (fail-stop channel, §8.5).
+    pgoutput carries one change per message (change_idx = 0); ``pkey``
+    and ``error`` follow ``PKEY_SQL`` / ``ERROR_SQL``: rows referencing
+    a rel_id with no Relation message surface an ``error`` instead of
+    being dropped (fail-stop channel, §8.5).
     """
     parsed = parse_pgoutput(
         raw, registry=registry, payload_col=payload_col, xid_eager=xid_eager
     )
-    # ONE selectExpr parse (r13 opt round, guide §1.5): the Column-op
-    # twin built ~30 py4j-round-trip expression nodes per construction;
-    # the SQL string is expression-for-expression the same tree (CASE
-    # WHEN with no ELSE ≡ F.when with no otherwise; branch expressions
-    # evaluate lazily in both forms, so element_at never sees pos <= 0).
-    # Truncate rows carry NO tuple: pkey/row stay NULL (the registry
-    # join still resolves col_names, so the pos>0 guard alone would
-    # coalesce pkey to the 'None' sentinel and collide with real keys).
-    eff = "IF(operation = 'delete', old_values, col_values)"
-    pos = "array_position(col_names, element_at(key_cols, 1))"
-    pkey = f"coalesce(element_at({eff}, CAST({pos} AS INT)), 'None')"
+    # ONE selectExpr parse (r13 opt round, guide §1.5): a Column-op twin
+    # builds ~30 py4j-round-trip expression nodes per construction.
     return parsed.selectExpr(
         "lsn",
         "0 AS change_idx",
         "xid",
         "`table`",
         "operation",
-        f"CASE WHEN NOT (operation = 'truncate') AND {pos} > 0"
-        f" THEN {pkey} END AS pkey",
-        f"CASE WHEN NOT (operation = 'truncate')"
-        f" THEN map_from_arrays(col_names, {eff}) END AS `row`",
-        "CASE WHEN `table` IS NULL THEN"
-        f" format_string('{UNKNOWN_RELATION_ERROR}', rel_id)"
-        " END AS error",
+        f"{PKEY_SQL} AS pkey",
+        f"CASE WHEN NOT (operation = 'truncate') THEN map_from_arrays(col_names, {_TUPLE})"
+        " END AS `row`",
+        f"{ERROR_SQL} AS error",
     )
 
 

@@ -107,14 +107,16 @@ def stamp_xid_scalable(
       JOIN summary`` with the prefix computed by a window over that
       bounded frame — all lazy, scheduled inside the same job graph as
       the consuming action. This is the BACKFILL shape: a plan built
-      once and executed once pays zero driver round trips (measured
-      1.5 s -> 0.5 s build+count on the 450k-line bench corpus). The
-      eager literal-map default pays its two jobs once at build and is
-      cheaper only when one built plan is executed many times, as
-      bench.py's ``e2e_sink`` and steady-pgoutput entries do; the lazy
-      carry re-runs its summary scan on every execution. The streaming
-      query does not call this: it stamps in-batch with
-      ``streaming/pipeline.py::stamp_xid``.
+      once and executed once pays zero driver round trips. (The
+      1.5 s -> 0.5 s build+count once measured on the 450k-line bench
+      corpus is the eager build's two driver jobs alone: ``count()``
+      prunes ``xid``, so Catalyst drops the carry's Window and neither
+      count runs the prefix scan.) The eager literal-map default pays
+      its two jobs once at build and is cheaper only when one built
+      plan is executed many times by an action that reads ``xid``, as
+      bench.py's ``e2e_sink`` does; the lazy carry re-runs its summary
+      scan on every such execution. The streaming query does not call
+      this: it stamps in-batch with ``streaming/pipeline.py::stamp_xid``.
     """
     spark = df.sparkSession
     stats = stats_df if stats_df is not None else df
@@ -308,8 +310,12 @@ def parse_test_decoding(
     prefix scan (``stamp_xid_scalable(eager=False)``) — the right shape
     for a BACKFILL/replay job that builds the plan once and runs it
     once. The eager default pays off only when one built plan is
-    executed many times (bench.py's ``e2e_sink``); the streaming query
-    stamps in-batch and passes ``xid_precomputed=True``.
+    executed many times by an action that reads ``xid`` (bench.py's
+    ``e2e_sink``). bench.py's ``cdc_replay_450k`` times ``count()``,
+    which prunes ``xid`` and with it the carry's Window, so there the
+    knob mostly moves the eager build's two driver jobs in or out of
+    the timer. The
+    streaming query stamps in-batch and passes ``xid_precomputed=True``.
     """
     table_pat = table_pat if table_pat is not None else DEFAULT_TABLE_PAT
     # Java regex needs (?U) for Python-re \w unicode parity.

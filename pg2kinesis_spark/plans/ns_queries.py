@@ -109,8 +109,7 @@ def n12_srp_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Hash-checkable ANN: integer-quantized multi-table SRP candidates
     # (bit-identical buckets across engines) + the same double-cosine
     # (cos desc, neighbor_id) total order the exact n9 baseline
-    # hash-matches with. Float-sign srp_ann_topk survives as the pytest
-    # recall subject.
+    # hash-matches with.
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 20)
     return similarity.srp_int_ann_topk(
@@ -154,8 +153,6 @@ def n15_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n10/n16 quantization recipe applied to the quantizer itself), so
     # cells, probes, and therefore the candidate set are bit-identical
     # across engines; ranking is the hash-green n9 double-cosine chain.
-    # MLlib's seeded ivf_ann_topk stays the scale API (pytest recall +
-    # materialized-index tests).
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 20)
     return similarity.ivf_int_ann_topk(
@@ -169,8 +166,7 @@ def n16_srp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs at sf0.01 where n10 recovers 9 — demonstrating that recall
     # is tuned by adding tables, never by widening the join. Integer
     # quantization keeps the candidate set bit-identical across engines,
-    # so this is hash-checkable; the float-sign srp_neardup_pairs
-    # variant survives as the pytest recall subject (test_northstar.py).
+    # so this is hash-checkable.
     return similarity.srp_tables_neardup_pairs(
         _emb(spark, sf_dir), dim=EMB_DIM, min_cos=0.45, n_tables=8, n_bits=4, seed=29
     ).orderBy("id1", "id2")
@@ -234,8 +230,6 @@ NS_QUERIES = {
 
 _H60 = "(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
 _BPE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-_LANGS = sorted(text.LANG_MARKERS)  # de, en, es, fr
 
 
 def _score(lang: str) -> str:

@@ -69,12 +69,6 @@ def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
         shift += 7
 
 
-_TAG_PK_INDEX_B = bytes([_TAG_PK_INDEX])
-_TAG_DATA_B = bytes([_TAG_DATA])
-_TAG_RECORD_B = bytes([_TAG_RECORD])
-_TAG_PK_TABLE_B = bytes([_TAG_PK_TABLE])
-
-
 def serialize_kpl(records: list[tuple[str, bytes]]) -> bytes:
     """Pack (partition_key, data) user records into one KPL aggregate.
 

@@ -16,8 +16,8 @@ Scale/streaming design
   key stream would grow executor state forever and die on restart
   recovery at 100 TB. The index is a column-pruned scan + left-anti
   join per batch, and doubles as within-batch dedup via a groupBy.
-* Near-dup state is the signature index from
-  ``dedup.write_minhash_signatures`` — the new batch is signed ONCE;
+* Near-dup state is a written ``dedup.minhash_signatures`` index
+  (``sig_index``) — the new batch is signed ONCE;
   banding joins new-vs-index candidates (`lsh_pairs_incremental`).
 * Idempotence: the foreachBatch body keys every append by batch_id
   (overwrite-by-partition), so a replayed batch after a crash rewrites

@@ -298,10 +298,7 @@ def build_pgoutput_stream(
     table (§8.5). A Truncate puts one message per truncated relation
     (operation ``truncate``, no pkey) and counts once as a wire message;
     Relation messages emit no row."""
-    from pg2kinesis_spark.operators.pgoutput import (
-        UNKNOWN_RELATION_ERROR,
-        decode_pgoutput,
-    )
+    from pg2kinesis_spark.operators.pgoutput import ERROR_SQL, PKEY_SQL, decode_pgoutput
 
     raw = _raw_stream(spark, source, rows_per_batch, ack_log)
     decoded = decode_pgoutput(
@@ -317,8 +314,7 @@ def build_pgoutput_stream(
             "key_cols",
         )
     )
-    has_tuple = F.col("operation").isin("insert", "update", "delete")
-    is_change = has_tuple | (F.col("operation") == "truncate")
+    is_change = F.col("operation").isin("insert", "update", "delete", "truncate")
     df = stamped.join(reg, "rel_id", "left")
     if table_pat is not None:
         # P5 parity: unanchored search on the UNqualified table name;
@@ -327,22 +323,14 @@ def build_pgoutput_stream(
             ~is_change
             | F.coalesce(F.col("relname"), F.lit("")).rlike("(?U)" + table_pat)
         )
-    eff_values = F.when(F.col("operation") == "delete", F.col("old_values")).otherwise(
-        F.col("col_values")
-    )
-    pos = F.array_position(F.col("col_names"), F.element_at(F.col("key_cols"), 1))
-    pkey = F.coalesce(F.element_at(eff_values, pos.cast("int")), F.lit("None"))
     df = df.select(
         "lsn",
         "data_size",
         "operation",
         "xid",
         "table",
-        F.when(has_tuple & (pos > 0), pkey).alias("pkey"),
-        F.when(
-            is_change & F.col("table").isNull(),
-            F.format_string(UNKNOWN_RELATION_ERROR, F.col("rel_id")),
-        ).alias("error"),
+        F.expr(PKEY_SQL).alias("pkey"),
+        F.expr(ERROR_SQL).alias("error"),
         (~is_change).alias("is_frame"),
     )
     fmt = format_csv if formatter == "CSV" else format_csvpayload

@@ -124,7 +124,6 @@ def test_spark_audio_operators_cover_aiff(spark):
         audio_fingerprint,
         extract_audio_features,
         extract_audio_metadata,
-        sniff_mime,
     )
 
     pcm = _pcm(44100, seed=5)  # 1 s
@@ -142,8 +141,6 @@ def test_spark_audio_operators_cover_aiff(spark):
     assert meta[1].container == "aiff" and meta[1].sample_rate == 44100
     fps = {r.media_id: r.afp for r in audio_fingerprint(media).collect()}
     assert fps[0] is not None and fps[0] == fps[1]  # container-invariant
-    sniffed = media.select(sniff_mime(media["content"]).alias("m")).collect()
-    assert {r.m for r in sniffed} == {"audio/wav", "audio/aiff"}
 
 
 def test_hostile_extended_float_refuses():

@@ -168,38 +168,11 @@ def test_corrupt_and_bomb_gz_archives_quarantine(spark):
     assert e.decode_error is None and bytes(e.payload) == b""
 
 
-def test_zip_of_pdfs_flows_into_the_pdf_tier(spark):
-    """End-to-end composition: a zip of PDFs -> archive_members ->
-    members_as_media -> extract_pdf_text, with a corrupt member's
-    archive quarantined out upstream."""
-    from pg2kinesis_spark.functions.archives import members_as_media
-    from pg2kinesis_spark.functions.pdf import encode_pdf, extract_pdf_text
-
-    z = _zip_bytes({
-        "docs/a.pdf": encode_pdf([["alpha document text"]], compress=True),
-        "docs/b.pdf": encode_pdf([["beta document text"], ["second page"]]),
-    })
-    archives = spark.createDataFrame(
-        [("mem://pdfs.zip", bytearray(z)),
-         ("mem://broken.zip", bytearray(b"\x00nope" + bytes(64)))],
-        "path string, content binary",
-    )
-    media = members_as_media(archive_members(archives))
-    rows = media.collect()
-    assert len(rows) == 2
-    assert all(r.meta.mime == "application/pdf" for r in rows)
-    texts = {r.text for r in extract_pdf_text(media).collect()}
-    assert any("alpha document" in t for t in texts)
-    assert any("beta document" in t for t in texts)
-
-
 def test_duplicate_member_names_get_distinct_ids(spark):
     """ZIP legally allows duplicate member names: the ordinal keeps
-    their media_ids AND corpus doc_ids distinct."""
+    their corpus doc_ids distinct."""
     import io as _io
     import zipfile as _zf
-
-    from pg2kinesis_spark.functions.archives import members_as_media
 
     buf = _io.BytesIO()
     with _zf.ZipFile(buf, "w") as zf:
@@ -212,78 +185,12 @@ def test_duplicate_member_names_get_distinct_ids(spark):
     members = archive_members(archives)
     rows = members.collect()
     assert len(rows) == 2 and {r.ordinal for r in rows} == {0, 1}
-    media = members_as_media(members).collect()
-    assert len({m.media_id for m in media}) == 2
     docs = archive_to_corpus(archives).collect()
     assert len({d.doc_id for d in docs}) == 2
     assert {d.text for d in docs} == {
         "first version of the document",
         "second version entirely different",
     }
-
-
-def _epub_bytes(chapters: dict[str, str], corrupt: bool = False) -> bytes:
-    """A real EPUB layout: stored mimetype first, META-INF container,
-    OPF manifest, then XHTML chapters."""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("mimetype", "application/epub+zip",
-                    compress_type=zipfile.ZIP_STORED)
-        zf.writestr(
-            "META-INF/container.xml",
-            '<?xml version="1.0"?><container><rootfiles><rootfile '
-            'full-path="OEBPS/content.opf"/></rootfiles></container>',
-        )
-        items = "".join(
-            f'<item id="c{i}" href="{name}"/>' for i, name in enumerate(chapters)
-        )
-        zf.writestr("OEBPS/content.opf", f"<package><manifest>{items}</manifest></package>")
-        zf.writestr("OEBPS/style.css", "p { margin: 0 }")
-        for name, body in chapters.items():
-            zf.writestr(
-                f"OEBPS/{name}",
-                "<?xml version='1.0'?><html><head><title>t</title>"
-                f"<style>.x{{}}</style></head><body>{body}</body></html>",
-            )
-    raw = bytearray(buf.getvalue())
-    if corrupt:
-        raw[-20:] = b"\x00" * 20  # stomp the central directory
-    return bytes(raw)
-
-
-def test_epub_front_door(spark):
-    """EPUB = zip of XHTML: the archive walk composed with the HTML
-    stripper. Chapter rows carry stripped text (tags/styles gone,
-    entities decoded); per='book' joins chapters in archive order; OPF/
-    NCX/CSS members never become docs; a corrupt EPUB quarantines
-    archive-atomically without killing the batch."""
-    from pg2kinesis_spark.functions.archives import epub_to_corpus
-
-    book = _epub_bytes({
-        "ch1.xhtml": "<h1>One</h1><p>First chapter&nbsp;body.</p>",
-        "ch2.xhtml": "<p>Second <b>chapter</b> text.</p>",
-        "ch3.xhtml": "<p>Third&amp;final.</p>",
-    })
-    bad = _epub_bytes({"ch1.xhtml": "<p>never seen</p>"}, corrupt=True)
-    archives = spark.createDataFrame(
-        [("mem://book.epub", bytearray(book)), ("mem://bad.epub", bytearray(bad))],
-        "path string, content binary",
-    )
-    chapters = epub_to_corpus(archives).collect()
-    by_member = {c.member: c.text for c in chapters}
-    assert by_member["OEBPS/ch1.xhtml"] == "One\n\nFirst chapter body."
-    assert by_member["OEBPS/ch2.xhtml"] == "Second chapter text."
-    assert by_member["OEBPS/ch3.xhtml"] == "Third&final."
-    assert not any("opf" in c.member or "css" in c.member or
-                   c.member == "mimetype" for c in chapters)
-    assert all(c.path == "mem://book.epub" for c in chapters)  # bad dropped
-    assert len({c.doc_id for c in chapters}) == 3
-
-    books = epub_to_corpus(archives, per="book").collect()
-    assert len(books) == 1 and books[0].n_chapters == 3
-    assert books[0].text == (
-        "One\n\nFirst chapter body.\n\nSecond chapter text.\n\nThird&final."
-    )
 
 
 def test_xz_and_bz2_front_door(spark):
@@ -389,35 +296,3 @@ def test_multistream_xz_bz2(spark):
     )
     r = archive_members(trunc).collect()[0]
     assert r.decode_error is not None and "truncated" in r.decode_error
-
-
-def test_archive_jsonl_explodes_per_line(spark):
-    """Pile-style drops: archives of .jsonl where each LINE is a doc.
-    Lines explode JVM-side with the text field extracted; malformed
-    JSON and missing-field lines drop; ids are stable per
-    (path, member-ordinal, line)."""
-    import gzip as _gzip
-    import json as _json
-
-    from pg2kinesis_spark.functions.archives import archive_jsonl_to_corpus
-
-    recs = [{"text": f"document number {i}", "meta": {"i": i}} for i in range(5)]
-    jl = "\n".join(_json.dumps(r) for r in recs) + "\nnot json at all\n" + \
-        _json.dumps({"other_field": "no text"}) + "\n"
-    zipped = _zip_bytes({"shard0.jsonl": jl.encode(), "readme.txt": b"skip me"})
-    bare = _gzip.compress(jl.encode())
-    archives = spark.createDataFrame(
-        [("mem://drop.zip", bytearray(zipped)),
-         ("mem://shard1.jsonl.gz", bytearray(bare))],
-        "path string, content binary",
-    )
-    docs = archive_jsonl_to_corpus(archives).collect()
-    texts = sorted(d.text for d in docs)
-    # 5 docs from the zip member + 5 from the bare gz; junk lines drop
-    assert texts == sorted([f"document number {i}" for i in range(5)] * 2)
-    assert len({d.doc_id for d in docs}) == 10
-    # .txt members never enter the jsonl path
-    assert all(d.member.endswith((".jsonl", ".json")) for d in docs)
-    # the plan stays JVM-side: no Python stages beyond the member split
-    plan = archive_jsonl_to_corpus(archives)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 0  # explode/json are codegen

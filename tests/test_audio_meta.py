@@ -78,9 +78,7 @@ def test_extract_audio_metadata_spark(spark):
     from pg2kinesis_spark.functions.multimodal import (
         MEDIA_SCHEMA,
         extract_audio_metadata,
-        sniff_mime,
     )
-    from pyspark.sql import functions as F
 
     wav = encode_wav(np.zeros((1600, 1), dtype=np.int16), 16000)
     mp3 = encode_mp3_frames(n_frames=20, kbps=128, rate=44100)
@@ -98,15 +96,6 @@ def test_extract_audio_metadata_spark(spark):
     assert got[1].duration_ms == pytest.approx(20 * 1152 / 44100 * 1000)
     assert got[2].container == "mp3" and got[2].n_channels == 2
     assert got[3].container is None and got[3].decode_error
-    # sniff: bare frame sync AND ID3-tagged streams both → audio/mpeg
-    sniffed = {
-        r.media_id: r.mime
-        for r in media.select(
-            "media_id", sniff_mime(F.col("content")).alias("mime")
-        ).collect()
-    }
-    assert sniffed[1] == "audio/mpeg" and sniffed[2] == "audio/mpeg"
-    assert sniffed[0] == "audio/wav"
     with pytest.raises(Exception, match="WAV, AIFF, FLAC, Ogg"):
         extract_audio_metadata(media, errors="raise").collect()
 
@@ -155,13 +144,10 @@ def test_flac_rejects_bad_structure():
 
 
 def test_spark_audio_metadata_over_flac(spark):
-    import pyspark.sql.functions as F
-
     from pg2kinesis_spark.functions.codecs import encode_flac_streaminfo
     from pg2kinesis_spark.functions.multimodal import (
         MEDIA_SCHEMA,
         extract_audio_metadata,
-        sniff_mime,
     )
 
     rows = [
@@ -175,8 +161,6 @@ def test_spark_audio_metadata_over_flac(spark):
     assert r.sample_rate == 32000 and r.n_channels == 2
     assert r.duration_ms == pytest.approx(2000.0)
     assert r.vbr is True and r.decode_error is None
-    mime = media.select(sniff_mime(F.col("content")).alias("m")).collect()[0].m
-    assert mime == "audio/flac"
 
 
 def test_ogg_opus_and_vorbis_hand_expected():
@@ -316,9 +300,7 @@ def test_spark_audio_metadata_covers_aac(spark):
     from pg2kinesis_spark.functions.multimodal import (
         MEDIA_SCHEMA,
         extract_audio_metadata,
-        sniff_mime,
     )
-    import pyspark.sql.functions as F
 
     a = encode_adts_frames(20, rate=48000, channels=1, frame_bytes=250)
     media = spark.createDataFrame(
@@ -328,8 +310,6 @@ def test_spark_audio_metadata_covers_aac(spark):
     assert r.container == "aac" and r.sample_rate == 48000 and r.n_channels == 1
     assert r.vbr is True and r.decode_error is None
     assert r.duration_ms == pytest.approx(20 * 1024 / 48000 * 1000)
-    mime = media.select(sniff_mime(F.col("content")).alias("m")).collect()[0].m
-    assert mime == "audio/aac"
 
 
 def test_spark_audio_metadata_covers_m4a(spark):
@@ -340,9 +320,7 @@ def test_spark_audio_metadata_covers_m4a(spark):
     from pg2kinesis_spark.functions.multimodal import (
         MEDIA_SCHEMA,
         extract_audio_metadata,
-        sniff_mime,
     )
-    import pyspark.sql.functions as F
 
     m4a = encode_mp4_skeleton(video_codec=None, brand=b"M4A ", duration_s=30.0)
     vid = encode_mp4_skeleton()
@@ -357,9 +335,6 @@ def test_spark_audio_metadata_covers_m4a(spark):
     assert got[0].duration_ms == pytest.approx(30000.0)
     assert got[0].decode_error is None
     assert got[1].container is None and "audio metadata" in got[1].decode_error
-    mimes = {r.media_id: r.m for r in media.select(
-        "media_id", sniff_mime(F.col("content")).alias("m")).collect()}
-    assert mimes[0] == "audio/mp4" and mimes[1] == "video/mp4"
 
 
 def test_fuzz_adts_walk():

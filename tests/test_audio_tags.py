@@ -366,9 +366,8 @@ def test_utf16_multivalue_boms_stripped():
 
 def test_embedded_id3_chunk_in_wav_and_aiff():
     """Most real-world WAV/AIFF tagging ships an `id3 ` chunk holding
-    a full ID3v2 tag. It parses through the shared ID3v2 walk, wins
-    key-by-key over INFO/IFF text chunks, and carries cover art into
-    audio_cover."""
+    a full ID3v2 tag (here with a picture frame). It parses through the
+    shared ID3v2 walk and wins key-by-key over INFO/IFF text chunks."""
     art = C.encode_png(np.arange(48, dtype=np.uint8).reshape(4, 4, 3))
     id3 = encode_id3v2({"title": "Embedded T", "artist": "Emb A"},
                        apic=("image/png", art))
@@ -387,7 +386,6 @@ def test_embedded_id3_chunk_in_wav_and_aiff():
     got = wav_tags(wav)
     assert got["title"] == "Embedded T"  # ID3 wins the shared key
     assert got["artist"] == "Emb A" and got["genre"] == "Jazz"  # INFO fills
-    assert C.audio_cover(wav) == (art, "image/png")
     assert C.decode_wav(wav)[0].shape == (64, 1)  # chunk doesn't perturb PCM
 
     aif = add_chunk(C.encode_aiff(pcm, 8000, tags={"title": "IFF T",
@@ -395,5 +393,3 @@ def test_embedded_id3_chunk_in_wav_and_aiff():
                     b"ID3 ", be=True)
     g2 = C.aiff_tags(aif)
     assert g2["title"] == "Embedded T" and g2["comment"] == "cc"
-    assert C.audio_cover(aif) == (art, "image/png")
-    assert C.audio_cover(encode_wav(pcm, 8000)) is None  # bare: no cover

@@ -115,7 +115,6 @@ def test_band_bloom_pairs_exactly_unchanged(spark, tmp_path):
         band_key_col,
         lsh_pairs_incremental,
         minhash_signatures,
-        write_minhash_signatures,
     )
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -125,7 +124,7 @@ def test_band_bloom_pairs_exactly_unchanged(spark, tmp_path):
     old = spark.createDataFrame(old_rows, ["doc_id", "text"])
     new = spark.createDataFrame(new_rows, ["doc_id", "text"])
     sig_path = str(tmp_path / "sig")
-    write_minhash_signatures(old, sig_path)
+    minhash_signatures(old).write.parquet(sig_path)
 
     h1, h2 = bloom_hash_cols(band_key_col())
     banded = _banded(minhash_signatures(old), 16, 4).select(

@@ -224,19 +224,6 @@ def test_decode_image_dispatch_and_dhash_identity():
     assert C.decode_image(C.encode_ico([img])).shape == (13, 22, 4)
 
 
-def test_sniff_mime_bmp_ico(spark):
-    from pg2kinesis_spark.functions.multimodal import sniff_mime
-
-    rows = [
-        (bytearray(C.encode_bmp(_rgb())),),
-        (bytearray(C.encode_ico([_rgb(8, 8)])),),
-        (bytearray(C.encode_png(_rgb())),),
-    ]
-    df = spark.createDataFrame(rows, "content binary")
-    got = [r[0] for r in df.select(sniff_mime("content")).collect()]
-    assert got == ["image/bmp", "image/x-icon", "image/png"]
-
-
 # --- WebP container truth ---------------------------------------------------
 
 
@@ -281,10 +268,8 @@ def test_webp_animation_and_refusals():
         C.webp_info(b"RIFF\x0c\x00\x00\x00WEBP" + b"EXIF\x00\x00\x00\x00")
 
 
-def test_webp_vp8x_canvas_wins_and_sniff(spark):
+def test_webp_vp8x_canvas_wins_and_sniff():
     import struct as st
-
-    from pg2kinesis_spark.functions.multimodal import sniff_mime
 
     # hand-packed: VP8X canvas 100x50 followed by a 8x8 VP8L stream
     vp8x = b"\x00\x00\x00\x00" + (99).to_bytes(3, "little") + (49).to_bytes(3, "little")
@@ -298,9 +283,6 @@ def test_webp_vp8x_canvas_wins_and_sniff(spark):
     data = b"RIFF" + st.pack("<I", len(body)) + body
     i = C.webp_info(data)
     assert (i["width"], i["height"], i["format"]) == (100, 50, "lossless")
-
-    df = spark.createDataFrame([(bytearray(data),)], "content binary")
-    assert df.select(sniff_mime("content")).first()[0] == "image/webp"
 
 
 def test_webp_pil_seam_upgrades_refusal():

@@ -9,7 +9,6 @@ import pytest
 from pg2kinesis_spark.functions.bpe import (
     EOW,
     UNK_ID,
-    bpe_encode,
     bpe_token_counts,
     learn_bpe,
     learn_bpe_from_frequencies,
@@ -111,15 +110,11 @@ def test_unknown_chars_map_to_unk():
     assert UNK_ID in ids
 
 
-def test_bpe_encode_matches_python(spark, docs, texts, model):
-    got = {r["doc_id"]: list(r["token_ids"]) for r in bpe_encode(docs, model).collect()}
-    for r in docs.collect():
-        want = [i for w in r["text"].split(" ") if w for i in model.encode_word(w)]
-        assert got[r["doc_id"]] == want, r["doc_id"]
-
-
 def test_bpe_token_counts_match_encode(spark, docs, model):
-    enc = {r["doc_id"]: len(r["token_ids"]) for r in bpe_encode(docs, model).collect()}
+    enc = {
+        r["doc_id"]: sum(len(model.encode_word(w)) for w in r["text"].split(" ") if w)
+        for r in docs.collect()
+    }
     cnt = {
         r["doc_id"]: r["n_bpe_tokens"]
         for r in bpe_token_counts(docs, model).collect()
@@ -131,8 +126,6 @@ def test_empty_docs_yield_zero(spark, model):
     d = spark.createDataFrame([(1, ""), (2, "  "), (3, "x")], ["doc_id", "text"])
     cnt = {r["doc_id"]: r["n_bpe_tokens"] for r in bpe_token_counts(d, model).collect()}
     assert cnt[1] == 0 and cnt[2] == 0 and cnt[3] > 0
-    enc = {r["doc_id"]: list(r["token_ids"]) for r in bpe_encode(d, model).collect()}
-    assert enc[1] == [] and enc[2] == []
 
 
 def test_corpus_plan_is_jvm_side(spark, docs, model):
@@ -167,26 +160,6 @@ def test_budget_wiring(spark, docs, model):
         scored, F.col("score"), F.col("n_bpe_tokens"), budget=5000
     ).collect()
     assert sel and sum(r["n_tokens"] for r in sel) <= 5000
-
-
-def test_save_load_roundtrip(tmp_path, model):
-    from pg2kinesis_spark.functions.bpe import load_model, save_model
-
-    p = str(tmp_path / "bpe" / "model.json")
-    save_model(model, p)
-    back = load_model(p)
-    assert back.merges == model.merges and back.token_ids == model.token_ids
-
-
-def test_decode_inverts_encode(spark, docs, model):
-    from pg2kinesis_spark.functions.bpe import bpe_decode
-
-    enc = bpe_encode(docs, model)
-    dec = {r["doc_id"]: r["text"] for r in bpe_decode(enc, model).collect()}
-    for r in docs.collect():
-        # canonical whitespace: split/rejoin collapses runs of spaces
-        want = " ".join(w for w in r["text"].split(" ") if w)
-        assert dec[r["doc_id"]] == want, r["doc_id"]
 
 
 def test_bpe_property_segmentation_partitions_word():
@@ -244,16 +217,3 @@ def test_bpe_heap_learner_speed_sanity():
     wall = time.perf_counter() - t0
     assert len(m.merges) > 2000
     assert wall < 60, wall
-
-
-def test_bpe_fertility_matches_python(spark, docs, texts, model):
-    from pg2kinesis_spark.functions.bpe import bpe_fertility
-
-    words = [w for t in texts.values() for w in t.split(" ") if w] if isinstance(texts, dict) else [w for t in texts for w in t.split(" ") if w]
-    n_tok = sum(len(model.encode_word(w)) for w in words)
-    r = bpe_fertility(docs, model).collect()[0]
-    assert r["n_words"] == len(words)
-    assert r["n_bpe_tokens"] == n_tok
-    assert r["fertility"] == pytest.approx(n_tok / len(words))
-    # fertility is at least 1 (every word is >= 1 token incl. EOW merge)
-    assert r["fertility"] >= 1.0

@@ -107,37 +107,3 @@ def test_c4_real_docs_smoke(spark, sf_small):
     out = {r["doc_id"]: r["text"] for r in dedup_spans(docs).collect()}
     for r in docs.collect():
         assert out[r["doc_id"]] == r["text"]
-
-
-def test_drop_boilerplate_lines(spark):
-    from pg2kinesis_spark.functions.c4 import drop_boilerplate_lines
-
-    footer = "Copyright 2026 Example Corp - All Rights Reserved"
-    rows = [(i, f"unique content line {i}\n{footer}") for i in range(1, 9)]
-    rows.append((9, "a document with no boilerplate at all"))
-    rows.append((10, f"{footer}\nmiddle body text\n{footer}"))
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["doc_id"]: r["text"] for r in drop_boilerplate_lines(docs, min_df=5).collect()}
-    # the footer (9 distinct docs) is cut from every doc, every occurrence
-    for i in range(1, 9):
-        assert out[i] == f"unique content line {i}"
-    assert out[10] == "middle body text"
-    # untouched doc byte-identical
-    assert out[9] == rows[8][1]
-    # below-threshold lines survive
-    out2 = {r["doc_id"]: r["text"] for r in drop_boilerplate_lines(docs, min_df=50).collect()}
-    assert out2 == {r[0]: r[1] for r in rows}
-
-
-def test_drop_boilerplate_keeps_blank_lines(spark):
-    """Blank lines appear in every doc but are structure, not boilerplate:
-    they must never enter the hot-line set, whatever min_df."""
-    from pg2kinesis_spark.functions.c4 import drop_boilerplate_lines
-
-    footer = "Subscribe to our newsletter"
-    rows = [(i, f"para one of doc {i}\n\npara two of doc {i}\n   \n{footer}") for i in range(1, 9)]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["doc_id"]: r["text"] for r in drop_boilerplate_lines(docs, min_df=5).collect()}
-    for i in range(1, 9):
-        # footer cut, both blank separators (empty AND whitespace-only) kept
-        assert out[i] == f"para one of doc {i}\n\npara two of doc {i}\n   "

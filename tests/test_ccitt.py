@@ -163,13 +163,14 @@ def test_fuzz_tiff_ccitt():
 def test_pdf_ccitt_images_decode_and_pair(spark):
     """A G4-coded scanned plate and its raw-gray twin in two PDFs land
     at dHash distance 0 through extract_pdf_images →
-    pdf_images_as_media → media_near_dup_pairs; an unrelated plate
-    separates; K=0 (MH) and K>0 (mixed 2D) decode identically."""
+    media_near_dup_pairs; an unrelated plate separates; K=0 (MH) and
+    K>0 (mixed 2D) decode identically."""
+    from pyspark.sql import functions as F
+
     from pg2kinesis_spark.functions.multimodal import (
         MEDIA_SCHEMA,
         extract_pdf_images,
         media_near_dup_pairs,
-        pdf_images_as_media,
     )
     from pg2kinesis_spark.functions.pdf import encode_pdf, pdf_images
 
@@ -200,7 +201,13 @@ def test_pdf_ccitt_images_decode_and_pair(spark):
         for i, d in enumerate([doc_g4, doc_raw, doc_oth])
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    figures = pdf_images_as_media(extract_pdf_images(media))
+    # one plate per document: the image rows keep their document's id
+    figures = extract_pdf_images(media).select(
+        "media_id",
+        "content",
+        F.struct("mime", F.length("content").cast("long").alias("bytes_hint"),
+                 F.lit("").alias("source_uri")).alias("meta"),
+    )
     pairs = media_near_dup_pairs(figures, max_hamming=0, signature="dhash")
     got = [
         (r["media_id1"], r["media_id2"]) for r in pairs.collect()

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from pg2kinesis_spark.functions.classifier import (
     classifier_filter,
-    score_docs,
     train_doc_classifier,
 )
 from pg2kinesis_spark.io import load_table
@@ -52,15 +51,6 @@ def model(split):
     return train_doc_classifier(train, "label", num_features=1 << 13)
 
 
-def test_classifier_learns_separation(spark, split, model):
-    _, test = split
-    scored = score_docs(model, test).join(test.select("doc_id", "label"), "doc_id")
-    n = scored.count()
-    correct = scored.filter(F.col("predicted_label") == F.col("label")).count()
-    assert n > 50
-    assert correct / n >= 0.95, f"holdout accuracy {correct}/{n}"
-
-
 def test_classifier_filter_keeps_requested_class(spark, split, model):
     _, test = split
     kept = classifier_filter(model, test.select("doc_id", "text"), keep_label="curated")
@@ -72,13 +62,6 @@ def test_classifier_filter_keeps_requested_class(spark, split, model):
     assert len(kept_ids & curated) / len(kept_ids) >= 0.95
     assert len(kept_ids & curated) / len(curated) >= 0.9
     assert set(kept.columns) == {"doc_id", "text"}
-
-
-def test_score_docs_probability_domain(spark, split, model):
-    _, test = split
-    rows = score_docs(model, test.limit(20)).collect()
-    assert all(0.0 <= r["score"] <= 1.0 for r in rows)
-    assert all(r["predicted_label"] in ("crawl", "curated") for r in rows)
 
 
 def test_classifier_filter_multiclass_uses_keep_label_probability(spark, sf_small):

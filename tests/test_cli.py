@@ -32,8 +32,11 @@ def test_full_change_requires_wal2json():
         validate(args)
 
 
-def test_cli_drain_replay(spark, pk_fixture_dir, tmp_path):
-    """End-to-end through the real CLI entry point on a tiny corpus."""
+def test_cli_drain_replay(spark, pk_fixture_dir, tmp_path, capsys):
+    """End-to-end through the real CLI entry point on a tiny corpus. The
+    one INSERT reaches the writer as a message, and the case-sensitive
+    operation filter (§8.4: 'insert' never matches 'INSERT') nulls it,
+    so nothing is put."""
     corpus = str(tmp_path / "c.parquet")
     spark.createDataFrame(
         [
@@ -60,6 +63,8 @@ def test_cli_drain_replay(spark, pk_fixture_dir, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert rc == 0
+    drained = [l for l in capsys.readouterr().out.splitlines() if l.startswith("drained:")]
+    assert drained == ["drained: put_message_calls=1 physical_puts=0 records=0"]
 
 
 def test_pgcdc_stream_builds_without_pg(spark):

@@ -327,21 +327,6 @@ def test_extract_image_features_real(spark, png_media):
     assert rows[1]["mean_luma"] == pytest.approx(float(img.mean()))
 
 
-def test_resize_media_real_png(spark, png_media):
-    from pg2kinesis_spark.functions.multimodal import resize_media
-
-    out = resize_media(png_media, width=4, height=4, fake=False).collect()
-    for r in out:
-        img = decode_png(bytes(r["content"]))
-        assert img.shape[:2] == (4, 4)
-        assert r["meta"]["bytes_hint"] == len(bytes(r["content"]))
-    # pixel-exact vs driver-side oracle for media 0
-    src = _rand_img(6, 4, 3, seed=0)
-    want = resize_nearest(src, 4, 4)
-    got = decode_png(bytes(next(r for r in out if r["media_id"] == 0)["content"]))
-    np.testing.assert_array_equal(got, want)
-
-
 def test_extract_audio_features_real(spark):
     from pg2kinesis_spark.functions.multimodal import (
         MEDIA_SCHEMA,
@@ -647,76 +632,6 @@ def test_wav_property_roundtrip():
         np.testing.assert_array_equal(got, samples)
 
     prop()
-
-
-def test_media_from_files_front_door(spark, tmp_path):
-    """binaryFile directory -> MEDIA_SCHEMA: JVM-side magic-byte mime
-    sniffing for all five codec formats, deterministic path-hash ids,
-    and the real feature kernel running straight off the loaded table."""
-    from pg2kinesis_spark.functions.codecs import (
-        encode_avi_mjpeg,
-        encode_gif,
-        encode_jpeg,
-        encode_wav,
-    )
-    from pg2kinesis_spark.functions.multimodal import (
-        extract_features,
-        media_from_files,
-    )
-
-    img = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    (tmp_path / "a.png").write_bytes(encode_png(img))
-    (tmp_path / "b.jpg").write_bytes(encode_jpeg(img))
-    (tmp_path / "c.gif").write_bytes(encode_gif(img))
-    (tmp_path / "d.wav").write_bytes(encode_wav(np.zeros((100, 1), np.int16), 8000))
-    (tmp_path / "e.avi").write_bytes(encode_avi_mjpeg([np.zeros((8, 8, 3), np.uint8)]))
-    (tmp_path / "f.bin").write_bytes(b"garbage")
-
-    media = media_from_files(spark, str(tmp_path))
-    rows = media.collect()
-    mimes = {r["meta"]["source_uri"].rsplit("/", 1)[-1]: r["meta"]["mime"] for r in rows}
-    assert mimes == {
-        "a.png": "image/png",
-        "b.jpg": "image/jpeg",
-        "c.gif": "image/gif",
-        "d.wav": "audio/wav",
-        "e.avi": "video/x-msvideo",
-        "f.bin": "application/octet-stream",
-    }
-    assert len({r["media_id"] for r in rows}) == 6  # distinct deterministic ids
-    assert all(r["meta"]["bytes_hint"] == len(bytes(r["content"])) for r in rows)
-
-    feats = extract_features(
-        media.filter("meta.mime != 'application/octet-stream'"), fake=False
-    ).collect()
-    dims = sorted((r["width"], r["height"]) for r in feats)
-    assert dims == [(8, 8), (8, 8), (8, 8), (8, 8), (100, 1)]
-
-    # glob filter narrows the listing at the source
-    only_png = media_from_files(spark, str(tmp_path), glob="*.png").collect()
-    assert len(only_png) == 1 and only_png[0]["meta"]["mime"] == "image/png"
-
-
-def test_media_profile_one_scan(spark, tmp_path):
-    from pg2kinesis_spark.functions.codecs import encode_wav
-    from pg2kinesis_spark.functions.multimodal import MEDIA_SCHEMA, media_profile
-
-    img = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    png = encode_png(img)
-    wav = encode_wav(np.zeros((50, 1), np.int16), 8000)
-    rows = [
-        (0, bytearray(png), ("image/png", len(png), "a")),
-        (1, bytearray(png), ("image/png", len(png), "b")),  # exact dup
-        (2, bytearray(wav), ("audio/wav", len(wav), "c")),
-    ]
-    got = {r["mime"]: r for r in media_profile(spark.createDataFrame(rows, MEDIA_SCHEMA)).collect()}
-    assert got["image/png"]["n_items"] == 2
-    assert got["image/png"]["n_distinct"] == 1  # the dup collapses
-    assert got["image/png"]["total_bytes"] == 2 * len(png)
-    assert got["audio/wav"]["n_items"] == 1
-    assert got["audio/wav"]["max_bytes"] == len(wav)
-    plan = media_profile(spark.createDataFrame(rows, MEDIA_SCHEMA))._jdf.queryExecution().executedPlan().toString()
-    assert "mapInPandas" not in plan.lower()  # pure column aggregates
 
 
 def test_png_color_key_transparency():

@@ -179,11 +179,7 @@ def _tar_bytes(files: dict[str, bytes]) -> bytes:
 
 
 def test_lz4_snappy_archive_front_door(spark):
-    from pg2kinesis_spark.functions.archives import (
-        archive_jsonl_to_corpus,
-        archive_members,
-        archive_to_corpus,
-    )
+    from pg2kinesis_spark.functions.archives import archive_members, archive_to_corpus
 
     tar_raw = _tar_bytes({"inner.txt": b"lz4 tar text", "skip.bin": b"\x00"})
     jsonl = b'{"text": "doc one"}\n{"text": "doc two"}\n'
@@ -202,8 +198,6 @@ def test_lz4_snappy_archive_front_door(spark):
     assert got[("mem://c.txt.sz", "c.txt")] == b"bare snappy member"
     texts = {d.text for d in archive_to_corpus(archives).collect()}
     assert {"lz4 tar text", "bare lz4 member", "bare snappy member"} <= texts
-    jd = archive_jsonl_to_corpus(archives.filter("path like '%jsonl%'")).collect()
-    assert {d.text for d in jd} == {"doc one", "doc two"}
 
     bombs = spark.createDataFrame(
         [

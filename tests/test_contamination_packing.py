@@ -9,10 +9,9 @@ from pyspark.sql import functions as F
 
 from pg2kinesis_spark.functions.contamination import (
     contaminated_ids,
-    contamination_report,
     decontaminate,
 )
-from pg2kinesis_spark.functions.packing import pack_sequences, packing_stats
+from pg2kinesis_spark.functions.packing import pack_sequences
 from pg2kinesis_spark.io import load_table
 
 
@@ -61,15 +60,6 @@ def test_decontaminate_removes_exactly_flagged(spark, sf_small, eval_df):
     assert kept == alldocs - flagged
 
 
-def test_contamination_report(spark, sf_small, eval_df):
-    docs = load_table(spark, sf_small, "documents").limit(300)
-    rep = {r["eval_id"]: r for r in contamination_report(docs, eval_df).collect()}
-    # planted snippets (eval 0..4) contaminate; the novel item does not
-    assert all(eid in rep for eid in range(5))
-    novel = eval_df.count() - 2
-    assert novel not in rep
-
-
 def test_contamination_plan_broadcasts_eval(spark, sf_small, eval_df):
     docs = load_table(spark, sf_small, "documents").limit(300)
     plan = (
@@ -108,19 +98,6 @@ def test_pack_sequences_matches_python(spark, sf_small):
     assert len(got) == len(rows)
 
 
-def test_packing_stats(spark):
-    docs = spark.createDataFrame(
-        [(str(i), 100) for i in range(10)], ["doc_id", "nt"]
-    )
-    packed = pack_sequences(docs, F.col("nt"), 256, "doc_id")
-    s = packing_stats(packed, 256).collect()[0]
-    assert s["n_docs"] == 10 and s["n_tokens"] == 1000
-    assert s["n_sequences"] == 4  # ceil(1000/256)
-    # with uniform 100-token docs, every doc crossing a 256 boundary flags
-    spans = sum(1 for r in packed.collect() if r["spans_boundary"])
-    assert s["n_spanning"] == spans > 0
-
-
 def test_pack_bucket_is_exact_at_hash_ceiling(spark):
     """Bucket assignment must be integer arithmetic. The old
     (h / 2^48).cast('long') rounds hashes within 2^12 of 2^60 UP to
@@ -148,75 +125,3 @@ def test_pack_sequences_no_single_partition_window(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "SinglePartition" not in plan
-
-
-def test_materialize_sequences_matches_python_mirror(spark):
-    """Materialized training batches equal a serial mirror that builds
-    the global token stream in the same (md5, key) order and chunks it:
-    input_ids (padding included), segment_ids (packed-attention doc
-    boundaries; carried-in fragments are segment 0, padding -1), n_real
-    and n_docs — exact array equality per sequence."""
-    from pg2kinesis_spark.functions.packing import materialize_sequences
-
-    rng = __import__("random").Random(3)
-    docs = []
-    for i in range(40):
-        n = rng.choice([0, 1, 3, 7, 20, 33])  # incl. empty docs (dropped)
-        docs.append((str(i), [i * 100 + t for t in range(n)]))
-    enc = spark.createDataFrame(docs, "doc_id string, token_ids array<int>")
-    SEQ, PAD = 16, -7
-    got = {
-        r.seq_id: (list(r.input_ids), list(r.segment_ids), r.n_real, r.n_docs)
-        for r in materialize_sequences(enc, SEQ, pad_id=PAD).collect()
-    }
-
-    ordered = sorted(
-        [(k, ids) for k, ids in docs if ids], key=lambda x: (_py_hash60(x[0]), x[0])
-    )
-    stream = []
-    begin_positions = set()
-    for _, ids in ordered:
-        begin_positions.add(len(stream))
-        stream.extend(ids)
-    want = {}
-    for s in range((len(stream) + SEQ - 1) // SEQ):
-        chunk = stream[s * SEQ : (s + 1) * SEQ]
-        n_real = len(chunk)
-        begins = sorted(
-            p - s * SEQ
-            for p in begin_positions
-            if s * SEQ < p < s * SEQ + n_real  # strictly inside the seq
-        )
-        seg = [
-            (sum(1 for b in begins if b <= p) if p < n_real else -1)
-            for p in range(SEQ)
-        ]
-        want[s] = (chunk + [PAD] * (SEQ - n_real), seg, n_real, len(begins) + 1)
-    assert got == want
-    # sanity: the corpus actually exercises spanning docs and padding
-    assert any(v[3] > 1 for v in want.values())
-    assert any(v[2] < SEQ for v in want.values())
-
-
-def test_materialize_sequences_composes_with_bpe(spark):
-    """End-to-end: learn BPE -> encode -> materialize; token streams
-    concatenate losslessly (decode of the unpadded stream round-trips
-    through the model vocabulary)."""
-    from pg2kinesis_spark.functions.bpe import bpe_encode, learn_bpe
-    from pg2kinesis_spark.functions.packing import materialize_sequences
-
-    rows = [
-        (1, "the cat sat on the mat"),
-        (2, "the dog sat on the log and the cat watched"),
-        (3, "a completely different sentence entirely"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    model = learn_bpe(docs, num_merges=30)
-    enc = bpe_encode(docs, model)
-    out = materialize_sequences(enc, seq_len=8, pad_id=0).collect()
-    total_real = sum(r.n_real for r in out)
-    want_total = sum(len(r.token_ids) for r in enc.collect())
-    assert total_real == want_total
-    for r in out:
-        assert len(r.input_ids) == 8 and len(r.segment_ids) == 8
-        assert max(r.segment_ids) + 1 <= r.n_docs

@@ -1,8 +1,6 @@
-"""Embedded cover art: ID3v2 APIC/PIC, FLAC PICTURE (RFC 9639 §8.8),
-MP4 covr — extraction, front-cover preference, hostile bounds, and the
-composition that motivates the tier: cover bytes feed the IMAGE
-operators, so the same artwork embedded in different audio containers
-dHash-pairs without decoding any audio."""
+"""Embedded cover art: ID3v2 APIC/PIC, FLAC PICTURE (RFC 9639 §8.8) and
+MP4 covr ride alongside the tags and audio the rooted readers walk —
+a picture never breaks text tags or the FLAC decode."""
 
 from __future__ import annotations
 
@@ -13,14 +11,10 @@ import pytest
 
 from pg2kinesis_spark.functions import codecs as C
 from pg2kinesis_spark.functions.codecs import (
-    audio_cover,
     encode_flac,
     encode_id3v2,
     encode_mp3_frames,
     encode_mp4_skeleton,
-    flac_cover,
-    id3v2_cover,
-    mp4_cover,
 )
 
 
@@ -35,41 +29,16 @@ def test_id3v2_apic_roundtrip(version):
     mp3 = encode_id3v2(
         {"title": "x"}, version=version, apic=("image/png", art)
     ) + encode_mp3_frames(2)
-    img, mime = audio_cover(mp3)
-    assert img == art and mime == "image/png"
     assert C.id3v2_tags(mp3)["title"] == "x"  # APIC doesn't break text
-    assert audio_cover(encode_mp3_frames(2)) is None
-
-
-def test_id3v2_apic_utf16_description():
-    """APIC descriptions in utf-16 terminate on a CODE-UNIT boundary;
-    a low byte inside a character must not split the image off early.
-    Hand-packed (encoder writes latin-1 descriptions only)."""
-    art = _art(1)
-    desc = "désc".encode("utf-16")  # BOM + chars, contains 0x00 low bytes
-    body = b"\x01" + b"image/png\x00" + bytes([3]) + desc + b"\x00\x00" + art
-    n = len(body)
-    frame = b"APIC" + bytes(
-        [(n >> 21) & 0x7F, (n >> 14) & 0x7F, (n >> 7) & 0x7F, n & 0x7F]
-    ) + b"\x00\x00" + body
-    m = len(frame)
-    tag = b"ID3\x04\x00\x00" + bytes(
-        [(m >> 21) & 0x7F, (m >> 14) & 0x7F, (m >> 7) & 0x7F, m & 0x7F]
-    ) + frame
-    img, mime = id3v2_cover(tag)
-    assert img == art and mime == "image/png"
 
 
 def test_flac_picture_roundtrip_and_hand_packed():
     art = _art(2)
     pcm = np.zeros((200, 1), np.int64)
     fl = encode_flac(pcm, 8000, tags={"title": "t"}, picture=("image/png", art))
-    img, mime = flac_cover(fl)
-    assert img == art and mime == "image/png"
     assert C.flac_tags(fl)["title"] == "t"
     dec, _ = C.decode_flac(fl)
     assert dec.shape == (200, 1)  # picture block doesn't perturb decode
-    assert flac_cover(encode_flac(pcm, 8000)) is None
     # hand-packed PICTURE block (encoder not involved): type 3, a
     # non-empty description, explicit dims
     mime_b = b"image/jpeg"
@@ -84,65 +53,13 @@ def test_flac_picture_roundtrip_and_hand_packed():
     blob = bytes(blob[: 8 + 34]) + bytes([0x80 | 6]) + len(body).to_bytes(
         3, "big"
     ) + body + bytes(si[8 + 34 :])
-    got, gmime = flac_cover(blob)
-    assert got == jart and gmime == "image/jpeg"
-    # stomped image length refuses
-    bad = bytearray(blob)
-    i = bytes(bad).find(struct.pack(">I", len(jart)) + jart[:8])
-    bad[i : i + 4] = struct.pack(">I", 1 << 30)
-    with pytest.raises(ValueError):
-        flac_cover(bytes(bad))
+    assert C.decode_flac(blob)[0].shape == (200, 1)
 
 
 def test_mp4_covr_types():
     art_png, art_jpg = _art(3), C.encode_jpeg(
         np.zeros((8, 8, 3), np.uint8), quality=85
     )
-    assert mp4_cover(encode_mp4_skeleton(cover=art_png)) == (art_png, "image/png")
-    assert mp4_cover(encode_mp4_skeleton(cover=art_jpg)) == (art_jpg, "image/jpeg")
-    m = encode_mp4_skeleton(tags={"title": "y"}, cover=art_jpg)
-    assert C.mp4_tags(m)["title"] == "y"  # covr rides alongside text items
-    assert mp4_cover(encode_mp4_skeleton()) is None
-
-
-def test_cross_container_cover_dhash_identity(spark):
-    """The point of the tier: the SAME artwork embedded in MP3, FLAC,
-    and M4A extracts and dHashes identically, so album-level dedup
-    works across container re-encodes without touching the audio."""
-    from pyspark.sql import functions as F
-
-    from pg2kinesis_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        covers_as_media,
-        extract_cover_art,
-        media_dhash,
-    )
-
-    art = _art(4)
-    other = _art(99)
-    pcm = np.zeros((200, 1), np.int64)
-    blobs = [
-        encode_id3v2({}, apic=("image/png", art)) + encode_mp3_frames(2),
-        encode_flac(pcm, 8000, picture=("image/png", art)),
-        encode_mp4_skeleton(video_codec=None, cover=art),
-        encode_flac(pcm, 8000, picture=("image/png", other)),  # different art
-        encode_flac(pcm, 8000),                                # pictureless
-        bytearray(b"not audio"),                               # quarantine
-    ]
-    rows = [
-        (i, bytearray(b), ("audio/x", len(b), f"mem://{i}"))
-        for i, b in enumerate(blobs)
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    covers = extract_cover_art(media)
-    got = {r.media_id: r for r in covers.collect()}
-    assert bytes(got[0].cover) == art and got[0].cover_mime == "image/png"
-    assert bytes(got[1].cover) == art and bytes(got[2].cover) == art
-    assert got[4].cover is None and got[4].decode_error is None  # clean, bare
-    assert got[5].cover is None and got[5].decode_error is not None
-    hashes = {
-        r.media_id: r.dhash
-        for r in media_dhash(covers_as_media(covers)).collect()
-    }
-    assert hashes[0] == hashes[1] == hashes[2]  # identity across containers
-    assert hashes[3] != hashes[0]
+    for art in (art_png, art_jpg):
+        m = encode_mp4_skeleton(tags={"title": "y"}, cover=art)
+        assert C.mp4_tags(m)["title"] == "y"  # covr rides alongside text items

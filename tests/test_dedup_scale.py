@@ -9,13 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from pg2kinesis_spark.functions.dedup import (
-    append_minhash_signatures,
     lsh_pairs_incremental,
     minhash_lsh_pairs,
-    minhash_lsh_pairs_from_signatures,
+    minhash_signatures,
     simhash,
     simhash_pairs,
-    write_minhash_signatures,
 )
 
 MASK64 = (1 << 64) - 1
@@ -117,46 +115,10 @@ def _pairset(df):
 def test_incremental_union_equals_full(spark, split_docs, tmp_path):
     docs, old, new = split_docs
     path = str(tmp_path / "sig_idx")
-    write_minhash_signatures(old, path)
+    minhash_signatures(old).write.parquet(path)
     full = _pairset(minhash_lsh_pairs(docs))
     old_only = _pairset(minhash_lsh_pairs(old))
     inc = _pairset(lsh_pairs_incremental(spark, new, path))
     assert old_only | inc == full
     assert old_only.isdisjoint(inc)
     assert inc, "sf0.001 halves must share near-dup candidates"
-
-
-def test_append_then_reread_equals_full(spark, split_docs, tmp_path):
-    docs, old, new = split_docs
-    path = str(tmp_path / "sig_idx2")
-    write_minhash_signatures(old, path)
-    append_minhash_signatures(new, path)
-    full = _pairset(minhash_lsh_pairs(docs))
-    assert _pairset(minhash_lsh_pairs_from_signatures(spark, path)) == full
-
-
-def test_refine_pairs_levenshtein(spark):
-    from pg2kinesis_spark.functions.dedup import (
-        minhash_lsh_pairs,
-        refine_pairs_levenshtein,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again today ok"
-    docs = spark.createDataFrame(
-        [
-            (1, base),
-            (2, base.replace("today", "tonite")),     # few edits
-            (3, base.replace("quick", "slow").replace("lazy", "busy")),
-            (4, "completely different words forming some other document body"),
-        ],
-        ["doc_id", "text"],
-    )
-    pairs = minhash_lsh_pairs(docs, n=2, k=16, bands=8)
-    refined = refine_pairs_levenshtein(pairs, docs, max_dist=8)
-    got = {(r["id1"], r["id2"]): r["edit_dist"] for r in refined.collect()}
-    assert (1, 2) in got and got[(1, 2)] <= 6
-    # pairs over the threshold are dropped even if the sketch proposed them
-    assert all(d <= 8 for d in got.values())
-    # the threshold form must short-circuit (-1) rather than compute full
-    # distance: no pair with a big true distance survives
-    assert (1, 4) not in got and (2, 4) not in got

@@ -142,29 +142,3 @@ def test_scoring_plan_broadcasts_logratios(spark, corpora):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan  # gram stream never shuffles to meet the table
-
-
-def test_threshold_for_rate_calibration(spark, corpora):
-    """dsir_threshold_for_rate keeps ~the requested fraction, and the
-    kept set is exactly the top scorers (rank semantics)."""
-    docs, target, rows = corpora
-    lr = dsir.fit_dsir_logratios(target, docs, n_buckets=B)
-    scores = dsir.dsir_scores(docs, lr, n_buckets=B)
-    thr = dsir.dsir_threshold_for_rate(scores, rate=0.3)
-    kept = {r.doc_id for r in scores.filter(F.col("logw") >= thr).collect()}
-    n = len(rows)
-    assert 0.25 * n <= len(kept) <= 0.4 * n  # approx_percentile tolerance
-    all_scores = {r.doc_id: r.logw for r in scores.collect()}
-    worst_kept = min(all_scores[d] for d in kept)
-    best_dropped = max(v for d, v in all_scores.items() if d not in kept)
-    assert worst_kept >= best_dropped
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        dsir.dsir_threshold_for_rate(scores, rate=0.0)
-
-
-def test_threshold_for_rate_empty_scores_raises(spark):
-    empty = spark.createDataFrame([], "doc_id long, logw double")
-    with pytest.raises(ValueError):
-        dsir.dsir_threshold_for_rate(empty, rate=0.5)

@@ -17,7 +17,6 @@ from pg2kinesis_spark.functions.codecs import (
     encode_gif,
     encode_png,
     is_gif,
-    resize_nearest,
 )
 
 
@@ -95,13 +94,10 @@ def test_gif_property_roundtrip():
 # --- Spark-side real paths -------------------------------------------------
 
 def test_gif_spark_features_resize_dhash(spark):
-    from pyspark.sql import functions as F
-
     from pg2kinesis_spark.functions.multimodal import (
         MEDIA_SCHEMA,
         extract_features,
         media_dhash,
-        resize_media,
     )
 
     img = _paletted(24, 16, 32, seed=9)
@@ -117,10 +113,6 @@ def test_gif_spark_features_resize_dhash(spark):
     # GIF is lossless: the same pixels as the PNG -> identical dHash
     h = {r["media_id"]: r["dhash"] for r in media_dhash(media).collect()}
     assert h[0] == h[1]
-
-    out = resize_media(media.filter(F.col("media_id") == 0), width=8, height=8, fake=False).collect()
-    resized = decode_gif(bytes(out[0]["content"]))
-    np.testing.assert_array_equal(resized, resize_nearest(img, 8, 8))
 
 
 # --- animated GIFs ---------------------------------------------------------
@@ -262,20 +254,3 @@ def test_disposal_restore_previous():
     want = pal[base].copy()
     want[2, 2] = pal[2]
     np.testing.assert_array_equal(f[2], want)
-
-
-def test_video_frames_accepts_animated_gif(spark):
-    from pg2kinesis_spark.functions.multimodal import MEDIA_SCHEMA, video_frames
-    from pg2kinesis_spark.functions.codecs import decode_png
-
-    rng = np.random.RandomState(11)
-    pal = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-    frames = [pal[rng.randint(0, 16, (12, 10))] for _ in range(3)]
-    media = spark.createDataFrame(
-        [(7, bytearray(encode_gif_frames(frames)), ("image/gif", 0, "anim.gif"))],
-        MEDIA_SCHEMA,
-    )
-    got = video_frames(media, stride=1, max_frames=8).orderBy("frame_idx").collect()
-    assert len(got) == 3
-    for r, want in zip(got, frames):
-        np.testing.assert_array_equal(decode_png(bytes(r["content"])), want)

@@ -12,7 +12,6 @@ from pg2kinesis_spark.functions.html import (
     _BLOCK_TAGS,
     _DROP_BLOCKS,
     _ENTITIES,
-    extract_title,
     html_to_text_col,
 )
 
@@ -85,18 +84,6 @@ def test_matches_python_twin_on_generated_docs(spark):
     }
     for i, html in rows:
         assert got[i] == _py_extract(html), html
-
-
-def test_extract_title(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "<html><head><title> A &amp; B\n  site </title></head></html>"),
-            (2, "<p>no title</p>"),
-        ],
-        ["doc_id", "html"],
-    )
-    got = {r["doc_id"]: r["title"] for r in extract_title(df).collect()}
-    assert got == {1: "A & B site", 2: ""}
 
 
 def test_composes_with_curation_and_plan_is_map_only(spark):

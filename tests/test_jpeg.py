@@ -198,17 +198,6 @@ def test_extract_image_features_real_jpeg(spark, jpeg_media):
     assert rows[1]["mean_luma"] == pytest.approx(float(src.mean()), abs=2.0)
 
 
-def test_resize_media_real_jpeg(spark, jpeg_media):
-    from pg2kinesis_spark.functions.multimodal import resize_media
-
-    out = resize_media(jpeg_media, width=8, height=8, fake=False).collect()
-    for r in out:
-        data = bytes(r["content"])
-        assert is_jpeg(data)  # format preserved through resize
-        assert decode_jpeg(data).shape[:2] == (8, 8)
-        assert r["meta"]["bytes_hint"] == len(data)
-
-
 def test_media_dhash_cross_format_neardup(spark):
     """The same picture shipped as PNG and as JPEG must land within a
     few dHash bits — the exact cross-codec dedup case the perceptual
@@ -274,14 +263,11 @@ def test_avi_rejections():
 
 
 def test_video_frames_spark_and_cross_video_neardup(spark):
-    """The full real video path: AVI -> per-frame PNG rows -> dHash.
-    A re-encoded brightness-shifted copy of the clip must match frame
-    for frame; an unrelated clip must not."""
+    """The real video path: AVI clips decode to their first-frame
+    dimensions."""
     from pg2kinesis_spark.functions.multimodal import (
         MEDIA_SCHEMA,
         extract_features,
-        media_dhash,
-        video_frames,
     )
 
     clip_a = _clip_frames(seed=4)
@@ -296,25 +282,6 @@ def test_video_frames_spark_and_cross_video_neardup(spark):
     # container-level features: first-frame dims
     dims = {r["media_id"]: (r["width"], r["height"]) for r in extract_features(media, fake=False).collect()}
     assert dims == {0: (24, 16), 1: (24, 16), 2: (24, 16)}
-
-    frames = video_frames(media, stride=2, max_frames=2)
-    got = frames.collect()
-    assert len(got) == 6  # 3 clips x frames 0 and 2
-    assert all(r["meta"]["mime"] == "image/png" for r in got)
-
-    # per-frame dHash via the unchanged image machinery
-    from pyspark.sql import functions as F
-
-    per_frame = frames.select(
-        (F.col("media_id") * 100 + F.col("frame_idx")).alias("media_id"),
-        "content",
-        "meta",
-    )
-    h = {r["media_id"]: r["dhash"] for r in media_dhash(per_frame).collect()}
-    ham = lambda a, b: bin((a ^ b) & ((1 << 64) - 1)).count("1")
-    for fi in (0, 1):
-        assert ham(h[0 + fi], h[100 + fi]) <= 6  # same clip, brightness shift
-        assert ham(h[0 + fi], h[200 + fi]) > 8  # different clip
 
 
 def test_jpeg_property_roundtrip():
@@ -361,29 +328,6 @@ def test_rgb_422_roundtrip_and_restart():
     np.testing.assert_array_equal(a, b)
     with pytest.raises(ValueError, match="subsample"):
         encode_jpeg(img, subsample="411")
-
-
-def test_video_near_dup_pairs_clip_level(spark):
-    """Clip-level dedup: a re-encoded brightened copy matches on every
-    aligned frame; an unrelated clip produces no pair."""
-    from pg2kinesis_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        video_near_dup_pairs,
-    )
-
-    clip_a = _clip_frames(seed=4)
-    clip_a2 = _clip_frames(seed=4, shift=12)
-    clip_b = _clip_frames(seed=21)
-    rows = [
-        (i, bytearray(encode_avi_mjpeg(c, quality=92)), ("video/avi", 0, f"mem://{i}"))
-        for i, c in enumerate([clip_a, clip_a2, clip_b])
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = video_near_dup_pairs(
-        media, max_hamming=6, stride=2, max_frames=2, min_matching_frames=2
-    ).collect()
-    assert {(r["media_id1"], r["media_id2"]) for r in got} == {(0, 1)}
-    assert got[0]["n_frames"] == 2
 
 
 def test_video_info_header_only_and_spark(spark):

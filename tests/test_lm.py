@@ -152,23 +152,6 @@ def test_curate_perplexity_gate(spark, docs, lm):
     assert kept == want
 
 
-def test_perplexity_buckets_head_middle_tail(spark, docs, lm):
-    from pg2kinesis_spark.functions.lm import perplexity_buckets
-
-    b = perplexity_buckets(docs, lm).collect()
-    counts = {}
-    for r in b:
-        counts[r["ppl_bucket"]] = counts.get(r["ppl_bucket"], 0) + 1
-    # thirds within approxQuantile slack
-    assert set(counts) == {"head", "middle", "tail"}
-    for v in counts.values():
-        assert 250 / 3 - 15 <= v <= 250 / 3 + 15
-    # ordering invariant: every head ppl <= every tail ppl
-    head_max = max(r["perplexity"] for r in b if r["ppl_bucket"] == "head")
-    tail_min = min(r["perplexity"] for r in b if r["ppl_bucket"] == "tail")
-    assert head_max <= tail_min
-
-
 def test_train_materialize_flag_bit_equal(docs, lm):
     """materialize=False (the 100 TB two-pass lazy formulation) yields
     the SAME model as the checkpointed default — a checkpoint is a

@@ -1,8 +1,6 @@
 """Dirty-data contract for the media kernels: one corrupt, truncated,
 or mislabeled row must route to the error channel — never kill the
-batch (a task failure retries 4x then fails the whole 100 TB job).
-Also pins the video near-dup id fidelity fix: clip ids ride the pair
-search verbatim (full signed-64 range), with no arithmetic packing."""
+batch (a task failure retries 4x then fails the whole 100 TB job)."""
 
 from __future__ import annotations
 
@@ -17,7 +15,7 @@ from pg2kinesis_spark.functions.codecs import (
     encode_png,
     encode_wav,
 )
-from pg2kinesis_spark.functions.multimodal import MEDIA_SCHEMA, media_quarantine
+from pg2kinesis_spark.functions.multimodal import MEDIA_SCHEMA
 
 
 def _rand_img(h, w, c, seed):
@@ -53,10 +51,6 @@ def test_image_features_batch_survives_dirty_rows(spark, dirty_media):
     for mid in (3, 4, 5):
         assert rows[mid].width is None and rows[mid].mean_luma is None
         assert rows[mid].decode_error  # the reason is preserved
-    clean, bad = media_quarantine(multimodal.extract_image_features(dirty_media))
-    assert sorted(r.media_id for r in clean.collect()) == [0, 1, 2]
-    assert "decode_error" not in clean.columns
-    assert sorted(r.media_id for r in bad.collect()) == [3, 4, 5]
 
 
 def test_image_features_raise_mode_still_fail_stop(spark, dirty_media):
@@ -77,16 +71,6 @@ def test_dhash_and_near_dup_route_around_dirty_rows(spark, dirty_media):
     assert not any(3 in p or 4 in p or 5 in p for p in pairs)
 
 
-def test_resize_quarantines_undecodable(spark, dirty_media):
-    out = {r.media_id: r for r in multimodal.resize_media(dirty_media, 8, 8, fake=False).collect()}
-    assert out[0].content is not None and out[0].decode_error is None
-    assert out[3].content is None and out[3].decode_error
-    clean, _bad = media_quarantine(multimodal.resize_media(dirty_media, 8, 8, fake=False))
-    feats = multimodal.extract_image_features(clean).collect()
-    assert sorted(r.media_id for r in feats) == [0, 1, 2]  # composes downstream
-    assert all((r.width, r.height) == (8, 8) for r in feats)
-
-
 def test_audio_and_video_kernels_route_dirty_rows(spark):
     samples = (np.sin(np.arange(4000) / 10) * 20000).astype(np.int16)[:, None]
     wav = encode_wav(samples, 16000)
@@ -105,43 +89,9 @@ def test_audio_and_video_kernels_route_dirty_rows(spark):
     fp = {r.media_id: r for r in multimodal.audio_fingerprint(media.filter(F.col("media_id") <= 1)).collect()}
     assert fp[0].afp is not None and fp[1].afp is None
     vids = media.filter(F.col("media_id") >= 2)
-    vf = multimodal.video_frames(vids).collect()
-    good = [r for r in vf if r.decode_error is None]
-    bad = [r for r in vf if r.decode_error is not None]
-    assert {r.media_id for r in good} == {2} and len(good) == 3
-    assert [(r.media_id, r.frame_idx, r.content) for r in bad] == [(3, None, None)]
     vfeat = {r.media_id: r for r in multimodal.extract_video_features(vids).collect()}
     assert vfeat[2].n_frames == 3 and vfeat[2].decode_error is None
     assert vfeat[3].n_frames is None and vfeat[3].decode_error
-
-
-def test_video_near_dup_full_range_clip_ids(spark):
-    """ADVICE regression: media_from_files assigns xxhash64 ids over the
-    full signed 64-bit range; the pair search must return those ids
-    VERBATIM (the old media_id*1024 packing wrapped large ids and split
-    negative clips across two ids)."""
-    rng = np.random.RandomState(3)
-    frames = [rng.randint(0, 256, size=(16, 16, 3), dtype=np.uint8) for _ in range(4)]
-    clip = encode_avi_mjpeg(frames, fps=5, quality=95)
-    copy = encode_avi_mjpeg(frames, fps=5, quality=60)  # re-encoded copy
-    other = encode_avi_mjpeg(
-        [rng.randint(0, 256, size=(16, 16, 3), dtype=np.uint8) for _ in range(4)],
-        fps=5,
-    )
-    neg_id = -5306763267897342711  # realistic xxhash64 outputs
-    big_id = 9006104871155077331  # > 2^53: float/packing would corrupt it
-    rows = [
-        (neg_id, bytearray(clip), ("video/x-msvideo", 0, "a.avi")),
-        (big_id, bytearray(copy), ("video/x-msvideo", 0, "b.avi")),
-        (7, bytearray(other), ("video/x-msvideo", 0, "c.avi")),
-        (8, bytearray(b"RIFF corrupt"), ("video/x-msvideo", 0, "d.avi")),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = multimodal.video_near_dup_pairs(
-        media, max_hamming=8, max_frames=4, min_matching_frames=2
-    ).collect()
-    assert [(r.media_id1, r.media_id2) for r in got] == [(neg_id, big_id)]
-    assert got[0].n_frames >= 2
 
 
 def test_video_sampling_params_fail_fast(spark):
@@ -156,6 +106,4 @@ def test_video_sampling_params_fail_fast(spark):
     media = spark.createDataFrame([], MEDIA_SCHEMA)
     for kwargs in ({"stride": 0}, {"stride": -2}, {"max_frames": 0}):
         with pytest.raises(ValueError):
-            multimodal.video_frames(media, **kwargs)
-        with pytest.raises(ValueError):
-            multimodal.video_frame_dhash(media, **kwargs)
+            multimodal.video_scene_cuts(media, **kwargs)

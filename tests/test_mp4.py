@@ -87,9 +87,7 @@ def test_spark_video_metadata_and_sniff_over_mp4(spark):
     from pg2kinesis_spark.functions.multimodal import (
         MEDIA_SCHEMA,
         extract_video_features,
-        sniff_mime,
     )
-    import pyspark.sql.functions as F
 
     rows = [
         (0, bytearray(encode_mp4_skeleton(duration_s=3.0, fps=12.0,
@@ -105,15 +103,6 @@ def test_spark_video_metadata_and_sniff_over_mp4(spark):
     assert out[0].n_frames == 36 and out[0].width == 320
     assert out[0].decode_error is None
     assert out[1].n_frames is None and out[1].decode_error is not None
-    sniffed = {
-        r.media_id: r.mime
-        for r in media.select(
-            "media_id", sniff_mime(F.col("content")).alias("mime")
-        ).collect()
-    }
-    assert sniffed[0] == "video/mp4"
-    assert sniffed[1] == "application/octet-stream"
-    assert sniffed[2] == "audio/mp4"
 
 
 def test_truncated_metadata_raises_valueerror():

@@ -54,29 +54,6 @@ def test_hamming64_column(spark):
     assert df.select(dedup.hamming64(F.col("a"), F.col("b")).alias("h")).collect()[0].h == 2
 
 
-def test_srp_ann_scores_match_bruteforce(spark, sf_small):
-    emb = load_table(spark, sf_small, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    brute = {
-        (r.query_id, r.neighbor_id): r.cos
-        for r in similarity.cosine_topk(emb, queries, k=20).collect()
-    }
-    ann = similarity.srp_ann_topk(emb, queries, dim=64, k=5, n_bits=6).collect()
-    assert len(ann) > 0
-    # every ANN cosine must equal the exact cosine for that pair
-    for r in ann:
-        key = (r.query_id, r.neighbor_id)
-        if key in brute:
-            assert abs(brute[key] - r.cos) < 1e-12
-    # recall sanity: ANN finds a nonzero share of true top-5 neighbors
-    true_top5 = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.cosine_topk(emb, queries, k=5).collect()
-    }
-    hits = sum(1 for r in ann if (r.query_id, r.neighbor_id) in true_top5)
-    assert hits > 0
-
-
 def test_cosine_topk_blas_matches_jvm(spark, sf_small):
     # Same neighbors, same ranks, cosines within float64-vs-JVM ulp —
     # repartition forces several Arrow batches so the local-topk +
@@ -109,24 +86,6 @@ def test_cosine_topk_blas_small_corpus(spark):
     assert [(r.neighbor_id, r.rnk) for r in sorted(got, key=lambda r: r.rnk)] == [(1, 1), (2, 2)]
 
 
-def test_ivf_ann_scores_and_recall(spark, sf_small):
-    emb = load_table(spark, sf_small, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    brute5 = {(r.query_id, r.neighbor_id) for r in similarity.cosine_topk(emb, queries, k=5).collect()}
-    brute_all = {
-        (r.query_id, r.neighbor_id): r.cos
-        for r in similarity.cosine_topk(emb, queries, k=50).collect()
-    }
-    ivf = similarity.ivf_ann_topk(emb, queries, k=5, n_centroids=8, nprobe=4).collect()
-    assert len(ivf) > 0
-    for r in ivf:  # any returned score must equal the exact cosine
-        key = (r.query_id, r.neighbor_id)
-        if key in brute_all:
-            assert abs(brute_all[key] - r.cos) < 1e-12
-    hits = sum(1 for r in ivf if (r.query_id, r.neighbor_id) in brute5)
-    assert hits / len(brute5) > 0.3  # nprobe=4 of 8 cells → decent recall
-
-
 def test_ivf_int_ann_deterministic_and_recall(spark, sf_small):
     """The hash-checkable IVF (registered n15): centroids are exact
     integer arithmetic from a hash-seeded init, so two runs are
@@ -151,15 +110,6 @@ def test_ivf_int_ann_deterministic_and_recall(spark, sf_small):
             assert abs(brute_all[key] - r.cos) < 1e-12
     hits = sum(1 for r in ivf if (r.query_id, r.neighbor_id) in brute5)
     assert hits / len(brute5) > 0.3
-
-
-def test_srp_neardup_is_subset_of_bruteforce(spark, sf_small):
-    emb = load_table(spark, sf_small, "embeddings")
-    brute = {(r.id1, r.id2) for r in similarity.cosine_pairs(emb, min_cos=0.4).collect()}
-    approx = {(r.id1, r.id2) for r in similarity.srp_neardup_pairs(emb, dim=64, min_cos=0.4, n_bits=4).collect()}
-    assert approx <= brute  # never a false positive (exact re-check)
-    if brute:
-        assert len(approx) > 0  # and it finds some of them at 4 bits
 
 
 def test_hash_sample_deterministic_and_disjoint(spark, sf_small):
@@ -292,81 +242,3 @@ def test_token_budget_null_scores_rank_last_not_lost(spark):
         df, score=F.col("score"), n_tokens=F.col("n_tokens"), budget=30
     ).orderBy("cum_tokens").collect()
     assert [r.doc_id for r in sel2] == [1, 2, 4]
-
-
-def test_resize_media_bounds_content_and_composes(spark, planted):
-    media = multimodal.synthetic_media(planted)
-    small = multimodal.resize_media(media, width=8, height=8)
-    rows = {r.media_id: r for r in small.collect()}
-    origs = {r.media_id: bytes(r.content) for r in media.collect()}
-    assert rows
-    for mid, r in rows.items():
-        assert len(r.content) == 64                  # exactly width*height
-        assert r.meta.bytes_hint == 64               # partition sizing stays honest
-        assert r.meta.mime == "image/fake"
-        b = origs[mid]
-        if len(b) >= 64:                             # deterministic stride sample
-            step = len(b) / 64
-            assert bytes(r.content) == bytes(b[int(i * step)] for i in range(64))
-    # same schema in as out → composes with downstream media operators
-    feats = multimodal.extract_features(small).collect()
-    assert all(f.n_bytes == 64 for f in feats)
-    with pytest.raises(Exception, match="PNG"):
-        # real resize decodes true pixels — fake media isn't PNG
-        multimodal.resize_media(media, fake=False, errors="raise").collect()
-    # default quarantine: same rows survive with NULL content + the error
-    bad = multimodal.resize_media(media, fake=False).collect()
-    assert bad and all(r.content is None and "PNG" in r.decode_error for r in bad)
-
-
-def test_lsh_from_materialized_signatures_matches_direct(spark, sf_small, tmp_path):
-    """The write-once scale path must produce byte-identical pairs to the
-    direct (recomputing) path."""
-    docs = load_table(spark, sf_small, "documents").filter(F.col("doc_id") < 300)
-    direct = {
-        (r.id1, r.id2, r.est_jaccard)
-        for r in dedup.minhash_lsh_pairs(docs, n=3, k=16, bands=4, seed=7).collect()
-    }
-    path = str(tmp_path / "sigs.parquet")
-    dedup.write_minhash_signatures(docs, path, n=3, k=16, seed=7)
-    from_table = {
-        (r.id1, r.id2, r.est_jaccard)
-        for r in dedup.minhash_lsh_pairs_from_signatures(spark, path, k=16, bands=4).collect()
-    }
-    assert from_table == direct and direct
-
-
-def test_srp_neardup_from_materialized_buckets_matches_direct(spark, sf_small, tmp_path):
-    emb = load_table(spark, sf_small, "embeddings")
-    direct = {
-        (r.id1, r.id2)
-        for r in similarity.srp_tables_neardup_pairs(emb, dim=64, min_cos=0.4).collect()
-    }
-    path = str(tmp_path / "buckets.parquet")
-    similarity.write_srp_buckets(emb, path, dim=64)
-    from_table = {
-        (r.id1, r.id2)
-        for r in similarity.srp_neardup_pairs_from_buckets(spark, path, min_cos=0.4).collect()
-    }
-    assert from_table == direct and direct
-
-
-def test_ivf_from_materialized_index_matches_direct(spark, sf_small, tmp_path):
-    """Same centroid seed → the indexed path must return exactly the
-    direct path's neighbors, and its corpus read must partition-prune to
-    the probed cells (cid is a partition column)."""
-    emb = load_table(spark, sf_small, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    direct = {
-        (r.query_id, r.neighbor_id, r.rnk)
-        for r in similarity.ivf_ann_topk(emb, queries, k=3, n_centroids=8, nprobe=3).collect()
-    }
-    path = str(tmp_path / "ivf")
-    similarity.write_ivf_index(emb, path, n_centroids=8)
-    indexed_df = similarity.ivf_ann_topk_from_index(spark, path, queries, k=3, nprobe=3)
-    indexed = {(r.query_id, r.neighbor_id, r.rnk) for r in indexed_df.collect()}
-    assert indexed == direct and direct
-    # cid must be a partition column of the materialized corpus (the
-    # partition-pruning handle at scale)
-    import os
-    assert any(d.startswith("cid=") for d in os.listdir(f"{path}/corpus"))

@@ -1,5 +1,5 @@
-"""The package holds what its roots reach, plus a committed list of what
-only tests call.
+"""The package holds what its roots reach, plus declared test support,
+and every module-level name it binds is used somewhere.
 
 Roots: the query registry (``pg2kinesis_spark.plans``), ``bench.py``,
 ``__spark_entry__.py``, ``pg2kinesis_spark/__main__.py``, ``tools/*.py``,
@@ -10,24 +10,27 @@ top-level def of that name, and importing a module reaches its
 module-level statements. It over-approximates, so it never calls live
 code dead.
 
-A top-level def that no root reaches must be named below:
+A top-level def that no root reaches must be named in ``TEST_SUPPORT``:
+fixture encoders, and helpers or references that tests of rooted code
+use (an encoder builds the input a rooted decoder reads; ``tiff_info``
+checks the headers ``encode_tiff`` writes; ``cosine_pairs`` is the
+brute-force reference for ``srp_tables_neardup_pairs``). The test fails
+on a new def that no root reaches, on a listed def that a root now
+reaches or that is gone, and on a listed def that no test uses.
 
-- ``TEST_SUPPORT``: fixture encoders, and helpers or references that
-  tests of rooted code use (an encoder builds the input a rooted decoder
-  reads; ``tiff_info`` checks the headers ``encode_tiff`` writes).
-- ``TESTED_ONLY``: library code that only its own tests call. Deleting
-  one deletes the tests that check only it, so these go a few modules
-  per change.
-
-The test fails on a new def that no root reaches, on a listed def that a
-root now reaches or that is gone, and on a listed def that no test uses.
+The orphan check is name-level too: a name that a package module binds
+at module level, by assignment or import, must occur as a name, an
+attribute or an identifier-shaped string somewhere in the package,
+``tests/``, ``tools/``, ``perfbench/``, ``bench.py`` or
+``__spark_entry__.py``, beyond its own binding. Dunders and ``__all__``
+are exempt.
 """
 
 from __future__ import annotations
 
 import ast
 import re
-from collections import defaultdict
+from collections import Counter, defaultdict
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -75,6 +78,7 @@ TEST_SUPPORT = frozenset({
     "functions.opus.encode_webm_opus_envelope",
     "functions.opus.opus_envelope_packets",
     "functions.opus.silk_quantize_envelope",
+    "functions.similarity.cosine_pairs",
     "functions.vorbis._VBitWriter",
     "functions.vorbis._fixture_setup_packet",
     "functions.vorbis.encode_ogg_vorbis_envelope",
@@ -82,93 +86,6 @@ TEST_SUPPORT = frozenset({
     "functions.vorbis.vorbis_quantize_envelope",
     "operators.pgoutput.encode_truncate",
 })
-
-TESTED_ONLY = frozenset({
-    "bucketing.colocated_join",
-    "bucketing.write_bucketed",
-    "functions.archives.archive_jsonl_to_corpus",
-    "functions.archives.epub_to_corpus",
-    "functions.archives.members_as_media",
-    "functions.bpe.bpe_decode",
-    "functions.bpe.bpe_encode",
-    "functions.bpe.bpe_fertility",
-    "functions.bpe.load_model",
-    "functions.bpe.save_model",
-    "functions.c4.drop_boilerplate_lines",
-    "functions.classifier.score_docs",
-    "functions.codecs.audio_cover",
-    "functions.codecs.flac_cover",
-    "functions.codecs.id3v2_cover",
-    "functions.codecs.mp4_cover",
-    "functions.contamination.contamination_report",
-    "functions.dedup.append_minhash_signatures",
-    "functions.dedup.minhash_lsh_pairs_from_signatures",
-    "functions.dedup.refine_pairs_levenshtein",
-    "functions.dedup.write_minhash_signatures",
-    "functions.dsir.dsir_threshold_for_rate",
-    "functions.embed.build_embedding_pipeline",
-    "functions.embed.embed_docs",
-    "functions.embed.fit_embedder",
-    "functions.embed.semantic_neardup_pairs",
-    "functions.html.extract_title",
-    "functions.lm.perplexity_buckets",
-    "functions.multimodal._with_error",
-    "functions.multimodal.covers_as_media",
-    "functions.multimodal.extract_cover_art",
-    "functions.multimodal.media_from_files",
-    "functions.multimodal.media_profile",
-    "functions.multimodal.media_quarantine",
-    "functions.multimodal.pdf_images_as_media",
-    "functions.multimodal.resize_media",
-    "functions.multimodal.sniff_mime",
-    "functions.multimodal.video_frame_dhash",
-    "functions.multimodal.video_frames",
-    "functions.multimodal.video_near_dup_pairs",
-    "functions.packing.materialize_sequences",
-    "functions.packing.packing_stats",
-    "functions.pii._rule_counts",
-    "functions.pii.pii_counts",
-    "functions.repetition._occurrences",
-    "functions.repetition._safe_frac",
-    "functions.repetition.doc_shape_stats",
-    "functions.repetition.dup_line_stats",
-    "functions.repetition.dup_ngram_char_frac",
-    "functions.repetition.repetition_stats",
-    "functions.repetition.top_ngram_char_frac",
-    "functions.sampling.mix_corpora",
-    "functions.sampling.rebalance_to_target",
-    "functions.sampling.stratified_fixed_n",
-    "functions.sampling.stratified_sample",
-    "functions.sampling.temperature_weights",
-    "functions.sampling.weighted_sample_n",
-    "functions.search.bm25_topk_from_postings",
-    "functions.search.corpus_stats",
-    "functions.search.write_postings",
-    "functions.similarity._sqdist",
-    "functions.similarity.cosine_pairs",
-    "functions.similarity.ivf_ann_topk",
-    "functions.similarity.ivf_ann_topk_from_index",
-    "functions.similarity.ivf_assign",
-    "functions.similarity.ivf_centroids",
-    "functions.similarity.srp_ann_topk",
-    "functions.similarity.srp_buckets",
-    "functions.similarity.srp_neardup_pairs",
-    "functions.similarity.srp_neardup_pairs_from_buckets",
-    "functions.similarity.srp_planes",
-    "functions.similarity.write_ivf_index",
-    "functions.similarity.write_srp_buckets",
-    "functions.skew.explode_salt",
-    "functions.skew.salt_from_row",
-    "functions.skew.salted_count_distinct",
-    "functions.skew.salted_join",
-    "functions.text.chunk_documents",
-    "functions.text.normalize_text",
-    "functions.unigram.corpus_log_likelihood",
-    "functions.unigram.unigram_encode",
-    "functions.vocab.build_vocab",
-    "functions.vocab.vocab_token_counts",
-})
-
 
 def _names(node: ast.AST) -> set[str]:
     out = set()
@@ -270,11 +187,64 @@ def test_unrooted_defs_are_exactly_the_listed_ones():
     ]
     reached = pkg.reach(files, ["pg2kinesis_spark.plans"], public)
     unrooted = _short(set(pkg.defs) - reached)
-    assert not TEST_SUPPORT & TESTED_ONLY
-    listed = TEST_SUPPORT | TESTED_ONLY
-    assert sorted(unrooted - listed) == [], "defs that no root reaches"
-    assert sorted(listed - unrooted) == [], "listed defs that are rooted or gone"
+    assert sorted(unrooted - TEST_SUPPORT) == [], "defs that no root reaches"
+    assert sorted(TEST_SUPPORT - unrooted) == [], "listed defs that are rooted or gone"
 
     tests = [p for p in sorted(Path(__file__).parent.glob("*.py")) if p.name != Path(__file__).name]
     used = _short(pkg.reach(tests, [], []))
-    assert sorted(listed - used) == [], "listed defs that no test uses"
+    assert sorted(TEST_SUPPORT - used) == [], "listed defs that no test uses"
+
+
+def _bindings(tree: ast.Module):
+    """(name, node) for each module-level assignment target and import
+    alias, including those under a top-level ``if`` or ``try``."""
+    todo = list(tree.body)
+    while todo:
+        st = todo.pop()
+        if isinstance(st, (ast.If, ast.Try)):
+            todo += st.body + st.orelse + getattr(st, "finalbody", [])
+            todo += [s for h in getattr(st, "handlers", []) for s in h.body]
+        elif isinstance(st, (ast.Import, ast.ImportFrom)):
+            for a in st.names:
+                yield (a.asname or a.name).split(".")[0], st
+        elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+            for t in st.targets if isinstance(st, ast.Assign) else [st.target]:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name):
+                        yield n.id, st
+
+
+def _uses(tree: ast.AST) -> Counter:
+    out = Counter()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            out[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            out[n.attr] += 1
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and _IDENT.match(n.value):
+            out[n.value] += 1
+        elif isinstance(n, ast.ImportFrom):
+            out.update(a.name for a in n.names)
+    return out
+
+
+def test_module_level_names_are_used():
+    files = sorted(PKG.rglob("*.py")) + sorted((REPO / "tests").glob("*.py"))
+    files += sorted((REPO / "tools").glob("*.py")) + sorted((REPO / "perfbench").glob("*.py"))
+    files += [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    trees = {f: ast.parse(f.read_text(encoding="utf-8")) for f in files}
+    uses = Counter()
+    for tree in trees.values():
+        uses += _uses(tree)
+    orphans = []
+    for path in sorted(PKG.rglob("*.py")):
+        for name, st in _bindings(trees[path]):
+            if name == "annotations" or (name.startswith("__") and name.endswith("__")):
+                continue
+            # an unaliased ``from x import name`` counts itself once
+            own = isinstance(st, ast.ImportFrom) and any(
+                a.name == name and a.asname is None for a in st.names
+            )
+            if uses[name] <= own:
+                orphans.append(f"{path.relative_to(REPO)}:{st.lineno} {name}")
+    assert orphans == [], "module-level names nothing uses"

@@ -1,18 +1,11 @@
-"""PII redaction + stratified sampling tests."""
+"""PII redaction tests."""
 
 from __future__ import annotations
-
-import hashlib
 
 import pytest
 from pyspark.sql import functions as F
 
-from pg2kinesis_spark.functions.pii import pii_counts, pii_filter, redact_pii
-from pg2kinesis_spark.functions.sampling import (
-    stratified_fixed_n,
-    stratified_sample,
-)
-from pg2kinesis_spark.io import load_table
+from pg2kinesis_spark.functions.pii import pii_filter, redact_pii
 
 PII_DOCS = [
     (1, "contact me at john.doe+spam@example.co.uk for details"),
@@ -46,149 +39,12 @@ def test_redact_pii(pii_df):
     assert "<SSN>" not in got[8]
 
 
-def test_pii_counts_no_double_count(pii_df):
-    got = {r["doc_id"]: r.asDict() for r in pii_counts(pii_df).collect()}
-    assert got[1]["n_email"] == 1 and got[1]["n_pii"] == 1
-    assert got[2]["n_ipv4"] == 2 and got[2]["n_pii"] == 2
-    assert got[3]["n_ssn"] == 1 and got[3]["n_pii"] == 1
-    # the card must count once as card, zero as phone
-    assert got[4]["n_card"] == 1 and got[4]["n_phone"] == 0
-    assert got[5]["n_phone"] == 2
-    assert got[6]["n_pii"] == 0
-
-
 def test_pii_filter_zero_shuffle(pii_df):
     kept = pii_filter(pii_df, max_pii=0)
     assert {r["doc_id"] for r in kept.collect()} == {6, 8}
     plan = kept._jdf.queryExecution().executedPlan().toString()
     for op in ("Exchange", "Join", "Aggregate"):
         assert op not in plan, op
-
-
-def _py_bucket(s: str, buckets: int) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % buckets
-
-
-def test_stratified_sample_matches_hash_oracle(spark, sf_small):
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text", "lang")
-    fr = {"en": 0.5, "de": 0.1}
-    got = {r["doc_id"] for r in stratified_sample(docs, "lang", fr, "text").collect()}
-    want = set()
-    for r in docs.collect():
-        frac = fr.get(r["lang"], 0.0)
-        if _py_bucket(r["text"], 10_000) < int(frac * 10_000):
-            want.add(r["doc_id"])
-    assert got == want and got  # non-empty
-
-
-def test_stratified_sample_single_fraction(spark, sf_small):
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text", "lang")
-    out = stratified_sample(docs, "lang", 0.25, "text")
-    n, total = out.count(), docs.count()
-    assert 0.15 * total < n < 0.35 * total
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # pure filter
-
-
-def test_stratified_fixed_n_exact_and_deterministic(spark, sf_small):
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text", "lang")
-    out = stratified_fixed_n(docs, "lang", 7, "text")
-    sizes = {r["lang"]: r["n"] for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    avail = {r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    for lang, n_avail in avail.items():
-        assert sizes.get(lang, 0) == min(7, n_avail), lang
-    # deterministic: same result twice, and equals the single-phase ranking
-    a = sorted(r["doc_id"] for r in out.collect())
-    b = sorted(r["doc_id"] for r in stratified_fixed_n(docs, "lang", 7, "text").collect())
-    assert a == b
-    per_lang_want = {}
-    for r in docs.collect():
-        per_lang_want.setdefault(r["lang"], []).append(
-            (_py_bucket_full(r["text"]), r["text"], r["doc_id"])
-        )
-    want = []
-    for lang, rows in per_lang_want.items():
-        rows.sort(key=lambda x: (x[0], x[1]))
-        want += [d for _, _, d in rows[:7]]
-    assert a == sorted(want)
-
-
-def _py_bucket_full(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def test_rebalance_to_target(spark, sf_small):
-    from pg2kinesis_spark.functions.sampling import rebalance_to_target
-
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text", "lang")
-    targets = {"en": 0.5, "de": 0.3, "fr": 0.2}
-    out = rebalance_to_target(docs, "lang", targets, "text")
-    got = {r["lang"]: r["n"] for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert set(got) <= set(targets)
-    total = sum(got.values())
-    assert total > 0
-    # mixture within hash-granularity tolerance of the target shares
-    for lang, share in targets.items():
-        assert abs(got.get(lang, 0) / total - share) < 0.08, (lang, got)
-    # deterministic
-    a = sorted(r["doc_id"] for r in out.collect())
-    b = sorted(r["doc_id"] for r in rebalance_to_target(docs, "lang", targets, "text").collect())
-    assert a == b
-    # the binding stratum is kept (nearly) whole: at least one lang keeps
-    # ~all of its available docs
-    avail = {r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert any(got.get(l, 0) >= 0.95 * avail[l] for l in targets if l in avail)
-
-
-def test_mix_corpora(spark, sf_small):
-    from pg2kinesis_spark.functions.sampling import mix_corpora
-
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    a = docs.filter(F.col("doc_id") % 3 == 0)
-    b = docs.filter(F.col("doc_id") % 3 == 1)
-    c = docs.filter(F.col("doc_id") % 3 == 2)
-    out = mix_corpora(
-        {"web": a, "code": b, "books": c},
-        {"web": 0.6, "code": 0.3, "books": 0.1},
-        key_col="text",
-    )
-    got = {r["source"]: r["n"] for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    total = sum(got.values())
-    assert total > 0
-    for s, share in (("web", 0.6), ("code", 0.3), ("books", 0.1)):
-        assert abs(got.get(s, 0) / total - share) < 0.1, (s, got)
-    # deterministic + disjoint doc sets preserved
-    out2 = mix_corpora(
-        {"web": a, "code": b, "books": c},
-        {"web": 0.6, "code": 0.3, "books": 0.1},
-        key_col="text",
-    )
-    assert sorted(r["doc_id"] for r in out.collect()) == sorted(r["doc_id"] for r in out2.collect())
-    # the binding source is kept ~whole
-    masses = {"web": a.count(), "code": b.count(), "books": c.count()}
-    assert any(got.get(s, 0) >= 0.9 * masses[s] for s in masses)
-
-
-def test_temperature_weights_feed_rebalance(spark):
-    from pg2kinesis_spark.functions.sampling import (
-        rebalance_to_target,
-        temperature_weights,
-    )
-
-    rows = [(f"d{i}", "big") for i in range(900)] + [
-        (f"d{i + 1000}", "small") for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "domain"])
-    w1 = temperature_weights(df, "domain", alpha=1.0)
-    assert w1["big"] == pytest.approx(0.9) and w1["small"] == pytest.approx(0.1)
-    w0 = temperature_weights(df, "domain", alpha=0.0)
-    assert w0["big"] == pytest.approx(0.5) and w0["small"] == pytest.approx(0.5)
-    wt = temperature_weights(df, "domain", alpha=0.5)
-    assert 0.1 < wt["small"] < 0.5  # small domain up-weighted, not past uniform
-    out = rebalance_to_target(df, "domain", wt, "doc_id")
-    mix = {r["domain"]: r["n"] for r in out.groupBy("domain").agg(F.count("*").alias("n")).collect()}
-    got_small_share = mix["small"] / (mix["small"] + mix["big"])
-    assert got_small_share == pytest.approx(wt["small"], abs=0.05)
 
 
 def _py_luhn(s: str) -> bool:
@@ -222,8 +78,6 @@ def test_card_rule_requires_luhn(spark):
     assert got[3] == "amex <CARD> on file"
     assert "<CARD>" not in got[4]
     assert got[5] == "<CARD> mastercard test"
-    counts = {r.doc_id: r.n_card for r in pii_counts(df).collect()}
-    assert counts == {1: 1, 2: 0, 3: 1, 4: 0, 5: 1}
 
 
 def test_luhn_column_matches_python(spark):

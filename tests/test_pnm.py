@@ -62,8 +62,8 @@ def test_refusals_and_bounds():
         C.encode_pnm(_rgb(), maxval=1)
 
 
-def test_dispatch_dhash_identity_and_sniff(spark):
-    from pg2kinesis_spark.functions.multimodal import _dhash_image, sniff_mime
+def test_dispatch_dhash_identity_and_sniff():
+    from pg2kinesis_spark.functions.multimodal import _dhash_image
 
     rgb = _rgb()
     via_pnm = C.decode_image(C.encode_pnm(rgb))
@@ -72,13 +72,6 @@ def test_dispatch_dhash_identity_and_sniff(spark):
     assert _dhash_image(via_pnm, C.resize_nearest) == _dhash_image(
         via_png, C.resize_nearest
     )
-    rows = [
-        (bytearray(C.encode_pnm(rgb)),),
-        (bytearray(b"P3x plain text, not an image"),),
-    ]
-    df = spark.createDataFrame(rows, "content binary")
-    got = [r[0] for r in df.select(sniff_mime("content")).collect()]
-    assert got == ["image/x-portable-anymap", "application/octet-stream"]
 
 
 def test_plain_pbm_packed_digits_no_whitespace():

@@ -9,12 +9,10 @@ from __future__ import annotations
 
 from collections import Counter
 
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from pg2kinesis_spark.functions.packing import pack_sequences
-from pg2kinesis_spark.functions.repetition import dup_line_stats, top_ngram_char_frac
 from pg2kinesis_spark.functions.substr_dedup import dedup_substrings
 
 # small word alphabet -> high collision probability (the interesting case)
@@ -63,37 +61,6 @@ def test_substr_dedup_property(spark, texts):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     got = {r["doc_id"]: r["text"] for r in dedup_substrings(df, 2).collect()}
     assert got == _py_dedup(docs, 2)
-
-
-@settings(**SETTINGS)
-@given(st.lists(st.lists(WORD, min_size=0, max_size=6).map(lambda ws: " ".join(ws)),
-                min_size=1, max_size=5))
-def test_dup_line_stats_property(spark, lines_per_doc):
-    text = "\n".join(lines_per_doc)
-    df = spark.createDataFrame([(0, text)], ["doc_id", "text"])
-    r = dup_line_stats(df).collect()[0]
-    lines = text.split("\n")
-    cnt = Counter(lines)
-    dup = sum(c for c in cnt.values() if c > 1)
-    dupch = sum(c * len(l) for l, c in cnt.items() if c > 1)
-    chars = sum(len(l) for l in lines)
-    assert r["dup_line_frac"] == pytest.approx(dup / len(lines))
-    assert r["dup_line_char_frac"] == pytest.approx(dupch / chars if chars else 0.0)
-
-
-@settings(**SETTINGS)
-@given(TEXT)
-def test_top_ngram_property(spark, text):
-    df = spark.createDataFrame([(0, text)], ["doc_id", "text"])
-    r = top_ngram_char_frac(df, (2,)).collect()[0]
-    ws = text.split(" ")
-    grams = [" ".join(ws[i : i + 2]) for i in range(len(ws) - 1)]
-    dc = len(text.replace(" ", ""))
-    want = 0.0
-    if grams and dc:
-        cnt = Counter(grams)
-        want = max(c * len(g.replace(" ", "")) for g, c in cnt.items()) / dc
-    assert r["top2_gram_char_frac"] == pytest.approx(want)
 
 
 @settings(**SETTINGS)

@@ -14,12 +14,7 @@ from pyspark.sql import functions as F
 
 from pg2kinesis_spark.functions.repetition import (
     GOPHER_DEFAULTS,
-    doc_shape_stats,
-    dup_line_stats,
-    dup_ngram_char_frac,
     gopher_filter,
-    repetition_stats,
-    top_ngram_char_frac,
 )
 from pg2kinesis_spark.functions.text import STOPWORDS
 from pg2kinesis_spark.io import load_table
@@ -120,81 +115,61 @@ def edge_df(spark):
     return spark.createDataFrame(EDGE_DOCS, ["doc_id", "text"])
 
 
-def _rows(df):
-    return {r["doc_id"]: r.asDict() for r in df.collect()}
-
-
-def test_doc_shape_stats_matches_python(edge_df):
-    got = _rows(doc_shape_stats(edge_df))
-    for doc_id, text in EDGE_DOCS:
-        want = _py_shape(text)
-        for k, v in want.items():
-            assert got[doc_id][k] == pytest.approx(v), (doc_id, k, text)
-
-
-def test_dup_line_stats_matches_python(edge_df):
-    got = _rows(dup_line_stats(edge_df))
-    for doc_id, text in EDGE_DOCS:
-        want = _py_dup_lines(text)
-        for k, v in want.items():
-            assert got[doc_id][k] == pytest.approx(v), (doc_id, k)
-
-
-def test_top_ngram_matches_python(edge_df):
-    got = _rows(top_ngram_char_frac(edge_df, (2, 3)))
-    for doc_id, text in EDGE_DOCS:
-        for n in (2, 3):
-            assert got[doc_id][f"top{n}_gram_char_frac"] == pytest.approx(
-                _py_top_ngram(text, n)
-            ), (doc_id, n)
-
-
-def test_dup_ngram_exact_coverage(edge_df):
-    got = _rows(dup_ngram_char_frac(edge_df, (2, 5)))
-    for doc_id, text in EDGE_DOCS:
-        for n in (2, 5):
-            assert got[doc_id][f"dup{n}_gram_char_frac"] == pytest.approx(
-                _py_dup_ngram(text, n)
-            ), (doc_id, n)
-    # doc 8 ("a a a ...") is wall-to-wall duplicated 2-grams: coverage is
-    # exactly 1.0, where the sum-of-occurrences approximation would be ~1.8.
-    assert got[8]["dup2_gram_char_frac"] == pytest.approx(1.0)
+def _py_gopher_ok(text: str, t: dict = GOPHER_DEFAULTS) -> bool:
+    s = _py_shape(text)
+    ok = (
+        t["min_words"] <= s["n_words"] <= t["max_words"]
+        and t["min_avg_word_len"] <= s["avg_word_len"] <= t["max_avg_word_len"]
+        and s["symbol_word_ratio"] <= t["max_symbol_word_ratio"]
+        and s["bullet_line_frac"] <= t["max_bullet_line_frac"]
+        and s["ellipsis_line_frac"] <= t["max_ellipsis_line_frac"]
+        and s["alpha_word_frac"] >= t["min_alpha_word_frac"]
+        and s["stop_hits"] >= t["min_stop_hits"]
+    )
+    d = _py_dup_lines(text)
+    ok = (
+        ok
+        and d["dup_line_frac"] <= t["max_dup_line_frac"]
+        and d["dup_line_char_frac"] <= t["max_dup_line_char_frac"]
+    )
+    for n in (2, 3, 4):
+        ok = ok and _py_top_ngram(text, n) <= t["max_top_ngram_char_frac"][n]
+    for n in (5, 10):
+        ok = ok and _py_dup_ngram(text, n) <= t["max_dup_ngram_char_frac"][n]
+    return ok
 
 
 def test_gopher_filter_matches_python_on_real_docs(spark, sf_small):
     docs = load_table(spark, sf_small, "documents").limit(300)
-    t = GOPHER_DEFAULTS
     survivors = {r["doc_id"] for r in gopher_filter(docs).select("doc_id").collect()}
     for r in docs.select("doc_id", "text").collect():
-        s, text = _py_shape(r["text"]), r["text"]
-        ok = (
-            t["min_words"] <= s["n_words"] <= t["max_words"]
-            and t["min_avg_word_len"] <= s["avg_word_len"] <= t["max_avg_word_len"]
-            and s["symbol_word_ratio"] <= t["max_symbol_word_ratio"]
-            and s["bullet_line_frac"] <= t["max_bullet_line_frac"]
-            and s["ellipsis_line_frac"] <= t["max_ellipsis_line_frac"]
-            and s["alpha_word_frac"] >= t["min_alpha_word_frac"]
-            and s["stop_hits"] >= t["min_stop_hits"]
-        )
-        d = _py_dup_lines(text)
-        ok = (
-            ok
-            and d["dup_line_frac"] <= t["max_dup_line_frac"]
-            and d["dup_line_char_frac"] <= t["max_dup_line_char_frac"]
-        )
-        for n in (2, 3, 4):
-            ok = ok and _py_top_ngram(text, n) <= t["max_top_ngram_char_frac"][n]
-        for n in (5, 10):
-            ok = ok and _py_dup_ngram(text, n) <= t["max_dup_ngram_char_frac"][n]
-        assert (r["doc_id"] in survivors) == ok, r["doc_id"]
+        assert (r["doc_id"] in survivors) == _py_gopher_ok(r["text"]), r["doc_id"]
 
 
-def test_repetition_stats_zero_shuffle(spark, edge_df):
-    # Every signal is row-local: the whole stats plan must be map-only —
-    # no exchange, no join, no aggregate.
-    plan = repetition_stats(edge_df)._jdf.queryExecution().executedPlan().toString()
-    for op in ("Exchange", "Join", "Aggregate", "CartesianProduct"):
-        assert op not in plan, op
+def test_gopher_filter_matches_python_on_edge_docs(edge_df):
+    """Each gate alone, every other threshold wide open, keeps exactly
+    the edge docs the Python oracle keeps (at the defaults the short
+    edge docs all fail min_words first)."""
+    wide = {
+        "min_words": 0, "max_words": 10**9, "min_avg_word_len": 0.0,
+        "max_avg_word_len": 1e9, "max_symbol_word_ratio": 1e9,
+        "max_bullet_line_frac": 1e9, "max_ellipsis_line_frac": 1e9,
+        "min_alpha_word_frac": 0.0, "min_stop_hits": 0,
+        "max_dup_line_frac": 1e9, "max_dup_line_char_frac": 1e9,
+        "max_top_ngram_char_frac": {2: 1e9, 3: 1e9, 4: 1e9},
+        "max_dup_ngram_char_frac": {5: 1e9, 10: 1e9},
+    }
+    seen = set()
+    for gate, value in GOPHER_DEFAULTS.items():
+        t = dict(wide, **{gate: value})
+        survivors = {
+            r["doc_id"] for r in gopher_filter(edge_df, thresholds=t).select("doc_id").collect()
+        }
+        for doc_id, text in EDGE_DOCS:
+            want = _py_gopher_ok(text, t)
+            seen.add(want)
+            assert (doc_id in survivors) == want, (gate, doc_id, text)
+    assert seen == {True, False}
 
 
 def test_gopher_filter_zero_shuffle(spark, edge_df):

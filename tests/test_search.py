@@ -11,10 +11,7 @@ from pyspark.sql import functions as F
 
 from pg2kinesis_spark.functions.search import (
     bm25_topk,
-    bm25_topk_from_postings,
     build_postings,
-    corpus_stats,
-    write_postings,
 )
 from pg2kinesis_spark.io import load_table
 
@@ -78,13 +75,6 @@ def test_postings_tf_and_dl(spark):
     assert ("", 3) not in got and not any(d == 3 for _, d in got)
 
 
-def test_corpus_stats(spark):
-    df = spark.createDataFrame([(1, "a b"), (2, "a")], ["doc_id", "text"])
-    rows = {r["term"]: r for r in corpus_stats(build_postings(df)).collect()}
-    assert rows["a"]["df"] == 2 and rows["b"]["df"] == 1
-    assert rows["a"]["n_docs"] == 2 and rows["a"]["avgdl"] == pytest.approx(1.5)
-
-
 def test_bm25_matches_python_oracle(spark, docs, pydocs):
     got = bm25_topk(spark, docs, QUERIES, k=10)
     rows = got.collect()
@@ -100,31 +90,6 @@ def test_bm25_matches_python_oracle(spark, docs, pydocs):
             assert r["score"] == pytest.approx(s, rel=1e-9), qid
 
 
-def test_persisted_index_same_results(spark, docs, tmp_path):
-    path = str(tmp_path / "idx")
-    write_postings(docs, path, buckets=16)
-    a = bm25_topk(spark, docs, QUERIES, k=5).collect()
-    b = bm25_topk_from_postings(spark, path, QUERIES, k=5, buckets=16).collect()
-    key = lambda r: (r["query_id"], r["rnk"])
-    assert sorted([tuple(r) for r in a], key=lambda x: (x[0], x[3])) == sorted(
-        [tuple(r) for r in b], key=lambda x: (x[0], x[3])
-    )
-
-
-def test_persisted_index_prunes_partitions(spark, docs, tmp_path):
-    path = str(tmp_path / "idx2")
-    write_postings(docs, path, buckets=16)
-    plan = (
-        bm25_topk_from_postings(spark, path, {"q": "data"}, k=3, buckets=16)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan
-    # one query term -> exactly one surviving term_bucket in each scan
-    assert "term_bucket" in plan
-
-
 def test_bm25_plan_broadcasts_query_terms(spark, docs):
     plan = (
         bm25_topk(spark, docs, QUERIES, k=5)
@@ -136,16 +101,10 @@ def test_bm25_plan_broadcasts_query_terms(spark, docs):
     assert "CartesianProduct" not in plan
 
 
-def test_inline_and_persisted_agree_with_empty_docs(spark, tmp_path):
-    """Token-less docs must not skew n_docs/avgdl on either path — the
-    inline path computes corpus constants from docs (dl > 0 filter), the
-    persisted path from postings; results must stay identical."""
-    from pg2kinesis_spark.functions.search import (
-        bm25_topk,
-        bm25_topk_from_postings,
-        write_postings,
-    )
-
+def test_bm25_ignores_tokenless_docs(spark):
+    """Token-less docs must not skew n_docs/avgdl: the corpus constants
+    come from docs with dl > 0, so scores equal the oracle's over the
+    token-bearing docs alone."""
     docs = spark.createDataFrame(
         [
             (1, "alpha beta gamma alpha"),
@@ -160,14 +119,13 @@ def test_inline_and_persisted_agree_with_empty_docs(spark, tmp_path):
         ],
         ["doc_id", "text"],
     )
-    qs = {"q": "alpha beta"}
-    inline = {(r["query_id"], r["doc_id"], round(r["score"], 10))
-              for r in bm25_topk(spark, docs, qs, k=3).collect()}
-    path = str(tmp_path / "idx")
-    write_postings(docs, path, buckets=4)
-    persisted = {(r["query_id"], r["doc_id"], round(r["score"], 10))
-                 for r in bm25_topk_from_postings(spark, path, qs, k=3, buckets=4).collect()}
-    assert inline == persisted and inline
+    got = [(r["doc_id"], r["score"]) for r in bm25_topk(spark, docs, {"q": "alpha beta"}, k=3)
+           .orderBy("rnk").collect()]
+    tokened = [(d, t) for d, t in ((r["doc_id"], r["text"]) for r in docs.collect()) if _tok(t)]
+    want = _py_bm25(tokened, "alpha beta", 3)
+    assert [d for d, _ in got] == [d for d, _ in want] and got
+    for (_, s), (_, w) in zip(got, want):
+        assert s == pytest.approx(w, rel=1e-9)
 
 
 def test_bm25_materialize_flag_bit_equal(spark, docs):

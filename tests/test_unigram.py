@@ -89,14 +89,6 @@ def test_viterbi_roundtrip_and_unknown_chars(model):
     assert ids == [ug.UNK_ID]
 
 
-def test_em_objective_monotone(wf):
-    m1 = ug.learn_unigram_from_frequencies(wf, vocab_size=10_000, em_iters=1)
-    m3 = ug.learn_unigram_from_frequencies(wf, vocab_size=10_000, em_iters=3)
-    ll1 = ug.corpus_log_likelihood(wf, m1)
-    ll3 = ug.corpus_log_likelihood(wf, m3)
-    assert ll3 >= ll1 - 1e-6
-
-
 def test_model_is_deterministic_and_normalized(wf, model):
     again = ug.learn_unigram_from_frequencies(wf, vocab_size=300)
     assert again.logprobs == model.logprobs
@@ -116,15 +108,6 @@ def test_token_counts_match_python(spark, docs, model):
     rows = {r.doc_id: r.text for r in docs.collect()}
     for d, text in rows.items():
         want = sum(len(model.viterbi_word(w)) for w in text.split(" ") if w != "")
-        assert got[d] == want, d
-
-
-def test_encode_matches_per_word_encoding(spark, docs, model):
-    sample = docs.filter(F.col("doc_id") < 20)
-    got = {r.doc_id: list(r.token_ids) for r in ug.unigram_encode(sample, model).collect()}
-    rows = {r.doc_id: r.text for r in sample.collect()}
-    for d, text in rows.items():
-        want = [i for w in text.split(" ") if w != "" for i in model.encode_word(w)]
         assert got[d] == want, d
 
 

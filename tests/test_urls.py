@@ -303,10 +303,14 @@ def test_load_psl_file_roundtrip(spark, tmp_path):
     )
     psl = U.compile_psl(psl_file.read_text(encoding="utf-8").splitlines())
     assert psl["max_s"] == 3
+    assert psl["exact"][3] == {"act.edu.au"}
+    assert psl["wild"] == {1: {"ck"}} and psl["exc"] == {2: {"www.ck"}}
+    # the built-in rules carry the same shapes: *.ck, !www.ck and the
+    # 3-label s3.amazonaws.com
     cases = {
-        "www.school.act.edu.au": "school.act.edu.au",  # 3-label beats 2-label
-        "school.act.edu.au": "school.act.edu.au",
-        "foo.edu.au": "foo.edu.au",
+        "www.bucket.s3.amazonaws.com": "bucket.s3.amazonaws.com",  # 3-label beats 2-label
+        "bucket.s3.amazonaws.com": "bucket.s3.amazonaws.com",
+        "s3.amazonaws.com": "s3.amazonaws.com",
         "a.b.co.uk": "b.co.uk",
         "x.y.ck": "x.y.ck",  # y.ck is the suffix under *.ck
         "www.ck": "www.ck",
@@ -314,13 +318,11 @@ def test_load_psl_file_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([(h,) for h in cases], "host string")
     got = {
         r.host: r.dom
-        for r in df.select(
-            "host", U._registered_domain_expr("`host`", psl=psl).alias("dom")
-        ).collect()
+        for r in df.select("host", U._registered_domain_expr("`host`").alias("dom")).collect()
     }
     for h, want in cases.items():
         assert got[h] == want, h
-        assert U._py_registered(h, psl=psl) == want, h
+        assert U._py_registered(h) == want, h
 
 
 def test_blocklist_public_suffix_entry_blocks_subdomains(spark):

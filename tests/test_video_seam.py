@@ -1,8 +1,6 @@
 """Optional PyAV compressed-video decode behind fast_video_decoder:
-the knob, the refusal-to-decode (never the reverse) contract, the
-video_frames plumbing via a planted deterministic decoder, and (when
-PyAV is importable — it usually is not in this container) equality vs
-the pure MJPEG kernel."""
+the knob, the refusal-to-decode (never the reverse) contract, and (when
+PyAV is importable) equality vs the pure MJPEG kernel."""
 
 from __future__ import annotations
 
@@ -27,23 +25,6 @@ def reset_seam(monkeypatch):
     C._VIDEO_DECODER.clear()
 
 
-def _fake_decoder(n_frames: int = 6):
-    """Deterministic fake seam: frame k is a solid (16,16,3) of value
-    10*k — serialized into the kernel closure via compressed_decoder,
-    proving the Spark-side plumbing without ffmpeg."""
-
-    def fake(data, frame_indices=None):
-        out = []
-        for k in range(n_frames):
-            if frame_indices is None or k in frame_indices:
-                out.append(np.full((16, 16, 3), 10 * k, dtype=np.uint8))
-        if not out:
-            raise ValueError("no decodable video frames")
-        return out
-
-    return fake
-
-
 def test_seam_resolves_off_without_pyav_or_with_knob(reset_seam):
     reset_seam.setenv("SPARK_GRAFT_NO_PYAV", "1")
     assert C.fast_video_decoder() is None  # knob wins even with PyAV
@@ -52,57 +33,16 @@ def test_seam_resolves_off_without_pyav_or_with_knob(reset_seam):
 def test_mp4_refuses_honestly_without_seam(reset_seam, spark):
     if _HAS_AV:
         pytest.skip("PyAV importable: MP4 decodes instead of refusing")
-    from pg2kinesis_spark.functions.multimodal import MEDIA_SCHEMA, video_frames
+    from pg2kinesis_spark.functions.multimodal import MEDIA_SCHEMA, video_scene_cuts
 
     mp4 = C.encode_mp4_skeleton(duration_s=2.0, width=64, height=48, fps=10.0)
     media = spark.createDataFrame(
         [(0, bytearray(mp4), ("video/mp4", len(mp4), "mem://a.mp4"))], MEDIA_SCHEMA
     )
-    rows = video_frames(media).collect()
+    rows = video_scene_cuts(media).collect()
     assert len(rows) == 1
-    assert rows[0].content is None
+    assert rows[0].frame_idx is None
     assert "PyAV" in rows[0].decode_error
-
-
-def test_planted_seam_flows_through_video_frames(reset_seam, spark):
-    """With a deterministic fake seam, MP4/WebM bytes produce real PNG
-    frame rows that compose with the image operator surface — the
-    wiring the real PyAV path would use, proven without ffmpeg."""
-    from pg2kinesis_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        extract_image_features,
-        video_frames,
-    )
-
-    mp4 = C.encode_mp4_skeleton(duration_s=2.0, width=64, height=48, fps=10.0)
-    webm = C.encode_webm_skeleton(duration_s=2.0, n_frames=6)
-    media = spark.createDataFrame(
-        [
-            (0, bytearray(mp4), ("video/mp4", len(mp4), "mem://a.mp4")),
-            (1, bytearray(webm), ("video/webm", len(webm), "mem://b.webm")),
-        ],
-        MEDIA_SCHEMA,
-    )
-    frames = video_frames(
-        media, stride=2, max_frames=2, compressed_decoder=_fake_decoder(6)
-    )
-    rows = frames.collect()
-    # stride 2, max 2 -> ordinals {0, 2} per clip
-    assert sorted((r.media_id, r.frame_idx) for r in rows) == [
-        (0, 0), (0, 1), (1, 0), (1, 1),
-    ]
-    from pyspark.sql import functions as F
-
-    # frame rows compose with the image surface: remap to unique ids
-    per_frame = frames.select(
-        (F.col("media_id") * 10 + F.col("frame_idx")).alias("media_id"),
-        "content",
-        "meta",
-    )
-    feats = {r.media_id: r for r in extract_image_features(per_frame).collect()}
-    # frame ordinal 0 is solid 0, ordinal 2 is solid 20 -> exact lumas
-    assert feats[0].mean_luma == pytest.approx(0.0)
-    assert feats[1].mean_luma == pytest.approx(20.0)
 
 
 def test_planted_seam_rescues_non_mjpeg_avi(reset_seam):

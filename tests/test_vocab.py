@@ -6,12 +6,7 @@ from collections import Counter
 
 import pytest
 
-from pg2kinesis_spark.functions.vocab import (
-    CHAR_BASE,
-    build_vocab,
-    encode,
-    vocab_token_counts,
-)
+from pg2kinesis_spark.functions.vocab import CHAR_BASE, encode
 from pg2kinesis_spark.io import load_table
 
 
@@ -38,16 +33,15 @@ def docs(spark, sf_small):
     return load_table(spark, sf_small, "documents").limit(200).select("doc_id", "text")
 
 
-def test_build_vocab_matches_python(spark, docs):
-    texts = [r["text"] for r in docs.collect()]
-    want = _py_vocab(texts, 100)
-    got = {r["token"]: r["token_id"] for r in build_vocab(docs, 100).collect()}
-    assert got == want
+def _vocab(spark, docs, size):
+    pyv = _py_vocab([r["text"] for r in docs.collect()], size)
+    return pyv, spark.createDataFrame(
+        [(w, i, 0) for w, i in pyv.items()], "token string, token_id int, freq long"
+    )
 
 
 def test_encode_matches_python(spark, docs):
-    vocab = build_vocab(docs, 50)
-    pyv = {r["token"]: r["token_id"] for r in vocab.collect()}
+    pyv, vocab = _vocab(spark, docs, 50)
     got = {r["doc_id"]: list(r["token_ids"]) for r in encode(docs, vocab).collect()}
     for r in docs.collect():
         assert got[r["doc_id"]] == _py_encode(r["text"], pyv), r["doc_id"]
@@ -65,14 +59,11 @@ def test_encode_edge_cases(spark):
 
 
 def test_vocab_counts_and_plan(spark, docs):
-    vocab = build_vocab(docs, 50)
-    counts = vocab_token_counts(docs, vocab)
+    _, vocab = _vocab(spark, docs, 50)
+    counts = encode(docs, vocab)
     assert counts.count() == 200
     plan = counts._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-    # vocab ranking uses TakeOrdered, not a global sort; encoding uses no
-    # Python stages
-    vplan = build_vocab(docs, 50)._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrdered" in vplan
+    # encoding uses no Python stages
     for marker in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
         assert marker not in plan
