@@ -63,12 +63,12 @@ def bench_minhash_full(spark, sf_dir):
     return minhash_lsh_pairs(_docs_parallel(spark, sf_dir), n=3, k=16, bands=4)
 
 
-def bench_cdc_replay(spark, sf_dir, xid_eager=False):
+def bench_cdc_replay(spark, sf_dir):
     """CDC replay throughput: parse+enrich+format ~450k test_decoding
     wire lines (BASELINE.md bench item 4). The corpus is materialized to
     parquet once — the measured pipeline then reads the same columnar
-    source the replay path uses (and the prefix-scan's min/max pass
-    prunes to the lsn column). Sized so throughput is measured against
+    source the replay path uses (and the prefix-scan's two build jobs
+    read only its BEGIN lines). Sized so throughput is measured against
     the pipeline's marginal rate, not Spark's ~0.4 s fixed job overhead,
     which dominated the previous ~100k-line corpus."""
     import tempfile
@@ -93,26 +93,24 @@ def bench_cdc_replay(spark, sf_dir, xid_eager=False):
     cat = spark.createDataFrame(
         fx.pk_catalog_rows(), "table_name string, col_name string, col_type string, col_ord_pos int"
     )
-    # xid_eager=False: the lazy carry builds with no driver-blocking job
-    # (eager-vs-lazy equality is pytest-pinned and the lazy path is
-    # hash-checked by driver row c2). The timed action is count(), which
-    # prunes xid: Catalyst drops the carry's Window (the prefix scan) in
-    # both modes, so this entry times parse + format with no prefix scan
-    # (the lazy plan keeps one Cross and one LeftOuter join of the
-    # carry), and the eager mode would only add its two build jobs. This
-    # is where the r2-r4 vs r5-r7 throughput gap lived: the
-    # build-inclusive timer paid plan construction + eager jobs, not
-    # parse cost (SCALING.md "cdc_replay: reconciling"). Only e2e_sink,
-    # whose sink reads xid, runs the prefix scan.
-    return format_csv(
-        parse_test_decoding(raw, primary_key_map(cat), xid_eager=xid_eager)
-    ).select("lsn", "xid", "fmt_msg")
+    # The build runs the xid carry's two driver jobs (bounds and
+    # per-bucket summary, over the BEGIN lines), so the build-inclusive
+    # timer pays them. The timed action is count(), which prunes xid:
+    # Catalyst drops the carry's Window (the prefix scan), so the
+    # execution is parse + format with no prefix scan. This is where the
+    # r2-r4 vs r5-r7 throughput gap lived: the build-inclusive timer
+    # paid plan construction + build jobs, not parse cost (SCALING.md
+    # "cdc_replay: reconciling"). Only e2e_sink, whose sink reads xid,
+    # runs the prefix scan.
+    return format_csv(parse_test_decoding(raw, primary_key_map(cat))).select(
+        "lsn", "xid", "fmt_msg"
+    )
 
 
 _PGOUT_REG_CACHE: dict = {}
 
 
-def bench_pgoutput_replay(spark, sf_dir, xid_eager=False):
+def bench_pgoutput_replay(spark, sf_dir):
     """pgoutput binary-protocol parse throughput: ~190k framed messages
     through decode kernel + broadcast registry join + CSV format — the
     binary twin of cdc_replay_450k. The frame carries the distributed
@@ -123,10 +121,10 @@ def bench_pgoutput_replay(spark, sf_dir, xid_eager=False):
     materialized: that is the deployment shape (Relation messages
     establish the registry once per slot connection; every subsequent
     batch reuses it), so timing a per-batch registry rebuild would
-    measure a job no deployment runs. The xid prefix-scan's eager
-    phases (xid_eager=True) run on the pure-JVM begin-stats twin
-    (parse_pgoutput), so an eager build does not re-execute the Python
-    decode 3x."""
+    measure a job no deployment runs. The xid prefix-scan's two build
+    jobs read the Begin frames through a pure-JVM twin of the decode
+    (parse_pgoutput), so the build does not re-execute the Python
+    kernel."""
     import tempfile
 
     from pg2kinesis_spark import fixtures as fx
@@ -154,11 +152,11 @@ def bench_pgoutput_replay(spark, sf_dir, xid_eager=False):
         _PGOUT_REG_CACHE[corpus] = (reg_df.collect(), reg_df.schema)
     rows, schema = _PGOUT_REG_CACHE[corpus]
     registry = spark.createDataFrame(rows, schema)
-    # xid_eager=False: the build runs zero driver jobs, and the timed
-    # count() prunes the carry's Window (see bench_cdc_replay)
-    return format_csv(
-        pgoutput_cdc_changes(raw, registry=registry, xid_eager=xid_eager)
-    ).select("lsn", "xid", "fmt_msg")
+    # the build runs the carry's two driver jobs, and the timed count()
+    # prunes the carry's Window (see bench_cdc_replay)
+    return format_csv(pgoutput_cdc_changes(raw, registry=registry)).select(
+        "lsn", "xid", "fmt_msg"
+    )
 
 
 def _table_parallel(spark, sf_dir, name="documents", cols=None):
@@ -788,11 +786,11 @@ def run_inline(only_set: set[str] | None, sf_dir: str) -> tuple[dict, dict]:
             # streaming query never runs this plan: it decodes each
             # micro-batch with decode_pgoutput and stamps xids in-batch
             # (streaming/pipeline.py::stamp_xid).
-            # the steady plan builds EAGER so its two driver jobs are
-            # paid once, untimed; each timed count() prunes xid, so the
+            # the build (with the carry's two driver jobs) and a warm
+            # count() stay untimed; each timed count() prunes xid, so the
             # re-executions run no prefix scan
-            built = bench_pgoutput_replay(spark, sf_dir, xid_eager=True)
-            built.count()  # untimed: materialize the eager carry build
+            built = bench_pgoutput_replay(spark, sf_dir)
+            built.count()  # untimed warm pass
             ss = [_timed_count(built) for _ in range(3)]
             times["pgoutput_steady_rows_per_sec"] = round(n / min(ss), 1)
             spread["pgoutput_replay_steady"] = [round(min(ss), 4), round(max(ss), 4), 3]
@@ -830,12 +828,11 @@ def run_inline(only_set: set[str] | None, sf_dir: str) -> tuple[dict, dict]:
     if selected("e2e_sink"):
         from pg2kinesis_spark.sinks.kinesis import InMemoryTransport, KinesisLikeWriter
 
-        # eager xid carry: every timed drain re-executes this one built
-        # plan, so the literal-map carry's two build jobs are paid once,
-        # while a lazy plan re-runs its summary branch on every drain.
-        # The streaming query uses neither carry: it stamps xids
-        # in-batch (streaming/pipeline.py::stamp_xid).
-        sink_df = bench_cdc_replay(spark, sf_dir, xid_eager=True)
+        # every timed drain re-executes this one built plan, so the xid
+        # carry's two build jobs are paid once, untimed, and each drain
+        # runs the prefix scan (the sink reads xid). The streaming query
+        # stamps xids in-batch instead (streaming/pipeline.py::stamp_xid).
+        sink_df = bench_cdc_replay(spark, sf_dir)
         # untimed warm pass (same policy as EXTRA_BENCHES): the cold
         # first drain is 2-3x steady state
         t0 = time.perf_counter()

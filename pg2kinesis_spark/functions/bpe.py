@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from collections import Counter
 from dataclasses import dataclass, field
+from functools import cached_property
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -68,7 +69,7 @@ class BpeModel:
     merges: tuple = ()
     token_ids: dict = field(default_factory=dict)
 
-    @property
+    @cached_property  # built once per model, not per segment_word call
     def ranks(self) -> dict:
         return {pair: r for r, pair in enumerate(self.merges)}
 
@@ -224,25 +225,10 @@ def learn_bpe_from_frequencies(word_freqs: list, num_merges: int) -> BpeModel:
 def _word_ids_table(docs: DataFrame, model: BpeModel, text_col: str) -> DataFrame:
     """(w, ids array<int>): BPE applied to DISTINCT word types only —
     the single Python stage, bounded by vocabulary size not corpus size."""
-    # plain dicts in the closure — ranks built ONCE, not per word
-    ranks, token_ids = model.ranks, model.token_ids
-
-    def _encode_word(word: str) -> list:
-        syms = list(word) + [EOW]
-        while len(syms) > 1:
-            best_rank, best_pair = None, None
-            for pair in zip(syms, syms[1:]):
-                r = ranks.get(pair)
-                if r is not None and (best_rank is None or r < best_rank):
-                    best_rank, best_pair = r, pair
-            if best_pair is None:
-                break
-            syms = _merge_once(syms, best_pair)
-        return [token_ids.get(s, UNK_ID) for s in syms]
 
     @F.pandas_udf("array<int>")
     def _enc(words: pd.Series) -> pd.Series:
-        return words.map(_encode_word)
+        return words.map(model.encode_word)
 
     wt = (
         docs.select(F.explode(F.split(text_col, " ")).alias("w"))

@@ -39,7 +39,9 @@ Scale design
   stamp, formatting) stays JVM-side.
 * xid attribution reuses the existing distributed prefix-scan
   (``stamp_xid_scalable``): Begin rows carry ``begin_xid``, row
-  messages inherit it — identical W1 semantics to test_decoding.
+  messages inherit it — identical W1 semantics to test_decoding. Its
+  two build jobs read the Begin frames through a pure-JVM twin of the
+  kernel's Begin decode, never the Python kernel.
 * One decode kernel (``decode_pgoutput``) serves both paths: the
   streaming pipeline runs it over the replay corpus's base64 payloads
   and feeds its ``begin_xid`` to the in-batch stamp (``stamp_xid``).
@@ -422,7 +424,6 @@ def parse_pgoutput(
     raw: DataFrame,
     registry: DataFrame | None = None,
     payload_col: str = "payload",
-    xid_eager: bool = True,
 ) -> DataFrame:
     """Parse a (lsn, payload binary) pgoutput stream into change rows.
 
@@ -432,14 +433,9 @@ def parse_pgoutput(
     distributed BEGIN carry-forward. Begin/Commit/Relation messages
     drive the attribution and registry but emit no change rows.
 
-    ``xid_eager=False`` selects the zero-driver-job carry (see
-    ``stamp_xid_scalable``); the pure-JVM begin twins below then feed
-    the LAZY bounds/summary branches, so a backfill build runs no
-    driver jobs at all and the twin scans schedule inside the consuming
-    action. The eager default pays two driver jobs at build and is
-    cheaper only when one built plan is executed many times (bench.py's
-    steady-pgoutput entry). The streaming query does not call this: it
-    stamps in-batch with ``streaming/pipeline.py::stamp_xid``.
+    The build runs ``stamp_xid_scalable``'s two driver jobs over the
+    Begin frames. The streaming query does not call this: it stamps
+    in-batch with ``streaming/pipeline.py::stamp_xid``.
     """
     from .test_decoding import stamp_xid_scalable
 
@@ -447,35 +443,19 @@ def parse_pgoutput(
         registry = relation_registry(raw, payload_col)
 
     parsed = decode_pgoutput(raw, payload_col)
-    # pure-JVM twin of (lsn, begin_xid) for the prefix-scan's two EAGER
-    # phases: a Begin is tag 'B' with the uint32 xid at byte offset 17
+    # pure-JVM twin of the kernel's Begin decode for the carry's build
+    # jobs: a Begin is tag 'B' with the uint32 xid at byte offset 17
     # (big-endian, same field the kernel unpacks) — hex+conv gives the
-    # identical str(uint32). Without this twin, each eager phase re-runs
-    # the full Python decode, tripling the pipeline's wall per build.
-    begin_stats = raw.select(
-        F.col("lsn"),
-        F.when(
-            F.expr(f"substring({payload_col}, 1, 1) = x'42'"),  # 'B'
-            F.conv(F.hex(F.expr(f"substring({payload_col}, 18, 4)")), 16, 10),
-        ).alias("begin_xid"),
-    )
-    # summary twin pre-filtered on the raw tag byte so the eager
-    # per-bucket job scans only Begin frames (the [min,max] job still
-    # reads begin_stats — an lsn-pruned scan)
-    begin_rows = raw.filter(F.expr(f"substring({payload_col}, 1, 1) = x'42'")).select(
+    # identical str(uint32). Filtering on the raw tag byte keeps both
+    # jobs to a scan of Begin frames; reading ``parsed`` instead would
+    # re-run the Python decode in each of them.
+    begins = raw.filter(F.expr(f"substring({payload_col}, 1, 1) = x'42'")).select(
         F.col("lsn"),
         F.conv(F.hex(F.expr(f"substring({payload_col}, 18, 4)")), 16, 10).alias(
             "begin_xid"
         ),
     )
-    stamped = stamp_xid_scalable(
-        parsed,
-        order_col="lsn",
-        begin_col="begin_xid",
-        stats_df=begin_stats,
-        begin_rows_df=begin_rows,
-        eager=xid_eager,
-    )
+    stamped = stamp_xid_scalable(parsed, begins)
     changes = stamped.filter(
         F.col("operation").isin("insert", "update", "delete", "truncate")
     )
@@ -504,7 +484,6 @@ def pgoutput_cdc_changes(
     raw: DataFrame,
     payload_col: str = "payload",
     registry: DataFrame | None = None,
-    xid_eager: bool = True,
 ) -> DataFrame:
     """A pgoutput stream as change rows: (lsn, change_idx, xid, table,
     operation, pkey, row map<string,string>, error).
@@ -514,9 +493,7 @@ def pgoutput_cdc_changes(
     a rel_id with no Relation message surface an ``error`` instead of
     being dropped (fail-stop channel, §8.5).
     """
-    parsed = parse_pgoutput(
-        raw, registry=registry, payload_col=payload_col, xid_eager=xid_eager
-    )
+    parsed = parse_pgoutput(raw, registry=registry, payload_col=payload_col)
     # ONE selectExpr parse (r13 opt round, guide §1.5): a Column-op twin
     # builds ~30 py4j-round-trip expression nodes per construction.
     return parsed.selectExpr(

@@ -45,15 +45,10 @@ def catalog_pk_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdc_td_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1-P5+W1+J3: full test_decoding parse of the fixture stream.
-
-    Runs the ZERO-DRIVER-JOB xid carry (``xid_eager=False``) so the
-    lazy two-phase scan is hash-validated against the DuckDB oracle
-    every round alongside the eager twin (pytest pins their equality).
-    """
-    out = parse_test_decoding(
-        _fx(spark, "cdc_test_decoding"), _pk_map(spark), xid_eager=False
-    )
+    """P1-P5+W1+J3: full test_decoding parse of the fixture stream; the
+    xid column hash-checks the batch carry (``stamp_xid_scalable``)
+    against the DuckDB oracle's forward fill."""
+    out = parse_test_decoding(_fx(spark, "cdc_test_decoding"), _pk_map(spark))
     return out.select("lsn", "xid", "table", "operation", "pkey").orderBy("lsn")
 
 

@@ -222,11 +222,12 @@ def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 carry-forward on a second domain: last signup's user carried
     across ALL events. Runs through the SCALABLE two-phase prefix scan
-    (stamp_xid_scalable, lazy mode) instead of a naive global window —
-    a `last(...) over (order by event_id)` collapses the whole table
-    into ONE partition, the cliff the CDC stamp was built to avoid.
-    NULL-before-any-signup semantics restored from the stamp's ''
-    default via nullif (user_id values are non-empty by construction).
+    (stamp_xid_scalable, the signup rows as its ``begins``) instead of a
+    naive global window — a `last(...) over (order by event_id)`
+    collapses the whole table into ONE partition, the cliff the CDC
+    stamp was built to avoid. NULL-before-any-signup semantics restored
+    from the stamp's '' default via nullif (user_id values are non-empty
+    by construction).
     """
     from pg2kinesis_spark.operators.test_decoding import stamp_xid_scalable
 
@@ -235,8 +236,11 @@ def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_signup_user",
         F.when(F.col("event_type") == "signup", F.col("user_id").cast("string")),
     )
+    signups = tagged.filter(F.col("event_type") == "signup").select(
+        "event_id", "_signup_user"
+    )
     stamped = stamp_xid_scalable(
-        tagged, order_col="event_id", begin_col="_signup_user", eager=False
+        tagged, signups, order_col="event_id", begin_col="_signup_user"
     )
     return (
         stamped.select(

@@ -164,14 +164,30 @@ def test_xid_carry_forward_across_transactions(spark, pk_map):
     assert [r.xid for r in rows] == ["1", "1", "2"]
 
 
+def _stamp(df):
+    """The batch carry with its BEGIN rows taken from ``df`` itself."""
+    from pg2kinesis_spark.operators.test_decoding import stamp_xid_scalable
+
+    return stamp_xid_scalable(df, df.filter(F.col("begin_xid").isNotNull()))
+
+
+def _forward_fill(rows):
+    """Pure-Python W1 reference: walk (lsn, begin_xid) rows in lsn order
+    (NULL lsn first, as Spark's ascending order places it) and carry the
+    last BEGIN xid forward, '' before any (reference formatter.py:37)."""
+    out, cur = set(), ""
+    for lsn, begin in sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0)):
+        cur = begin if begin is not None else cur
+        out.add((lsn, cur))
+    return out
+
+
 def test_stamp_xid_null_order_col_sorts_first_and_survives(spark):
     """NULL order_col must not corrupt the scan: ascending order places
     nulls FIRST, so a NULL-lsn row belongs in bucket 0, before any BEGIN
     — xid '' — and every real row still gets its correct carry. A
     null-skipping bucket expression would route it to the LAST bucket
     and stamp it with the final transaction's xid instead."""
-    from pg2kinesis_spark.operators.test_decoding import stamp_xid_scalable
-
     rows = [
         (None, None),  # orphan row with no offset: sorts before everything
         (1, "100"),
@@ -180,21 +196,18 @@ def test_stamp_xid_null_order_col_sorts_first_and_survives(spark):
         (4, None),
     ]
     df = spark.createDataFrame(rows, "lsn long, begin_xid string")
-    got = {
-        r.lsn: r.xid for r in stamp_xid_scalable(df).collect()
-    }
+    got = {r.lsn: r.xid for r in _stamp(df).collect()}
     assert got[None] == ""  # before any BEGIN, never "200"
     assert got[1] == "100" and got[2] == "100"
     assert got[3] == "200" and got[4] == "200"
 
 
-def test_stamp_xid_lazy_matches_eager(spark):
-    """eager=False is the zero-driver-job twin of the literal-map carry:
-    same bucket function, same carry semantics, identical output —
-    including NULL order rows, empty-carry buckets, rows before any
-    BEGIN, and a many-transaction stream that spans every bucket."""
-    from pg2kinesis_spark.operators.test_decoding import stamp_xid_scalable
-
+def test_stamp_xid_scalable_matches_forward_fill(spark):
+    """The two-phase carry equals a sequential forward fill — including
+    NULL order rows, empty-carry buckets, rows before any BEGIN, a
+    many-transaction stream that spans every bucket, and rows below and
+    far above the BEGIN rows' [min, max] span, which the bucket function
+    clamps into the first and last bucket."""
     cases = [
         # orphan nulls + sparse BEGINs (the null-bucket regression shape)
         [(None, None), (1, "100"), (2, None), (3, "200"), (4, None)],
@@ -204,54 +217,26 @@ def test_stamp_xid_lazy_matches_eager(spark):
         [(i, str(i) if i % 3 == 0 else None) for i in range(1, 400)],
         # single row
         [(7, None)],
+        # rows below and above the bounds of the BEGIN rows
+        [(-900, None), (1, None), (5, "500"), (6, None), (9, "900"), (12, None), (5000, None)],
+        # BEGINs in a narrow middle of a wide span
+        [(i, str(i) if 400 <= i <= 410 and i % 2 == 0 else None) for i in range(-50, 1000, 7)],
     ]
     for rows in cases:
         df = spark.createDataFrame(rows, "lsn long, begin_xid string")
-        eager = {(r.lsn, r.xid) for r in stamp_xid_scalable(df).collect()}
-        lazy = {
-            (r.lsn, r.xid)
-            for r in stamp_xid_scalable(df, eager=False).collect()
-        }
-        assert eager == lazy
+        got = {(r.lsn, r.xid) for r in _stamp(df).collect()}
+        assert got == _forward_fill(rows), rows
 
 
-def test_stamp_xid_lazy_empty_input(spark):
-    from pg2kinesis_spark.operators.test_decoding import stamp_xid_scalable
-
+def test_stamp_xid_scalable_empty_input(spark):
     df = spark.createDataFrame([], "lsn long, begin_xid string")
-    out = stamp_xid_scalable(df, eager=False)
+    out = _stamp(df)
     assert out.collect() == [] and "xid" in out.columns
 
 
-def test_stamp_xid_lazy_runs_no_driver_jobs_at_build(spark, monkeypatch):
-    """The backfill contract: constructing the lazy plan must trigger
-    ZERO driver-blocking actions — no .first(), no .collect(). (The
-    eager path pays two; that asymmetry is the whole point of the knob,
-    SCALING.md 'cdc_replay: reconciling'.)"""
-    from pyspark.sql import DataFrame
-
-    from pg2kinesis_spark.operators.test_decoding import stamp_xid_scalable
-
-    df = spark.createDataFrame(
-        [(1, "100"), (2, None), (3, "200")], "lsn long, begin_xid string"
-    )
-
-    def boom(self, *a, **k):  # any eager action during build = failure
-        raise AssertionError("driver job during lazy plan construction")
-
-    monkeypatch.setattr(DataFrame, "first", boom)
-    monkeypatch.setattr(DataFrame, "collect", boom)
-    out = stamp_xid_scalable(df, eager=False)  # must not raise
-    monkeypatch.undo()
-    assert {(r.lsn, r.xid) for r in out.collect()} == {
-        (1, "100"),
-        (2, "100"),
-        (3, "200"),
-    }
-
-
-def test_parse_test_decoding_lazy_xid_matches_eager(spark, pk_map):
+def test_parse_test_decoding_xid_matches_forward_fill(spark, pk_map):
     payloads = [
+        "table public.test_table: INSERT: uuid[uuid]:'a-0'",  # before any BEGIN
         "BEGIN 1",
         "table public.test_table: INSERT: uuid[uuid]:'a-1'",
         "COMMIT",
@@ -259,17 +244,16 @@ def test_parse_test_decoding_lazy_xid_matches_eager(spark, pk_map):
         "table public.test_table: UPDATE: uuid[uuid]:'a-2'",
         "table public.test_table: DELETE: uuid[uuid]:'a-3'",
         "COMMIT",
+        "table public.test_table: INSERT: uuid[uuid]:'a-4'",  # after the last BEGIN
     ]
-    raw = _raw(spark, payloads)
-    cols = ("lsn", "xid", "table", "operation", "pkey")
-    a = {tuple(r) for r in parse_test_decoding(raw, pk_map).select(*cols).collect()}
-    b = {
-        tuple(r)
-        for r in parse_test_decoding(raw, pk_map, xid_eager=False)
-        .select(*cols)
-        .collect()
+    begins = [p.split(" ")[1] if p.startswith("BEGIN ") else None for p in payloads]
+    want = {
+        (lsn, xid)
+        for lsn, xid in _forward_fill(list(enumerate(begins)))
+        if payloads[lsn].startswith("table ")
     }
-    assert a == b and len(a) == 3
+    got = parse_test_decoding(_raw(spark, payloads), pk_map).select("lsn", "xid").collect()
+    assert {tuple(r) for r in got} == want and len(got) == 5
 
 
 # ---------- wal2json ----------

@@ -168,8 +168,8 @@ def test_pgoutput_property_roundtrip():
 
 
 def test_begin_stats_jvm_twin_matches_kernel(spark):
-    """The pure-JVM (lsn, begin_xid) stats twin parse_pgoutput feeds to
-    stamp_xid_scalable's eager phases must agree byte-for-byte with the
+    """The pure-JVM ``begins`` twin parse_pgoutput feeds to
+    stamp_xid_scalable's build jobs must agree byte-for-byte with the
     Python kernel's Begin decode — including xids above 2^31 (uint32)."""
     from pyspark.sql import functions as F
 
@@ -186,14 +186,11 @@ def test_begin_stats_jvm_twin_matches_kernel(spark):
         [(lsn, bytearray(m)) for lsn, m in msgs], "lsn long, payload binary"
     )
     twin = (
-        raw.select(
+        raw.filter(F.expr("substring(payload, 1, 1) = x'42'"))
+        .select(
             "lsn",
-            F.when(
-                F.expr("substring(payload, 1, 1) = x'42'"),
-                F.conv(F.hex(F.expr("substring(payload, 18, 4)")), 16, 10),
-            ).alias("begin_xid"),
+            F.conv(F.hex(F.expr("substring(payload, 18, 4)")), 16, 10).alias("begin_xid"),
         )
-        .filter(F.col("begin_xid").isNotNull())
         .orderBy("lsn")
         .collect()
     )
@@ -255,23 +252,26 @@ def test_parse_pgoutput_truncate_rows(spark):
     assert tr[0].pkey is None and tr[0].row is None and tr[0].error is None
 
 
-def test_pgoutput_lazy_xid_matches_eager(spark):
-    """parse_pgoutput(xid_eager=False) — the zero-driver-job carry fed
-    by the pure-JVM begin twins — must produce byte-identical change
-    rows to the eager default."""
+def test_pgoutput_xid_matches_forward_fill(spark):
+    """parse_pgoutput's xid equals a Python forward fill over the decoded
+    corpus in lsn order, including a change row before the first Begin
+    and one after the last Commit (outside the Begin frames' span)."""
+    import base64
+
     from pg2kinesis_spark import fixtures as fx
-    from pg2kinesis_spark.operators.pgoutput import parse_pgoutput
 
-    from pyspark.sql import functions as F
-
-    rows = fx.gen_pgoutput(n_txns=200, seed=9)
-    raw = spark.createDataFrame(
-        rows, "lsn long, data_size int, payload string"
-    ).select("lsn", F.unbase64("payload").alias("payload"))
-    cols = ("lsn", "operation", "xid", "table")
-    a = {tuple(r) for r in parse_pgoutput(raw).select(*cols).collect()}
-    b = {
-        tuple(r)
-        for r in parse_pgoutput(raw, xid_eager=False).select(*cols).collect()
-    }
-    assert a == b and len(a) > 100
+    rows = [(lsn, base64.b64decode(p)) for lsn, _size, p in fx.gen_pgoutput(n_txns=200, seed=9)]
+    rows += [(1, encode_insert(101, ["-1", "below"])), (rows[-1][0] + 10_000, encode_insert(101, ["-2", "above"]))]
+    want, cur = [], ""
+    for lsn, msg in sorted(rows):
+        d = decode_message(msg)
+        if d["op"] == "begin":
+            cur = str(d["xid"])
+        elif d["op"] in ("insert", "update", "delete"):
+            want.append((lsn, d["op"], cur))
+        elif d["op"] == "truncate":
+            want += [(lsn, "truncate", cur)] * len(d["rel_ids"])
+    raw = spark.createDataFrame([(lsn, bytearray(m)) for lsn, m in rows], "lsn long, payload binary")
+    got = sorted(tuple(r) for r in parse_pgoutput(raw).select("lsn", "operation", "xid").collect())
+    assert got == sorted(want) and len(got) > 100
+    assert want[0][2] == "" and want[-1][2] != ""

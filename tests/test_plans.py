@@ -4,7 +4,10 @@ partial aggregation, no global window in the scalable prefix scan)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from pyspark.sql import functions as F
 
 from pg2kinesis_spark.plans.queries import q2, q3, q13
 
@@ -45,20 +48,43 @@ def test_q3_filter_pushdown_prunes_scan(spark, sf_small):
     assert "IsNotNull(p_name)" in scan[0]  # rlike's null-guard pushed to scan
 
 
-def test_td_parse_has_no_global_window(spark, pk_fixture_dir):
+def _unpartitioned_windows(plan: str) -> list[str]:
+    """Window specs with an empty PARTITION BY. A spec prints its
+    partition keys first, bare; with none, its first argument is an
+    ordering (``... ASC NULLS FIRST``) or the frame itself."""
+    firsts = re.findall(r"windowspecdefinition\(([^,]*)", plan)
+    return [
+        f
+        for f in firsts
+        if f.startswith("specifiedwindowframe") or re.search(r" (ASC|DESC) NULLS (FIRST|LAST)$", f)
+    ]
+
+
+def test_td_parse_has_no_global_window(spark, pk_fixture_dir, sf_small):
     """The xid carry-forward must never plan a single-partition global
-    window (the scale cliff the two-phase scan exists to avoid)."""
+    window (the scale cliff the two-phase scan exists to avoid) in any
+    of its users: the test_decoding and pgoutput parses and oracle q18."""
+    from pg2kinesis_spark import fixtures as fx
     from pg2kinesis_spark.catalog import primary_key_map
+    from pg2kinesis_spark.operators.pgoutput import parse_pgoutput
     from pg2kinesis_spark.operators.test_decoding import parse_test_decoding
+    from pg2kinesis_spark.plans.queries import q18
 
     raw = spark.read.parquet(f"{pk_fixture_dir}/cdc_test_decoding.parquet")
     pk = primary_key_map(spark.read.parquet(f"{pk_fixture_dir}/pk_catalog.parquet"))
-    plan = _plan(parse_test_decoding(raw, pk))
-    for line in plan.splitlines():
-        if "Window" in line and "windowspecdefinition" in line:
-            # every window spec must be partitioned (by the coarse bucket)
-            assert "_bkt" in line, line
-    assert "BroadcastHashJoin" in plan  # catalog probe stays broadcast
+    td = _plan(parse_test_decoding(raw, pk))
+    assert "BroadcastHashJoin" in td  # catalog probe stays broadcast
+    pgout = spark.createDataFrame(
+        fx.gen_pgoutput(n_txns=20), "lsn long, data_size int, payload string"
+    ).select("lsn", F.unbase64("payload").alias("payload"))
+    plans = {
+        "test_decoding": td,
+        "pgoutput": _plan(parse_pgoutput(pgout)),
+        "q18": _plan(q18(spark, sf_small)),
+    }
+    for name, plan in plans.items():
+        assert "windowspecdefinition" in plan, name  # the carry's window is planned
+        assert not _unpartitioned_windows(plan), (name, plan)
 
 
 def test_cosine_topk_two_phase_no_per_query_funnel(spark, sf_small):

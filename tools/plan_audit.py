@@ -93,9 +93,7 @@ def main() -> None:
         f"True CartesianProducts across all 50 plans: {worst_cart} (expected 0). "
         "BroadcastNestedLoopJoins appear only where a bounded broadcast "
         "side meets a theta/range or constant predicate (q12 range join, "
-        "n9 brute-force baseline's query set, n15's centroid probe, and "
-        "c2's two 1-ROW bounds attaches — the lazy xid carry's min/max "
-        "aggregate cross-joined onto the stream, bounded by construction) "
+        "n9 brute-force baseline's query set and n15's centroid probe) "
         "— the correct strategy for those shapes."
     )
 
