@@ -63,20 +63,15 @@ def bench_minhash_full(spark, sf_dir):
     return minhash_lsh_pairs(_docs_parallel(spark, sf_dir), n=3, k=16, bands=4)
 
 
-def bench_cdc_replay(spark, sf_dir):
-    """CDC replay throughput: parse+enrich+format ~450k test_decoding
-    wire lines (BASELINE.md bench item 4). The corpus is materialized to
-    parquet once — the measured pipeline then reads the same columnar
-    source the replay path uses (and the prefix-scan's two build jobs
-    read only its BEGIN lines). Sized so throughput is measured against
-    the pipeline's marginal rate, not Spark's ~0.4 s fixed job overhead,
-    which dominated the previous ~100k-line corpus."""
+def _cdc_corpus(spark):
+    """(raw, pk_map) of the ~450k-line test_decoding replay corpus. The
+    corpus is materialized to parquet once — the measured pipelines then
+    read the same columnar source the replay path uses (and the
+    prefix-scan's two build jobs read only its BEGIN lines)."""
     import tempfile
 
     from pg2kinesis_spark import fixtures as fx
     from pg2kinesis_spark.catalog import primary_key_map
-    from pg2kinesis_spark.operators.formatters import format_csv
-    from pg2kinesis_spark.operators.test_decoding import parse_test_decoding
 
     # layout is part of the name: a host with the old 8-file cache must
     # rebuild, or the repartition(32) change silently never applies
@@ -93,6 +88,18 @@ def bench_cdc_replay(spark, sf_dir):
     cat = spark.createDataFrame(
         fx.pk_catalog_rows(), "table_name string, col_name string, col_type string, col_ord_pos int"
     )
+    return raw, primary_key_map(cat)
+
+
+def bench_cdc_replay(spark, sf_dir):
+    """CDC replay throughput: parse+enrich+format ~450k test_decoding
+    wire lines (BASELINE.md bench item 4). Sized so throughput is
+    measured against the pipeline's marginal rate, not Spark's ~0.4 s
+    fixed job overhead, which dominated the previous ~100k-line corpus."""
+    from pg2kinesis_spark.operators.formatters import format_csv
+    from pg2kinesis_spark.operators.test_decoding import parse_test_decoding
+
+    raw, pk_map = _cdc_corpus(spark)
     # The build runs the xid carry's two driver jobs (bounds and
     # per-bucket summary, over the BEGIN lines), so the build-inclusive
     # timer pays them. The timed action is count(), which prunes xid:
@@ -102,7 +109,7 @@ def bench_cdc_replay(spark, sf_dir):
     # paid plan construction + build jobs, not parse cost (SCALING.md
     # "cdc_replay: reconciling"). Only e2e_sink, whose sink reads xid,
     # runs the prefix scan.
-    return format_csv(parse_test_decoding(raw, primary_key_map(cat))).select(
+    return format_csv(parse_test_decoding(raw, pk_map)).select(
         "lsn", "xid", "fmt_msg"
     )
 
@@ -123,7 +130,7 @@ def bench_pgoutput_replay(spark, sf_dir):
     batch reuses it), so timing a per-batch registry rebuild would
     measure a job no deployment runs. The xid prefix-scan's two build
     jobs read the Begin frames through a pure-JVM twin of the decode
-    (parse_pgoutput), so the build does not re-execute the Python
+    (pgoutput_cdc_changes), so the build does not re-execute the Python
     kernel."""
     import tempfile
 
@@ -826,13 +833,23 @@ def run_inline(only_set: set[str] | None, sf_dir: str) -> tuple[dict, dict]:
     # into InMemoryTransport. cdc_replay measures parse→format; this
     # measures parse→format→sink, the number a deployment actually sees.
     if selected("e2e_sink"):
+        from pyspark.sql import functions as F
+
+        from pg2kinesis_spark.fixtures import OPS_TD
+        from pg2kinesis_spark.operators.test_decoding import parse_test_decoding
         from pg2kinesis_spark.sinks.kinesis import InMemoryTransport, KinesisLikeWriter
+        from pg2kinesis_spark.streaming.pipeline import _sink_rows
 
         # every timed drain re-executes this one built plan, so the xid
         # carry's two build jobs are paid once, untimed, and each drain
         # runs the prefix scan (the sink reads xid). The streaming query
         # stamps xids in-batch instead (streaming/pipeline.py::stamp_xid).
-        sink_df = bench_cdc_replay(spark, sf_dir)
+        # The stream tail builds the sink row; frame rows are dropped and
+        # every DML operation is kept, so every drained row is put.
+        raw, pk_map = _cdc_corpus(spark)
+        sink_df = _sink_rows(parse_test_decoding(raw, pk_map, keep_frames=True), "CSV", OPS_TD).filter(
+            ~F.col("is_frame")
+        )
         # untimed warm pass (same policy as EXTRA_BENCHES): the cold
         # first drain is 2-3x steady state
         t0 = time.perf_counter()

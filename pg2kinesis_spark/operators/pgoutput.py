@@ -23,7 +23,7 @@ message per truncated rel (no pkey) and counts the wire message once.
 A row naming a rel_id no Relation message registered carries
 ``UNKNOWN_RELATION_ERROR`` in its ``error`` column; the sink fail-stops
 on it. ``PKEY_SQL`` and ``ERROR_SQL`` state the pkey and error rules
-once, for ``pgoutput_cdc_changes`` and the stream alike.
+once, inside ``enrich_changes``.
 
 Scale design
 ------------
@@ -42,9 +42,12 @@ Scale design
   messages inherit it — identical W1 semantics to test_decoding. Its
   two build jobs read the Begin frames through a pure-JVM twin of the
   kernel's Begin decode, never the Python kernel.
-* One decode kernel (``decode_pgoutput``) serves both paths: the
-  streaming pipeline runs it over the replay corpus's base64 payloads
-  and feeds its ``begin_xid`` to the in-batch stamp (``stamp_xid``).
+* Batch and stream differ only in the xid stamp. Both decode with
+  ``decode_pgoutput`` and apply the change rules with
+  ``enrich_changes`` (registry join, ``table``, pkey, error, the
+  ``table_pat`` filter, ``is_frame``): ``pgoutput_cdc_changes`` stamps
+  with ``stamp_xid_scalable``, the streaming pipeline with the in-batch
+  ``stamp_xid`` over the replay corpus's base64 payloads.
 """
 
 from __future__ import annotations
@@ -76,8 +79,9 @@ PKEY_SQL = (
     f"CASE WHEN operation IN ('insert', 'update', 'delete') AND {_KEY_POS} > 0"
     f" THEN coalesce(element_at({_TUPLE}, CAST({_KEY_POS} AS INT)), 'None') END"
 )
+_IS_CHANGE = "operation IN ('insert', 'update', 'delete', 'truncate')"
 ERROR_SQL = (
-    "CASE WHEN operation IN ('insert', 'update', 'delete', 'truncate')"
+    f"CASE WHEN {_IS_CHANGE}"
     f" AND `table` IS NULL THEN format_string('{UNKNOWN_RELATION_ERROR}', rel_id) END"
 )
 
@@ -420,84 +424,47 @@ def decode_pgoutput(
     return raw.select("lsn", "data_size", payload_col).mapInPandas(kernel, schema)
 
 
-def parse_pgoutput(
-    raw: DataFrame,
-    registry: DataFrame | None = None,
-    payload_col: str = "payload",
+def enrich_changes(
+    stamped: DataFrame,
+    registry: DataFrame,
+    table_pat: str | None = None,
+    keep_frames: bool = False,
 ) -> DataFrame:
-    """Parse a (lsn, payload binary) pgoutput stream into change rows.
+    """The pgoutput change rules, for batch and stream alike: decoded,
+    xid-stamped rows (``decode_pgoutput`` + ``stamp_xid_scalable`` or the
+    streaming ``stamp_xid``) as (lsn, change_idx, xid, table, operation,
+    pkey, row map<string,string>, error).
 
-    Returns (lsn, operation, xid, table, col_names, col_values,
-    old_values, key_cols): insert/update/delete/truncate rows joined to
-    their broadcast relation metadata, xid attributed via the
-    distributed BEGIN carry-forward. Begin/Commit/Relation messages
-    drive the attribution and registry but emit no change rows.
-
-    The build runs ``stamp_xid_scalable``'s two driver jobs over the
-    Begin frames. The streaming query does not call this: it stamps
-    in-batch with ``streaming/pipeline.py::stamp_xid``.
+    ``registry`` (rel_id, namespace, relname, col_names, key_cols) joins
+    by broadcast; ``pkey`` and ``error`` follow ``PKEY_SQL`` /
+    ``ERROR_SQL``, so a rel_id with no Relation message surfaces an
+    ``error`` instead of being dropped (fail-stop channel, §8.5).
+    pgoutput carries one change per message (change_idx = 0).
+    ``table_pat`` keeps the change rows whose UNqualified table name it
+    finds (unanchored, P5). ``keep_frames=True`` keeps the Begin/Commit
+    rows (``is_frame``) and carries ``data_size`` through, after ``lsn``,
+    for the streaming sink's counters.
     """
-    from .test_decoding import stamp_xid_scalable
-
-    if registry is None:
-        registry = relation_registry(raw, payload_col)
-
-    parsed = decode_pgoutput(raw, payload_col)
-    # pure-JVM twin of the kernel's Begin decode for the carry's build
-    # jobs: a Begin is tag 'B' with the uint32 xid at byte offset 17
-    # (big-endian, same field the kernel unpacks) — hex+conv gives the
-    # identical str(uint32). Filtering on the raw tag byte keeps both
-    # jobs to a scan of Begin frames; reading ``parsed`` instead would
-    # re-run the Python decode in each of them.
-    begins = raw.filter(F.expr(f"substring({payload_col}, 1, 1) = x'42'")).select(
-        F.col("lsn"),
-        F.conv(F.hex(F.expr(f"substring({payload_col}, 18, 4)")), 16, 10).alias(
-            "begin_xid"
-        ),
-    )
-    stamped = stamp_xid_scalable(parsed, begins)
-    changes = stamped.filter(
-        F.col("operation").isin("insert", "update", "delete", "truncate")
-    )
+    is_change = F.expr(_IS_CHANGE)
+    if not keep_frames:
+        stamped = stamped.filter(is_change)
     reg = F.broadcast(
         registry.select(
             "rel_id",
+            "relname",
             F.concat_ws(".", "namespace", "relname").alias("table"),
             "col_names",
             "key_cols",
         )
     )
-    return changes.join(reg, "rel_id", "left").select(
-        "lsn",
-        "operation",
-        "xid",
-        "rel_id",
-        "table",
-        "col_names",
-        "col_values",
-        "old_values",
-        "key_cols",
-    )
-
-
-def pgoutput_cdc_changes(
-    raw: DataFrame,
-    payload_col: str = "payload",
-    registry: DataFrame | None = None,
-) -> DataFrame:
-    """A pgoutput stream as change rows: (lsn, change_idx, xid, table,
-    operation, pkey, row map<string,string>, error).
-
-    pgoutput carries one change per message (change_idx = 0); ``pkey``
-    and ``error`` follow ``PKEY_SQL`` / ``ERROR_SQL``: rows referencing
-    a rel_id with no Relation message surface an ``error`` instead of
-    being dropped (fail-stop channel, §8.5).
-    """
-    parsed = parse_pgoutput(raw, registry=registry, payload_col=payload_col)
+    df = stamped.join(reg, "rel_id", "left")
+    if table_pat is not None:
+        df = df.filter(~is_change | F.coalesce(F.col("relname"), F.lit("")).rlike("(?U)" + table_pat))
     # ONE selectExpr parse (r13 opt round, guide §1.5): a Column-op twin
     # builds ~30 py4j-round-trip expression nodes per construction.
-    return parsed.selectExpr(
+    return df.selectExpr(
         "lsn",
+        *(["data_size", f"NOT {_IS_CHANGE} AS is_frame"] if keep_frames else []),
         "0 AS change_idx",
         "xid",
         "`table`",
@@ -507,6 +474,38 @@ def pgoutput_cdc_changes(
         " END AS `row`",
         f"{ERROR_SQL} AS error",
     )
+
+
+def pgoutput_cdc_changes(
+    raw: DataFrame,
+    payload_col: str = "payload",
+    registry: DataFrame | None = None,
+) -> DataFrame:
+    """Batch parse of a (lsn, payload binary) pgoutput stream into the
+    change rows of ``enrich_changes``. Begin/Commit/Relation messages
+    drive the xid attribution and the registry but emit no rows.
+
+    ``registry`` defaults to ``relation_registry(raw)``. The build runs
+    ``stamp_xid_scalable``'s two driver jobs over the Begin frames.
+    """
+    from .test_decoding import stamp_xid_scalable
+
+    if registry is None:
+        registry = relation_registry(raw, payload_col)
+    # pure-JVM twin of the kernel's Begin decode for the carry's build
+    # jobs: a Begin is tag 'B' with the uint32 xid at byte offset 17
+    # (big-endian, same field the kernel unpacks) — hex+conv gives the
+    # identical str(uint32). Filtering on the raw tag byte keeps both
+    # jobs to a scan of Begin frames; reading the decoded rows instead
+    # would re-run the Python decode in each of them.
+    begins = raw.filter(F.expr(f"substring({payload_col}, 1, 1) = x'42'")).select(
+        F.col("lsn"),
+        F.conv(F.hex(F.expr(f"substring({payload_col}, 18, 4)")), 16, 10).alias(
+            "begin_xid"
+        ),
+    )
+    stamped = stamp_xid_scalable(decode_pgoutput(raw, payload_col), begins)
+    return enrich_changes(stamped, registry)
 
 
 def relation_registry_from_replay(spark, corpus_path: str) -> DataFrame:

@@ -172,8 +172,9 @@ def parse_test_decoding(
     share every operator downstream of the stamp.
 
     ``keep_frames=True`` keeps BEGIN/COMMIT frame rows (is_frame=true,
-    all Change fields null) and carries ``data_size`` through — the
-    streaming sink needs them for reference-parity progress counters:
+    all Change fields null), carries ``data_size`` through and adds
+    ``change_idx`` (0: one change per line) — the streaming sink needs
+    them for its drain order and reference-parity progress counters:
     the reference counts EVERY wal message by data_size before the
     formatter drops frames (reference __main__.py:86-91).
 
@@ -243,9 +244,13 @@ def parse_test_decoding(
     changes = changes.join(pk, on=changes["table"] == pk["table_name"], how="left")
 
     # Column (per-row) regex pattern — PySpark's regexp_extract wrapper only
-    # takes a literal pattern, but the SQL function accepts a column.
-    pkey = F.expr("regexp_extract(tok3, pk_pattern, 1)")
-    extra = ["data_size", "is_frame"] if keep_frames else []
+    # takes a literal pattern, but the SQL function accepts a column. Its
+    # own projection: the pkey and error columns read it four times, and
+    # CollapseProject keeps a non-cheap expression that is read more than
+    # once out of the consumer, so the regex runs once per row.
+    changes = changes.withColumn("_pkey", F.expr("regexp_extract(tok3, pk_pattern, 1)"))
+    pkey = F.col("_pkey")
+    extra = ["data_size", "is_frame", F.lit(0).alias("change_idx")] if keep_frames else []
     changes = changes.select(
         "lsn",
         *extra,

@@ -96,12 +96,14 @@ def parse_wal2json(
     keep_empty: bool = False,
 ) -> DataFrame:
     """``keep_empty=True`` (streaming sink counters) keeps one all-null
-    row per empty wire message and carries ``data_size`` through; those
-    rows are exempt from validation (there is no change to validate)."""
+    row per empty wire message, and per change ``table_pat`` filters
+    out, and carries ``data_size`` and ``is_frame`` (true on those rows)
+    through; those rows are exempt from validation (there is no change
+    to validate)."""
     table_pat = table_pat if table_pat is not None else DEFAULT_TABLE_PAT
     df = _exploded(raw, table_pat, keep_empty)
-    extra = ["data_size"] if keep_empty else []
     is_change = F.col("change_idx").isNotNull()
+    extra = ["data_size", (~is_change).alias("is_frame")] if keep_empty else []
 
     if full_change:
         # P10: raw change dict passes through unvalidated; operation is the

@@ -51,6 +51,13 @@ class ProvisionedThroughputExceeded(Exception):
 # Fixed serialized overhead of an aggregate: 4-byte magic + 16-byte MD5.
 _KPL_FIXED_OVERHEAD = 20
 
+# The sink row: every producer hands process_batch exactly these columns
+# (the stream tail in streaming/pipeline.py builds them). Rows drain in
+# (lsn, change_idx) order; ``is_frame`` rows (BEGIN/COMMIT, empty wal2json
+# messages) are counted but never put; ``wire_size`` is the data_size of
+# the row's wire message, counted once per lsn.
+SINK_ROW = ("lsn", "change_idx", "xid", "fmt_msg", "error", "is_frame", "wire_size")
+
 
 @dataclass
 class AggRecord:
@@ -70,13 +77,11 @@ class AggRecord:
     (a raw-bytes check would: small CDC messages carry ~7-9 framing
     bytes each, ~25 % over on 33-byte records). ``est_size`` is exact,
     not an estimate: serialize() produces exactly this many bytes.
-    ``num_bytes`` still counts user-message bytes for the counters.
+    ``messages`` counts the contained records.
     """
 
     partition_key: str | None = None
-    messages: list[bytes] = field(default_factory=list)
-    keys: list[str] = field(default_factory=list)
-    num_bytes: int = 0
+    messages: int = 0
     est_size: int = _KPL_FIXED_OVERHEAD
     _key_idx: dict[str, int] = field(default_factory=dict)
     # Incrementally framed protobuf fragments (r13 opt round): add()
@@ -159,9 +164,7 @@ class AggRecord:
             buf.append(_TAG_DATA)
             buf.extend(vl)
             buf.extend(msg)
-        self.messages.append(msg)
-        self.keys.append(partition_key)
-        self.num_bytes += msg_len
+        self.messages += 1
         self.est_size += delta
         return True
 
@@ -269,20 +272,21 @@ class KinesisLikeWriter:
                 backoff *= 2
 
     def process_batch(self, batch_df, batch_id: int) -> None:
-        """foreachBatch entry: send in LSN order, flush the tail.
+        """foreachBatch entry: send in (lsn, change_idx) order, flush the tail.
 
-        The iteration is the single ordered writer (T2). ``batch_df`` may
-        be arbitrarily wide upstream — only this drain is serial, and it
-        is bounded by the source's rows_per_batch backpressure knob, so
-        the Arrow transfer holds one micro-batch, never the stream.
-        toPandas + plain-list iteration instead of toLocalIterator: the
-        per-Row RPC/object overhead of the latter was the measured
-        driver-loop bottleneck; put/flush/counter semantics are
-        unchanged (every row still drives put_message, §8.6).
+        ``batch_df`` carries the sink row (``SINK_ROW``). The iteration is
+        the single ordered writer (T2). ``batch_df`` may be arbitrarily
+        wide upstream — only this drain is serial, and it is bounded by
+        the source's rows_per_batch backpressure knob, so the Arrow
+        transfer holds one micro-batch, never the stream. toPandas +
+        plain-list iteration instead of toLocalIterator: the per-Row
+        RPC/object overhead of the latter was the measured driver-loop
+        bottleneck. Every non-frame row drives put_message (§8.6); each
+        wire message is counted once, by the ``wire_size`` of its first
+        row (reference __main__.py:86-91).
         """
         from pyspark.sql import functions as F
 
-        order = [c for c in ("lsn", "change_idx") if c in batch_df.columns]
         # xid cast to string Spark-side: a nullable long column would be
         # coerced to float by the Arrow→pandas transfer ('500' → '500.0').
         # fmt_msg encoded to UTF-8 bytes Spark-side (r13 opt round): the
@@ -290,29 +294,8 @@ class KinesisLikeWriter:
         # objects, so the drain loop below stops paying a per-message
         # str.encode — byte count and put payload identical (UTF-8 both
         # ways), wire bytes A/B-pinned.
-        cols = [
-            F.col("xid").cast("string").alias("xid"),
-            F.encode(F.col("fmt_msg"), "UTF-8").alias("fmt_msg"),
-        ]
-        has_error = "error" in batch_df.columns
-        if has_error:
-            cols.append(F.col("error"))
-        # Sink-metadata columns from the streaming builders (reference
-        # counter parity, __main__.py:86-91): is_frame rows never drive
-        # put_message (the formatter returned [] for them); wire_size
-        # rides every row of a wire message and the first row per lsn
-        # counts it once by data_size — so a table_pat that drops the
-        # leading change rows can never drop the message from the
-        # counters (the reference counts pre-filter). Without the
-        # metadata (plain batches, unit tests), every row is a message
-        # counted by its formatted size — the pre-existing behavior.
-        has_frame = "is_frame" in batch_df.columns
-        if has_frame:
-            cols.append(F.col("is_frame"))
-        has_wire = "wire_size" in batch_df.columns
-        if has_wire:
-            cols.append(F.col("wire_size"))
-            cols.append(F.col("lsn"))
+        cast = {"xid": F.col("xid").cast("string"), "fmt_msg": F.encode(F.col("fmt_msg"), "UTF-8")}
+        pdf = batch_df.select(*(cast.get(c, F.col(c)).alias(c) for c in SINK_ROW)).toPandas()
         # Order DRIVER-side, not with batch_df.sort(): a global Spark
         # sort range-partitions, and the range partitioner's SAMPLING
         # pass executes the whole upstream plan a second time — every
@@ -320,27 +303,12 @@ class KinesisLikeWriter:
         # execution cost on the 450k-row e2e bench). The batch lands in
         # one pandas frame here regardless (bounded by rows_per_batch),
         # so the ordered-writer contract is one stable C-speed sort.
-        sel = list(cols) + [F.col(c) for c in order if c != "lsn" or not has_wire]
-        pdf = batch_df.select(*sel).toPandas()
-        if order:
-            pdf = pdf.sort_values(order, kind="stable", ignore_index=True)
-        from itertools import repeat
-
-        fmts = pdf["fmt_msg"].tolist()
-        xids = pdf["xid"].tolist()
-        # zip-driven loop (r13 opt round): absent metadata columns ride
-        # as infinite repeat(None)/repeat(False) so the body is one
-        # shape — zip advances all cursors in C instead of five list
-        # index operations per row. Semantics byte-identical.
-        errors = pdf["error"].tolist() if has_error else repeat(None)
-        frames = pdf["is_frame"].tolist() if has_frame else repeat(False)
-        wires = pdf["wire_size"].tolist() if has_wire else repeat(None)
-        lsns = pdf["lsn"].tolist() if has_wire else repeat(None)
+        pdf = pdf.sort_values(["lsn", "change_idx"], kind="stable", ignore_index=True)
         put_encoded = self._put_encoded
         count = self._count_message
         prev_lsn = None
-        for data, xid, err, frame, wire, lsn in zip(
-            fmts, xids, errors, frames, wires, lsns
+        for lsn, xid, data, err, frame, wire in zip(
+            *(pdf[c].tolist() for c in ("lsn", "xid", "fmt_msg", "error", "is_frame", "wire_size"))
         ):
             if err is not None:
                 # Fail-stop (§8.5): the reference's _log_and_raise kills
@@ -354,12 +322,9 @@ class KinesisLikeWriter:
             # data is already UTF-8 bytes (encoded Spark-side above) or None
             if not frame:
                 put_encoded(data, xid)
-            if has_wire:
-                if lsn != prev_lsn:
-                    count(wire, xid)
-                    prev_lsn = lsn
-            else:
-                count(len(data) if data else 0, xid)
+            if lsn != prev_lsn:
+                count(wire, xid)
+                prev_lsn = lsn
         self.flush_tail()
 
     # -- reference __main__.py:86-91,106-115 (A1/A2/T7) -----------------

@@ -72,46 +72,18 @@ def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
 def serialize_kpl(records: list[tuple[str, bytes]]) -> bytes:
     """Pack (partition_key, data) user records into one KPL aggregate.
 
-    Hot path of the sink drain: assembles flat byte fragments and joins
-    once (no per-record intermediate concatenation)."""
-    keys: list[str] = []
+    The plain reference encoder: the sink frames incrementally in
+    ``sinks/kinesis.py::AggRecord.add``, and tests/test_kpl.py pins those
+    bytes against this one."""
     key_idx: dict[str, int] = {}
-    buf = bytearray()
-    push = buf.append
-    extend = buf.extend
-    varint = _varint
+    table, buf = bytearray(), bytearray()
     for pk, data in records:
-        idx = key_idx.get(pk)
-        if idx is None:
-            idx = key_idx[pk] = len(keys)
-            keys.append(pk)
-        ldata = len(data)
-        if idx < 0x80 and ldata < 0x7C:
-            # fast path: every varint below is one byte (rec_len =
-            # 4 + ldata < 0x80) — append raw ints, no bytes objects
-            push(_TAG_RECORD)
-            push(4 + ldata)
-            push(_TAG_PK_INDEX)
-            push(idx)
-            push(_TAG_DATA)
-            push(ldata)
-            extend(data)
-        else:
-            vi = varint(idx)
-            vl = varint(ldata)
-            push(_TAG_RECORD)
-            extend(varint(2 + len(vi) + len(vl) + ldata))
-            push(_TAG_PK_INDEX)
-            extend(vi)
-            push(_TAG_DATA)
-            extend(vl)
-            extend(data)
-    table = bytearray()
-    for k in keys:
-        kb = k.encode()
-        table.append(_TAG_PK_TABLE)
-        table.extend(varint(len(kb)))
-        table.extend(kb)
+        if pk not in key_idx:
+            key_idx[pk] = len(key_idx)
+            kb = pk.encode()
+            table += bytes([_TAG_PK_TABLE]) + _varint(len(kb)) + kb
+        rec = bytes([_TAG_PK_INDEX]) + _varint(key_idx[pk]) + bytes([_TAG_DATA]) + _varint(len(data)) + data
+        buf += bytes([_TAG_RECORD]) + _varint(len(rec)) + rec
     payload = bytes(table + buf)
     return KPL_MAGIC + payload + hashlib.md5(payload).digest()
 

@@ -5,8 +5,10 @@ single-ordered-partition shape, but reading from a real replication slot
 via psycopg2 — the rebuild of the reference's SlotReader
 (reference slot.py:36-129):
 
-- slot create/drop tolerate duplicate/absent slots
-  (reference slot.py:96-120, S2/S3 idempotency)
+- slot create/drop are SQL calls on a plain connection
+  (pg_create_logical_replication_slot / pg_drop_replication_slot) that
+  tolerate duplicate/absent slots (reference slot.py:96-120, S2/S3
+  idempotency)
 - the PK catalog snapshot ships the same information_schema SQL the
   reference sends (reference slot.py:18-33) and feeds
   catalog.primary_key_map
@@ -28,8 +30,6 @@ from __future__ import annotations
 
 try:
     import psycopg2
-    import psycopg2.errorcodes
-    import psycopg2.extras
 
     HAVE_PSYCOPG2 = True
 except ImportError:
@@ -90,10 +90,10 @@ def _require_psycopg2():
 class PgSlotManager:
     """Connection + slot lifecycle (reference slot.py:36-120).
 
-    ``connection_factory`` (tests): a ``(replication: bool) -> conn``
-    callable injected in place of psycopg2.connect, so the S2/S3
-    idempotency branches run without a Postgres (the reference mocks
-    the cursor the same way, test_slot.py:51-140).
+    ``connection_factory`` (tests): a ``() -> conn`` callable injected
+    in place of psycopg2.connect, so the S2/S3 idempotency branches run
+    without a Postgres (the reference mocks the cursor the same way,
+    test_slot.py:51-140).
     """
 
     def __init__(
@@ -110,31 +110,30 @@ class PgSlotManager:
         self.plugin = plugin
         self._connection_factory = connection_factory
 
-    def _conn(self, replication: bool = False):
+    def _conn(self):
         if self._connection_factory is not None:
-            return self._connection_factory(replication)
-        if replication:  # pragma: no cover - needs PG
-            return psycopg2.connect(
-                self.dsn, connection_factory=psycopg2.extras.LogicalReplicationConnection
-            )
+            return self._connection_factory()
         c = psycopg2.connect(self.dsn)  # pragma: no cover - needs PG
         c.autocommit = True  # pragma: no cover
         return c  # pragma: no cover
 
     def create_slot(self) -> None:
         """Idempotent create (tolerates DUPLICATE_OBJECT, slot.py:96-108)."""
-        with self._conn(replication=True) as conn, conn.cursor() as cur:
+        with self._conn() as conn, conn.cursor() as cur:
             try:
-                cur.create_replication_slot(self.slot_name, output_plugin=self.plugin)
+                cur.execute(
+                    "SELECT pg_create_logical_replication_slot(%s, %s)",
+                    (self.slot_name, self.plugin),
+                )
             except ProgrammingError as e:
                 if e.pgcode != PG_DUPLICATE_OBJECT:
                     raise
 
     def delete_slot(self) -> None:
         """Idempotent drop (tolerates UNDEFINED_OBJECT, slot.py:110-120)."""
-        with self._conn(replication=True) as conn, conn.cursor() as cur:
+        with self._conn() as conn, conn.cursor() as cur:
             try:
-                cur.drop_replication_slot(self.slot_name)
+                cur.execute("SELECT pg_drop_replication_slot(%s)", (self.slot_name,))
             except ProgrammingError as e:
                 if e.pgcode != PG_UNDEFINED_OBJECT:
                     raise

@@ -36,6 +36,7 @@ from pg2kinesis_spark.operators.formatters import filter_operations, format_csv,
 from pg2kinesis_spark.operators.test_decoding import begin_xid, parse_test_decoding
 from pg2kinesis_spark.operators.wal2json import parse_wal2json
 from pg2kinesis_spark.session import forget_zip_importers
+from pg2kinesis_spark.sinks.kinesis import SINK_ROW
 from pg2kinesis_spark.sources.replay import register as register_replay
 
 
@@ -118,13 +119,22 @@ def _raw_stream(spark, source, rows_per_batch, ack_log) -> DataFrame:
     return read_replay_stream(spark, source, rows_per_batch, ack_log)
 
 
-def _wire_size(msgs: DataFrame) -> DataFrame:
-    """Sink metadata (reference telemetry parity, __main__.py:86-91):
-    ``wire_size`` rides every row of a wire message — frames included —
-    and the sink counts the first row per lsn once by its data_size;
-    is_frame rows never drive put_message (the reference's formatter
-    returns [] for them)."""
-    return msgs.withColumn("wire_size", F.coalesce(F.col("data_size"), F.lit(0)).cast("long"))
+def _sink_rows(parsed: DataFrame, formatter: str, operations, full_change: bool = False) -> DataFrame:
+    """The stream tail every builder shares: format, null out frames,
+    filter operations, project the sink row (``SINK_ROW``).
+
+    Frame rows stay: ``wire_size`` rides every row of a wire message and
+    the sink counts the first row per lsn once by it, so a table_pat that
+    drops a message's change rows can never drop the message from the
+    counters (the reference counts every wal message before the
+    formatter, __main__.py:86-91). Full-change messages skip validation
+    (P10) and carry a NULL ``error``."""
+    if full_change:
+        msgs = format_csvpayload(parsed, full_change=True).withColumn("error", F.lit(None).cast("string"))
+    else:
+        msgs = format_csv(parsed) if formatter == "CSV" else format_csvpayload(parsed)
+    msgs = filter_operations(msgs.withColumn("fmt_msg", F.when(~F.col("is_frame"), F.col("fmt_msg"))), operations)
+    return msgs.withColumn("wire_size", F.coalesce(F.col("data_size"), F.lit(0)).cast("long")).select(*SINK_ROW)
 
 
 def build_test_decoding_stream(
@@ -234,8 +244,7 @@ def build_test_decoding_stream_refreshing(
         parsed = parse_test_decoding(
             df, pk_map, table_pat, xid_precomputed=True, keep_frames=True
         )
-        msgs = format_csv(parsed) if formatter == "CSV" else format_csvpayload(parsed)
-        return _wire_size(filter_operations(msgs, operations))
+        return _sink_rows(parsed, formatter, operations)
 
     return stamped, parse_fn
 
@@ -257,21 +266,7 @@ def build_wal2json_stream_refreshing(
 
     def parse_fn(df: DataFrame, pk_map: DataFrame | None) -> DataFrame:
         parsed = parse_wal2json(df, pk_map, table_pat, full_change=full_change, keep_empty=True)
-        if full_change:
-            # FullChange messages are operation-filtered too — on the RAW
-            # kind (FullChange.operation, reference formatter.py:14;
-            # filter at __main__.py:97-99). Full-change skips validation
-            # (P10) so there is no error column to carry.
-            msgs = format_csvpayload(parsed, full_change=True)
-        else:
-            msgs = format_csv(parsed) if formatter == "CSV" else format_csvpayload(parsed)
-        msgs = filter_operations(msgs, operations)
-        # The sink dedups wire_size by lsn, so a --table-pat that filters
-        # out change 0 — or every change, in which case parse_wal2json
-        # keeps a skeleton row — can never drop a message from the
-        # counters: exact pre-filter counting under any pattern, matching
-        # the reference's consume loop.
-        return _wire_size(msgs.withColumn("is_frame", F.col("change_idx").isNull()))
+        return _sink_rows(parsed, formatter, operations, full_change)
 
     return raw, parse_fn
 
@@ -287,8 +282,8 @@ def build_pgoutput_stream(
     ack_log: str | None = None,
 ) -> DataFrame:
     """Streaming pgoutput: the batch decode kernel (``decode_pgoutput``)
-    over the unbase64'd payloads -> in-batch xid stamp -> broadcast
-    registry join -> format -> op filter.
+    over the unbase64'd payloads -> in-batch xid stamp -> the batch
+    change rules (``enrich_changes``) -> the sink-row tail.
 
     ``registry`` is the STATIC relation catalog (rel_id, namespace,
     relname, col_names, key_cols) — from ``relation_registry`` over a
@@ -298,46 +293,14 @@ def build_pgoutput_stream(
     table (§8.5). A Truncate puts one message per truncated relation
     (operation ``truncate``, no pkey) and counts once as a wire message;
     Relation messages emit no row."""
-    from pg2kinesis_spark.operators.pgoutput import ERROR_SQL, PKEY_SQL, decode_pgoutput
+    from pg2kinesis_spark.operators.pgoutput import decode_pgoutput, enrich_changes
 
     raw = _raw_stream(spark, source, rows_per_batch, ack_log)
     decoded = decode_pgoutput(
         raw.withColumn("payload", F.unbase64("payload")), data_size=True
     )
-    stamped = stamp_xid(decoded)
-    reg = F.broadcast(
-        registry.select(
-            "rel_id",
-            "relname",
-            F.concat_ws(".", "namespace", "relname").alias("table"),
-            "col_names",
-            "key_cols",
-        )
-    )
-    is_change = F.col("operation").isin("insert", "update", "delete", "truncate")
-    df = stamped.join(reg, "rel_id", "left")
-    if table_pat is not None:
-        # P5 parity: unanchored search on the UNqualified table name;
-        # frames (begin/commit) pass through for the counters
-        df = df.filter(
-            ~is_change
-            | F.coalesce(F.col("relname"), F.lit("")).rlike("(?U)" + table_pat)
-        )
-    df = df.select(
-        "lsn",
-        "data_size",
-        "operation",
-        "xid",
-        "table",
-        F.expr(PKEY_SQL).alias("pkey"),
-        F.expr(ERROR_SQL).alias("error"),
-        (~is_change).alias("is_frame"),
-    )
-    fmt = format_csv if formatter == "CSV" else format_csvpayload
-    msgs = fmt(df).withColumn(
-        "fmt_msg", F.when(~F.col("is_frame"), F.col("fmt_msg"))
-    )
-    return _wire_size(filter_operations(msgs, operations))
+    changes = enrich_changes(stamp_xid(decoded), registry, table_pat, keep_frames=True)
+    return _sink_rows(changes, formatter, operations)
 
 
 def run_to_sink(stream_df: DataFrame, writer, checkpoint: str, available_now: bool = True):

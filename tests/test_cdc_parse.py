@@ -25,6 +25,7 @@ from pg2kinesis_spark.operators.formatters import (
 from pg2kinesis_spark.operators.test_decoding import parse_test_decoding
 from pg2kinesis_spark.operators.wal2json import parse_wal2json
 from pg2kinesis_spark.sinks.kinesis import InMemoryTransport, KinesisLikeWriter
+from pg2kinesis_spark.streaming.pipeline import _sink_rows
 
 UUID = "00079f3e-0479-4475-acff-4f225cc5188a"
 
@@ -44,14 +45,16 @@ def pk_map(spark):
 
 def _raw(spark, payloads):
     return spark.createDataFrame(
-        [(i, p) for i, p in enumerate(payloads)], "lsn long, payload string"
+        [(i, len(p.encode()), p) for i, p in enumerate(payloads)],
+        "lsn long, data_size int, payload string",
     )
 
 
-def _drain(changes):
-    """Put parsed changes through the sink, which fail-stops on the
-    first error row in LSN order, as the stream does."""
-    KinesisLikeWriter(InMemoryTransport()).process_batch(format_csv(changes), 0)
+def _drain(parsed):
+    """Put frame-keeping parse output through the stream tail into the
+    sink, which fail-stops on the first error row in LSN order, as the
+    stream does."""
+    KinesisLikeWriter(InMemoryTransport()).process_batch(_sink_rows(parsed, "CSV", ("all",)), 0)
 
 
 # ---------- test_decoding ----------
@@ -104,7 +107,7 @@ def test_xid_initial_empty_string(spark, pk_map):
 
 
 def test_unknown_change_raises(spark, pk_map):
-    df = parse_test_decoding(_raw(spark, ["UNKNOWN BLING"]), pk_map)
+    df = parse_test_decoding(_raw(spark, ["UNKNOWN BLING"]), pk_map, keep_frames=True)
     with pytest.raises(CdcParseError, match='Unknown change: "UNKNOWN BLING"'):
         _drain(df)
 
@@ -112,7 +115,7 @@ def test_unknown_change_raises(spark, pk_map):
 def test_unknown_table_raises_with_colon(spark, pk_map):
     # Reference error text keeps the trailing colon (formatter.py:70).
     df = parse_test_decoding(
-        _raw(spark, [f"table not_a_table: UPDATE: uuid[uuid]:'{UUID}'"]), pk_map
+        _raw(spark, [f"table not_a_table: UPDATE: uuid[uuid]:'{UUID}'"]), pk_map, keep_frames=True
     )
     with pytest.raises(CdcParseError, match='Unable to locate table: "not_a_table:"'):
         _drain(df)
@@ -120,7 +123,7 @@ def test_unknown_table_raises_with_colon(spark, pk_map):
 
 def test_missing_pk_raises(spark, pk_map):
     df = parse_test_decoding(
-        _raw(spark, [f"table public.test_table: UPDATE: not[not]:'{UUID}'"]), pk_map
+        _raw(spark, [f"table public.test_table: UPDATE: not[not]:'{UUID}'"]), pk_map, keep_frames=True
     )
     with pytest.raises(
         CdcParseError, match='Unable to locate primary key for table "public.test_table"'
@@ -334,7 +337,7 @@ def test_wal2json_multi_change_explodes(spark, pk_map):
 
 
 def test_wal2json_unknown_table_raises(spark, pk_map):
-    df = parse_wal2json(_raw(spark, [_w2j(100, _chg(table="not_a_table"))]), pk_map)
+    df = parse_wal2json(_raw(spark, [_w2j(100, _chg(table="not_a_table"))]), pk_map, keep_empty=True)
     with pytest.raises(CdcParseError, match='Unable to locate table: "public.not_a_table"'):
         _drain(df)
 

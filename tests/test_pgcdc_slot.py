@@ -4,7 +4,8 @@ Mirror of the reference's mocked-cursor tests (test_slot.py:51-140):
 DUPLICATE_OBJECT on create and UNDEFINED_OBJECT on drop are swallowed
 (idempotent re-run); every other error — pgcode or not — re-raises.
 No Postgres needed: a fake connection factory stands in for
-psycopg2.connect, and ProgrammingError carries the pgcode.
+psycopg2.connect, its cursor records the slot SQL, and ProgrammingError
+carries the pgcode.
 """
 
 from __future__ import annotations
@@ -20,21 +21,26 @@ from pg2kinesis_spark.sources.pgcdc import (
 
 
 class FakeCursor:
+    """Records the slot SQL; raises the configured error for the
+    create or the drop statement."""
+
     def __init__(self, create_raises=None, drop_raises=None):
         self.create_raises = create_raises
         self.drop_raises = drop_raises
         self.create_calls: list[tuple[str, str]] = []
         self.drop_calls: list[str] = []
 
-    def create_replication_slot(self, slot_name, output_plugin):
-        self.create_calls.append((slot_name, output_plugin))
-        if self.create_raises is not None:
-            raise self.create_raises
-
-    def drop_replication_slot(self, slot_name):
-        self.drop_calls.append(slot_name)
-        if self.drop_raises is not None:
-            raise self.drop_raises
+    def execute(self, sql, params):
+        if sql == "SELECT pg_create_logical_replication_slot(%s, %s)":
+            self.create_calls.append(params)
+            raises = self.create_raises
+        else:
+            assert sql == "SELECT pg_drop_replication_slot(%s)", sql
+            (slot_name,) = params
+            self.drop_calls.append(slot_name)
+            raises = self.drop_raises
+        if raises is not None:
+            raise raises
 
     def __enter__(self):
         return self
@@ -46,7 +52,6 @@ class FakeCursor:
 class FakeConn:
     def __init__(self, cursor):
         self._cursor = cursor
-        self.replication_requested: list[bool] = []
 
     def cursor(self):
         return self._cursor
@@ -60,25 +65,19 @@ class FakeConn:
 
 def _mgr(cursor):
     conn = FakeConn(cursor)
-
-    def factory(replication):
-        conn.replication_requested.append(replication)
-        return conn
-
-    return PgSlotManager("dbname=x", "slot1", "wal2json", connection_factory=factory), conn
+    return PgSlotManager("dbname=x", "slot1", "wal2json", connection_factory=lambda: conn)
 
 
 def test_create_slot_passes_name_and_plugin():
     cur = FakeCursor()
-    mgr, conn = _mgr(cur)
+    mgr = _mgr(cur)
     mgr.create_slot()
     assert cur.create_calls == [("slot1", "wal2json")]
-    assert conn.replication_requested == [True]  # replication connection (slot.py:50-53)
 
 
 def test_create_slot_swallows_duplicate_object():
     cur = FakeCursor(create_raises=ProgrammingError(pgcode=PG_DUPLICATE_OBJECT))
-    mgr, _ = _mgr(cur)
+    mgr = _mgr(cur)
     mgr.create_slot()  # no raise — idempotent re-create (slot.py:102-108)
     assert len(cur.create_calls) == 1
 
@@ -86,35 +85,35 @@ def test_create_slot_swallows_duplicate_object():
 def test_create_slot_reraises_other_pgcodes():
     # e.g. OBJECT_IN_USE — anything that isn't "already exists" must surface
     cur = FakeCursor(create_raises=ProgrammingError(pgcode="55006"))
-    mgr, _ = _mgr(cur)
+    mgr = _mgr(cur)
     with pytest.raises(ProgrammingError):
         mgr.create_slot()
 
 
 def test_create_slot_reraises_non_programming_errors():
     cur = FakeCursor(create_raises=RuntimeError("connection lost"))
-    mgr, _ = _mgr(cur)
+    mgr = _mgr(cur)
     with pytest.raises(RuntimeError):
         mgr.create_slot()
 
 
 def test_delete_slot_swallows_undefined_object():
     cur = FakeCursor(drop_raises=ProgrammingError(pgcode=PG_UNDEFINED_OBJECT))
-    mgr, _ = _mgr(cur)
+    mgr = _mgr(cur)
     mgr.delete_slot()  # no raise — idempotent drop of an absent slot (slot.py:114-120)
     assert cur.drop_calls == ["slot1"]
 
 
 def test_delete_slot_reraises_other_pgcodes():
     cur = FakeCursor(drop_raises=ProgrammingError(pgcode="55006"))  # OBJECT_IN_USE
-    mgr, _ = _mgr(cur)
+    mgr = _mgr(cur)
     with pytest.raises(ProgrammingError):
         mgr.delete_slot()
 
 
 def test_delete_slot_reraises_non_programming_errors():
     cur = FakeCursor(drop_raises=RuntimeError("connection lost"))
-    mgr, _ = _mgr(cur)
+    mgr = _mgr(cur)
     with pytest.raises(RuntimeError):
         mgr.delete_slot()
 
@@ -127,7 +126,7 @@ def test_recreate_cycle_is_idempotent_end_to_end():
         create_raises=ProgrammingError(pgcode=PG_DUPLICATE_OBJECT),
         drop_raises=ProgrammingError(pgcode=PG_UNDEFINED_OBJECT),
     )
-    mgr, _ = _mgr(cur)
+    mgr = _mgr(cur)
     mgr.delete_slot()
     mgr.create_slot()
     assert cur.drop_calls and cur.create_calls

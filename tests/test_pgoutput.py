@@ -15,7 +15,7 @@ from pg2kinesis_spark.operators.pgoutput import (
     encode_insert,
     encode_relation,
     encode_update,
-    parse_pgoutput,
+    pgoutput_cdc_changes,
     relation_registry,
 )
 
@@ -101,8 +101,8 @@ def test_relation_registry_last_wins(spark):
     assert reg[0]["col_names"] == ["id", "name", "age"]
 
 
-def test_parse_pgoutput_end_to_end(spark):
-    out = parse_pgoutput(_stream(spark)).orderBy("lsn").collect()
+def test_pgoutput_cdc_changes_end_to_end(spark):
+    out = pgoutput_cdc_changes(_stream(spark)).orderBy("lsn").collect()
     assert [(r["operation"], r["xid"]) for r in out] == [
         ("insert", "900"),
         ("update", "900"),
@@ -110,14 +110,15 @@ def test_parse_pgoutput_end_to_end(spark):
     ]
     ins, upd, dele = out
     assert ins["table"] == "public.users"
-    assert ins["col_names"] == ["id", "name"] and ins["col_values"] == ["1", "alice"]
-    assert upd["old_values"] == ["1", "alice"] and upd["col_values"] == ["1", "bob"]
-    assert dele["col_values"] is None and dele["old_values"] == ["1", None]
-    assert dele["key_cols"] == ["id"]
+    assert ins["row"] == {"id": "1", "name": "alice"} and ins["pkey"] == "1"
+    assert upd["row"] == {"id": "1", "name": "bob"}  # the new tuple
+    assert dele["row"] == {"id": "1", "name": None}  # the old tuple
+    assert dele["pkey"] == "1"  # from the key column
+    assert {(r["change_idx"], r["error"]) for r in out} == {(0, None)}
 
 
 def test_parse_handles_unicode_and_plan_shape(spark):
-    df = parse_pgoutput(_stream(spark, unicode_table=True))
+    df = pgoutput_cdc_changes(_stream(spark, unicode_table=True))
     rows = df.collect()
     assert all(r["table"] == "public.tüble" for r in rows)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -127,8 +128,6 @@ def test_parse_handles_unicode_and_plan_shape(spark):
 
 
 def test_pgoutput_unknown_rel_surfaces_error(spark):
-    from pg2kinesis_spark.operators.pgoutput import pgoutput_cdc_changes
-
     msgs = [
         (10, encode_begin(30, 900)),
         (20, encode_insert(99, ["1", "ghost"])),  # no Relation for 99
@@ -168,7 +167,7 @@ def test_pgoutput_property_roundtrip():
 
 
 def test_begin_stats_jvm_twin_matches_kernel(spark):
-    """The pure-JVM ``begins`` twin parse_pgoutput feeds to
+    """The pure-JVM ``begins`` twin pgoutput_cdc_changes feeds to
     stamp_xid_scalable's build jobs must agree byte-for-byte with the
     Python kernel's Begin decode — including xids above 2^31 (uint32)."""
     from pyspark.sql import functions as F
@@ -199,7 +198,7 @@ def test_begin_stats_jvm_twin_matches_kernel(spark):
         (50, str(2**32 - 7)),
     ]
     # and the stamped pipeline attributes both transactions correctly
-    out = parse_pgoutput(raw).orderBy("lsn").collect()
+    out = pgoutput_cdc_changes(raw).orderBy("lsn").collect()
     assert [(r.operation, r.xid) for r in out] == [
         ("insert", "900"),
         ("insert", str(2**32 - 7)),
@@ -221,13 +220,10 @@ def test_truncate_decode_encode_roundtrip():
     assert decode_message(encode_truncate([9]))["rel_ids"] == [9]
 
 
-def test_parse_pgoutput_truncate_rows(spark):
+def test_pgoutput_cdc_changes_truncate_rows(spark):
     """Truncate emits one change row per rel (xid-attributed, NULL
     pkey/row)."""
-    from pg2kinesis_spark.operators.pgoutput import (
-        encode_truncate,
-        pgoutput_cdc_changes,
-    )
+    from pg2kinesis_spark.operators.pgoutput import encode_truncate
 
     msgs = [
         (10, encode_relation(55, "public", "users", ["id", "name"], key_cols=("id",))),
@@ -253,7 +249,7 @@ def test_parse_pgoutput_truncate_rows(spark):
 
 
 def test_pgoutput_xid_matches_forward_fill(spark):
-    """parse_pgoutput's xid equals a Python forward fill over the decoded
+    """pgoutput_cdc_changes's xid equals a Python forward fill over the decoded
     corpus in lsn order, including a change row before the first Begin
     and one after the last Commit (outside the Begin frames' span)."""
     import base64
@@ -272,6 +268,6 @@ def test_pgoutput_xid_matches_forward_fill(spark):
         elif d["op"] == "truncate":
             want += [(lsn, "truncate", cur)] * len(d["rel_ids"])
     raw = spark.createDataFrame([(lsn, bytearray(m)) for lsn, m in rows], "lsn long, payload binary")
-    got = sorted(tuple(r) for r in parse_pgoutput(raw).select("lsn", "operation", "xid").collect())
+    got = sorted(tuple(r) for r in pgoutput_cdc_changes(raw).select("lsn", "operation", "xid").collect())
     assert got == sorted(want) and len(got) > 100
     assert want[0][2] == "" and want[-1][2] != ""

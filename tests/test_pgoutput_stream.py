@@ -71,7 +71,7 @@ def test_pgoutput_stream_end_to_end(spark, corpus, tmp_path):
         writer,
         str(tmp_path / "ckpt"),
         done=lambda: writer.put_message_calls >= len(want)
-        and writer._agg.num_bytes == 0,
+        and writer._agg.messages == 0,
     )
     writer.flush_tail()
     got = _msgs(transport)
@@ -126,7 +126,7 @@ def test_pgoutput_stream_table_pat_and_ops(spark, corpus, tmp_path):
         writer,
         str(tmp_path / "ckpt2"),
         done=lambda: writer.put_message_calls >= n_users_rows
-        and writer._agg.num_bytes == 0,
+        and writer._agg.messages == 0,
     )
     writer.flush_tail()
     assert _msgs(transport) == want
@@ -134,7 +134,7 @@ def test_pgoutput_stream_table_pat_and_ops(spark, corpus, tmp_path):
 
 def test_pgoutput_stream_truncate_puts_per_relation_and_counts_once(spark, tmp_path):
     """TRUNCATE in the stream, decided: the shared decode kernel emits
-    one row per truncated relation (as ``parse_pgoutput`` does), so a
+    one row per truncated relation (as ``pgoutput_cdc_changes`` does), so a
     Truncate of two tables puts two ``truncate`` messages (no pkey,
     the Truncate's xid) and counts ONCE as a wire message by its
     data_size. Relation messages put nothing and are not counted."""
@@ -146,7 +146,7 @@ def test_pgoutput_stream_truncate_puts_per_relation_and_counts_once(spark, tmp_p
         encode_insert,
         encode_relation,
         encode_truncate,
-        parse_pgoutput,
+        pgoutput_cdc_changes,
     )
 
     msgs = [
@@ -181,7 +181,7 @@ def test_pgoutput_stream_truncate_puts_per_relation_and_counts_once(spark, tmp_p
         writer,
         str(tmp_path / "ckpt"),
         done=lambda: writer.cum_msg_count >= len(msgs) - 2
-        and writer._agg.num_bytes == 0,
+        and writer._agg.messages == 0,
     )
     writer.flush_tail()
     assert _msgs(transport) == want
@@ -192,7 +192,7 @@ def test_pgoutput_stream_truncate_puts_per_relation_and_counts_once(spark, tmp_p
 
     # the batch parse makes the same decision: one row per relation
     raw = spark.read.parquet(path).select("lsn", F.unbase64("payload").alias("payload"))
-    trunc = parse_pgoutput(raw).filter("operation = 'truncate'").orderBy("table")
+    trunc = pgoutput_cdc_changes(raw).filter("operation = 'truncate'").orderBy("table")
     assert [(r.lsn, r.xid, r.table) for r in trunc.collect()] == [
         (70, "501", "public.orders"),
         (70, "501", "public.users"),

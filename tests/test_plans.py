@@ -66,7 +66,7 @@ def test_td_parse_has_no_global_window(spark, pk_fixture_dir, sf_small):
     of its users: the test_decoding and pgoutput parses and oracle q18."""
     from pg2kinesis_spark import fixtures as fx
     from pg2kinesis_spark.catalog import primary_key_map
-    from pg2kinesis_spark.operators.pgoutput import parse_pgoutput
+    from pg2kinesis_spark.operators.pgoutput import pgoutput_cdc_changes
     from pg2kinesis_spark.operators.test_decoding import parse_test_decoding
     from pg2kinesis_spark.plans.queries import q18
 
@@ -79,7 +79,7 @@ def test_td_parse_has_no_global_window(spark, pk_fixture_dir, sf_small):
     ).select("lsn", F.unbase64("payload").alias("payload"))
     plans = {
         "test_decoding": td,
-        "pgoutput": _plan(parse_pgoutput(pgout)),
+        "pgoutput": _plan(pgoutput_cdc_changes(pgout)),
         "q18": _plan(q18(spark, sf_small)),
     }
     for name, plan in plans.items():

@@ -117,7 +117,7 @@ def drained(spark, corpus, pk_map, tmp_path_factory, few_shuffles):
         writer,
         os.path.join(tmp, "ckpt"),
         done=lambda: writer.put_message_calls >= N_TXNS * MSGS_PER_TXN
-        and writer._agg.num_bytes == 0,
+        and writer._agg.messages == 0,
     )
     writer.flush_tail()
     return transport, writer, ack_log
@@ -199,7 +199,7 @@ def test_restart_is_at_least_once(spark, corpus, pk_map, tmp_path, few_shuffles)
     # same checkpoint → resume from last committed batch
     run_until(
         stream2, w2, str(tmp_path / "ckpt"),
-        done=lambda: len(_msgs(t2)) >= N_TXNS * MSGS_PER_TXN and w2._agg.num_bytes == 0,
+        done=lambda: len(_msgs(t2)) >= N_TXNS * MSGS_PER_TXN and w2._agg.messages == 0,
     )
     w2.flush_tail()
 
@@ -259,7 +259,7 @@ def test_agg_sizing_is_exact_and_respects_kinesis_limit():
     assert len(blob) == rec.est_size            # accounting is exact
     assert len(blob) <= 1 << 20                 # full agg fits a Kinesis record
     assert len(blob) > (1 << 20) - 100          # and is packed ~to the brim
-    assert rec.num_bytes > (1 << 20) * 0.7      # mostly payload, not framing
+    assert rec.messages * len(msg) > (1 << 20) * 0.7  # mostly payload, not framing
 
 
 def test_send_window_flush():
@@ -619,7 +619,7 @@ def test_resume_from_ack_log_keeps_xids(spark, corpus, pk_map, tmp_path, few_shu
     )
     run_until(
         stream2, w2, str(tmp_path / "ckpt2"),
-        done=lambda: w2.put_message_calls >= len(want) and w2._agg.num_bytes == 0,
+        done=lambda: w2.put_message_calls >= len(want) and w2._agg.messages == 0,
     )
     w2.flush_tail()
     puts = _msgs(t2)
